@@ -58,18 +58,39 @@ def dec_avg(col: Column | str, alias: str) -> Column:
     return (dec_to_double(F.sum(dec(c))) / F.count(c).cast("double")).alias(alias)
 
 
+def dec_sql(expr: str) -> str:
+    """SQL twin of :func:`dec` — valid in DuckDB and Spark SQL. No
+    parentheses needed: CAST delimits its operand."""
+    return f"CAST({expr} AS DECIMAL(18,6))"
+
+
+def dec_wide_sql(expr: str) -> str:
+    """DuckDB DECIMAL(19,6) operand: one more integer digit than
+    :func:`dec_sql`, and stored as a 128-bit HUGEINT.
+
+    The width matters for exact products: DuckDB multiplies two
+    DECIMALs of width <= 18 in 64-bit integers and raises when the
+    unscaled product leaves int64 range, while 19,6 operands multiply
+    in 128 bits (p1 + p2 >= 38 widens to HUGEINT). Spark needs
+    p1 + p2 + 1 <= 38 and keeps :func:`dec` operands."""
+    return f"CAST({expr} AS DECIMAL(19,6))"
+
+
+def dec_to_double_sql(expr: str) -> str:
+    """DuckDB SQL twin of :func:`dec_to_double` (the same string
+    round-trip; Spark SQL spells the string type STRING)."""
+    return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
+
+
 def oracle_dec_sum(expr: str, alias: str) -> str:
     """DuckDB SQL fragment matching :func:`dec_sum`."""
-    return (
-        f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)"
-        f" AS {alias}"
-    )
+    return f"{dec_to_double_sql(f'SUM({dec_sql(expr)})')} AS {alias}"
 
 
 def oracle_dec_avg(expr: str, alias: str) -> str:
     """DuckDB SQL fragment matching :func:`dec_avg`."""
     return (
-        f"CAST(CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)"
+        f"{dec_to_double_sql(f'SUM({dec_sql(expr)})')}"
         f" / CAST(COUNT({expr}) AS DOUBLE) AS {alias}"
     )
 

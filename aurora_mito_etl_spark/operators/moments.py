@@ -55,7 +55,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.numeric import fixed6, fixed6_sql, micros6, micros6_sql, micros_sum
+from ..functions.numeric import (
+    dec_to_double_sql,
+    fixed6,
+    fixed6_sql,
+    micros6,
+    micros6_sql,
+    micros_sum,
+)
 
 _D28 = "decimal(28,0)"
 
@@ -192,10 +199,10 @@ def grouped_moments_oracle(
     s AS (
       SELECT {group_col},
              MAX(n_rows) AS n_rows, MAX(mean_val) AS mean_val,
-             CAST(CAST(SUM(CAST(mm AS DECIMAL(28,0))) AS VARCHAR) AS DOUBLE) AS s1d,
-             CAST(CAST(SUM(CAST(mm * mm AS DECIMAL(28,0))) AS VARCHAR) AS DOUBLE) AS s2d,
-             CAST(CAST(SUM(CAST(mm AS DECIMAL(19,0)) * CAST(mm * mm AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS s3d,
-             CAST(CAST(SUM(CAST(mm * mm AS DECIMAL(19,0)) * CAST(mm * mm AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS s4d
+             {dec_to_double_sql('SUM(CAST(mm AS DECIMAL(28,0)))')} AS s1d,
+             {dec_to_double_sql('SUM(CAST(mm * mm AS DECIMAL(28,0)))')} AS s2d,
+             {dec_to_double_sql('SUM(CAST(mm AS DECIMAL(19,0)) * CAST(mm * mm AS DECIMAL(19,0)))')} AS s3d,
+             {dec_to_double_sql('SUM(CAST(mm * mm AS DECIMAL(19,0)) * CAST(mm * mm AS DECIMAL(19,0)))')} AS s4d
       FROM m GROUP BY {group_col}
     ),
     c AS (

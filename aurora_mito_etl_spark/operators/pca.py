@@ -56,8 +56,10 @@ from pyspark.sql import functions as F
 
 from aurora_mito_etl_spark.functions.numeric import (
     dec,
+    dec_sql,
     dec_to_double,
     fixed6,
+    fixed6_spark_sql,
     micros6,
 )
 
@@ -106,21 +108,6 @@ def _micros_py(x: float | None, what: str) -> int | None:
 # ---------------------------------------------------------------- #
 
 
-def _fixed6_spark_sql(expr: str) -> str:
-    """Spark-SQL string twin of `functions.numeric.fixed6`, including
-    the 2^53 saturation guard (Spark's floor(double)→LONG pins at
-    ±2^63; DuckDB's double floor keeps going — same branch as the
-    Column form). Used because these d(d+1)/2-wide frames are built
-    as ONE selectExpr call: constructing them Column-by-Column costs
-    thousands of py4j round-trips (~12s of driver time at d=16,
-    measured) while a single parsed SQL string is milliseconds."""
-    y = f"(({expr}) * 1000000 + 0.5)"
-    return (
-        f"(CASE WHEN abs({y}) < 9007199254740992.0D"
-        f" THEN CAST(floor({y}) AS DOUBLE) ELSE {y} END / 1000000)"
-    )
-
-
 def covariance_stats(
     vectors: DataFrame, dim: int, vec_col: str = "embedding"
 ) -> DataFrame:
@@ -138,21 +125,19 @@ def covariance_stats(
     """
     comp = vectors.selectExpr(
         *[
-            f"{_fixed6_spark_sql(f'CAST(get({vec_col}, {k}) AS DOUBLE)')} AS x{k}"
+            f"{fixed6_spark_sql(f'CAST(get({vec_col}, {k}) AS DOUBLE)')} AS x{k}"
             for k in range(dim)
         ]
     )
     aggs = ["count(1) AS n_rows"]
     for i in range(dim):
         aggs.append(
-            f"CAST(CAST(SUM(CAST(x{i} AS DECIMAL(18,6))) AS STRING)"
-            f" AS DOUBLE) AS s{i}"
+            f"CAST(CAST(SUM({dec_sql(f'x{i}')}) AS STRING) AS DOUBLE) AS s{i}"
         )
     for i in range(dim):
         for j in range(i, dim):
             aggs.append(
-                f"CAST(CAST(SUM(CAST(x{i} AS DECIMAL(18,6))"
-                f" * CAST(x{j} AS DECIMAL(18,6))) AS STRING)"
+                f"CAST(CAST(SUM({dec_sql(f'x{i}')} * {dec_sql(f'x{j}')}) AS STRING)"
                 f" AS DOUBLE) AS p{i}_{j}"
             )
     return comp.selectExpr(*aggs)
@@ -173,7 +158,7 @@ def covariance_entries(stats: DataFrame, dim: int) -> DataFrame:
     from the 1-row stats frame — d(d+1)/2 rows, driver-free."""
     structs = ", ".join(
         f"named_struct('i', {i}, 'j', {j},"
-        f" 'cov', {_fixed6_spark_sql(_cov_raw_sql(i, j))})"
+        f" 'cov', {fixed6_spark_sql(_cov_raw_sql(i, j))})"
         for i in range(dim)
         for j in range(i, dim)
     )

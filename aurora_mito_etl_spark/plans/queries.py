@@ -25,8 +25,11 @@ from pyspark.sql import functions as F
 from aurora_mito_etl_spark.functions.numeric import (
     dec,
     dec_avg,
+    dec_sql,
     dec_sum,
     dec_to_double,
+    dec_to_double_sql,
+    dec_wide_sql,
     fixed6,
     fixed6_sql,
     micros6,
@@ -82,18 +85,23 @@ def _register(name: str, oracle: str | None = None):
 # Relational spine: scans, filters, aggregation (SURVEY §2.1, §2.2, §2.4)
 # ---------------------------------------------------------------------------
 
+# Exact-decimal revenue Σ price·(1 − discount) over `lineitem l`.
+_REVENUE_SQL = dec_to_double_sql(
+    f"SUM({dec_sql('l.l_extendedprice')} * {dec_sql('1 - l.l_discount')})"
+)
+
 
 @_register(
     "pricing_summary",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l_discount AS DECIMAL(18,6)) * CAST(1 + l_tax AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(l_quantity) AS DOUBLE) AS avg_qty,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(l_extendedprice) AS DOUBLE) AS avg_price,
-           CAST(CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(l_discount) AS DOUBLE) AS avg_disc,
+           {oracle_dec_sum('l_quantity', 'sum_qty')},
+           {oracle_dec_sum('l_extendedprice', 'sum_base_price')},
+           {dec_to_double_sql(f"SUM({dec_sql('l_extendedprice')} * {dec_sql('1 - l_discount')})")} AS sum_disc_price,
+           {dec_to_double_sql(f"SUM({dec_sql('l_extendedprice')} * {dec_sql('1 - l_discount')} * {dec_sql('1 + l_tax')})")} AS sum_charge,
+           {oracle_dec_avg('l_quantity', 'avg_qty')},
+           {oracle_dec_avg('l_extendedprice', 'avg_price')},
+           {oracle_dec_avg('l_discount', 'avg_disc')},
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2001-09-02'
@@ -133,9 +141,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "revenue_by_nation",
-    """
+    f"""
     SELECT n.n_name AS nation,
-           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l.l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue,
+           {_REVENUE_SQL} AS revenue,
            COUNT(DISTINCT o.o_orderkey) AS n_orders
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -176,9 +184,9 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "shipping_priority_topk",
-    """
+    f"""
     SELECT l.l_orderkey, o.o_orderdate,
-           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l.l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue
+           {_REVENUE_SQL} AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -226,9 +234,9 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "local_supplier_volume",
-    """
+    f"""
     SELECT n.n_name AS nation,
-           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l.l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue
+           {_REVENUE_SQL} AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -496,14 +504,14 @@ def priority_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "topk_mean_supplier",
-    """
+    f"""
     WITH ranked AS (
       SELECT l_suppkey, l_extendedprice,
              row_number() OVER (PARTITION BY l_suppkey ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC) AS rn
       FROM lineitem
     )
     SELECT l_suppkey AS suppkey,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS top3_mean
+           {dec_to_double_sql(f"SUM({dec_sql('l_extendedprice')})")} / CAST(COUNT(*) AS DOUBLE) AS top3_mean
     FROM ranked WHERE rn <= 3 GROUP BY l_suppkey
     """,
 )
@@ -612,11 +620,11 @@ def two_tier_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "window_order_stats",
-    """
+    f"""
     SELECT o_custkey, o_orderkey,
            row_number() OVER w AS order_seq,
            lag(o_totalprice) OVER w AS prev_price,
-           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS UNBOUNDED PRECEDING) AS VARCHAR) AS DOUBLE) AS running_spend
+           {dec_to_double_sql(f"SUM({dec_sql('o_totalprice')}) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS UNBOUNDED PRECEDING)")} AS running_spend
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
@@ -648,11 +656,11 @@ def window_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_hourly",
-    """
+    f"""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour,
            event_type,
            COUNT(*) AS n_events,
-           CAST(CAST(SUM(CAST(floor((value) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total_value
+           {oracle_dec_sum(fixed6_sql('value'), 'total_value')}
     FROM events GROUP BY 1, 2
     """,
 )
@@ -718,14 +726,12 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "emb_array_ops",
-    """
+    f"""
     SELECT vec_id,
-           floor((list_reduce(list_transform(embedding::DOUBLE[], x -> x * x),
-                             (a, b) -> a + b)) * 1000000 + 0.5) / 1000000 AS sq_norm,
+           {fixed6_sql('list_reduce(list_transform(embedding::DOUBLE[], x -> x * x), (a, b) -> a + b)')} AS sq_norm,
            len(list_filter(embedding::DOUBLE[], x -> x > 0)) AS n_positive,
-           floor((embedding[1]::DOUBLE + embedding[2]::DOUBLE) * 1000000 + 0.5) / 1000000 AS first_two_sum,
-           floor((list_reduce(list_transform(embedding[1:8]::DOUBLE[], x -> x),
-                             (a, b) -> CASE WHEN b > a THEN b ELSE a END)) * 1000000 + 0.5) / 1000000 AS max_of_8
+           {fixed6_sql('embedding[1]::DOUBLE + embedding[2]::DOUBLE')} AS first_two_sum,
+           {fixed6_sql('list_reduce(list_transform(embedding[1:8]::DOUBLE[], x -> x), (a, b) -> CASE WHEN b > a THEN b ELSE a END)')} AS max_of_8
     FROM embeddings WHERE vec_id < 200
     """,
 )
@@ -758,11 +764,10 @@ def emb_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "orders_above_segment_avg",
-    """
+    f"""
     SELECT o_orderkey, c_mktsegment FROM (
       SELECT o.o_orderkey, c.c_mktsegment, o.o_totalprice,
-             CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,6)))
-                       OVER (PARTITION BY c.c_mktsegment) AS VARCHAR) AS DOUBLE)
+             {dec_to_double_sql(f"SUM({dec_sql('o.o_totalprice')}) OVER (PARTITION BY c.c_mktsegment)")}
                / CAST(COUNT(*) OVER (PARTITION BY c.c_mktsegment) AS DOUBLE)
                AS seg_avg
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -826,10 +831,10 @@ def docs_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "customer_balance_quartiles",
-    """
+    f"""
     SELECT c_custkey,
            ntile(4) OVER w AS quartile,
-           floor((percent_rank() OVER w) * 1000000 + 0.5) / 1000000 AS pct_rank,
+           {fixed6_sql('percent_rank() OVER w')} AS pct_rank,
            CAST(rank() OVER w AS BIGINT) AS rnk,
            CAST(dense_rank() OVER w AS BIGINT) AS drnk
     FROM customer
@@ -1014,9 +1019,9 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "events_moving_avg",
-    """
+    f"""
     SELECT event_id, user_id,
-           CAST(CAST(SUM(CAST(floor((value) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) OVER w AS VARCHAR) AS DOUBLE)
+           {dec_to_double_sql(f"SUM({dec_sql(fixed6_sql('value'))}) OVER w")}
              / CAST(COUNT(value) OVER w AS DOUBLE) AS mov_avg3
     FROM events WHERE ts IS NOT NULL
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
@@ -1153,7 +1158,7 @@ def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_quality",
-    """
+    f"""
     WITH q AS (
       SELECT doc_id,
              CAST(length(text) AS DOUBLE) AS n,
@@ -1163,12 +1168,12 @@ def docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (SELECT doc_id, regexp_replace(text, '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g') AS text FROM documents)
     )
     SELECT doc_id,
-           floor(((
+           {fixed6_sql('''(
              (CASE WHEN n >= 50 AND n <= 20000 THEN 1.0 ELSE 0.25 END)
              + (CASE WHEN n > 0 THEN alpha / n ELSE 0.0 END)
              + (CASE WHEN n > 0 THEN (CASE WHEN punct / n <= 0.1 THEN 1.0 ELSE 0.5 END) ELSE 0.0 END)
              + (CASE WHEN words > 0 AND (n - words + 1) / words >= 2.0 AND (n - words + 1) / words <= 12.0 THEN 1.0 ELSE 0.5 END)
-           ) / 4.0) * 1000000 + 0.5) / 1000000 AS quality
+           ) / 4.0''')} AS quality
     FROM q
     """,
 )
@@ -1277,7 +1282,7 @@ def _line_language_oracle() -> str:
       FROM cnt
     )
     SELECT doc_id, tot AS n_lines, nl AS n_langs, lg AS dominant_lang,
-           floor(CAST(c AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS dominant_frac,
+           {fixed6_sql('CAST(c AS DOUBLE) / tot')} AS dominant_frac,
            nl > 1 AS is_mixed
     FROM dom WHERE rn = 1
     """
@@ -1313,7 +1318,7 @@ def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_repetition",
-    """
+    f"""
     WITH words AS (
       SELECT doc_id, w FROM (
         SELECT doc_id,
@@ -1328,12 +1333,12 @@ def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id,
            CAST(COALESCE(total_words, 0) AS BIGINT) AS total_words,
            CAST(COALESCE(distinct_words, 0) AS BIGINT) AS distinct_words,
-           floor((CASE WHEN total_words > 0
+           {fixed6_sql('''CASE WHEN total_words > 0
                       THEN 1.0 - distinct_words / total_words
-                      ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup_word_frac,
-           floor((CASE WHEN total_words > 0
+                      ELSE 0.0 END''')} AS dup_word_frac,
+           {fixed6_sql('''CASE WHEN total_words > 0
                       THEN top_count / total_words
-                      ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS top_word_frac
+                      ELSE 0.0 END''')} AS top_word_frac
     FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN pd USING (doc_id)
     """,
 )
@@ -1478,7 +1483,7 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_heavy_hitters",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
       FROM documents
@@ -1488,7 +1493,7 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS (SELECT tok, count(*) AS cnt FROM tz GROUP BY tok),
     top AS (SELECT tok, cnt FROM c ORDER BY cnt DESC, tok ASC LIMIT 20)
     SELECT tok AS token, cnt,
-           floor(cnt / CAST(n_tokens AS DOUBLE) * 1000000 + 0.5) / 1000000 AS share,
+           {fixed6_sql('cnt / CAST(n_tokens AS DOUBLE)')} AS share,
            cnt * 65537 > n_tokens AS exact_guaranteed
     FROM top, n
     """,
@@ -1506,7 +1511,7 @@ def docs_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_ngram_diversity",
-    r"""
+    rf"""
     WITH base AS (
       SELECT source,
              string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -1540,20 +1545,20 @@ def docs_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(CASE WHEN n = 1 THEN total ELSE 0 END) AS total_1,
            MAX(CASE WHEN n = 1 THEN n_distinct ELSE 0 END) AS distinct_1,
            CASE WHEN MAX(CASE WHEN n = 1 THEN total ELSE 0 END) > 0
-                THEN floor(CAST(MAX(CASE WHEN n = 1 THEN n_distinct ELSE 0 END) AS DOUBLE)
-                           / MAX(CASE WHEN n = 1 THEN total ELSE 0 END) * 1000000 + 0.5) / 1000000
+                THEN {fixed6_sql('''CAST(MAX(CASE WHEN n = 1 THEN n_distinct ELSE 0 END) AS DOUBLE)
+                           / MAX(CASE WHEN n = 1 THEN total ELSE 0 END)''')}
                 ELSE 0.0 END AS ratio_1,
            MAX(CASE WHEN n = 2 THEN total ELSE 0 END) AS total_2,
            MAX(CASE WHEN n = 2 THEN n_distinct ELSE 0 END) AS distinct_2,
            CASE WHEN MAX(CASE WHEN n = 2 THEN total ELSE 0 END) > 0
-                THEN floor(CAST(MAX(CASE WHEN n = 2 THEN n_distinct ELSE 0 END) AS DOUBLE)
-                           / MAX(CASE WHEN n = 2 THEN total ELSE 0 END) * 1000000 + 0.5) / 1000000
+                THEN {fixed6_sql('''CAST(MAX(CASE WHEN n = 2 THEN n_distinct ELSE 0 END) AS DOUBLE)
+                           / MAX(CASE WHEN n = 2 THEN total ELSE 0 END)''')}
                 ELSE 0.0 END AS ratio_2,
            MAX(CASE WHEN n = 3 THEN total ELSE 0 END) AS total_3,
            MAX(CASE WHEN n = 3 THEN n_distinct ELSE 0 END) AS distinct_3,
            CASE WHEN MAX(CASE WHEN n = 3 THEN total ELSE 0 END) > 0
-                THEN floor(CAST(MAX(CASE WHEN n = 3 THEN n_distinct ELSE 0 END) AS DOUBLE)
-                           / MAX(CASE WHEN n = 3 THEN total ELSE 0 END) * 1000000 + 0.5) / 1000000
+                THEN {fixed6_sql('''CAST(MAX(CASE WHEN n = 3 THEN n_distinct ELSE 0 END) AS DOUBLE)
+                           / MAX(CASE WHEN n = 3 THEN total ELSE 0 END)''')}
                 ELSE 0.0 END AS ratio_3
     FROM per GROUP BY source
     """,
@@ -1572,7 +1577,7 @@ def docs_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_source_overlap",
-    r"""
+    rf"""
     WITH base AS (
       SELECT source,
              string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -1593,9 +1598,9 @@ def docs_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT i.source_a, i.source_b,
            pa.n_grams AS grams_a, pb.n_grams AS grams_b, i.shared,
-           floor(CAST(i.shared AS DOUBLE) / (pa.n_grams + pb.n_grams - i.shared) * 1000000 + 0.5) / 1000000 AS jaccard,
-           floor(CAST(i.shared AS DOUBLE) / pa.n_grams * 1000000 + 0.5) / 1000000 AS containment_a,
-           floor(CAST(i.shared AS DOUBLE) / pb.n_grams * 1000000 + 0.5) / 1000000 AS containment_b
+           {fixed6_sql('CAST(i.shared AS DOUBLE) / (pa.n_grams + pb.n_grams - i.shared)')} AS jaccard,
+           {fixed6_sql('CAST(i.shared AS DOUBLE) / pa.n_grams')} AS containment_a,
+           {fixed6_sql('CAST(i.shared AS DOUBLE) / pb.n_grams')} AS containment_b
     FROM inter i
     JOIN per pa ON pa.source = i.source_a
     JOIN per pb ON pb.source = i.source_b
@@ -1742,7 +1747,7 @@ _SHINGLE_SQL = """
     )
     SELECT id_a, id_b, jaccard FROM (
       SELECT id_a, id_b,
-             floor((CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jaccard
+             {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
       FROM inter
       JOIN sizes sa ON inter.id_a = sa.doc_id
       JOIN sizes sb ON inter.id_b = sb.doc_id
@@ -1769,7 +1774,7 @@ def docs_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e AS (
       SELECT id_a AS a, id_b AS b FROM (
         SELECT id_a, id_b,
-               floor((CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jaccard
+               {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
         FROM inter
         JOIN sizes sa ON inter.id_a = sa.doc_id
         JOIN sizes sb ON inter.id_b = sb.doc_id
@@ -1794,7 +1799,7 @@ def docs_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT deg.v AS vertex, deg.degree,
            COALESCE(tc.n_triangles, CAST(0 AS BIGINT)) AS n_triangles,
            CASE WHEN deg.degree >= 2 THEN
-             floor((2.0 * CAST(COALESCE(tc.n_triangles, 0) AS DOUBLE) / (CAST(deg.degree AS DOUBLE) * (CAST(deg.degree AS DOUBLE) - 1.0))) * 1000000 + 0.5) / 1000000
+             {fixed6_sql('2.0 * CAST(COALESCE(tc.n_triangles, 0) AS DOUBLE) / (CAST(deg.degree AS DOUBLE) * (CAST(deg.degree AS DOUBLE) - 1.0))')}
            END AS clustering_coeff
     FROM deg LEFT JOIN tc ON deg.v = tc.v
     """,
@@ -1826,7 +1831,7 @@ def _kcore_oracle(k: int = 2, rounds: int = 4) -> str:
         f"""e0 AS MATERIALIZED (
       SELECT id_a AS a, id_b AS b FROM (
         SELECT id_a, id_b,
-               floor((CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jaccard
+               {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
         FROM inter
         JOIN sizes sa ON inter.id_a = sa.doc_id
         JOIN sizes sb ON inter.id_b = sb.doc_id
@@ -1957,7 +1962,7 @@ def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
     )
     SELECT id_a, id_b, jaccard FROM (
       SELECT c.id_a, c.id_b,
-             floor((CAST(i.i AS DOUBLE) / CAST(sa.sz + sb.sz - i.i AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jaccard
+             {fixed6_sql('CAST(i.i AS DOUBLE) / CAST(sa.sz + sb.sz - i.i AS DOUBLE)')} AS jaccard
       FROM cand c
       JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
       JOIN sizes sa ON c.id_a = sa.doc_id
@@ -2233,7 +2238,7 @@ def _emb_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM g a, g b
       WHERE b.vec_id % 100 = 0
     ),
@@ -2257,7 +2262,7 @@ def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "emb_knn_classify",
-    """
+    f"""
     WITH v AS (
       SELECT vec_id, label, embedding::DOUBLE[] AS e,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -2269,7 +2274,7 @@ def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT b.vec_id AS query_id, a.vec_id, a.label,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM g a, g b
       WHERE b.vec_id % 50 = 0 AND a.vec_id <> b.vec_id
     ),
@@ -2322,7 +2327,7 @@ def emb_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emb_near_dup_exact",
     f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           floor(({_COS_SQL}) * 1000000 + 0.5) / 1000000 AS cos_sim
+           {fixed6_sql(_COS_SQL)} AS cos_sim
     FROM embeddings a, embeddings b
     WHERE a.vec_id < b.vec_id
       AND a.embedding IS NOT NULL AND b.embedding IS NOT NULL
@@ -2374,7 +2379,7 @@ def _lsh_near_dup_oracle(
     ),
     pairs AS (
       SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-             floor((list_dot_product(a.e, bb.e) / (a.nrm * bb.nrm)) * 1000000 + 0.5) / 1000000 AS cos_sim
+             {fixed6_sql('list_dot_product(a.e, bb.e) / (a.nrm * bb.nrm)')} AS cos_sim
       FROM probed a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
       WHERE a.nrm > 0 AND bb.nrm > 0  -- zero-norm: NaN never passes in Spark
     )
@@ -2420,7 +2425,7 @@ def _lsh_topk_oracle(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
     scored AS (
       -- norms pre-guarded in b (zero-norm -> 1.0, the Spark twin)
       SELECT q.query_id, b.vec_id,
-             floor((list_dot_product(b.e, q.qe) / (b.nrm * q.qn)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(b.e, q.qe) / (b.nrm * q.qn)')} AS score
       FROM b JOIN q ON b.bucket = q.bucket
     ),
     ranked AS (
@@ -2484,9 +2489,8 @@ def _ivf_topk_oracle(
     ),
     scored AS (
       SELECT q.query_id, vcell.vec_id,
-             floor((list_dot_product(vcell.e, q.qe)
-                   / (CASE WHEN vcell.nrm = 0 THEN 1.0 ELSE vcell.nrm END * q.qn))
-                   * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('''list_dot_product(vcell.e, q.qe)
+                   / (CASE WHEN vcell.nrm = 0 THEN 1.0 ELSE vcell.nrm END * q.qn)''')} AS score
       FROM vcell JOIN q ON vcell.cell = q.cell
     ),
     ranked AS (
@@ -2775,11 +2779,11 @@ def orders_pivot_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "lineitem_price_percentiles",
-    """
+    f"""
     SELECT l_returnflag,
-           floor((quantile_cont(l_extendedprice, 0.5)) * 1000000 + 0.5) / 1000000 AS p50,
-           floor((quantile_cont(l_extendedprice, 0.9)) * 1000000 + 0.5) / 1000000 AS p90,
-           floor((quantile_cont(l_extendedprice, 0.99)) * 1000000 + 0.5) / 1000000 AS p99
+           {fixed6_sql('quantile_cont(l_extendedprice, 0.5)')} AS p50,
+           {fixed6_sql('quantile_cont(l_extendedprice, 0.9)')} AS p90,
+           {fixed6_sql('quantile_cont(l_extendedprice, 0.99)')} AS p99
     FROM lineitem GROUP BY l_returnflag
     """,
 )
@@ -3069,7 +3073,7 @@ def _media_features_oracle() -> str:
       FROM documents, UNNEST(range(64)) AS t(p)
     ),
     agg AS (
-      SELECT media_id, floor((avg(r)) * 1000000 + 0.5) / 1000000 AS mean_r,
+      SELECT media_id, {fixed6_sql('avg(r)')} AS mean_r,
              SUM(r + g + b) AS s_total
       FROM px GROUP BY media_id
     ),
@@ -3288,6 +3292,12 @@ def _gopher_oracle(**overrides: float) -> str:
         for w in ql.GOPHER_STOPWORDS
     )
     c = {**ql.GOPHER_DEFAULTS, **overrides}
+    bullet_frac = fixed6_sql(
+        r"CASE WHEN len(lines) > 0 THEN len(list_filter(lines, l -> regexp_matches(l, '^[ \t]*[-*•]')))::DOUBLE / len(lines) ELSE 0.0 END"
+    )
+    ellipsis_frac = fixed6_sql(
+        r"CASE WHEN len(lines) > 0 THEN len(list_filter(lines, l -> regexp_matches(l, '(\.\.\.|…)[ \t\r]*$')))::DOUBLE / len(lines) ELSE 0.0 END"
+    )
     return rf"""
     WITH base AS (
       SELECT doc_id,
@@ -3308,12 +3318,12 @@ def _gopher_oracle(**overrides: float) -> str:
     ),
     f AS (
       SELECT doc_id, n_words,
-             floor((CASE WHEN n_words > 0 THEN word_chars::DOUBLE / n_words ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS mean_word_len,
-             floor((CASE WHEN n_words > 0 THEN n_symbols::DOUBLE / n_words ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS symbol_ratio,
-             floor((CASE WHEN n_words > 0 THEN alpha_words::DOUBLE / n_words ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS alpha_word_frac,
+             {fixed6_sql('CASE WHEN n_words > 0 THEN word_chars::DOUBLE / n_words ELSE 0.0 END')} AS mean_word_len,
+             {fixed6_sql('CASE WHEN n_words > 0 THEN n_symbols::DOUBLE / n_words ELSE 0.0 END')} AS symbol_ratio,
+             {fixed6_sql('CASE WHEN n_words > 0 THEN alpha_words::DOUBLE / n_words ELSE 0.0 END')} AS alpha_word_frac,
              ({stop_sum}) AS n_stop_hits,
-             floor((CASE WHEN len(lines) > 0 THEN len(list_filter(lines, l -> regexp_matches(l, '^[ \t]*[-*•]')))::DOUBLE / len(lines) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS bullet_line_frac,
-             floor((CASE WHEN len(lines) > 0 THEN len(list_filter(lines, l -> regexp_matches(l, '(\.\.\.|…)[ \t\r]*$')))::DOUBLE / len(lines) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS ellipsis_line_frac
+             {bullet_frac} AS bullet_line_frac,
+             {ellipsis_frac} AS ellipsis_line_frac
       FROM m
     )
     SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac,
@@ -3557,10 +3567,6 @@ def events_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_oracle(damping: float = 0.85, iters: int = 6) -> str:
-    f6 = lambda e: f"floor(({e}) * 1000000 + 0.5) / 1000000"  # noqa: E731
-    dsum = (
-        lambda e: f"CAST(CAST(SUM(CAST({e} AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE)"
-    )  # noqa: E731
     sql = f"""
     WITH e AS (
       SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
@@ -3573,7 +3579,7 @@ def _pagerank_oracle(damping: float = 0.85, iters: int = 6) -> str:
     ),
     ow AS (SELECT src, sum(w) AS out_w FROM w GROUP BY src),
     p AS (
-      SELECT w.src, w.dst, {f6('w.w / ow.out_w')} AS p
+      SELECT w.src, w.dst, {fixed6_sql('w.w / ow.out_w')} AS p
       FROM w JOIN ow USING (src)
     ),
     v AS (
@@ -3584,8 +3590,8 @@ def _pagerank_oracle(damping: float = 0.85, iters: int = 6) -> str:
     r0 AS (SELECT vertex, 1.0 / nd AS rank FROM v CROSS JOIN nn)"""
     prev = "r0"
     for i in range(1, iters + 1):
-        contrib = dsum(f6("r.rank * p.p"))
-        dang = dsum(f6("rank"))
+        contrib = dec_to_double_sql(f"SUM({dec_wide_sql(fixed6_sql('r.rank * p.p'))})")
+        dang = dec_to_double_sql(f"SUM({dec_wide_sql(fixed6_sql('rank'))})")
         sql += f""",
     c{i} AS (
       SELECT p.dst AS vertex, {contrib} AS in_sum
@@ -3597,7 +3603,7 @@ def _pagerank_oracle(damping: float = 0.85, iters: int = 6) -> str:
     ),
     r{i} AS (
       SELECT v.vertex,
-             {f6(f'(1.0 - {damping}) / nd + {damping} * (coalesce(c{i}.in_sum, 0.0) + d{i}.dang / nd)')} AS rank
+             {fixed6_sql(f'(1.0 - {damping}) / nd + {damping} * (coalesce(c{i}.in_sum, 0.0) + d{i}.dang / nd)')} AS rank
       FROM v LEFT JOIN c{i} ON v.vertex = c{i}.vertex
              CROSS JOIN nn CROSS JOIN d{i}
     )"""
@@ -3634,7 +3640,7 @@ def events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TF-IDF lexical top-k (operators/tfidf.py): the oracle mirrors every
 # fixed6 rounding and decimal-exact sum step by step, so cosines and
 # the top-k boundary match bit-for-bit.
-_TFIDF_ORACLE = r"""
+_TFIDF_ORACLE = rf"""
     WITH n AS (SELECT count(*) AS n_docs FROM documents),
     toks AS (
       SELECT doc_id AS id,
@@ -3651,22 +3657,22 @@ _TFIDF_ORACLE = r"""
     ),
     w AS (
       SELECT id, tok,
-             floor((tf * (floor(ln((n_docs + 1.0) / (df + 1.0)) * 1000000 + 0.5) / 1000000)) * 1000000 + 0.5) / 1000000 AS wt
+             {fixed6_sql(f"tf * ({fixed6_sql('ln((n_docs + 1.0) / (df + 1.0))')})")} AS wt
       FROM tf JOIN dfc USING (tok), n
     ),
     wz AS (SELECT id, tok, wt FROM w WHERE wt <> 0),
     norms AS (
       SELECT id,
-             sqrt(CAST(CAST(SUM(CAST(wt AS DECIMAL(19,6)) * CAST(wt AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE)) AS norm
+             sqrt({dec_to_double_sql(f"SUM({dec_wide_sql('wt')} * {dec_wide_sql('wt')})")}) AS norm
       FROM wz GROUP BY id
     ),
     wnt AS (
-      SELECT id, tok, floor((wt / norm) * 1000000 + 0.5) / 1000000 AS wn
+      SELECT id, tok, {fixed6_sql('wt / norm')} AS wn
       FROM wz JOIN norms USING (id)
     ),
     pairs AS (
       SELECT a.id AS id_a, b.id AS id_b,
-             CAST(CAST(SUM(CAST(a.wn AS DECIMAL(19,6)) * CAST(b.wn AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sim
+             {dec_to_double_sql(f"SUM({dec_wide_sql('a.wn')} * {dec_wide_sql('b.wn')})")} AS sim
       FROM wnt a JOIN wnt b ON a.tok = b.tok AND a.id < b.id
       GROUP BY a.id, b.id
     ),
@@ -3697,7 +3703,7 @@ def docs_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the shingle STRING (the operator's xxhash64 keys only rename the
 # join values — counts are identical modulo nil 64-bit collisions,
 # the ngram_jaccard precedent).
-_CONTAINMENT_ORACLE = r"""
+_CONTAINMENT_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
              string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -3721,11 +3727,11 @@ _CONTAINMENT_ORACLE = r"""
     ),
     u AS (
       SELECT id_a AS inner_id, id_b AS outer_id,
-             floor((CAST(i AS DOUBLE) / CAST(sz_a AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS containment
+             {fixed6_sql('CAST(i AS DOUBLE) / CAST(sz_a AS DOUBLE)')} AS containment
       FROM pb
       UNION ALL
       SELECT id_b AS inner_id, id_a AS outer_id,
-             floor((CAST(i AS DOUBLE) / CAST(sz_b AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS containment
+             {fixed6_sql('CAST(i AS DOUBLE) / CAST(sz_b AS DOUBLE)')} AS containment
       FROM pb
     )
     SELECT inner_id, outer_id, containment FROM u WHERE containment >= 0.5
@@ -3751,7 +3757,7 @@ def docs_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decimal-summed, so the divergence is engine-identical.
 @_register(
     "docs_ngram_novelty",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id,
              string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -3770,9 +3776,9 @@ def docs_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT i.doc_id,
            COALESCE(p.n_shingles, 0) AS n_shingles,
            COALESCE(p.n_unique, 0) AS n_unique,
-           floor((CASE WHEN COALESCE(p.n_shingles, 0) > 0
+           {fixed6_sql('''CASE WHEN COALESCE(p.n_shingles, 0) > 0
                        THEN CAST(p.n_unique AS DOUBLE) / p.n_shingles
-                       ELSE 1.0 END) * 1000000 + 0.5) / 1000000 AS novel_frac
+                       ELSE 1.0 END''')} AS novel_frac
     FROM (SELECT DISTINCT doc_id FROM documents) i
     LEFT JOIN per p USING (doc_id)
     """,
@@ -3814,7 +3820,7 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SOURCE_KL_ORACLE = r"""
+_SOURCE_KL_ORACLE = rf"""
     WITH toks AS (
       SELECT source,
              unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
@@ -3827,14 +3833,13 @@ _SOURCE_KL_ORACLE = r"""
     tot AS (SELECT sum(cc) AS tc FROM ct),
     contrib AS (
       SELECT st.source,
-             floor(((CAST(st.c AS DOUBLE) / ts)
-                    * ln((CAST(st.c AS DOUBLE) / ts) / (CAST(cc AS DOUBLE) / tc)))
-                   * 1000000 + 0.5) / 1000000 AS kx
+             {fixed6_sql('''(CAST(st.c AS DOUBLE) / ts)
+                    * ln((CAST(st.c AS DOUBLE) / ts) / (CAST(cc AS DOUBLE) / tc))''')} AS kx
       FROM st JOIN stot USING (source) JOIN ct USING (tok), tot
     )
     SELECT source,
            count(*) AS n_terms,
-           CAST(CAST(SUM(CAST(kx AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS kl_to_corpus
+           {dec_to_double_sql(f"SUM({dec_wide_sql('kx')})")} AS kl_to_corpus
     FROM contrib GROUP BY source
 """
 
@@ -3876,11 +3881,11 @@ def docs_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (percentile ≡ quantile_cont, the established pair), boundaries
 # fixed6-rounded before clipping so the decimal-exact sum never casts
 # an interpolated double onto a decimal rounding tie.
-_WINSORIZE_ORACLE = r"""
+_WINSORIZE_ORACLE = rf"""
     WITH b AS (
       SELECT l_returnflag,
-             floor(quantile_cont(l_extendedprice, 0.01) * 1000000 + 0.5) / 1000000 AS lo,
-             floor(quantile_cont(l_extendedprice, 0.99) * 1000000 + 0.5) / 1000000 AS hi
+             {fixed6_sql('quantile_cont(l_extendedprice, 0.01)')} AS lo,
+             {fixed6_sql('quantile_cont(l_extendedprice, 0.99)')} AS hi
       FROM lineitem GROUP BY l_returnflag
     ),
     c AS (
@@ -3894,8 +3899,8 @@ _WINSORIZE_ORACLE = r"""
            count(*) AS n_rows,
            CAST(SUM(cl) AS BIGINT) AS n_clipped_low,
            CAST(SUM(ch) AS BIGINT) AS n_clipped_high,
-           CAST(CAST(SUM(CAST(w AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_winsorized,
-           CAST(CAST(SUM(CAST(w AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+           {oracle_dec_sum('w', 'sum_winsorized')},
+           {dec_to_double_sql(f"SUM({dec_sql('w')})")}
              / CAST(count(*) AS DOUBLE) AS mean_winsorized
     FROM c GROUP BY l_returnflag
 """
@@ -4067,17 +4072,17 @@ def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounding direction is engine-specific, while fixed6's floor(+0.5)
 # is the identical IEEE sequence everywhere and its output is never
 # within a tie of the decimal grid.
-_DIM_STATS_ORACLE = r"""
+_DIM_STATS_ORACLE = rf"""
     WITH v AS (
       SELECT i - 1 AS dim,
-             floor((embedding[i]::DOUBLE) * 1000000 + 0.5) / 1000000 AS v6
+             {fixed6_sql('embedding[i]::DOUBLE')} AS v6
       FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS g(i)
     ),
     s AS (
       SELECT dim,
              count(*) AS n_vals,
-             CAST(CAST(SUM(CAST(v6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(v6 AS DECIMAL(19,6)) * CAST(v6 AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx
+             {oracle_dec_sum('v6', 'sx')},
+             {dec_to_double_sql(f"SUM({dec_wide_sql('v6')} * {dec_wide_sql('v6')})")} AS sxx
       FROM v GROUP BY dim
     )
     SELECT dim, n_vals,
@@ -4133,16 +4138,15 @@ def _pca_base_sql(dim: int, tag: str = "", where: str = "") -> str:
     current halves) can coexist in one WITH block; `where` is an
     extra scan predicate ANDed after the NULL filter."""
     xs = ",\n             ".join(
-        f"floor((e[{k + 1}]::DOUBLE) * 1000000 + 0.5) / 1000000 AS x{k}"
+        f"{fixed6_sql(f'e[{k + 1}]::DOUBLE')} AS x{k}"
         for k in range(dim)
     )
     sums = ",\n             ".join(
-        f"CAST(CAST(SUM(CAST(x{i} AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS s{i}"
-        for i in range(dim)
+        oracle_dec_sum(f"x{i}", f"s{i}") for i in range(dim)
     )
     prods = ",\n             ".join(
-        f"CAST(CAST(SUM(CAST(x{i} AS DECIMAL(19,6)) * CAST(x{j} AS DECIMAL(19,6)))"
-        f" AS VARCHAR) AS DOUBLE) AS p{i}_{j}"
+        dec_to_double_sql(f"SUM({dec_wide_sql(f'x{i}')} * {dec_wide_sql(f'x{j}')})")
+        + f" AS p{i}_{j}"
         for i in range(dim)
         for j in range(i, dim)
     )
@@ -4611,7 +4615,7 @@ def _bm25_oracle(k: int = 10) -> str:
     return _BM25_ORACLE.replace("LIMIT 10", f"LIMIT {k}")
 
 
-_BM25_ORACLE = r"""
+_BM25_ORACLE = rf"""
     WITH tf_all AS (
       SELECT id, tok, count(*) AS tf FROM (
         SELECT doc_id AS id,
@@ -4631,13 +4635,13 @@ _BM25_ORACLE = r"""
     dft AS (SELECT tok, count(*) AS df FROM tf_q GROUP BY tok),
     s AS (
       SELECT id,
-             floor(((floor(ln(1.0 + (nd - df + 0.5) / (df + 0.5)) * 1000000 + 0.5) / 1000000)
-                    * ((tf * 2.2) / (tf + 1.2 * (0.25 + (0.75 * dl) / avgdl)))) * 1000000 + 0.5) / 1000000 AS s
+             {fixed6_sql(f'''({fixed6_sql('ln(1.0 + (nd - df + 0.5) / (df + 0.5))')})
+                    * ((tf * 2.2) / (tf + 1.2 * (0.25 + (0.75 * dl) / avgdl)))''')} AS s
       FROM tf_q JOIN dft USING (tok) JOIN doclen USING (id), nn
     ),
     scored AS (
       SELECT id,
-             CAST(CAST(SUM(CAST(s AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS score
+             {dec_to_double_sql(f"SUM({dec_wide_sql('s')})")} AS score
       FROM s GROUP BY id
     ),
     ranked AS (
@@ -4662,7 +4666,7 @@ def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTE spine as BM25; the candidate x present-terms grid left-joins the
 # postings so absent terms still smooth. mu = 2000 (Zhai & Lafferty's
 # recommended prior for short queries).
-_QL_ORACLE = r"""
+_QL_ORACLE = rf"""
     WITH tf_all AS (
       SELECT id, tok, count(*) AS tf FROM (
         SELECT doc_id AS id,
@@ -4680,14 +4684,14 @@ _QL_ORACLE = r"""
     grid AS (SELECT cand.id, ctf.tok, ctf.ctf FROM cand CROSS JOIN ctf),
     s AS (
       SELECT g.id,
-             floor(ln((coalesce(t.tf, 0) + 2000.0 * (g.ctf / cs.ctot)) / (d.dl + 2000.0)) * 1000000 + 0.5) / 1000000 AS s
+             {fixed6_sql('ln((coalesce(t.tf, 0) + 2000.0 * (g.ctf / cs.ctot)) / (d.dl + 2000.0))')} AS s
       FROM grid g
       LEFT JOIN tf_q t ON t.id = g.id AND t.tok = g.tok
       JOIN doclen d ON d.id = g.id, cs
     ),
     scored AS (
       SELECT id,
-             CAST(CAST(SUM(CAST(s AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS score
+             {dec_to_double_sql(f"SUM({dec_wide_sql('s')})")} AS score
       FROM s GROUP BY id
     ),
     ranked AS (
@@ -4718,8 +4722,8 @@ def docs_ql_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     u AS (SELECT doc_id FROM bm UNION SELECT doc_id FROM ql),
     f AS (
       SELECT u.doc_id,
-             floor((coalesce(1.0 / (60 + b.rank), 0.0)
-                    + coalesce(1.0 / (60 + q.rank), 0.0)) * 1000000 + 0.5) / 1000000 AS rrf_score,
+             {fixed6_sql('''coalesce(1.0 / (60 + b.rank), 0.0)
+                    + coalesce(1.0 / (60 + q.rank), 0.0)''')} AS rrf_score,
              b.rank AS bm25_rank, q.rank AS ql_rank
       FROM u
       LEFT JOIN bm b USING (doc_id)
@@ -4749,7 +4753,7 @@ def docs_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source's n_chars ECDF against the REST of the corpus, evaluated at
 # every distinct corpus value (where the sup of an ECDF difference is
 # attained). ECDFs are exact-integer cumulative-count ratios.
-_KS_ORACLE = r"""
+_KS_ORACLE = rf"""
     WITH vals AS (SELECT DISTINCT n_chars AS v FROM documents),
     cnt AS (
       SELECT source, n_chars AS v, CAST(count(*) AS BIGINT) AS c
@@ -4775,8 +4779,8 @@ _KS_ORACLE = r"""
     diffs AS (
       SELECT s.source, s.n_s,
              CASE WHEN ng.n_g > s.n_s THEN
-               floor(abs(CAST(s.cum_s AS DOUBLE) / s.n_s
-                         - CAST(gc.cum_g - s.cum_s AS DOUBLE) / (ng.n_g - s.n_s)) * 1000000 + 0.5) / 1000000
+               {fixed6_sql('''abs(CAST(s.cum_s AS DOUBLE) / s.n_s
+                         - CAST(gc.cum_g - s.cum_s AS DOUBLE) / (ng.n_g - s.n_s))''')}
              END AS d
       FROM scum s JOIN gcum gc ON gc.v = s.v, ng
     )
@@ -4888,7 +4892,7 @@ def docs_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # convention (x/y fixed6 logs, products multiplied IN decimal with the
 # engine-asymmetric 18,6 / 19,6 widths) so the slope combines from
 # bit-identical sums in one IEEE expression.
-_ZIPF_ORACLE = r"""
+_ZIPF_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
@@ -4904,29 +4908,29 @@ _ZIPF_ORACLE = r"""
     ),
     top AS (
       SELECT source,
-             floor(ln(CAST(rnk AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS x,
-             floor(ln(CAST(cnt AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
+             {fixed6_sql('ln(CAST(rnk AS DOUBLE))')} AS x,
+             {fixed6_sql('ln(CAST(cnt AS DOUBLE))')} AS y
       FROM ranked WHERE rnk <= 100
     ),
     s AS (
       SELECT source,
              count(*) AS n_terms,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
+             {oracle_dec_sum('x', 'sx')},
+             {oracle_dec_sum('y', 'sy')},
+             {dec_to_double_sql(f"SUM({dec_wide_sql('x')} * {dec_wide_sql('x')})")} AS sxx,
+             {dec_to_double_sql(f"SUM({dec_wide_sql('x')} * {dec_wide_sql('y')})")} AS sxy
       FROM top GROUP BY source
     )
     SELECT source,
            CAST(n_terms AS BIGINT) AS n_terms,
            CASE WHEN (CAST(n_terms AS DOUBLE) * sxx - sx * sx) > 0 THEN
-             floor(((CAST(n_terms AS DOUBLE) * sxy - sx * sy)
-                    / (CAST(n_terms AS DOUBLE) * sxx - sx * sx)) * 1000000 + 0.5) / 1000000
+             {fixed6_sql('''(CAST(n_terms AS DOUBLE) * sxy - sx * sy)
+                    / (CAST(n_terms AS DOUBLE) * sxx - sx * sx)''')}
            END AS zipf_slope,
            CASE WHEN (CAST(n_terms AS DOUBLE) * sxx - sx * sx) > 0 THEN
-             floor(((sy - ((CAST(n_terms AS DOUBLE) * sxy - sx * sy)
+             {fixed6_sql('''(sy - ((CAST(n_terms AS DOUBLE) * sxy - sx * sy)
                            / (CAST(n_terms AS DOUBLE) * sxx - sx * sx)) * sx)
-                    / CAST(n_terms AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                    / CAST(n_terms AS DOUBLE)''')}
            END AS zipf_intercept
     FROM s
 """
@@ -4997,7 +5001,7 @@ def docs_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single-source corpus degrades to plain frequency ranking instead of
 # all-zero scores); score = tf·idf, one IEEE multiply on exact
 # operands, fixed6.
-_SOURCE_KEYWORDS_ORACLE = r"""
+_SOURCE_KEYWORDS_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
@@ -5010,9 +5014,9 @@ _SOURCE_KEYWORDS_ORACLE = r"""
     ns AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS n FROM words),
     scored AS (
       SELECT c.source, c.w, c.tf, d.df,
-             floor((CAST(c.tf AS DOUBLE)
-                    * (floor(ln((1.0 + CAST(ns.n AS DOUBLE)) / (1.0 + CAST(d.df AS DOUBLE))) * 1000000 + 0.5) / 1000000
-                       + 1.0)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql(f'''CAST(c.tf AS DOUBLE)
+                    * ({fixed6_sql('ln((1.0 + CAST(ns.n AS DOUBLE)) / (1.0 + CAST(d.df AS DOUBLE)))')}
+                       + 1.0)''')} AS score
       FROM cnt c JOIN dfreq d USING (w) CROSS JOIN ns
     )
     SELECT source, w AS token, tf, df AS df_sources, score, rank FROM (
@@ -5091,7 +5095,7 @@ def docs_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # direct dedup-effectiveness readout. Cumulatives are per-doc points
 # in doc_id order; the fit is OLS of fixed6 ln(types) on fixed6
 # ln(tokens) with the corr-stats decimal-exact sums.
-_HEAPS_ORACLE = r"""
+_HEAPS_ORACLE = rf"""
     WITH words AS (
       SELECT source, doc_id, w FROM (
         SELECT source, doc_id,
@@ -5125,30 +5129,30 @@ _HEAPS_ORACLE = r"""
     ),
     pts AS (
       SELECT source,
-             floor(ln(CAST(ct AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS x,
-             floor(ln(CAST(cy AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
+             {fixed6_sql('ln(CAST(ct AS DOUBLE))')} AS x,
+             {fixed6_sql('ln(CAST(cy AS DOUBLE))')} AS y
       FROM cums WHERE ct >= 1 AND cy >= 1
     ),
     s AS (
       SELECT source,
              count(*) AS n_points,
              count(DISTINCT x) AS nx,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
+             {oracle_dec_sum('x', 'sx')},
+             {oracle_dec_sum('y', 'sy')},
+             {dec_to_double_sql(f"SUM({dec_wide_sql('x')} * {dec_wide_sql('x')})")} AS sxx,
+             {dec_to_double_sql(f"SUM({dec_wide_sql('x')} * {dec_wide_sql('y')})")} AS sxy
       FROM pts GROUP BY source
     )
     SELECT source,
            CAST(n_points AS BIGINT) AS n_points,
            CASE WHEN nx >= 2 AND (CAST(n_points AS DOUBLE) * sxx - sx * sx) > 0 THEN
-             floor(((CAST(n_points AS DOUBLE) * sxy - sx * sy)
-                    / (CAST(n_points AS DOUBLE) * sxx - sx * sx)) * 1000000 + 0.5) / 1000000
+             {fixed6_sql('''(CAST(n_points AS DOUBLE) * sxy - sx * sy)
+                    / (CAST(n_points AS DOUBLE) * sxx - sx * sx)''')}
            END AS heaps_beta,
            CASE WHEN nx >= 2 AND (CAST(n_points AS DOUBLE) * sxx - sx * sx) > 0 THEN
-             floor(((sy - ((CAST(n_points AS DOUBLE) * sxy - sx * sy)
+             {fixed6_sql('''(sy - ((CAST(n_points AS DOUBLE) * sxy - sx * sy)
                            / (CAST(n_points AS DOUBLE) * sxx - sx * sx)) * sx)
-                    / CAST(n_points AS DOUBLE)) * 1000000 + 0.5) / 1000000
+                    / CAST(n_points AS DOUBLE)''')}
            END AS heaps_logk
     FROM s
     ORDER BY source
@@ -5273,9 +5277,8 @@ def _mmr_oracle(k: int = 5, lam: float = 0.7) -> str:
       SELECT g.da, g.db,
              CASE WHEN (coalesce(sa.n, 0) + coalesce(sb.n, 0) - coalesce(i.i, 0)) = 0
                   THEN 0.0
-                  ELSE floor(CAST(coalesce(i.i, 0) AS DOUBLE)
-                             / (coalesce(sa.n, 0) + coalesce(sb.n, 0) - coalesce(i.i, 0))
-                             * 1000000 + 0.5) / 1000000 END AS sim
+                  ELSE {fixed6_sql('''CAST(coalesce(i.i, 0) AS DOUBLE)
+                             / (coalesce(sa.n, 0) + coalesce(sb.n, 0) - coalesce(i.i, 0))''')} END AS sim
       FROM grid g
       LEFT JOIN inter i ON i.da = g.da AND i.db = g.db
       LEFT JOIN sz sa ON sa.doc_id = g.da
@@ -5301,9 +5304,8 @@ def _mmr_oracle(k: int = 5, lam: float = 0.7) -> str:
     ),
     r{r} AS MATERIALIZED (
       SELECT c.doc_id, c.score,
-             floor((CAST({lam_r} AS DOUBLE) * c.score
-                    - CAST({one_minus_r} AS DOUBLE) * coalesce(m.ms, 0.0))
-                   * 1000000 + 0.5) / 1000000 AS mmr
+             {fixed6_sql(f'''CAST({lam_r} AS DOUBLE) * c.score
+                    - CAST({one_minus_r} AS DOUBLE) * coalesce(m.ms, 0.0)''')} AS mmr
       FROM cand c LEFT JOIN ms{r} m USING (doc_id)
       WHERE c.doc_id NOT IN (SELECT doc_id FROM seen{r - 1})
     ),
@@ -5408,7 +5410,7 @@ def mmr_rerank_docs(d: DataFrame) -> DataFrame:
 # weighted_sample): Efraimidis–Spirakis exponential keys from the
 # portable md5 uniform; fixed6-rounded keys + id tie-break keep the
 # top-k boundary engine-stable (the DSIR log convention).
-_WEIGHTED_SAMPLE_ORACLE = r"""
+_WEIGHTED_SAMPLE_ORACLE = rf"""
     WITH w AS (
       SELECT doc_id,
              CAST(greatest(coalesce(n_chars, 0), 1) AS DOUBLE) AS wt,
@@ -5417,7 +5419,7 @@ _WEIGHTED_SAMPLE_ORACLE = r"""
       FROM documents
     )
     SELECT doc_id, wt,
-           floor((-ln(u) / wt) * 1000000 + 0.5) / 1000000 AS skey
+           {fixed6_sql('-ln(u) / wt')} AS skey
     FROM w
     ORDER BY skey, doc_id
     LIMIT 200
@@ -5447,15 +5449,15 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # overflows int64), while Spark's product rule p1+p2+1 <= 38 forces
 # 18,6 operands to stay exact at scale 12 — both engines thus compute
 # the identical exact value via different declared widths.
-_CORR_ORACLE = r"""
+_CORR_ORACLE = rf"""
     WITH s AS (
       SELECT l_returnflag,
              count(*) AS n_rows,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,6)) * CAST(l_quantity AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,6)) * CAST(l_extendedprice AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,6)) * CAST(l_extendedprice AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
+             {oracle_dec_sum('l_quantity', 'sx')},
+             {oracle_dec_sum('l_extendedprice', 'sy')},
+             {dec_to_double_sql(f"SUM({dec_wide_sql('l_quantity')} * {dec_wide_sql('l_quantity')})")} AS sxx,
+             {dec_to_double_sql(f"SUM({dec_wide_sql('l_extendedprice')} * {dec_wide_sql('l_extendedprice')})")} AS syy,
+             {dec_to_double_sql(f"SUM({dec_wide_sql('l_quantity')} * {dec_wide_sql('l_extendedprice')})")} AS sxy
       FROM lineitem
       GROUP BY l_returnflag
     )
@@ -5877,7 +5879,7 @@ def _semantic_dedup_oracle(
       -- never drops them; DuckDB's NaN orders LARGEST so an unguarded
       -- fixed6(x/0) >= t would drop them — pin the Spark semantics
       WHERE a.nrm > 0 AND b.nrm > 0
-        AND floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 >= {threshold}
+        AND {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} >= {threshold}
     )
     SELECT vc.vec_id, vc.cell, (d.vec_id IS NULL) AS kept
     FROM vc LEFT JOIN dropped d ON vc.vec_id = d.vec_id
@@ -5977,7 +5979,7 @@ def docs_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DSIR importance weighting (operators/importance.py)
 # ---------------------------------------------------------------------------
 
-_DSIR_ORACLE = r"""
+_DSIR_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id, source,
              string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -5996,13 +5998,13 @@ _DSIR_ORACLE = r"""
     ),
     ratio AS (
       SELECT coalesce(t.b, r.b) AS b,
-             floor((ln(coalesce(ct, 0) + 1.0) - ln(tt + 1024.0)
-                    - ln(coalesce(cr, 0) + 1.0) + ln(tr + 1024.0)) * 1000000 + 0.5) / 1000000 AS lr
+             {fixed6_sql('''ln(coalesce(ct, 0) + 1.0) - ln(tt + 1024.0)
+                    - ln(coalesce(cr, 0) + 1.0) + ln(tr + 1024.0)''')} AS lr
       FROM tcnt t FULL JOIN rcnt r ON t.b = r.b, tot
     ),
     pd AS (
       SELECT g.doc_id, count(*) AS n_grams,
-             CAST(CAST(sum(CAST(lr AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS dsir_logw
+             {oracle_dec_sum('lr', 'dsir_logw')}
       FROM g JOIN ratio ON g.b = ratio.b
       GROUP BY g.doc_id
     )
@@ -6398,8 +6400,8 @@ def _tokenizer_fertility_oracle(num_merges: int = 6) -> str:
       GROUP BY s.source
     )
     SELECT source, n_words, n_subwords, n_chars,
-           floor(CAST(n_subwords AS DOUBLE) / n_words * 1000000 + 0.5) / 1000000 AS fertility,
-           floor(CAST(n_chars AS DOUBLE) / n_subwords * 1000000 + 0.5) / 1000000 AS chars_per_subword
+           {fixed6_sql('CAST(n_subwords AS DOUBLE) / n_words')} AS fertility,
+           {fixed6_sql('CAST(n_chars AS DOUBLE) / n_subwords')} AS chars_per_subword
     FROM per
     """
 
@@ -6421,7 +6423,7 @@ def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gopher n-gram repetition filters (textstats.ngram_repetition_signals)
 # ---------------------------------------------------------------------------
 
-_NGRAM_REP_ORACLE = r"""
+_NGRAM_REP_ORACLE = rf"""
     WITH base AS (
       SELECT doc_id,
              lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')) AS s
@@ -6453,12 +6455,12 @@ _NGRAM_REP_ORACLE = r"""
     ),
     f AS (
       SELECT b.doc_id,
-             floor((CASE WHEN length(b.s) > 0
+             {fixed6_sql('''CASE WHEN length(b.s) > 0
                     THEN coalesce(top_chars, 0)::DOUBLE / length(b.s)
-                    ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS top2_char_frac,
-             floor((CASE WHEN coalesce(all_chars, 0) > 0
+                    ELSE 0.0 END''')} AS top2_char_frac,
+             {fixed6_sql('''CASE WHEN coalesce(all_chars, 0) > 0
                     THEN coalesce(dup_chars, 0)::DOUBLE / all_chars
-                    ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup3_char_frac
+                    ELSE 0.0 END''')} AS dup3_char_frac
       FROM base b
       LEFT JOIN top2 ON b.doc_id = top2.doc_id
       LEFT JOIN dup3 ON b.doc_id = dup3.doc_id
@@ -6614,7 +6616,7 @@ def release_sink_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _tempfile.mkdtemp(prefix="release_smoke_")
     try:
         artifact = sinks.overwrite_release(
-            panel, base, "nation_panel", date="2026-01-01", fmt="tsv"
+            panel, base, "nation_panel", date="2026-01-01"
         )
         prov_path = _os.path.join(base, "provenance.jsonl")
         record = sinks.write_provenance(
@@ -6849,7 +6851,7 @@ def docs_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_bigram_pmi",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
              string_split(lower(trim(regexp_replace(text,
@@ -6868,8 +6870,8 @@ def docs_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     btot AS (SELECT SUM(cab) AS nb FROM bi),
     scored AS (
       SELECT bigram, cab, a.c AS ca, b.c AS cb,
-             floor((CAST(cab AS DOUBLE) * n * n)
-                   / (CAST(nb AS DOUBLE) * a.c * b.c) * 1e6 + 0.5) / 1e6
+             {fixed6_sql('''(CAST(cab AS DOUBLE) * n * n)
+                   / (CAST(nb AS DOUBLE) * a.c * b.c)''')}
                AS pmi_ratio
       FROM bi JOIN uni a ON bi.wa = a.w
               JOIN uni b ON bi.wb = b.w, tot, btot)
@@ -6979,12 +6981,12 @@ def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH q AS (
       SELECT source, lang, n_chars,
-             floor(((
+             {fixed6_sql('''(
                (CASE WHEN n >= 50 AND n <= 20000 THEN 1.0 ELSE 0.25 END)
                + (CASE WHEN n > 0 THEN alpha / n ELSE 0.0 END)
                + (CASE WHEN n > 0 THEN (CASE WHEN punct / n <= 0.1 THEN 1.0 ELSE 0.5 END) ELSE 0.0 END)
                + (CASE WHEN words > 0 AND (n - words + 1) / words >= 2.0 AND (n - words + 1) / words <= 12.0 THEN 1.0 ELSE 0.5 END)
-             ) / 4.0) * 1000000 + 0.5) / 1000000 AS quality,
+             ) / 4.0''')} AS quality,
              md5(lower(trim(text, ' '))) AS fp
       FROM (
         SELECT source, lang, n_chars,
@@ -7055,15 +7057,15 @@ def docs_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # closes the case (points at multi-column canonicalization order).
 # ---------------------------------------------------------------------------
 
-_SOURCE_REPORT_Q_CTE = """
+_SOURCE_REPORT_Q_CTE = f"""
     WITH q AS (
       SELECT source, lang, n_chars,
-             floor(((
+             {fixed6_sql('''(
                (CASE WHEN n >= 50 AND n <= 20000 THEN 1.0 ELSE 0.25 END)
                + (CASE WHEN n > 0 THEN alpha / n ELSE 0.0 END)
                + (CASE WHEN n > 0 THEN (CASE WHEN punct / n <= 0.1 THEN 1.0 ELSE 0.5 END) ELSE 0.0 END)
                + (CASE WHEN words > 0 AND (n - words + 1) / words >= 2.0 AND (n - words + 1) / words <= 12.0 THEN 1.0 ELSE 0.5 END)
-             ) / 4.0) * 1000000 + 0.5) / 1000000 AS quality,
+             ) / 4.0''')} AS quality,
              md5(lower(trim(text, ' '))) AS fp
       FROM (
         SELECT source, lang, n_chars,
@@ -7144,9 +7146,9 @@ def docs_source_report_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "docs_source_report_qsum",
     _SOURCE_REPORT_Q_CTE
-    + """
+    + f"""
     SELECT source,
-           CAST(SUM(CAST(quality AS DECIMAL(18,6))) AS VARCHAR) AS quality_sum,
+           CAST(SUM({dec_sql('quality')}) AS VARCHAR) AS quality_sum,
            COUNT(quality) AS n_quality
     FROM q GROUP BY source
     """,
@@ -7468,7 +7470,7 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_type,
            CAST(row_tot AS BIGINT) AS n_rows,
-           CAST(CAST(SUM(CAST(f6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS chi2_part,
+           {oracle_dec_sum('f6', 'chi2_part')},
            CAST(23 AS INTEGER) AS dof_part
     FROM cell GROUP BY event_type, row_tot
     """,
@@ -7589,7 +7591,7 @@ def events_type_hour_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type,
            CAST(nb AS BIGINT) AS n_before,
            CAST(na AS BIGINT) AS n_after,
-           CAST(CAST(SUM(CAST({fixed6_sql('(p - q) * ln(p / q)')} AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS psi
+           {oracle_dec_sum(fixed6_sql('(p - q) * ln(p / q)'), 'psi')}
     FROM contrib GROUP BY event_type, nb, na
     """,
 )
@@ -7946,7 +7948,7 @@ def _minhash_join_oracle(
     )
     SELECT new_id, corpus_id, jaccard FROM (
       SELECT c.new_id, c.corpus_id,
-             floor((CAST(i.i AS DOUBLE) / CAST(sa.sz + sb.sz - i.i AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jaccard
+             {fixed6_sql('CAST(i.i AS DOUBLE) / CAST(sa.sz + sb.sz - i.i AS DOUBLE)')} AS jaccard
       FROM cand c
       JOIN inter i ON c.new_id = i.new_id AND c.corpus_id = i.corpus_id
       JOIN sizes sa ON c.new_id = sa.doc_id
@@ -8244,7 +8246,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "emb_hard_negatives",
-    """
+    f"""
     WITH v AS (
       SELECT vec_id, label, embedding::DOUBLE[] AS e,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -8259,7 +8261,7 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT b.query_id, b.query_label, a.vec_id, a.label AS neg_label,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM g a, q b
       WHERE a.vec_id <> b.query_id
         AND a.label IS DISTINCT FROM b.query_label
@@ -8295,7 +8297,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "emb_hard_positives",
-    """
+    f"""
     WITH v AS (
       SELECT vec_id, label, embedding::DOUBLE[] AS e,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -8310,7 +8312,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
       SELECT b.query_id, b.query_label, a.vec_id, a.label AS pos_label,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM g a, q b
       WHERE a.vec_id <> b.query_id
         AND a.label = b.query_label
@@ -8362,7 +8364,7 @@ def _ivfpq_rerank_oracle(k: int = 5, r_cand: int = 20) -> str:
     rq AS (SELECT vec_id AS query_id, e, nrm FROM rg WHERE vec_id % 100 = 0),
     scored AS (
       SELECT c.query_id, c.vec_id,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM cand c
       JOIN rg a ON a.vec_id = c.vec_id
       JOIN rq b ON b.query_id = c.query_id
@@ -8414,7 +8416,7 @@ def _ivfpq_recall_oracle(k: int = 5) -> str:
     )
     SELECT q.query_id,
            CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           floor((CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0) * 1000000 + 0.5) / 1000000 AS recall_at_k
+           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
     FROM (SELECT DISTINCT query_id FROM brute) q
     LEFT JOIN hits h USING (query_id)
     """
@@ -8478,7 +8480,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LM_SCORE_ORACLE = r"""
+_LM_SCORE_ORACLE = rf"""
     WITH base AS (
       SELECT doc_id,
              string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
@@ -8499,7 +8501,7 @@ _LM_SCORE_ORACLE = r"""
       -- bigrams/contexts (self-trained here, so always matched — the
       -- form is pinned for external-train parity)
       SELECT b.doc_id,
-             floor((ln(CAST(COALESCE(bi.c2, 0) + 1 AS DOUBLE) / CAST(COALESCE(u.c1, 0) + v.V AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS f6
+             {fixed6_sql('ln(CAST(COALESCE(bi.c2, 0) + 1 AS DOUBLE) / CAST(COALESCE(u.c1, 0) + v.V AS DOUBLE))')} AS f6
       FROM bg b
       LEFT JOIN bi USING (bg)
       LEFT JOIN uni u ON u.w = split_part(b.bg, ' ', 1)
@@ -8507,14 +8509,14 @@ _LM_SCORE_ORACLE = r"""
     ),
     agg AS (
       SELECT doc_id,
-             CAST(CAST(SUM(CAST(f6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS s,
+             {oracle_dec_sum('f6', 's')},
              COUNT(*) AS n
       FROM contrib GROUP BY doc_id
     )
     SELECT d.doc_id,
            CAST(COALESCE(a.n, 0) AS BIGINT) AS n_bigrams,
-           floor((CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS avg_logprob,
-           floor((CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END) * 1000000 + 0.5) / 1000000 >= -8.0 AS lm_keep
+           {fixed6_sql('CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END')} AS avg_logprob,
+           {fixed6_sql('CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END')} >= -8.0 AS lm_keep
     FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN agg a USING (doc_id)
 """
 
@@ -8540,7 +8542,7 @@ def docs_contiguous_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_contiguous_ids(d, "doc_id", "seq")
 
 
-_SOURCE_ENTROPY_ORACLE = r"""
+_SOURCE_ENTROPY_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
@@ -8552,20 +8554,20 @@ _SOURCE_ENTROPY_ORACLE = r"""
     tot AS (SELECT source, SUM(c) AS n, COUNT(*) AS types FROM cnt GROUP BY source),
     contrib AS (
       SELECT cnt.source,
-             floor(((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                    * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS f6
+             {fixed6_sql('''(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
+                    * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))''')} AS f6
       FROM cnt JOIN tot USING (source)
     )
     SELECT t.source,
            CAST(t.n AS BIGINT) AS n_tokens,
            CAST(t.types AS BIGINT) AS n_types,
-           -(CAST(CAST(SUM(CAST(c.f6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)) AS entropy
+           -({dec_to_double_sql(f"SUM({dec_sql('c.f6')})")}) AS entropy
     FROM tot t JOIN contrib c USING (source)
     GROUP BY t.source, t.n, t.types
 """
 
 
-_CHAR_ENTROPY_ORACLE = r"""
+_CHAR_ENTROPY_ORACLE = rf"""
     WITH chars AS (
       SELECT doc_id, substring(text, i, 1) AS ch
       FROM documents, UNNEST(generate_series(1, length(text))) AS u(i)
@@ -8578,13 +8580,13 @@ _CHAR_ENTROPY_ORACLE = r"""
     ),
     contrib AS (
       SELECT cc.doc_id,
-             floor(((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                    * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS f6
+             {fixed6_sql('''(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
+                    * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))''')} AS f6
       FROM cc JOIN tot USING (doc_id)
     ),
     ent AS (
       SELECT doc_id,
-             -(CAST(CAST(SUM(CAST(f6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)) AS char_entropy
+             -({dec_to_double_sql(f"SUM({dec_sql('f6')})")}) AS char_entropy
       FROM contrib GROUP BY doc_id
     )
     SELECT d.doc_id,
@@ -8659,7 +8661,7 @@ def _lsh_recall_oracle(k: int = 5) -> str:
     )
     SELECT q.query_id,
            CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           floor((CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0) * 1000000 + 0.5) / 1000000 AS recall_at_k
+           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
     FROM (SELECT DISTINCT query_id FROM brute) q
     LEFT JOIN hits h USING (query_id)
     """
@@ -8719,7 +8721,7 @@ def _dim_trunc_recall_oracle(d_trunc: int = 32, k: int = 5) -> str:
     ),
     tscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM tg a, tg b
       WHERE b.vec_id % 100 = 0
     ),
@@ -8738,7 +8740,7 @@ def _dim_trunc_recall_oracle(d_trunc: int = 32, k: int = 5) -> str:
     )
     SELECT q.query_id,
            CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           floor((CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0) * 1000000 + 0.5) / 1000000 AS recall_at_k
+           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
     FROM (SELECT DISTINCT query_id FROM brute) q
     LEFT JOIN hits h USING (query_id)
     """
@@ -8781,7 +8783,7 @@ def emb_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BENCH_DECONTAM_ORACLE = r"""
+_BENCH_DECONTAM_ORACLE = rf"""
     WITH v AS (
       SELECT vec_id, embedding::DOUBLE[] AS e,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -8792,7 +8794,7 @@ _BENCH_DECONTAM_ORACLE = r"""
     ),
     scored AS (
       SELECT c.vec_id,
-             floor((list_dot_product(c.e, p.e) / (c.nrm * p.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(c.e, p.e) / (c.nrm * p.nrm)')} AS score
       FROM g c JOIN g p ON p.vec_id % 37 = 0 AND c.vec_id % 37 <> 0
     )
     SELECT vec_id,
@@ -9017,7 +9019,7 @@ def _rbo_weight_table(p: float = 0.9, depth: int = 10) -> dict[int, float]:
 def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
     ws = _rbo_weight_table(depth=depth)
     case = "CASE " + " ".join(
-        f"WHEN mx = {m} THEN CAST({w!r} AS DECIMAL(18,6))"
+        f"WHEN mx = {m} THEN {dec_sql(repr(w))}"
         for m, w in ws.items()
     ) + " END"
     return f"""
@@ -9031,7 +9033,7 @@ def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
     ),
     fscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM g a, g b WHERE b.vec_id % 100 = 0
     ),
     fullr AS (
@@ -9051,7 +9053,7 @@ def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
     ),
     tscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             floor((list_dot_product(a.e, b.e) / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000 AS score
+             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
       FROM tg a, tg b WHERE b.vec_id % 100 = 0
     ),
     truncr AS (
@@ -9068,7 +9070,7 @@ def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
     ),
     per AS (
       SELECT query_id, COUNT(*) AS n_overlap,
-             CAST(CAST(SUM({case}) AS VARCHAR) AS DOUBLE) AS rbo_raw
+             {dec_to_double_sql(f'SUM({case})')} AS rbo_raw
       FROM matched GROUP BY query_id
     )
     SELECT q.query_id,
@@ -9302,7 +9304,7 @@ def emb_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.label_outlier_topk(e, "embedding", "vec_id", "label", k=5, dim=64)
 
 
-_LM_SCORE_XTRAIN_ORACLE = r"""
+_LM_SCORE_XTRAIN_ORACLE = rf"""
     WITH train_base AS (
       SELECT string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
       FROM documents WHERE doc_id % 2 = 0
@@ -9328,7 +9330,7 @@ _LM_SCORE_XTRAIN_ORACLE = r"""
     ),
     contrib AS (
       SELECT b.doc_id,
-             floor((ln(CAST(COALESCE(bi.c2, 0) + 1 AS DOUBLE) / CAST(COALESCE(u.c1, 0) + v.V AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS f6
+             {fixed6_sql('ln(CAST(COALESCE(bi.c2, 0) + 1 AS DOUBLE) / CAST(COALESCE(u.c1, 0) + v.V AS DOUBLE))')} AS f6
       FROM bg b
       LEFT JOIN bi USING (bg)
       LEFT JOIN uni u ON u.w = split_part(b.bg, ' ', 1)
@@ -9336,14 +9338,14 @@ _LM_SCORE_XTRAIN_ORACLE = r"""
     ),
     agg AS (
       SELECT doc_id,
-             CAST(CAST(SUM(CAST(f6 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS s,
+             {oracle_dec_sum('f6', 's')},
              COUNT(*) AS n
       FROM contrib GROUP BY doc_id
     )
     SELECT d.doc_id,
            CAST(COALESCE(a.n, 0) AS BIGINT) AS n_bigrams,
-           floor((CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS avg_logprob,
-           floor((CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END) * 1000000 + 0.5) / 1000000 >= -8.0 AS lm_keep
+           {fixed6_sql('CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END')} AS avg_logprob,
+           {fixed6_sql('CASE WHEN a.n > 0 THEN a.s / a.n ELSE 0.0 END')} >= -8.0 AS lm_keep
     FROM (SELECT DISTINCT doc_id FROM documents WHERE doc_id % 2 = 1) d
     LEFT JOIN agg a USING (doc_id)
 """
@@ -9441,7 +9443,7 @@ def docs_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM c
     ),
     t AS (
-      SELECT CAST(CAST(SUM(CAST(weight AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total
+      SELECT {oracle_dec_sum('weight', 'total')}
       FROM w
     )
     SELECT w.source, w.n_docs, w.weight,
@@ -9623,8 +9625,8 @@ ORACLES["docs_quality_funnel"] = f"""
            CAST(SUM(CASE WHEN gopher_keep AND c4_keep THEN 1 ELSE 0 END) AS BIGINT) AS pass_c4,
            CAST(SUM(CASE WHEN gopher_keep AND c4_keep AND lm_keep THEN 1 ELSE 0 END) AS BIGINT) AS pass_lm,
            CAST(SUM(CASE WHEN gopher_keep AND c4_keep AND lm_keep AND lang_ok THEN 1 ELSE 0 END) AS BIGINT) AS pass_all,
-           floor(CAST(SUM(CASE WHEN gopher_keep AND c4_keep AND lm_keep AND lang_ok THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*) * 1000000 + 0.5) / 1000000 AS yield_frac
+           {fixed6_sql('''CAST(SUM(CASE WHEN gopher_keep AND c4_keep AND lm_keep AND lang_ok THEN 1 ELSE 0 END) AS DOUBLE)
+                 / count(*)''')} AS yield_frac
     FROM v GROUP BY source
 """
 
@@ -10038,8 +10040,7 @@ def _host_report_oracle() -> str:
            COUNT(*) AS n_docs,
            CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_unique_texts,
            CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-           floor((COUNT(*) - COUNT(DISTINCT md5(text))) * 1.0 / COUNT(*)
-                 * 1000000 + 0.5) / 1000000 AS dup_rate
+           {fixed6_sql('(COUNT(*) - COUNT(DISTINCT md5(text))) * 1.0 / COUNT(*)')} AS dup_rate
     FROM keyed GROUP BY host
     """
 
@@ -10192,80 +10193,76 @@ DRIVER_SAMPLE_PRIORITY: tuple[str, ...] = (
     # Pinned flagships (every round)
     "flagship_training_corpus",
     "flagship_compound_mentions",
-    # ---- r14 rebuild (stalest-first; see DRIVER_WINDOW_BUILT_FOR_ROUND).
-    # Last driver-green rounds recomputed over CORRECTNESS_r01..r13:
-    # r10-green = 42 queries (lag 4 — the ENTIRE stale pool, all in),
-    # r11-green = 48 (lag 3, not stale), r12 = 48, r13 = 50.
-    # All 42 r10-green queries, alphabetical:
-    "docs_ac_dict_filter",
-    "docs_bpe_train",
-    "docs_char_entropy",
-    "docs_cms_estimates",
-    "docs_dedup_lines_global",
-    "docs_dup_kcore",
-    "docs_dup_triangles",
-    "docs_exact_substring_spans",
-    "docs_label_spread",
-    "docs_length_histogram",
-    "docs_line_language",
-    "docs_mmr_rerank",
-    "docs_quality_funnel",
-    "docs_rrf_fusion",
-    "docs_source_overlap",
-    "docs_source_report",
-    "docs_split_leakage",
-    "docs_temperature_mixture",
-    "docs_zipf_slope",
-    "emb_benchmark_decontam",
-    "emb_cov_drift",
-    "emb_dim_stats",
-    "emb_hard_positives",
-    "emb_ivfpq_rerank",
-    "emb_jl_distortion",
-    "emb_jl_project",
-    "emb_pca_cov",
-    "emb_pca_pc1",
-    "emb_pca_project2",
-    "emb_rbo_overlap",
-    "emb_whitened_norm",
-    "events_funnel_windowed",
-    "events_hits",
-    "events_k_anonymity",
-    "events_profile",
-    "events_psi_drift",
-    "events_rfm",
-    "events_type_hour_chi2",
-    "events_value_anomaly",
-    "lineitem_price_moments",
-    "lineitem_price_percentiles",
-    "shipping_priority_topk",
-    # 6 remaining slots from the r11-green bucket (lag 3, tie —
-    # family-spread picks): the four paths REWRITTEN this round face
-    # the driver's regenerated data immediately (the in-plan
-    # prefix-sum offsets behind customer_balance_quartiles and the
-    # two exact-quantile forms; the lazily-checkpointed retrieval
-    # index behind docs_bm25_search), plus the CC-backed
-    # docs_near_dedup_best (lazy checkpoint loop) and
-    # revenue_by_nation (relational join family — exercises the
-    # preferSortMergeJoin=false adoption in the bench session).
-    "customer_balance_quartiles",
-    "lineitem_price_quantiles_dist",
-    "lineitem_price_quantiles_grouped",
-    "docs_bm25_search",
-    "docs_near_dedup_best",
-    "revenue_by_nation",
+    # ---- r15 rebuild (stalest-first; see DRIVER_WINDOW_BUILT_FOR_ROUND).
+    # Last driver-green rounds recomputed over CORRECTNESS_r01..r14:
+    # r11-green = 42 queries (lag 4 — the ENTIRE stale pool, all in),
+    # r12-green = 48 (lag 3, not stale), r13 = 48, r14 = 50.
+    # All 42 r11-green queries, alphabetical:
+    "acctbal_threshold_label",
+    "best_part_per_brand",
+    "docs_bottom_k_sketch",
+    "docs_c4_filter",
+    "docs_decontaminate",
+    "docs_duplicate_spans",
+    "docs_epoch_shuffle",
+    "docs_fingerprint",
+    "docs_lang_id",
+    "docs_ngram_jaccard_pairs",
+    "docs_ordered_typos",
+    "docs_paren_truncate",
+    "docs_quality",
+    "docs_stratified_sample",
+    "docs_token_explode",
+    "docs_token_positions",
+    "docs_token_stats",
+    "docs_top_words",
+    "docs_topical_filter",
+    "emb_array_ops",
+    "emb_cosine_topk",
+    "emb_lsh_topk",
+    "emb_near_dup_exact",
+    "emb_pq_adc_topk",
+    "emb_quantize_int8",
+    "events_funnel",
+    "events_hourly",
+    "events_interval_join",
+    "events_json_extract",
+    "events_moving_avg",
+    "events_session_windows",
+    "keep_first_order_per_customer",
+    "lineitem_corr_stats",
+    "lineitem_qty_range_join",
+    "local_supplier_volume",
+    "order_priority_counts",
+    "order_value_bins",
+    "orders_above_segment_avg",
+    "orders_zorder_key",
+    "pricing_rollup",
+    "topk_mean_supplier",
+    "union_known_panel",
+    # 6 remaining slots from the r12-green bucket (lag 3, tie —
+    # family-spread picks among the oracles whose rendered SQL text
+    # changed this round when the numeric conventions moved behind
+    # functions/numeric.py): retrieval, sampling weights, a log-log
+    # fit, LM buckets, relational winsorizing and the events cube.
+    "docs_tfidf_topk",
+    "docs_dsir_weights",
+    "docs_heaps_fit",
+    "docs_ccnet_buckets",
+    "lineitem_winsorized",
+    "events_cube",
 )
 
 # The round this window was built for (bumped at each rebuild; the
 # policy test forces the rebuild once the round-N artifact lands).
-DRIVER_WINDOW_BUILT_FOR_ROUND = 14
+DRIVER_WINDOW_BUILT_FOR_ROUND = 15
 
 DRIVER_WINDOW_PINNED: tuple[str, ...] = (
     "flagship_training_corpus",
     "flagship_compound_mentions",
 )
 
-# Stale (lag > 3 rounds at the r14 rebuild) but out of slots — EMPTY
+# Stale (lag > 3 rounds at the r15 rebuild) but out of slots — EMPTY
 # this round: the whole 42-query stale pool fit in the window.
 DRIVER_WINDOW_DEFERRED: tuple[str, ...] = ()
 

@@ -19,13 +19,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_parquet_stage(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """K5 — stage materialization. Partitioning keys become directory
-    partitions so downstream reads prune (date/source at 100 TB)."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+def write_parquet_stage(df: DataFrame, path: str) -> None:
+    """K5 — stage materialization."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_tsv(
@@ -67,17 +63,12 @@ def release_dir(base: str, date: str | None = None) -> str:
     return os.path.join(base, f"date={d}")
 
 
-def overwrite_release(
-    df: DataFrame, base: str, name: str, date: str, fmt: str = "tsv"
-) -> str:
-    """I3 — idempotent re-release: rewrite exactly this date's
-    partition of one artifact (reference deletes + rebuilds the dated
-    dir, finalize_realease.py:102-113)."""
+def overwrite_release(df: DataFrame, base: str, name: str, date: str) -> str:
+    """I3 — idempotent re-release: rewrite exactly this date's TSV
+    artifact (reference deletes + rebuilds the dated dir,
+    finalize_realease.py:102-113)."""
     path = os.path.join(release_dir(base, date), name)
-    if fmt == "tsv":
-        write_tsv(df, path, single_file=True)
-    else:
-        write_parquet_stage(df, path)
+    write_tsv(df, path, single_file=True)
     return path
 
 

@@ -315,64 +315,6 @@ def main() -> int:
             f.write("\n")
     except OSError:
         pass
-    # Round-over-round hygiene (VERDICT r6 ask #5): builder runs and
-    # driver runs land under different load, so single totals mix run
-    # conditions. Snapshot the per-query MINIMUM across every committed
-    # bench artifact plus this run — the per-query minima are the plan
-    # costs; deltas of minima compare like with like.
-    minima: dict[str, float] = dict(per_query)
-    n_artifacts = 1  # the current run
-    import glob
-
-    latest = os.path.join(repo, "bench_full_latest.json")
-    for path in sorted(
-        glob.glob(os.path.join(repo, "BENCH_r*.json"))
-        + glob.glob(os.path.join(repo, "bench_full_*.json"))
-    ):
-        if os.path.abspath(path) == latest:
-            continue  # just written with THIS run's payload — not prior
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, ValueError):
-            continue  # truncated driver capture — skip, don't crash
-        # driver BENCH_r*.json wraps the payload: timings live under
-        # parsed.queries (top level is n/rc/tail/parsed); bench_full_*
-        # carries them at the top level
-        prior_sf = doc.get("sf") or (doc.get("parsed") or {}).get("sf")
-        if prior_sf is not None and float(prior_sf) != sf:
-            continue  # never fold minima across scale factors
-        prior = (
-            doc.get("queries")
-            or (doc.get("parsed") or {}).get("queries")  # parsed may be null
-            or {}
-        )
-        contributed = False
-        for q, sec in prior.items():
-            # only queries in the CURRENT suite: retired names from old
-            # artifacts must not inflate the noise-floor total
-            if q in minima and isinstance(sec, (int, float)):
-                minima[q] = round(min(minima[q], sec), 3)
-                contributed = True
-        if contributed:
-            n_artifacts += 1
-    try:
-        with open(os.path.join(repo, "bench_min_latest.json"), "w") as f:
-            json.dump(
-                {
-                    "metric": "per_query_minima_across_artifacts",
-                    "n_artifacts": n_artifacts,
-                    "total_of_minima": round(sum(minima.values()), 3),
-                    "queries": minima,
-                    "sf": sf,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
-    except OSError:
-        pass
     print(json.dumps(payload))
     spark.stop()
     return 0

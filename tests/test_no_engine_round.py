@@ -29,6 +29,23 @@ def test_no_spark_round_in_package():
     assert not hits, "engine-specific F.round found:\n" + "\n".join(hits)
 
 
+def test_numeric_sql_spelled_only_in_numeric_module():
+    """The fixed6 grid and the decimal-sum precisions are spelled in
+    functions/numeric.py alone; every other module (oracles included)
+    calls fixed6_sql / dec_sql / dec_wide_sql / dec_to_double_sql, so
+    a convention change is one edit."""
+    owner = PKG / "functions" / "numeric.py"
+    spellings = ("* 1000000 + 0.5) / 1000000", "AS DECIMAL(18,6)", "AS DECIMAL(19,6)")
+    hits = []
+    for f in PKG.rglob("*.py"):
+        if f == owner:
+            continue
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if any(s in line for s in spellings):
+                hits.append(f"{f.relative_to(PKG.parent)}:{i}: {line.strip()}")
+    assert not hits, "hand-spelled numeric SQL convention:\n" + "\n".join(hits)
+
+
 def test_no_np_round_in_package():
     """np.round is HALF_EVEN — silently diverges from both Spark's
     HALF_UP and fixed6 on ties; production twins must use fixed6_np."""

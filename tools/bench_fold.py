@@ -1,8 +1,8 @@
 """Per-ROUND bench floor folds (VERDICT r13 ask #1).
 
-The global min-fold (bench_min_latest.json) folds every committed
-artifact, so it can only improve by construction — it proves wins but
-cannot show a regression. This tool folds per-query minima PER ROUND
+A single min-fold over every committed artifact can only improve by
+construction — it proves wins but cannot show a regression. This
+tool folds per-query minima PER ROUND
 (from the artifact filenames: BENCH_r{N}.json and bench_full_r{N}*_*.json)
 and prints, for each query, the floor in each requested round plus the
 delta of the newest round vs the previous rounds' combined floor.
