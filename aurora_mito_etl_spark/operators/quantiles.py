@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import micros6, micros6_sql
+from ..sources.io import local_frame
 from .rownum import grouped_prefix_sum, prefix_sum
 
 # (name, numerator, denominator) — rational so rank thresholds stay
@@ -92,9 +93,7 @@ def exact_quantiles_grid(
     # re-executing the prefix-sum python stage a second time.
     n = g.agg(F.sum("c").cast("long").alias("n"))
     spark = df.sparkSession
-    spec = spark.createDataFrame(
-        list(quantiles), "quantile string, qnum long, qden long"
-    )
+    spec = local_frame(spark, quantiles, "quantile string, qnum long, qden long")
     thresh = (
         spec.crossJoin(F.broadcast(n))
         .where(F.col("n") > 0)
@@ -191,8 +190,8 @@ def grouped_exact_quantiles(
         group_col, "v", F.sum("c").over(w).cast("long").alias("cum")
     )
     n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = df.sparkSession.createDataFrame(
-        list(quantiles), "quantile string, qnum long, qden long"
+    spec = local_frame(
+        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
     )
     th = (
         n.crossJoin(F.broadcast(spec))
@@ -310,8 +309,8 @@ def grouped_exact_quantiles_dist(
     # would pay the whole prefix-sum pipeline twice (r14).
     ).localCheckpoint(eager=False)
     n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = df.sparkSession.createDataFrame(
-        list(quantiles), "quantile string, qnum long, qden long"
+    spec = local_frame(
+        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
     )
     th = n.crossJoin(F.broadcast(spec)).select(
         F.col(group_col).alias("__g"),
@@ -475,8 +474,8 @@ def grouped_quantile_sketch(
     )
     cum = g.select(group_col, "v", F.sum("c").over(w).cast("long").alias("cum"))
     n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = df.sparkSession.createDataFrame(
-        list(quantiles), "quantile string, qnum long, qden long"
+    spec = local_frame(
+        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
     )
     th = n.crossJoin(F.broadcast(spec)).select(
         F.col(group_col).alias("__g"),

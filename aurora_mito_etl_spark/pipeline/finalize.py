@@ -23,6 +23,7 @@ from aurora_mito_etl_spark.operators import chem
 from aurora_mito_etl_spark.operators import rest as rest_op
 from aurora_mito_etl_spark.operators import text as tx
 from aurora_mito_etl_spark.operators.aggregates import bin_right_closed
+from aurora_mito_etl_spark.sources.io import local_frame
 
 
 def normalize_name_key(name: str) -> str:
@@ -146,7 +147,8 @@ def compound_stats(clean: DataFrame) -> DataFrame:
 def union_known(stats: DataFrame, known: list[str], spark: SparkSession) -> DataFrame:
     """U1 — knowns appended with literal pubmed_references=100 (which
     lands them in the 'high' bin, finalize_realease.py:605-616)."""
-    known_df = spark.createDataFrame(
+    known_df = local_frame(
+        spark,
         [(name, 100, "", "known") for name in known],
         "compound string, pubmed_references long, pubmed_ids string, known_status string",
     )
@@ -171,9 +173,7 @@ def resolve_smiles(
 ) -> DataFrame:
     """J5/J6/S7 — internal db (exact → lowercased) then optional REST
     fallback, '' when unresolved (finalize_realease.py:681-699)."""
-    cache = spark.createDataFrame(
-        list(refs.smiles_db.items()) or [("", "")], "key string, value string"
-    )
+    cache = local_frame(spark, refs.smiles_db.items(), "key string, value string")
     if fetcher_factory is None:
         fetcher_factory = rest_op.stub_fetcher_factory({})
     resolved, _new = rest_op.resolve_with_cache(

@@ -15,11 +15,16 @@ from pyspark.sql import functions as F
 from aurora_mito_etl_spark.operators.joins import semi_join
 from aurora_mito_etl_spark.operators.text import dictionary_anti_filter
 
-# The reference's final PCRE topicality pattern (merge_filter.sh:83-84)
-# — kept verbatim; Java regex accepts the lookahead and the dash
-# classes unchanged. (?i) replaces rg's -i flag.
+# The reference's final PCRE topicality pattern (merge_filter.sh:83-84).
+# Java regex accepts the lookahead and the dash classes unchanged; (?i)
+# replaces rg's -i flag. One reordering: the reference opens the first
+# branch with (?=.*\bmitochondr), which find() evaluates at every
+# position — a scan to the end of the line from each character,
+# quadratic in abstract length. Zero-width assertions at one position
+# are a conjunction, so testing \b(?=complex) first keeps the match set
+# and runs the line scan only where a word starts with "complex".
 FINAL_TOPICAL_RE = (
-    r"(?i)(?:(?=.*\bmitochondr)\bcomplex(?:es)?\b[\s\-]*"
+    r"(?i)(?:\b(?=complex)(?=.*\bmitochondr)complex(?:es)?\b[\s\-]*"
     r"(?:(?:I|1)(?:\s*[-–—−]\s*(?:II|2|III|3|IV|4|V|5))?)\b"
     r"|\bNADH\b(?:\s*[:\-–—−]\s*|[-\s]*(?:dependent|linked)\s+)?"
     r"(?:dehydrogenase(?:s)?|(?:ubiquinone|quinone)\s*oxidoreductase)\b)"

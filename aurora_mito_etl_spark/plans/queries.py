@@ -66,6 +66,7 @@ from aurora_mito_etl_spark.operators import textstats as ts
 from aurora_mito_etl_spark.operators import tfidf as tf_
 from aurora_mito_etl_spark.sources import layout as ly
 from aurora_mito_etl_spark.sources.catalog import load_table
+from aurora_mito_etl_spark.sources.io import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -475,7 +476,8 @@ def union_known_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_customers"))
         .withColumn("known_status", F.lit("new"))
     )
-    known = spark.createDataFrame(
+    known = local_frame(
+        spark,
         [("LEGACY", 100, "known"), ("PILOT", 100, "known")],
         "segment string, n_customers long, known_status string",
     )
@@ -498,7 +500,7 @@ def priority_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     open_p = o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
     full_p = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    removed = spark.createDataFrame([("5-LOW",)], "o_orderpriority string")
+    removed = local_frame(spark, [("5-LOW",)], "o_orderpriority string")
     return open_p.intersect(full_p).exceptAll(removed)
 
 
@@ -605,8 +607,10 @@ def two_tier_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5/J6 — exact-then-case-insensitive lookup join with default
     (intended semantics of finalize_realease.py:507-512,686-698)."""
     r = load_table(spark, sf_dir, "region")
-    lk = spark.createDataFrame(
-        [("AFRICA", "afr"), ("america", "ame"), ("ASIA", "asi")], "k string, v string"
+    lk = local_frame(
+        spark,
+        [("AFRICA", "afr"), ("america", "ame"), ("ASIA", "asi")],
+        "k string, v string",
     )
     return j.lookup_join_two_tier(
         r, lk, key="r_name", lookup_key="k", value="v", out_col="code", default=""
@@ -2623,7 +2627,8 @@ def lineitem_qty_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join (beyond-reference §2.3): fact rows matched to
     broadcast [lo, hi) interval dimension."""
     li = load_table(spark, sf_dir, "lineitem")
-    bins = spark.createDataFrame(
+    bins = local_frame(
+        spark,
         [(0, 10, "small"), (10, 25, "mid"), (25, 1000, "large")],
         "lo int, hi int, lab string",
     )
@@ -6663,7 +6668,8 @@ def release_sink_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for r in back
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(rows),
             "n_nationkey long, n_name string, link string, "
             "sha_ok boolean, prov_records int, excel_ok boolean",

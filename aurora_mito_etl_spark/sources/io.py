@@ -10,10 +10,49 @@ inferred types break downstream plans silently.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+from typing import Any
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from aurora_mito_etl_spark.schema.registry import schema_for
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence[Any]],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """A driver-side table (a few dozen names, SMILES, bounds) as a JVM
+    ``LocalRelation``: the one way the package turns Python rows into
+    a DataFrame.
+
+    ``spark.createDataFrame(<list>, schema)`` builds a Python RDD in
+    classic PySpark, so every scan of it runs ``defaultParallelism``
+    Python-worker tasks at ~0.33 CPU-s each whatever they compute.
+    Handed over as an Arrow table of the exact schema, the rows are
+    inlined into the plan instead (below
+    ``spark.sql.execution.arrow.localRelationThreshold``) and scans
+    stay in the JVM. Same schema and rows as ``createDataFrame(rows,
+    schema)``; no rows give an empty frame of ``schema``. TIMESTAMP
+    columns are refused: Arrow reads a naive ``datetime`` as UTC where
+    ``createDataFrame`` reads it as session-local time."""
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
+    rows = [tuple(r) for r in rows]
+    arrow_schema = to_arrow_schema(struct)
+    columns = []
+    for i, (f, af) in enumerate(zip(struct.fields, arrow_schema)):
+        values = [r[i] for r in rows]
+        if rows and "timestamp" in f.dataType.simpleString():
+            raise TypeError(f"local_frame: column {f.name!r} holds timestamps")
+        if not f.nullable and None in values:
+            raise ValueError(f"local_frame: NULL in non-nullable column {f.name!r}")
+        columns.append(pa.array(values, type=af.type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
 
 
 def read_tsv(
@@ -155,7 +194,7 @@ def read_evolving_parquet(
         key = _pq.read_schema(str(f)).to_string()
         groups.setdefault(key, []).append(str(f))
     if not groups:
-        return spark.createDataFrame([], canonical)
+        return local_frame(spark, [], canonical)
     out = None
     for files in groups.values():
         batch = align_to_schema(

@@ -51,6 +51,8 @@ def _local_path(uri: str) -> Path:
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aurora_mito_etl_spark.sources.io import local_frame
+
 
 def merge_upsert(
     spark: SparkSession,
@@ -103,7 +105,7 @@ def merge_upsert(
             change_keys, key_col, "anti"
         )
     else:
-        survivors = spark.createDataFrame([], target.schema)
+        survivors = local_frame(spark, [], target.schema)
     rewritten = survivors.unionByName(updates.select(*target.columns))
 
     matched = updates.join(target.select(key_col), key_col, "semi").count()
@@ -307,7 +309,7 @@ def merge_upsert_snapshot(
             *[str(Path(table) / f) for f in sorted(affected)]
         ).join(change_keys, key_col, "anti")
     else:
-        survivors = spark.createDataFrame([], target.schema)
+        survivors = local_frame(spark, [], target.schema)
     rewritten = survivors.unionByName(updates.select(*target.columns))
 
     matched = updates.join(target.select(key_col), key_col, "semi").count()
@@ -365,9 +367,7 @@ def release_delta(
     old = set(_read_manifest(table, from_version))
     added = [f for f in _read_manifest(table, to_v) if f not in old]
     if not added:
-        return spark.createDataFrame(
-            [], read_snapshot(spark, table, to_v).schema
-        )
+        return local_frame(spark, [], read_snapshot(spark, table, to_v).schema)
     return spark.read.parquet(*[str(Path(table) / f) for f in added])
 
 

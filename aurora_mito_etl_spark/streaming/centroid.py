@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.numeric import fixed6_py, micros6_py
+from ..sources.io import local_frame
 
 OUT_SCHEMA = T.StructType(
     [
@@ -174,8 +175,8 @@ def centroid_drift_batch(
     ref_rows = [(k, [float(x) for x in v]) for k, v in sorted(reference.items())]
     out = cents.withColumn("centroid_norm", F.sqrt(F.col("norm2")))
     if ref_rows:
-        refs = out.sparkSession.createDataFrame(
-            ref_rows, "label string, ref array<double>"
+        refs = local_frame(
+            out.sparkSession, ref_rows, "label string, ref array<double>"
         )
         out = out.join(F.broadcast(refs), "label", "left")
     else:

@@ -39,8 +39,15 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from aurora_mito_etl_spark.functions.numeric import fixed6_py
+from aurora_mito_etl_spark.sources.io import local_frame
 
 N_BINS = 10
+
+# reference_from_frame's bounds table: per event type, the nine decile
+# boundaries.
+BOUNDS_SCHEMA = "event_type string, " + ", ".join(
+    f"b{i} double" for i in range(1, N_BINS)
+)
 
 OUT_SCHEMA = T.StructType(
     [
@@ -193,16 +200,16 @@ def reference_from_frame(
         r["event_type"]: [float(r[f"b{i}"]) for i in range(1, 10)]
         for r in bounds_rows
     }
-    # Empty snapshot → empty reference (ADVICE r8: createDataFrame on
-    # an empty list cannot infer a schema and raises instead).
+    # Empty snapshot → empty reference, no counting pass.
     if not bmap:
         return out
     bin_expr = F.lit(1)
     # counting pass reuses the Catalyst boundary-compare (identical
     # semantics to the batch oracle), joined against the tiny bounds
-    bdf = df.sparkSession.createDataFrame(
+    bdf = local_frame(
+        df.sparkSession,
         [(t, *bs) for t, bs in bmap.items()],
-        ["event_type"] + [f"b{i}" for i in range(1, 10)],
+        BOUNDS_SCHEMA,
     )
     for i in range(1, 10):
         bin_expr = bin_expr + (F.col("v") > F.col(f"b{i}")).cast("int")

@@ -1,6 +1,15 @@
 from __future__ import annotations
 
+import ast
+from datetime import datetime
+from pathlib import Path
+
+import pytest
+from pyspark.sql import types as T
+
 from aurora_mito_etl_spark.sources import io as eio
+
+PKG = Path(__file__).resolve().parent.parent / "aurora_mito_etl_spark"
 
 
 def test_read_staging_table_roundtrip(spark, tmp_path):
@@ -85,3 +94,85 @@ def test_align_keep_extra(spark):
     )
     got = align_to_schema(df, _canonical(), keep_extra=True)
     assert got.columns == ["doc_id", "text", "lang", "n_tokens", "extra"]
+
+
+# ---------------------------------------------------------------------------
+# local_frame: driver-side rows as a JVM LocalRelation
+# ---------------------------------------------------------------------------
+
+
+def _optimized_plan(df, capsys) -> str:
+    capsys.readouterr()
+    df.explain(mode="extended")
+    out = capsys.readouterr().out
+    return out.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        (
+            [(1, 2, True, [1.0, None], "a"), (None, None, None, None, None)],
+            "a long, b int, c boolean, d array<double>, e string",
+        ),
+        ([], "a long, b string"),
+        (
+            [],
+            T.StructType(
+                [
+                    T.StructField("k", T.StringType(), False),
+                    T.StructField("v", T.ArrayType(T.DoubleType(), False), True),
+                ]
+            ),
+        ),
+    ],
+    ids=["nulls_mixed_types", "empty_ddl", "empty_struct"],
+)
+def test_local_frame_matches_create_dataframe(spark, capsys, rows, schema):
+    want = spark.createDataFrame(rows, schema)
+    got = eio.local_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    leaf = _optimized_plan(got, capsys).strip().splitlines()[-1]
+    assert leaf.startswith("LocalRelation"), leaf
+
+
+def test_local_frame_refuses_rows_it_would_alter(spark):
+    schema = T.StructType([T.StructField("k", T.StringType(), False)])
+    with pytest.raises(ValueError, match="non-nullable"):
+        eio.local_frame(spark, [("a",), (None,)], schema)
+    # Arrow would read a naive datetime as UTC, not session-local time
+    with pytest.raises(TypeError, match="timestamps"):
+        eio.local_frame(spark, [(datetime(2020, 1, 1),)], "ts timestamp")
+    assert eio.local_frame(spark, [], "ts timestamp").count() == 0
+
+
+def _create_dataframe_calls(pkg: Path) -> list[str]:
+    """Every `<x>.createDataFrame(...)` call in the package source,
+    except the one inside sources/io.py's local_frame."""
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        allowed: set[int] = set()
+        if f == pkg / "sources" / "io.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                hits.append(f"{f.relative_to(pkg.parent)}:{node.lineno}")
+    return hits
+
+
+def test_driver_side_frames_go_through_local_frame():
+    """`createDataFrame(<python list>)` builds a Python RDD: each scan
+    runs defaultParallelism Python-worker tasks (~0.33 CPU-s apiece of
+    fixed cost). Package code builds driver-side tables with
+    sources.io.local_frame, which gives a LocalRelation instead."""
+    hits = _create_dataframe_calls(PKG)
+    assert not hits, "createDataFrame outside local_frame:\n" + "\n".join(hits)

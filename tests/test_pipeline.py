@@ -160,7 +160,7 @@ def test_process_pubtator(spark, mesh_paths, pubtator_path):
     assert sorted(r["pmid"] for r in pmids.collect()) == ["1001", "1002", "1007"]
 
 
-def test_full_pipeline_end_to_end(spark, pubmed_dir, mesh_paths, pubtator_path):
+def test_full_pipeline_end_to_end(spark, capsys, pubmed_dir, mesh_paths, pubtator_path):
     """pubmed → merge_filter → stub LLM → finalize, over fixtures."""
     abstracts = pubmed.process_pubmed(spark, pubmed_dir, year_min=2000)
     _bio, tags = mesh.process_mesh(spark, *mesh_paths)
@@ -207,6 +207,11 @@ def test_full_pipeline_end_to_end(spark, pubmed_dir, mesh_paths, pubtator_path):
     assert validate(all_rows.withColumn(
         "pubmed_references", F.col("pubmed_references").cast("int")
     ), "processed_all").ok
+    # the known-names and SMILES-cache tables are JVM local relations,
+    # not Python RDDs whose every scan starts Python workers
+    capsys.readouterr()
+    all_rows.explain(mode="formatted")
+    assert "applySchemaToPythonRDD" not in capsys.readouterr().out
 
 
 def chem_fake():
@@ -224,3 +229,59 @@ def test_curate_known_inhibitors():
     assert "metformins" not in got and "Met-formin" not in got
     assert "Piericidin A" in got and "Bongkrekic acid" in got
     assert "Piericidin" not in got and "Bongkrekic" not in got
+
+
+# The reference's pattern verbatim (merge_filter.sh:83-84);
+# FINAL_TOPICAL_RE tests \b(?=complex) ahead of its (?=.*\bmitochondr).
+VERBATIM_TOPICAL_RE = (
+    r"(?i)(?:(?=.*\bmitochondr)\bcomplex(?:es)?\b[\s\-]*"
+    r"(?:(?:I|1)(?:\s*[-–—−]\s*(?:II|2|III|3|IV|4|V|5))?)\b"
+    r"|\bNADH\b(?:\s*[:\-–—−]\s*|[-\s]*(?:dependent|linked)\s+)?"
+    r"(?:dehydrogenase(?:s)?|(?:ubiquinone|quinone)\s*oxidoreductase)\b)"
+)
+
+TOPICAL_CASES = [
+    "mitochondrial complex I is inhibited",  # mitochondr before complex
+    "complex I of the mitochondria",  # mitochondr after complex
+    "complex I alone",  # mitochondr absent
+    "inhibits complexes I–III in mitochondria",
+    "mitochondrial complexes I - III",
+    "complex-1 blockade in mitochondria",
+    "Complex IV of mitochondria",  # IV is not a complex-I form
+    "complex I\nin mitochondria",  # '.' does not cross the newline
+    "mitochondria:\ncomplex I",
+    "MITOCHONDRIAL COMPLEX i, MiToChOnDrIa",
+    "xcomplex I mitochondria",  # no word boundary before complex
+    "complexity of mitochondrial complex 1",
+    "the complex, then complex I; mitochondrion",
+    "NADH:ubiquinone oxidoreductase",
+    "NADH dehydrogenase",  # no connector: not topical
+    "NADH-linked dehydrogenases",
+    "nadh – quinone oxidoreductase",
+    "NADH dependent dehydrogenase",
+    "NADHdehydrogenase",
+    "",
+    None,
+]
+
+
+def _kept(df, pattern):
+    return {r["id"] for r in df.filter(F.col("text").rlike(pattern)).collect()}
+
+
+def test_topical_regex_rewrite_keeps_the_same_rows(spark, pubmed_dir):
+    """The reordered FINAL_TOPICAL_RE keeps exactly the rows the
+    reference-verbatim pattern keeps."""
+    crafted = spark.createDataFrame(
+        list(enumerate(TOPICAL_CASES)), "id long, text string"
+    )
+    want = _kept(crafted, VERBATIM_TOPICAL_RE)
+    assert _kept(crafted, merge_filter.FINAL_TOPICAL_RE) == want
+    assert 0 < len(want) < len(TOPICAL_CASES)  # both outcomes exercised
+
+    abstracts = pubmed.process_pubmed(spark, pubmed_dir, year_min=0).select(
+        F.col("pmid").alias("id"), F.col("title_abstract").alias("text")
+    )
+    want = _kept(abstracts, VERBATIM_TOPICAL_RE)
+    assert _kept(abstracts, merge_filter.FINAL_TOPICAL_RE) == want
+    assert want

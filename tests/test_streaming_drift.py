@@ -132,3 +132,14 @@ def test_reference_from_empty_snapshot(spark):
         [(None, None), ("click", None)], "event_type string, value double"
     )
     assert drift.reference_from_frame(nulls) == {}
+
+
+def test_reference_bounds_schema_is_the_inferred_one(spark):
+    # The bounds table used to be built by schema inference from its
+    # (event_type, b1..b9) rows; the explicit schema must be the same.
+    from aurora_mito_etl_spark.sources.io import local_frame
+    from aurora_mito_etl_spark.streaming import drift
+
+    rows = [("click", *[0.5 * i for i in range(1, 10)])]
+    inferred = spark.createDataFrame(rows, ["event_type"] + [f"b{i}" for i in range(1, 10)])
+    assert local_frame(spark, rows, drift.BOUNDS_SCHEMA).schema == inferred.schema
