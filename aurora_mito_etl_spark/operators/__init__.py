@@ -20,8 +20,8 @@ follow:
   lost executor kills the query instead of recomputing. The 100 TB
   posture for anything reused ACROSS queries or stages of a pipeline
   is a Parquet-persisted table (tf-idf postings, dedup shingle
-  tables, near-dup survivor sets — see the ``persist_shingles``-style
-  flags and module docstrings); in-query localCheckpoint remains
+  tables, near-dup survivor sets — see the module docstrings, e.g.
+  ``dedup._shingle_overlap``); in-query localCheckpoint remains
   correct for intermediates whose recomputation would cost more than
   a retry of the query.
 """

@@ -413,8 +413,3 @@ def biguanide_panel(
     return scored.select(
         "*", *[F.col(f"__big.{f.name}").alias(f.name) for f in _BIGUANIDE_SCHEMA.fields]
     ).drop("__big")
-
-
-def nan_to_null(col: str):
-    """F10 helper — NaN-aware null for downstream coalesce."""
-    return F.nanvl(F.col(col), F.lit(None))

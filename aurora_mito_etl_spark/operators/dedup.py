@@ -170,47 +170,46 @@ def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(
+def _shingle_overlap(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    persist_shingles: bool = False,
-    max_shingle_docs: int | None = None,
+    k: int,
+    max_shingle_docs: int | None,
 ) -> DataFrame:
-    """All pairs (a < b) with shingle-set Jaccard >= threshold.
+    """(id_a, id_b, inter, sz_a, sz_b) for every unordered pair
+    (id_a < id_b) sharing at least one k-shingle: the shared-shingle
+    count and both documents' distinct-shingle set sizes — the filter
+    half that :func:`ngram_jaccard_pairs` and :func:`containment_pairs`
+    score differently.
 
     Plan shape: explode distinct shingles → self-equi-join on shingle
     (co-partitioned shuffle, NOT a cross join) → count intersections →
-    join per-doc set sizes → Jaccard.
+    join per-doc set sizes. The join key is xxhash64(shingle): 8-byte
+    shuffle keys instead of multi-word strings (collision odds ~
+    distinct²/2⁶⁴ — nil).
 
     `max_shingle_docs` caps hot shingles: a shingle occurring in more
     than that many documents is dropped from the JOIN side (set sizes
     keep exact semantics). A boilerplate shingle shared by 10⁶ docs
     otherwise contributes 10¹² join rows — the classic skew killer at
-    scale. Effect on results: intersection counts can only shrink, so
-    Jaccard is underestimated for pairs whose overlap is mostly
-    boilerplate — the desirable direction for dedup (boilerplate
-    overlap is not near-duplication). Default None = exact.
+    scale. Intersection counts can only shrink, so similarity is
+    underestimated for pairs whose overlap is mostly boilerplate —
+    the desirable direction for dedup (boilerplate overlap is not
+    near-duplication). None = exact.
 
     The (id, shingle-hash) table feeds three plan branches (sizes +
     both join sides). Recomputing the (cheap, codegen'd) shingle
     explode per branch measures FASTER on local[N] than caching it —
     MEMORY_AND_DISK materialization of the exploded table costs more
-    than the recompute — so `persist_shingles` defaults off; at
-    100 TB materialize the shingle table to Parquet once instead.
-    """
-    # Join on xxhash64(shingle): 8-byte shuffle keys instead of
-    # multi-word strings (collision odds ~ distinct²/2⁶⁴ — nil).
+    than the recompute; at 100 TB materialize the shingle table to
+    Parquet once instead."""
     sh = (
         _spread(df)
         .select(F.col(id_col), F.explode(shingles_arrow(F.col(text_col), k)).alias("s"))
         .select(F.col(id_col), F.xxhash64("s").alias("sh"))
         .distinct()
     )
-    if persist_shingles:
-        sh = sh.persist()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     joinable = sh
     if max_shingle_docs is not None:
@@ -229,9 +228,30 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    out = (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
+    return inter.join(
+        sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a"
+    ).join(
+        sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b"
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int = 3,
+    threshold: float = 0.5,
+    max_shingle_docs: int | None = None,
+) -> DataFrame:
+    """All pairs (a < b) with shingle-set Jaccard >= threshold.
+
+    Candidates and counts come from :func:`_shingle_overlap` (see
+    there for the plan shape and the `max_shingle_docs` hot-shingle
+    cap, default None = exact); Jaccard is
+    ``inter / (sz_a + sz_b - inter)``.
+    """
+    return (
+        _shingle_overlap(df, text_col, id_col, k, max_shingle_docs)
         .withColumn(
             "jaccard",
             _fixed6(
@@ -242,7 +262,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1386,42 +1405,15 @@ def containment_pairs(
     right trigger for "drop the fragment, keep the superset" policies
     in corpus dedup.
 
-    Same plan shape and hot-shingle cap as :func:`ngram_jaccard_pairs`
-    (one shared-shingle equi-join computes the intersection once per
-    unordered pair; both directed containments derive from it).
+    Same shared-shingle join and hot-shingle cap as
+    :func:`ngram_jaccard_pairs` (:func:`_shingle_overlap` computes the
+    intersection once per unordered pair; both directed containments
+    derive from it).
     Output: (inner_id, outer_id, containment) for every direction
     meeting the threshold — near-identical pairs appear in both
     directions.
     """
-    sh = (
-        _spread(df)
-        .select(F.col(id_col), F.explode(shingles_arrow(F.col(text_col), k)).alias("s"))
-        .select(F.col(id_col), F.xxhash64("s").alias("sh"))
-        .distinct()
-    )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    joinable = sh
-    if max_shingle_docs is not None:
-        hot = (
-            sh.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_docs)
-            .select("sh")
-        )
-        joinable = sh.join(hot, "sh", "left_anti")
-    a = joinable.select(F.col(id_col).alias("id_a"), "sh")
-    b = joinable.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    both = inter.join(
-        sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")), "id_a"
-    ).join(
-        sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")), "id_b"
-    )
+    both = _shingle_overlap(df, text_col, id_col, k, max_shingle_docs)
     d1 = both.select(
         F.col("id_a").alias("inner_id"),
         F.col("id_b").alias("outer_id"),

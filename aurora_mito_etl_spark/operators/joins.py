@@ -95,18 +95,6 @@ def lookup_join_two_tier(
     return out
 
 
-def broadcast_panel_cross(df: DataFrame, panel: DataFrame) -> DataFrame:
-    """J7/J8 shape — every row × a small reference panel.
-
-    Only valid when the panel is dimension-sized; the preferred scale
-    path for similarity scoring is the vectorized pandas-UDF panel in
-    :mod:`aurora_mito_etl_spark.operators.similarity`.
-    Reference: BulkTanimotoSimilarity vs known-inhibitor panel,
-    scripts/finalize_realease.py:199-218.
-    """
-    return df.crossJoin(F.broadcast(panel))
-
-
 def _small(df: DataFrame) -> bool:
     """Heuristic: treat explicitly-tiny plans as broadcastable.
 

@@ -223,10 +223,9 @@ def _adc_rank_tail(
 ) -> DataFrame:
     """The shared ADC ranking tail: m element_at lookups summed
     left-associated (matching the oracles' MAX(CASE)+… order) and
-    fixed6-rounded BEFORE ranking, then the repo-standard two-phase
-    top-k — partition-local prune, exact asc_nulls_last window over
-    the ≤ k·P survivors (Spark's bare asc sorts NULL first, DuckDB
-    last; a NULL distance must never outrank a real one).
+    fixed6-rounded BEFORE ranking, then the two-phase
+    :func:`similarity.topk` ascending (NULLS LAST, as DuckDB's ASC —
+    a NULL distance must never outrank a real one).
 
     fixed6 on the distance is load-bearing, not cosmetic: DuckDB
     1.0's list_dot_product is NOT a strict left-to-right fold (its
@@ -237,26 +236,14 @@ def _adc_rank_tail(
     sums to the 1e-6 grid before the (adc_dist, id) order makes the
     ranking and the hashed values engine-identical — the same
     mitigation every cosine path uses."""
-    from pyspark.sql import Window
-
     from aurora_mito_etl_spark.functions.numeric import fixed6
-    from aurora_mito_etl_spark.operators.similarity import partial_topk
+    from aurora_mito_etl_spark.operators.similarity import topk
 
     adc = F.element_at(F.col("_dt_0"), F.col("pq_0") + 1)
     for j in range(1, m):
         adc = adc + F.element_at(F.col(f"_dt_{j}"), F.col(f"pq_{j}") + 1)
     scored = joined.select(query_id_col, id_col, fixed6(adc).alias("adc_dist"))
-    pruned = partial_topk(
-        scored, query_id_col, id_col, k, score_col="adc_dist", ascending=True
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc_nulls_last("adc_dist"), F.col(id_col)
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_dist", "rank")
-    )
+    return topk(scored, query_id_col, id_col, k, "adc_dist", ascending=True)
 
 
 def pq_encode_arrow(
@@ -418,8 +405,8 @@ def ivfpq_adc_topk(
     Plan: one Arrow corpus pass builds (cell, codes); probed queries
     broadcast with their m×n_centroids distance tables riding along;
     the equi-join on cell is the candidate pruning; ranking is the
-    repo-standard two-phase top-k (`partial_topk` then the exact
-    window over ≤ k·P survivors). Zero shuffles of corpus-sized data.
+    two-phase `similarity.topk` (the exact window ranks only
+    ≤ k·P survivors). Zero shuffles of corpus-sized data.
 
     Output: (query_id, vec_id, adc_dist, rank), rank 1..k ascending
     distance, ties by vec_id. Fully oracle-checked over pinned
@@ -475,7 +462,6 @@ def pq_adc_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     seed: int = 11,
-    arrow_encode: bool = True,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes —
     the search half of product quantization (Jégou et al., TPAMI
@@ -490,7 +476,7 @@ def pq_adc_topk(
     (constant-key equi-join, a BroadcastHashJoin); the m lookups sum
     in one fixed-order expression, so distances are bit-reproducible.
 
-    Ranking is TWO-PHASE (similarity.partial_topk): each scan
+    Ranking is TWO-PHASE (similarity.topk): each scan
     partition keeps its k best codes per query map-side, and the
     exact rank window runs over the ≤ k·P survivors — never a
     ``Window.partitionBy(query_id)`` over the full scored table,
@@ -504,17 +490,13 @@ def pq_adc_topk(
     """
     books = pq_codebooks(dim, m, n_centroids, seed)
     subdim = dim // m
-    # Corpus codes default to the Arrow encoder — BIT-IDENTICAL to the
-    # expression path (pinned by test_quantize code-equality), ~10×
-    # faster (Spark interprets HOF lambdas per element per row).
-    if arrow_encode:
-        codes = pq_encode_arrow(
-            vectors, dim, m, n_centroids, vec_col=vec_col, id_col=id_col, seed=seed
-        ).select(id_col, *[f"pq_{j}" for j in range(m)])
-    else:
-        codes = pq_encode(
-            vectors, dim, m, n_centroids, vec_col=vec_col, seed=seed
-        ).select(id_col, *[f"pq_{j}" for j in range(m)])
+    # Corpus codes come from the Arrow encoder — BIT-IDENTICAL to the
+    # expression path `pq_encode` (pinned by test_quantize
+    # code-equality), ~10× faster (Spark interprets HOF lambdas per
+    # element per row).
+    codes = pq_encode_arrow(
+        vectors, dim, m, n_centroids, vec_col=vec_col, id_col=id_col, seed=seed
+    ).select(id_col, *[f"pq_{j}" for j in range(m)])
 
     qt = queries.select(
         F.col(query_id_col), *_adc_distance_table_cols(books, subdim, query_vec_col)
@@ -558,7 +540,7 @@ def ivfpq_rerank_topk(
     so the corpus never shuffles and only candidate rows surface raw
     vectors; queries broadcast for the cosine. Scoring is the exact
     brute-force contract (fixed6, zero-norm guard, dot_arrow) and the
-    ranking tail is the repo-standard partial_topk + explicit window.
+    ranking tail is the two-phase `similarity.topk`.
 
     Output: (query_id, vec_id, score, rank), rank 1..k by exact
     cosine descending, ties by vec_id.
@@ -583,4 +565,4 @@ def ivfpq_rerank_topk(
             / (_sim._safe_norm(F.col("__vn")) * _sim._safe_norm(F.col("__qn")))
         ).alias("score"),
     )
-    return _sim._rank_topk(scored, query_id_col, id_col, k)
+    return _sim.topk(scored, query_id_col, id_col, k)

@@ -34,16 +34,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aurora_mito_etl_spark.operators.textstats import tokens_expr
+
 TOTAL_LABEL = "__TOTAL__"
 
 
 def _tokens(docs: DataFrame, text_col: str, group_col: str) -> DataFrame:
     """(group, tok) — the shared ASCII-whitespace tokenization
     (textstats.shingles' chain) with empty tokens dropped."""
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), r"\s+", " "))),
-        " ",
-    )
+    toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
     return (
         docs.select(F.col(group_col).alias("grp"), F.explode(toks).alias("tok"))
         .where(F.col("tok") != "")
@@ -159,16 +158,15 @@ def kmv_distinct(
     fixed6'd on all three.
 
     Scale shape: one distinct on (group, hash), then the MANDATORY
-    `similarity.partial_topk` prefilter before the per-group rank
-    window (a lone host can own the corpus — the mega-group rule), a
+    two-phase `similarity.topk` with the hash as both score and id (a
+    lone host can own the corpus — the mega-group rule), a
     k-bounded per-group aggregate, and a null-safe join back onto the
     per-group row counts (a NULL group is a real group).
 
     Output: (group_col, n_rows, k_used, distinct_est).
     """
     from aurora_mito_etl_spark.functions.numeric import fixed6
-    from aurora_mito_etl_spark.operators.similarity import partial_topk
-    from pyspark.sql import Window
+    from aurora_mito_etl_spark.operators.similarity import topk
 
     base = df.select(F.col(group_col), F.col(value_col))
     counts = base.groupBy(group_col).agg(
@@ -184,11 +182,8 @@ def kmv_distinct(
         )
         .distinct()
     )
-    pruned = partial_topk(hashes, group_col, "h", k, score_col="h", ascending=True)
-    w = Window.partitionBy(group_col).orderBy(F.asc_nulls_last("h"))
     bottom = (
-        pruned.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        topk(hashes, group_col, "h", k, score_col="h", ascending=True)
         .groupBy(group_col)
         .agg(
             F.count("*").cast("long").alias("k_used"),

@@ -73,11 +73,6 @@ def clean_text(col: Column) -> Column:
     return squeeze_ws(canonicalize_dashes(scrub_special_chars(strip_inline_tags(col))))
 
 
-def truncate_chars(col: Column, max_chars: int = 6000) -> Column:
-    """P18 — LLM input cap. Reference: run_gpt_filter.py:72-79."""
-    return F.substring(col, 1, max_chars)
-
-
 def truncate_at_unmatched_paren(col: Column) -> Column:
     """P16 — if '(' appears without ')', keep the prefix before '('.
 

@@ -29,6 +29,39 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from aurora_mito_etl_spark.functions.numeric import dec, dec_to_double, fixed6
+from aurora_mito_etl_spark.operators.textstats import ascii_ws_tokens, tokens_expr
+
+
+def _postings(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, tok, tf): per-document token counts under the shared
+    tokenizer, empty tokens dropped — materialized once (r13, guide
+    §2.4). Every scorer reads the postings from several plan branches
+    (tf feeds the df cap AND the weight join; doclen and the
+    query-term slice both read it), and unshared, Catalyst re-executed
+    the token explode for EVERY reference (16 Generate nodes in the
+    tfidf_topk physical plan, zero reuse). The postings table is
+    exactly what a production deployment persists."""
+    toks = tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+    return (
+        docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
+        .where(F.col("tok") != "")
+        .groupBy("id", "tok")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _ranked(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id_col, score, rank)``: the k best (id, score) rows by
+    (score desc, id asc) — one global top-k (k rows per partition,
+    never a full sort), then a rank over those k rows."""
+    ranked = (
+        scored.orderBy(F.col("score").desc(), "id")
+        .limit(k)
+        .select(F.col("id").alias(id_col), "score")
+    )
+    rank_w = Window.orderBy(F.col("score").desc(), id_col)
+    return ranked.withColumn("rank", F.row_number().over(rank_w))
 
 
 def _term_weights(
@@ -45,24 +78,10 @@ def _term_weights(
     `float(n + 1)` == `n.cast(double) + 1.0` at these magnitudes, so
     the oracle SQL (which recomputes N itself) is unchanged."""
     nd = docs.agg(F.count("*").alias("n_docs"))
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), r"\s+", " "))),
-        " ",
-    )
-    # Materialize the postings once (r13, guide §2.4): tf feeds the
-    # df cap AND the weight join, w feeds norms AND the normalize
-    # join, and the normalized index feeds both sides of the pair
-    # join — Catalyst re-executed the token explode for EVERY
-    # reference (16 Generate nodes in the tfidf_topk physical plan,
-    # zero reuse). The postings/index tables are exactly what a
-    # production deployment persists.
-    tf = (
-        docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    # The postings, w (feeds norms AND the normalize join) and the
+    # normalized index (feeds both sides of the pair join) are each
+    # materialized once, for the reason given in _postings.
+    tf = _postings(docs, text_col, id_col)
     df_t = (
         tf.groupBy("tok")
         .agg(F.count("*").alias("df"))
@@ -163,25 +182,11 @@ def bm25_search(
     scores are fixed6-rounded, the per-document sum runs in exact
     decimal, ties rank by id.
     """
-    from aurora_mito_etl_spark.operators.textstats import ascii_ws_tokens
-
     terms = sorted(set(ascii_ws_tokens(query)))
     if not terms:
         raise ValueError("query has no tokens")
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), r"\s+", " "))),
-        " ",
-    )
-    # Postings materialized once (r13): doclen and the query-term
-    # slice both read tf_all, and doclen itself feeds stats AND the
-    # scoring join — unshared, the token explode re-ran 4× per query.
-    tf_all = (
-        docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    # doclen feeds stats AND the scoring join: materialized once too
+    tf_all = _postings(docs, text_col, id_col)
     doclen = tf_all.groupBy("id").agg(F.sum("tf").alias("dl")).localCheckpoint(eager=False)
     # Corpus stats (N = docs with at least one token, avg_dl) as a
     # broadcast 1-row aggregate — the lm_score.py pattern — instead of
@@ -226,13 +231,7 @@ def bm25_search(
         .groupBy("id")
         .agg(dec_to_double(F.sum(dec("s"))).alias("score"))
     )
-    ranked = (
-        scored.orderBy(F.col("score").desc(), "id")
-        .limit(k)
-        .select(F.col("id").alias(id_col), "score")
-    )
-    rank_w = Window.orderBy(F.col("score").desc(), id_col)
-    return ranked.withColumn("rank", F.row_number().over(rank_w))
+    return _ranked(scored, id_col, k)
 
 
 def ql_search(
@@ -263,23 +262,10 @@ def ql_search(
     fixed6-rounded, the per-document sum runs in exact decimal, ties
     rank by id.
     """
-    from aurora_mito_etl_spark.operators.textstats import ascii_ws_tokens
-
     terms = sorted(set(ascii_ws_tokens(query)))
     if not terms:
         raise ValueError("query has no tokens")
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), r"\s+", " "))),
-        " ",
-    )
-    # Same postings materialization as bm25_search (r13).
-    tf_all = (
-        docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tf_all = _postings(docs, text_col, id_col)
     doclen = tf_all.groupBy("id").agg(F.sum("tf").alias("dl")).localCheckpoint(eager=False)
     cs = doclen.agg(F.sum("dl").cast("double").alias("ctot"))
     tf_q = tf_all.where(F.col("tok").isin(terms))
@@ -303,13 +289,7 @@ def ql_search(
         ).alias("s"),
     )
     scored = s.groupBy("id").agg(dec_to_double(F.sum(dec("s"))).alias("score"))
-    ranked = (
-        scored.orderBy(F.col("score").desc(), "id")
-        .limit(k)
-        .select(F.col("id").alias(id_col), "score")
-    )
-    rank_w = Window.orderBy(F.col("score").desc(), id_col)
-    return ranked.withColumn("rank", F.row_number().over(rank_w))
+    return _ranked(scored, id_col, k)
 
 
 def rrf_fuse(

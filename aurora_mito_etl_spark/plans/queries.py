@@ -33,7 +33,9 @@ from aurora_mito_etl_spark.functions.numeric import (
     fixed6,
     fixed6_sql,
     micros6,
+    micros6_sql,
     micros_sum,
+    micros_sum_sql,
     oracle_dec_avg,
     oracle_dec_sum,
 )
@@ -3492,8 +3494,8 @@ def _hits_oracle(iters: int = 4) -> str:
 
     def norm(raw: str, mx: str) -> str:
         return (
-            f"CASE WHEN {mx} > 0 THEN CAST(floor(CAST({raw} AS DOUBLE)"
-            f" / CAST({mx} AS DOUBLE) * 1000000 + 0.5) AS BIGINT)"
+            f"CASE WHEN {mx} > 0 THEN "
+            f"{micros6_sql(f'CAST({raw} AS DOUBLE) / CAST({mx} AS DOUBLE)')}"
             f" ELSE 0 END"
         )
 
@@ -3854,10 +3856,7 @@ def docs_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL divergence of each source's unigram distribution from the
     corpus distribution — mixture drift diagnostics, decimal-exact."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), r"\s+", " "))),
-        " ",
-    )
+    toks = ts.tokens_expr(F.coalesce(F.col("text"), F.lit("")))
     t = d.select("source", F.explode(toks).alias("tok")).where(F.col("tok") != "")
     st = t.groupBy("source", "tok").agg(F.count("*").alias("c"))
     stot = st.groupBy("source").agg(F.sum("c").alias("ts"))
@@ -4010,7 +4009,7 @@ def _kmeans_oracle(dim: int = 16, k: int = 8, iters: int = 2) -> str:
     ),
     vecs AS (
       SELECT vec_id, i - 1 AS d,
-             CAST(floor((embedding[i]::DOUBLE) * 1000000 + 0.5) AS BIGINT) AS vi
+             {micros6_sql("embedding[i]::DOUBLE")} AS vi
       FROM embeddings, UNNEST(generate_series(1, {dim})) AS g(i)
     )"""
     for it in range(1, iters + 2):  # iters training rounds + final assign
@@ -4039,8 +4038,7 @@ def _kmeans_oracle(dim: int = 16, k: int = 8, iters: int = 2) -> str:
             sql += f""",
     upd{it} AS (
       SELECT a.cell, v.d,
-             CAST(floor(((CAST(SUM(v.vi) AS DOUBLE) / 1000000.0) / count(*))
-                        * 1000000 + 0.5) AS BIGINT) AS ci_next
+             {micros6_sql("(CAST(SUM(v.vi) AS DOUBLE) / 1000000.0) / count(*)")} AS ci_next
       FROM asg{it} a JOIN vecs v USING (vec_id)
       GROUP BY a.cell, v.d
     ),
@@ -4225,13 +4223,11 @@ def _pca_pc1_oracle(
         f"({i}, {vi})" for i, vi in enumerate(pca_op.pinned_init(dim, seed))
     )
     means = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, CAST(floor(s{i} / CAST(n_rows AS DOUBLE)"
-        f" * 1000000 + 0.5) AS BIGINT) AS mi FROM s"
+        f"SELECT {i} AS i, {micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS mi FROM s"
         for i in range(dim)
     )
     covs = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, {j} AS j, CAST(floor(({_pca_cov_sql(i, j)})"
-        f" * 1000000 + 0.5) AS BIGINT) AS c FROM s"
+        f"SELECT {i} AS i, {j} AS j, {micros6_sql(_pca_cov_sql(i, j))} AS c FROM s"
         for i in range(dim)
         for j in range(i, dim)
     )
@@ -4279,9 +4275,7 @@ def _pca_pc1_oracle(
     vec{t + 1} AS MATERIALIZED (
       SELECT qq.i,
              CASE WHEN nn.nsq = 0 THEN vv.vi
-                  ELSE CAST(floor(CAST(qq.q AS DOUBLE)
-                                  / sqrt(nn.nsq)
-                                  * 1000000 + 0.5) AS BIGINT)
+                  ELSE {micros6_sql("CAST(qq.q AS DOUBLE) / sqrt(nn.nsq)")}
              END AS vi
       FROM q{t} qq CROSS JOIN n{t} nn JOIN vec{t} vv ON vv.i = qq.i
     )"""
@@ -4292,7 +4286,7 @@ def _pca_pc1_oracle(
         f"MAX(CASE WHEN i = {k} THEN mi END) AS m{k}" for k in range(dim)
     )
     xqs = ",\n             ".join(
-        f"CAST(floor((e[{k + 1}]::DOUBLE) * 1000000 + 0.5) AS BIGINT) AS xq{k}"
+        f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
         for k in range(dim)
     )
     chain = " + ".join(f"vw.v{k} * (c.xq{k} - mw.m{k})" for k in range(dim))
@@ -4402,13 +4396,11 @@ def _pca_pc2_oracle(
     num/den as ordered double chains over the pivoted (v, C·v), one
     grid rounding per deflated entry."""
     means = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, CAST(floor(s{i} / CAST(n_rows AS DOUBLE)"
-        f" * 1000000 + 0.5) AS BIGINT) AS mi FROM s"
+        f"SELECT {i} AS i, {micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS mi FROM s"
         for i in range(dim)
     )
     covs = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, {j} AS j, CAST(floor(({_pca_cov_sql(i, j)})"
-        f" * 1000000 + 0.5) AS BIGINT) AS c FROM s"
+        f"SELECT {i} AS i, {j} AS j, {micros6_sql(_pca_cov_sql(i, j))} AS c FROM s"
         for i in range(dim)
         for j in range(i, dim)
     )
@@ -4449,9 +4441,7 @@ def _pca_pc2_oracle(
     {vp}{t + 1} AS MATERIALIZED (
       SELECT qq.i,
              CASE WHEN nn.nsq = 0 THEN vv.vi
-                  ELSE CAST(floor(CAST(qq.q AS DOUBLE)
-                                  / sqrt(nn.nsq)
-                                  * 1000000 + 0.5) AS BIGINT)
+                  ELSE {micros6_sql("CAST(qq.q AS DOUBLE) / sqrt(nn.nsq)")}
              END AS vi
       FROM {vp}q{t} qq CROSS JOIN {vp}n{t} nn JOIN {vp}{t} vv ON vv.i = qq.i
     )"""
@@ -4470,7 +4460,7 @@ def _pca_pc2_oracle(
         f"CAST(v{k} AS DOUBLE) * CAST(v{k} AS DOUBLE)" for k in range(dim)
     )
     xqs = ",\n             ".join(
-        f"CAST(floor((e[{k + 1}]::DOUBLE) * 1000000 + 0.5) AS BIGINT) AS xq{k}"
+        f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
         for k in range(dim)
     )
     mw = ", ".join(
@@ -4562,12 +4552,11 @@ def _whitened_norm_oracle(dim: int = _PCA_DIM) -> str:
             f" / (CAST(n_rows AS DOUBLE) * CAST(n_rows AS DOUBLE))"
         )
         mw_cols.append(
-            f"CAST(floor(s{i} / CAST(n_rows AS DOUBLE) * 1000000 + 0.5)"
-            f" AS BIGINT) AS m{i}"
+            f"{micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS m{i}"
         )
         mw_cols.append(f"CASE WHEN ({var}) > 0 THEN sqrt({var}) END AS sd{i}")
     xqs = ",\n             ".join(
-        f"CAST(floor((e[{k + 1}]::DOUBLE) * 1000000 + 0.5) AS BIGINT) AS xq{k}"
+        f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
         for k in range(dim)
     )
     zs = [
@@ -4947,30 +4936,19 @@ def docs_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ln(count) on ln(rank) over the top-100 tokens — the corpus-
     health datasheet row (natural text sits near slope −1, Zipf 1949 /
     Piantadosi 2014; templated or synthetic slices drift off). The
-    per-source rank tail is TWO-PHASE (similarity.partial_topk below
-    the exact window — the CLAUDE.md top-k rule), so no single-task
-    sort of a source's full vocabulary survives at scale; the fit
-    combines decimal-exact sums of fixed6 logs in one IEEE expression
-    per source (the lineitem_corr_stats convention)."""
+    per-source rank tail is the two-phase `similarity.topk`, so no
+    single-task sort of a source's full vocabulary survives at scale;
+    the fit combines decimal-exact sums of fixed6 logs in one IEEE
+    expression per source (the lineitem_corr_stats convention)."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "source", F.explode(ts.tokens_expr(F.col("text"))).alias("w")
     ).filter(F.col("w") != "")
     cnt = words.groupBy("source", "w").agg(F.count("*").alias("cnt"))
-    pruned = sim.partial_topk(
-        cnt, "source", "w", k=100, score_col="cnt", ascending=False
-    )
-    w_rank = Window.partitionBy("source").orderBy(
-        F.col("cnt").desc_nulls_last(), F.col("w").asc_nulls_last()
-    )
-    top = (
-        pruned.withColumn("rnk", F.row_number().over(w_rank))
-        .where(F.col("rnk") <= 100)
-        .select(
-            "source",
-            fixed6(F.log(F.col("rnk").cast("double"))).alias("x"),
-            fixed6(F.log(F.col("cnt").cast("double"))).alias("y"),
-        )
+    top = sim.topk(cnt, "source", "w", k=100, score_col="cnt").select(
+        "source",
+        fixed6(F.log(F.col("rank").cast("double"))).alias("x"),
+        fixed6(F.log(F.col("cnt").cast("double"))).alias("y"),
     )
     x, y = dec("x"), dec("y")
     s = top.groupBy("source").agg(
@@ -5044,7 +5022,7 @@ def docs_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode → (source, token) counts (map-side combinable), df from
     the distinct-pair table's token-keyed aggregate, the one-row
     source count broadcast back, and the mandatory TWO-PHASE rank
-    tail (partial_topk below the per-source window)."""
+    tail (`similarity.topk`)."""
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.where(F.col("source").isNotNull())
@@ -5073,13 +5051,8 @@ def docs_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             fixed6(F.col("tf").cast("double") * idf).alias("score"),
         )
     )
-    pruned = sim.partial_topk(scored, "source", "w", 10, "score", ascending=False)
-    w_rank = Window.partitionBy("source").orderBy(
-        F.desc_nulls_last("score"), F.asc("w")
-    )
     return (
-        pruned.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= 10)
+        sim.topk(scored, "source", "w", 10)
         .select(
             "source",
             F.col("w").alias("token"),
@@ -6903,9 +6876,7 @@ def docs_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined aggregates — no driver collect.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
-    )
+    toks = ts.tokens_expr(F.col("text"))
     t = d.select(toks.alias("toks"))
     uni = (
         t.select(F.explode("toks").alias("w"))
@@ -7250,7 +7221,7 @@ def events_value_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id,
              CAST((mx.corpus_max - max(ts_us)) // 86400000000 AS BIGINT) AS recency_days,
              CAST(count(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS monetary_micros
+             {micros_sum_sql("value", "monetary_micros")}
       FROM base, mx GROUP BY user_id, mx.corpus_max
     ),
     b AS (
@@ -9304,8 +9275,7 @@ def emb_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mislabeled-example miner (confident-learning family). Centroids
     are one map-side aggregate broadcast back; scoring is a single
     corpus pass with HOF folds; the ranking tail is the mandatory
-    two-phase partial_topk + per-label window (ascending, NULLS
-    LAST)."""
+    two-phase `similarity.topk` (ascending, NULLS LAST)."""
     e = load_table(spark, sf_dir, "embeddings")
     return sim.label_outlier_topk(e, "embedding", "vec_id", "label", k=5, dim=64)
 
@@ -10100,7 +10070,7 @@ def docs_host_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bottom-k) sketch (`sketches.kmv_distinct`) — the bounded-state
     sibling of docs_host_report's exact COUNT(DISTINCT md5): at 100 TB
     the distinct shuffle carries only (host, 48-bit hash) pairs pruned
-    by the mandatory `partial_topk` two-phase tail (a lone host can
+    by the mandatory two-phase `similarity.topk` tail (a lone host can
     own the corpus), the per-host state is k hashes forever, and the
     same order-free set-merge state powers the always-on streaming
     twin (`streaming/hoststats.py`) with EXACT batch/stream parity.

@@ -54,6 +54,86 @@ from pyspark.sql import functions as F
 from aurora_mito_etl_spark.sources.io import local_frame
 
 
+def _land(table: str, df: DataFrame, prefix: str) -> list[str]:
+    """Write `df` into a temp directory under `table`, then rename
+    each part into `table` as ``<prefix>-<uuid>-<part>`` (distinct
+    names, so nothing existing is overwritten). Returns the new file
+    names. Callers remove or unpublish replaced files only AFTER this
+    returns — a crash can duplicate rows briefly, never lose them."""
+    tmp = Path(table) / f"_{prefix}_tmp_{uuid.uuid4().hex}"
+    df.write.parquet(str(tmp))
+    names = []
+    for part in sorted(tmp.glob("*.parquet")):
+        name = f"{prefix}-{uuid.uuid4().hex}-{part.name}"
+        part.rename(Path(table) / name)
+        names.append(name)
+    for leftover in tmp.iterdir():
+        leftover.unlink()
+    tmp.rmdir()
+    return names
+
+
+def _rewrite_affected(
+    spark: SparkSession,
+    table: str,
+    sources: list[str],
+    updates: DataFrame,
+    key_col: str,
+    deletes: DataFrame | None,
+) -> tuple[list[str], list[str], dict[str, int]]:
+    """The copy-on-write step both MERGE modes share: find the files
+    of `sources` (the live table) holding a changed key, land their
+    surviving rows plus `updates` as new files, and count the change.
+    Returns (affected file paths, new file names, stats); the caller
+    retires the affected files."""
+    dup = updates.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count()
+    if dup:
+        raise ValueError(f"updates carry duplicate {key_col!r} keys — ambiguous MERGE")
+    change_keys = updates.select(key_col)
+    if deletes is not None:
+        change_keys = change_keys.unionByName(deletes.select(key_col)).distinct()
+
+    target = spark.read.parquet(*sources)
+    # decode URIs up front: both the re-read and the caller's unlink
+    # need the real filesystem path, not the percent-encoded URI
+    affected = sorted(
+        {
+            str(_local_path(r["_f"]))
+            for r in target.withColumn("_f", F.input_file_name())
+            .join(change_keys, key_col, "semi")
+            .select("_f")
+            .distinct()
+            .collect()
+        }
+    )
+
+    # Rows surviving from affected files: drop every row whose key is
+    # being upserted or deleted, then add the new versions.
+    if affected:
+        survivors = spark.read.parquet(*affected).join(
+            change_keys, key_col, "anti"
+        )
+    else:
+        survivors = local_frame(spark, [], target.schema)
+    rewritten = survivors.unionByName(updates.select(*target.columns))
+
+    matched = updates.join(target.select(key_col), key_col, "semi").count()
+    stats = {
+        "files_total": len(target.inputFiles()),
+        "files_rewritten": len(affected),
+        "rows_updated": matched,
+        "rows_inserted": updates.count() - matched,
+        "rows_deleted": (
+            deletes.select(key_col).distinct().join(
+                target.select(key_col), key_col, "semi"
+            ).count()
+            if deletes is not None
+            else 0
+        ),
+    }
+    return affected, _land(table, rewritten, "merge"), stats
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -78,61 +158,9 @@ def merge_upsert(
             f"{target_path} is snapshot-controlled (_manifest present) — "
             "use merge_upsert_snapshot"
         )
-    dup = updates.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count()
-    if dup:
-        raise ValueError(f"updates carry duplicate {key_col!r} keys — ambiguous MERGE")
-    change_keys = updates.select(key_col)
-    if deletes is not None:
-        change_keys = change_keys.unionByName(deletes.select(key_col)).distinct()
-
-    target = spark.read.parquet(target_path)
-    files_total = len(target.inputFiles())
-    # decode URIs up front: both the re-read and the unlink below
-    # need the real filesystem path, not the percent-encoded URI
-    affected = [
-        str(_local_path(r["_f"]))
-        for r in target.withColumn("_f", F.input_file_name())
-        .join(change_keys, key_col, "semi")
-        .select("_f")
-        .distinct()
-        .collect()
-    ]
-
-    # Rows surviving from affected files: drop every row whose key is
-    # being upserted or deleted, then add the new versions.
-    if affected:
-        survivors = spark.read.parquet(*affected).join(
-            change_keys, key_col, "anti"
-        )
-    else:
-        survivors = local_frame(spark, [], target.schema)
-    rewritten = survivors.unionByName(updates.select(*target.columns))
-
-    matched = updates.join(target.select(key_col), key_col, "semi").count()
-    stats = {
-        "files_total": files_total,
-        "files_rewritten": len(affected),
-        "rows_updated": matched,
-        "rows_inserted": updates.count() - matched,
-        "rows_deleted": (
-            deletes.select(key_col).distinct().join(
-                target.select(key_col), key_col, "semi"
-            ).count()
-            if deletes is not None
-            else 0
-        ),
-    }
-
-    # Write new files first (distinct names), remove old ones after —
-    # a crash can duplicate affected rows briefly, never lose them.
-    tmp = Path(target_path) / f"_merge_tmp_{uuid.uuid4().hex}"
-    rewritten.write.parquet(str(tmp))
-    dest = Path(target_path)
-    for part in sorted(tmp.glob("*.parquet")):
-        part.rename(dest / f"merge-{uuid.uuid4().hex}-{part.name}")
-    for leftover in tmp.iterdir():
-        leftover.unlink()
-    tmp.rmdir()
+    affected, _, stats = _rewrite_affected(
+        spark, target_path, [target_path], updates, key_col, deletes
+    )
     for f in affected:
         p = Path(f)
         if p.exists():
@@ -181,20 +209,11 @@ def compact_small_files(
     total = sum(s for _, s in small)
     n_out = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(*[str(p) for p, _ in small])
-    tmp = Path(target_path) / f"_compact_tmp_{uuid.uuid4().hex}"
-    df.coalesce(n_out).write.parquet(str(tmp))
-    dest = Path(target_path)
-    written = 0
-    for part in sorted(tmp.glob("*.parquet")):
-        part.rename(dest / f"compact-{uuid.uuid4().hex}-{part.name}")
-        written += 1
-    for leftover in tmp.iterdir():
-        leftover.unlink()
-    tmp.rmdir()
+    written = _land(target_path, df.coalesce(n_out), "compact")
     for p, _ in small:
         if p.exists():
             p.unlink()
-    stats["files_written"] = written
+    stats["files_written"] = len(written)
     return stats
 
 
@@ -287,59 +306,14 @@ def merge_upsert_snapshot(
     if not versions:
         raise ValueError(f"{table} has no snapshots — snapshot_init first")
     current = _read_manifest(table, versions[-1])
-    dup = updates.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count()
-    if dup:
-        raise ValueError(f"updates carry duplicate {key_col!r} keys — ambiguous MERGE")
-    change_keys = updates.select(key_col)
-    if deletes is not None:
-        change_keys = change_keys.unionByName(deletes.select(key_col)).distinct()
-
-    paths = [str(Path(table) / f) for f in current]
-    target = spark.read.parquet(*paths)
-    affected = {
-        _local_path(r["_f"]).name
-        for r in target.withColumn("_f", F.input_file_name())
-        .join(change_keys, key_col, "semi")
-        .select("_f")
-        .distinct()
-        .collect()
-    }
-    if affected:
-        survivors = spark.read.parquet(
-            *[str(Path(table) / f) for f in sorted(affected)]
-        ).join(change_keys, key_col, "anti")
-    else:
-        survivors = local_frame(spark, [], target.schema)
-    rewritten = survivors.unionByName(updates.select(*target.columns))
-
-    matched = updates.join(target.select(key_col), key_col, "semi").count()
-    stats = {
-        "files_total": len(current),
-        "files_rewritten": len(affected),
-        "rows_updated": matched,
-        "rows_inserted": updates.count() - matched,
-        "rows_deleted": (
-            deletes.select(key_col).distinct().join(
-                target.select(key_col), key_col, "semi"
-            ).count()
-            if deletes is not None
-            else 0
-        ),
-    }
-
-    tmp = Path(table) / f"_merge_tmp_{uuid.uuid4().hex}"
-    rewritten.write.parquet(str(tmp))
-    new_names = []
-    for part in sorted(tmp.glob("*.parquet")):
-        name = f"merge-{uuid.uuid4().hex}-{part.name}"
-        part.rename(Path(table) / name)
-        new_names.append(name)
-    for leftover in tmp.iterdir():
-        leftover.unlink()
-    tmp.rmdir()
+    affected, new_names, stats = _rewrite_affected(
+        spark, table, [str(Path(table) / f) for f in current], updates, key_col,
+        deletes,
+    )
+    replaced = {Path(f).name for f in affected}
 
     new_version = versions[-1] + 1
-    keep = [f for f in current if f not in affected]
+    keep = [f for f in current if f not in replaced]
     _publish(table, new_version, keep + new_names)
     return new_version, stats
 

@@ -652,7 +652,7 @@ def test_pq_adc_topk_retrieves_own_cluster(spark):
 
 def test_zero_norm_vector_scores_finite(spark):
     """A zero-norm corpus vector must score dot/1.0 (finite, defined)
-    — a NaN score would be rewritten to NULL by partial_topk's Arrow
+    — a NaN score would be rewritten to NULL by topk's Arrow
     round-trip and rank last while DuckDB ranks NaN first; the
     safe-norm guard (and its CASE WHEN oracle twin) removes the NaN
     entirely. Regression for the review's regenerated-testdata
@@ -672,20 +672,19 @@ def test_zero_norm_vector_scores_finite(spark):
     assert out[1]["rank"] == 3  # and it never outranks a real match
 
 
-def test_partial_topk_keeps_null_query_groups(spark):
+def test_topk_keeps_null_query_groups(spark):
     """NULL query ids form their own ranked group (pandas groupby
     dropna=False), matching the window semantics over the full table."""
     scored = spark.createDataFrame(
         [(None, 1, 0.9), (None, 2, 0.8), (10, 3, 0.7)],
         "query_id long, vec_id long, score double",
     ).coalesce(1)  # one partition: the partial phase must prune to k
-    pruned = sim.partial_topk(scored, "query_id", "vec_id", k=1).collect()
-    got = {(r["query_id"], r["vec_id"]) for r in pruned}
-    assert (None, 1) in got and (10, 3) in got
-    assert (None, 2) not in got  # pruned to k=1 within the NULL group
+    top = sim.topk(scored, "query_id", "vec_id", k=1).collect()
+    got = {(r["query_id"], r["vec_id"], r["rank"]) for r in top}
+    assert got == {(None, 1, 1), (10, 3, 1)}  # (None, 2) pruned to k=1
 
 
-def test_partial_topk_null_group_spans_arrow_batches(spark):
+def test_topk_null_group_spans_arrow_batches(spark):
     """NULL query ids surface as NaN floats in pandas, and hash(nan)
     is identity-based on Python 3.10+ — NaN keys arriving in DIFFERENT
     Arrow batches must still accumulate in one state entry, or a
@@ -699,11 +698,84 @@ def test_partial_topk_null_group_spans_arrow_batches(spark):
         scored = spark.createDataFrame(
             rows, "query_id long, vec_id long, score double"
         ).coalesce(1)
-        pruned = sim.partial_topk(scored, "query_id", "vec_id", k=1).collect()
+        # the partition-local phase alone: its k x n_groups state bound
+        pruned = sim._prune_topk(scored, "query_id", "vec_id", 1, "score", False)
+        pruned = pruned.collect()
+        top = sim.topk(scored, "query_id", "vec_id", k=1).collect()
     finally:
         spark.conf.set(key, old)
     assert len(pruned) == 1  # ONE entry for the NULL group, pruned to k
     assert pruned[0]["vec_id"] == 0  # and it kept the best-scored row
+    assert [(r["vec_id"], r["rank"]) for r in top] == [(0, 1)]
+
+
+_TOPK_CASES = {
+    # (rows as (g, id, score), k, ascending)
+    "descending": (
+        [(1, 1, 0.9), (1, 2, 0.7), (1, 3, 0.9), (1, 4, None), (2, 5, 0.1),
+         (2, 6, 0.3), (2, 7, 0.2)],
+        2,
+        False,
+    ),
+    # label_outlier_topk's direction: smallest first, NULL score last
+    "ascending": (
+        [(1, 1, 0.9), (1, 2, None), (1, 3, 0.1), (1, 4, 0.1), (2, 5, None),
+         (2, 6, 0.3)],
+        2,
+        True,
+    ),
+    "null_group_key": (
+        [(None, 1, 0.5), (None, 2, 0.8), (None, 3, 0.8), (1, 4, 0.2),
+         (1, 5, 0.4)],
+        2,
+        False,
+    ),
+    # the tie on score 1.0 must go to id 1: NULL ids sort last in BOTH
+    # phases (a NULLS FIRST window would pick the NULL id whenever it
+    # survives pruning in another partition than id 1)
+    "score_tie_with_null_id": (
+        [(7, None, 1.0), (7, 1, 1.0), (7, 2, 0.5)],
+        1,
+        False,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TOPK_CASES))
+def test_topk_equals_one_phase_window(spark, case):
+    """`similarity.topk` returns exactly the rows (and ranks) of ONE
+    row_number window over the whole table under the single order
+    (score NULLS LAST in the given direction, id ASC NULLS LAST) —
+    with all rows in one partition and with one row per partition
+    (each survives pruning, so phase 2 alone decides the ties)."""
+    from pyspark.sql import Window
+
+    rows, k, ascending = _TOPK_CASES[case]
+    structs = [
+        F.struct(
+            F.lit(g).cast("long").alias("g"),
+            F.lit(i).cast("long").alias("id"),
+            F.lit(sc).cast("double").alias("score"),
+        )
+        for g, i, sc in rows
+    ]
+    # spark.range splits n rows over n partitions, one row each
+    spread = spark.range(0, len(rows), 1, len(rows)).select(
+        F.element_at(F.array(*structs), F.col("id").cast("int") + 1).alias("r")
+    ).select("r.*")
+    layouts = {"one_partition": spread.coalesce(1), "row_per_partition": spread}
+    score = F.asc_nulls_last("score") if ascending else F.desc_nulls_last("score")
+    w = Window.partitionBy("g").orderBy(score, F.asc_nulls_last("id"))
+    df = layouts["one_partition"]
+    want = {
+        tuple(r)
+        for r in df.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .collect()
+    }
+    for layout, frame in layouts.items():
+        got = sim.topk(frame, "g", "id", k, ascending=ascending).collect()
+        assert {tuple(r) for r in got} == want, (case, layout)
 
 
 def test_ivfpq_candidates_are_cell_pruned_and_ranked(spark):

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -525,3 +528,50 @@ def test_heaps_fit_hand_points(spark):
     assert s1["heaps_beta"] == pytest.approx(beta, abs=2e-6)
     assert s1["heaps_logk"] == pytest.approx(logk, abs=2e-6)
     assert 0.0 < s1["heaps_beta"] < 1.0
+
+
+def _tokenizer_chains(pkg: Path) -> list[str]:
+    """Every hand-written `F.split(F.lower(F.trim(F.regexp_replace(x,
+    r"\\s+", " "))), " ")` in the package source, except the one inside
+    textstats.tokens_expr."""
+
+    def attr(node, name: str) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and bool(node.args)
+        )
+
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        allowed: set[int] = set()
+        if f == pkg / "operators" / "textstats.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "tokens_expr":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if not attr(node, "split") or id(node) in allowed:
+                continue
+            low = node.args[0]
+            if not (attr(low, "lower") and attr(low.args[0], "trim")):
+                continue
+            rr = low.args[0].args[0]
+            if (
+                attr(rr, "regexp_replace")
+                and len(rr.args) > 1
+                and isinstance(rr.args[1], ast.Constant)
+                and rr.args[1].value == r"\s+"
+            ):
+                hits.append(f"{f.relative_to(pkg.parent)}:{node.lineno}")
+    return hits
+
+
+def test_tokenizer_chain_written_only_in_tokens_expr():
+    """textstats.tokens_expr is THE Catalyst tokenization every SQL
+    oracle's string_split mirrors; a hand-written copy can drift from
+    it and silently de-synchronize token streams across paths."""
+    pkg = Path(__file__).resolve().parent.parent / "aurora_mito_etl_spark"
+    hits = _tokenizer_chains(pkg)
+    assert not hits, "tokenizer chain outside tokens_expr:\n" + "\n".join(hits)

@@ -30,19 +30,27 @@ def test_no_spark_round_in_package():
 
 
 def test_numeric_sql_spelled_only_in_numeric_module():
-    """The fixed6 grid and the decimal-sum precisions are spelled in
-    functions/numeric.py alone; every other module (oracles included)
-    calls fixed6_sql / dec_sql / dec_wide_sql / dec_to_double_sql, so
-    a convention change is one edit."""
+    """The fixed6 grid, the micros6 BIGINT grid and the decimal-sum
+    precisions are spelled in functions/numeric.py alone; every other
+    module (oracles included) calls fixed6_sql / micros6_sql /
+    dec_sql / dec_wide_sql / dec_to_double_sql, so a convention change
+    is one edit."""
     owner = PKG / "functions" / "numeric.py"
     spellings = ("* 1000000 + 0.5) / 1000000", "AS DECIMAL(18,6)", "AS DECIMAL(19,6)")
+    # micros6 is often split across f-string pieces or SQL lines:
+    # `... * 1000000 + 0.5)"` / `f" AS BIGINT)`
+    micros6 = re.compile(r"\*\s*1000000\s*\+\s*0\.5\)[\s\"f]*AS\s+BIGINT")
     hits = []
     for f in PKG.rglob("*.py"):
         if f == owner:
             continue
-        for i, line in enumerate(f.read_text().splitlines(), 1):
+        text = f.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
             if any(s in line for s in spellings):
                 hits.append(f"{f.relative_to(PKG.parent)}:{i}: {line.strip()}")
+        for m in micros6.finditer(text):
+            i = text.count("\n", 0, m.start()) + 1
+            hits.append(f"{f.relative_to(PKG.parent)}:{i}: {m.group(0)!r}")
     assert not hits, "hand-spelled numeric SQL convention:\n" + "\n".join(hits)
 
 
