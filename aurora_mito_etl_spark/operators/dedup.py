@@ -285,32 +285,6 @@ def bottom_k_sketch(df: DataFrame, text_col: str, id_col: str, k: int = 3, sketc
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, k_shingle: int, num_hashes: int
-) -> DataFrame:
-    """(id, m0..m{k-1}): k-permutation MinHash signature per document.
-
-    Plan shape: explode distinct shingles → xxhash64 → ONE hash
-    aggregate with `num_hashes` min columns (map-side partial agg).
-    An earlier formulation evaluated `num_hashes` array transforms
-    per row, re-deriving the shingle array each time — ~50× slower.
-    Docs with < k words have no shingles and drop out (they cannot be
-    near-duplicates of anything).
-    """
-    hashed = _spread(df).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_arrow(F.col(text_col), k_shingle))).alias("sh"),
-    ).select(F.col(id_col), F.pmod(F.xxhash64("sh"), F.lit(_MERSENNE_P)).alias("h"))
-    return hashed.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_MERSENNE_P))
-            ).alias(f"m{i}")
-            for i, (a, b) in enumerate(_perm_params(num_hashes))
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -1038,8 +1012,8 @@ def simhash64_df(
         ).otherwise(F.lit(0).cast("long"))
     # Docs with no shingles (< k words) drop out — they have no
     # content signature, and keeping them at sh64=0 would make every
-    # pair of short docs a spurious hamming-0 "duplicate" (same
-    # contract as minhash_signatures).
+    # pair of short docs a spurious hamming-0 "duplicate" (MinHash
+    # signatures drop them the same way).
     return votes.select(F.col(id_col), acc.alias("sh64"))
 
 

@@ -63,49 +63,130 @@ DEFAULT_QUANTILES: tuple[tuple[str, int, int], ...] = (
     ("p99", 99, 100),
 )
 
+# rank threshold ceil(p·n) for p = qnum/qden, in integers
+_THRESH = "(n * qnum + qden - 1) DIV qden"
+
+
+def _spec(spark, quantiles: tuple[tuple[str, int, int], ...]) -> DataFrame:
+    """The (quantile, qnum, qden) spec as a local frame; each fraction
+    must lie in [0, 1]."""
+    for name, qnum, qden in quantiles:
+        if qden < 1 or qnum < 0 or qnum > qden:
+            raise ValueError(f"quantile {name!r}: need 0 <= {qnum}/{qden} <= 1")
+    return local_frame(spark, quantiles, "quantile string, qnum long, qden long")
+
+
+def _grid_counts(
+    df: DataFrame, keys: list[str], value_col: str, sig_digits: int | None = None
+) -> DataFrame:
+    """Row counts `c` per (keys, v), where v is `value_col` on the 1e-6
+    grid (`micros6`, loud overflow) — or, given `sig_digits`, that grid
+    value's sig-floor — and NULL values are dropped. One
+    map-side-combinable aggregation, lazily checkpointed: every caller
+    reads it twice (running total and per-group n), and a range
+    partitioner samples its input once more — Catalyst has no
+    cross-branch subtree reuse, so without the checkpoint the scan and
+    aggregate would run up to three times."""
+    raw = "v" if sig_digits is None else "v0"
+    g = df.select(*keys, micros6(F.col(value_col)).alias(raw)).where(
+        F.col(raw).isNotNull()
+    )
+    if sig_digits is not None:
+        g = g.select(*keys, F.expr(_sig_floor_spark(raw, sig_digits)).alias("v"))
+    return (
+        g.groupBy(*keys, "v")
+        .agg(F.count("*").cast("long").alias("c"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _group_thresholds(g: DataFrame, group_col: str, spec: DataFrame) -> DataFrame:
+    """(__g, quantile, thresh) per group of the grid counts `g`."""
+    n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
+    return n.crossJoin(F.broadcast(spec)).select(
+        F.col(group_col).alias("__g"), "quantile", F.expr(_THRESH).alias("thresh")
+    )
+
+
+def _min_value(hits: DataFrame, *keys: str) -> DataFrame:
+    """The selected quantile: the smallest grid value that reaches its
+    threshold, reported as v/1e6 (one IEEE divide, as in the oracles)."""
+    return hits.groupBy(*keys, "quantile").agg(
+        (F.min("v").cast("double") / F.lit(1_000_000.0)).alias("value")
+    )
+
+
+def _window_select(g: DataFrame, group_col: str, spec: DataFrame) -> DataFrame:
+    """Per-group selection over grid counts `g` with a cumulative
+    window PARTITIONED by group: integer thresholds, a null-safe
+    threshold join (NULL group keys emit rows) and the map-side MIN."""
+    from pyspark.sql import Window
+
+    w = (
+        Window.partitionBy(group_col)
+        .orderBy(F.col("v").asc_nulls_last())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = g.select(group_col, "v", F.sum("c").over(w).cast("long").alias("cum"))
+    th = _group_thresholds(g, group_col, spec)
+    hits = cum.join(
+        th,
+        F.col(group_col).eqNullSafe(F.col("__g"))
+        & (F.col("cum") >= F.col("thresh")),
+    )
+    return _min_value(hits, group_col)
+
+
+def _spec_sql(quantiles) -> str:
+    vals = ", ".join(f"('{n}', {a}, {b})" for n, a, b in quantiles)
+    return f"spec(quantile, qnum, qden) AS (VALUES {vals})"
+
+
+def _grouped_oracle_tail(group_col: str, quantiles) -> str:
+    """The DuckDB twin of :func:`_window_select`: the CTEs and final
+    SELECT that follow a grid-count CTE `g({group_col}, v, c)`."""
+    return f"""
+    cum AS (
+      SELECT {group_col}, v,
+             CAST(SUM(c) OVER (PARTITION BY {group_col} ORDER BY v
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+      FROM g
+    ),
+    n AS (SELECT {group_col}, CAST(SUM(c) AS BIGINT) AS n FROM g GROUP BY 1),
+    {_spec_sql(quantiles)},
+    th AS (
+      SELECT n.{group_col}, s.quantile,
+             CAST((n.n * s.qnum + s.qden - 1) // s.qden AS BIGINT) AS thresh
+      FROM n, spec s
+    )
+    SELECT th.{group_col}, th.quantile, MIN(cum.v) / 1000000.0 AS value
+    FROM th JOIN cum
+      ON cum.{group_col} IS NOT DISTINCT FROM th.{group_col}
+     AND cum.cum >= th.thresh
+    GROUP BY th.{group_col}, th.quantile
+    """
+
 
 def exact_quantiles_grid(
     df: DataFrame,
     value_col: str,
     quantiles: tuple[tuple[str, int, int], ...] = DEFAULT_QUANTILES,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(quantile, value) exact discrete quantiles of a double column
     on the 1e-6 grid — see module docstring for the scale shape."""
-    for name, qnum, qden in quantiles:
-        if qden < 1 or qnum < 0 or qnum > qden:
-            raise ValueError(f"quantile {name!r}: need 0 <= {qnum}/{qden} <= 1")
-    g = (
-        df.select(micros6(F.col(value_col)).alias("v"))
-        .where(F.col("v").isNotNull())
-        .groupBy("v")
-        .agg(F.count("*").cast("long").alias("c"))
-        # lazy materialization (r14): g feeds BOTH the prefix sum
-        # (whose repartitionByRange additionally SAMPLES its input —
-        # an extra full execution of the grid aggregate) and the n
-        # aggregate below; without the checkpoint the scan+aggregate
-        # runs 3x (Catalyst has no cross-branch subtree reuse).
-        .localCheckpoint(eager=False)
-    )
-    cum = prefix_sum(g, "v", "c", "cum", num_partitions=num_partitions)
+    spec = _spec(df.sparkSession, quantiles)
+    g = _grid_counts(df, [], value_col)
+    cum = prefix_sum(g, "v", "c", "cum")
     # n = the grand total = SUM(c) over the checkpointed grid — the
     # same number MAX(cum) gives (counts are positive), without
     # re-executing the prefix-sum python stage a second time.
     n = g.agg(F.sum("c").cast("long").alias("n"))
-    spark = df.sparkSession
-    spec = local_frame(spark, quantiles, "quantile string, qnum long, qden long")
     thresh = (
         spec.crossJoin(F.broadcast(n))
         .where(F.col("n") > 0)
-        .select(
-            "quantile",
-            F.expr("(n * qnum + qden - 1) DIV qden").alias("thresh"),
-        )
+        .select("quantile", F.expr(_THRESH).alias("thresh"))
     )
-    hits = cum.join(F.broadcast(thresh), F.col("cum") >= F.col("thresh"))
-    return hits.groupBy("quantile").agg(
-        (F.min("v").cast("double") / F.lit(1_000_000.0)).alias("value")
-    )
+    return _min_value(cum.join(F.broadcast(thresh), F.col("cum") >= F.col("thresh")))
 
 
 def exact_quantiles_grid_oracle(
@@ -117,7 +198,6 @@ def exact_quantiles_grid_oracle(
     selection; the cumulative window is fine on the oracle's single
     node (that shape is exactly what :func:`exact_quantiles_grid`
     replaces at scale)."""
-    vals = ", ".join(f"('{n}', {a}, {b})" for n, a, b in quantiles)
     return f"""
     WITH g AS (
       SELECT {micros6_sql(value_col)} AS v, CAST(count(*) AS BIGINT) AS c
@@ -129,7 +209,7 @@ def exact_quantiles_grid_oracle(
       FROM g
     ),
     n AS (SELECT CAST(coalesce(MAX(cum), 0) AS BIGINT) AS n FROM cum),
-    spec(quantile, qnum, qden) AS (VALUES {vals}),
+    {_spec_sql(quantiles)},
     th AS (
       SELECT s.quantile,
              CAST((n.n * s.qnum + s.qden - 1) // s.qden AS BIGINT) AS thresh
@@ -167,48 +247,8 @@ def grouped_exact_quantiles(
     values; :func:`grouped_exact_quantiles_dist` is the escape hatch
     with no per-group single-task stage (same semantics and oracle).
     """
-    from pyspark.sql import Window
-
-    for name, qnum, qden in quantiles:
-        if qden < 1 or qnum < 0 or qnum > qden:
-            raise ValueError(f"quantile {name!r}: need 0 <= {qnum}/{qden} <= 1")
-    g = (
-        df.select(F.col(group_col), micros6(F.col(value_col)).alias("v"))
-        .where(F.col("v").isNotNull())
-        .groupBy(group_col, "v")
-        .agg(F.count("*").cast("long").alias("c"))
-        # lazy materialization (r14): g feeds both the cumulative
-        # window and the per-group n aggregate — one scan, not two.
-        .localCheckpoint(eager=False)
-    )
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col("v").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = g.select(
-        group_col, "v", F.sum("c").over(w).cast("long").alias("cum")
-    )
-    n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = local_frame(
-        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
-    )
-    th = (
-        n.crossJoin(F.broadcast(spec))
-        .select(
-            F.col(group_col).alias("__g"),
-            "quantile",
-            F.expr("(n * qnum + qden - 1) DIV qden").alias("thresh"),
-        )
-    )
-    hits = cum.join(
-        th,
-        F.col(group_col).eqNullSafe(F.col("__g"))
-        & (F.col("cum") >= F.col("thresh")),
-    )
-    return hits.groupBy(group_col, "quantile").agg(
-        (F.min("v").cast("double") / F.lit(1_000_000.0)).alias("value")
-    )
+    spec = _spec(df.sparkSession, quantiles)
+    return _window_select(_grid_counts(df, [group_col], value_col), group_col, spec)
 
 
 def grouped_exact_quantiles_oracle(
@@ -220,32 +260,12 @@ def grouped_exact_quantiles_oracle(
     """DuckDB SQL twin of :func:`grouped_exact_quantiles` — identical
     construction; the threshold join is IS NOT DISTINCT FROM so a
     NULL group emits its rows on both engines."""
-    vals = ", ".join(f"('{n}', {a}, {b})" for n, a, b in quantiles)
     return f"""
     WITH g AS (
       SELECT {group_col}, {micros6_sql(value_col)} AS v,
              CAST(count(*) AS BIGINT) AS c
       FROM {table} WHERE {value_col} IS NOT NULL GROUP BY 1, 2
-    ),
-    cum AS (
-      SELECT {group_col}, v,
-             CAST(SUM(c) OVER (PARTITION BY {group_col} ORDER BY v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-      FROM g
-    ),
-    n AS (SELECT {group_col}, CAST(SUM(c) AS BIGINT) AS n FROM g GROUP BY 1),
-    spec(quantile, qnum, qden) AS (VALUES {vals}),
-    th AS (
-      SELECT n.{group_col}, s.quantile,
-             CAST((n.n * s.qnum + s.qden - 1) // s.qden AS BIGINT) AS thresh
-      FROM n, spec s
-    )
-    SELECT th.{group_col}, th.quantile, MIN(cum.v) / 1000000.0 AS value
-    FROM th JOIN cum
-      ON cum.{group_col} IS NOT DISTINCT FROM th.{group_col}
-     AND cum.cum >= th.thresh
-    GROUP BY th.{group_col}, th.quantile
-    """
+    ),{_grouped_oracle_tail(group_col, quantiles)}"""
 
 
 def grouped_exact_quantiles_dist(
@@ -253,7 +273,6 @@ def grouped_exact_quantiles_dist(
     group_col: str,
     value_col: str,
     quantiles: tuple[tuple[str, int, int], ...] = DEFAULT_QUANTILES,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(group, quantile, value) exact discrete quantiles PER GROUP with
     NO per-group single-task stage anywhere — the mega-group escape
@@ -269,7 +288,7 @@ def grouped_exact_quantiles_dist(
        by addition;
     2. `rownum.grouped_prefix_sum` — range partition by (group, v),
        bounded per-partition summaries, in-plan single-task carry
-       chain over the P summary rows (r14 — no driver collect): a
+       chain over the P summary rows (no driver collect): a
        mega-group spans partitions instead of funneling into one task;
        each cum row also carries its range-partition id;
     3. per-group totals + integer ceil(p·n) thresholds (rational
@@ -288,35 +307,15 @@ def grouped_exact_quantiles_dist(
     whose in-partition cum maximum reaches the threshold contains the
     globally minimal hit value — level 2 never needs any other pid.
     """
-    for name, qnum, qden in quantiles:
-        if qden < 1 or qnum < 0 or qnum > qden:
-            raise ValueError(f"quantile {name!r}: need 0 <= {qnum}/{qden} <= 1")
-    g = (
-        df.select(F.col(group_col), micros6(F.col(value_col)).alias("v"))
-        .where(F.col("v").isNotNull())
-        .groupBy(group_col, "v")
-        .agg(F.count("*").cast("long").alias("c"))
-        # lazy materialization (r14): g feeds the grouped prefix sum
-        # (whose repartitionByRange also samples its input) AND the
-        # per-group n aggregate — one scan+aggregate, not three.
-        .localCheckpoint(eager=False)
-    )
+    spec = _spec(df.sparkSession, quantiles)
+    g = _grid_counts(df, [group_col], value_col)
     cum = grouped_prefix_sum(
-        g, group_col, "v", "c", "cum",
-        num_partitions=num_partitions, pid_col="__pid",
+        g, group_col, "v", "c", "cum", pid_col="__pid"
     # cum is consumed twice (level-1 partition maxima and the level-2
     # hit join); the chain ends in a python stage, so re-execution
-    # would pay the whole prefix-sum pipeline twice (r14).
+    # would pay the whole prefix-sum pipeline twice.
     ).localCheckpoint(eager=False)
-    n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = local_frame(
-        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
-    )
-    th = n.crossJoin(F.broadcast(spec)).select(
-        F.col(group_col).alias("__g"),
-        "quantile",
-        F.expr("(n * qnum + qden - 1) DIV qden").alias("thresh"),
-    )
+    th = _group_thresholds(g, group_col, spec)
     # level 1: per-(pid, group) cum maxima (partial-agg map-side; a
     # mega-group contributes one row per partition it spans)
     psum = cum.groupBy("__pid", group_col).agg(F.max("cum").alias("__pmax"))
@@ -333,9 +332,7 @@ def grouped_exact_quantiles_dist(
         & (F.col("__pid") == F.col("__hit_pid"))
         & (F.col("cum") >= F.col("thresh")),
     )
-    return hits.groupBy(group_col, "quantile").agg(
-        (F.min("v").cast("double") / F.lit(1_000_000.0)).alias("value")
-    )
+    return _min_value(hits, group_col)
 
 
 # ---------------------------------------------------------------------------
@@ -447,49 +444,11 @@ def grouped_quantile_sketch(
     per-group cumulative window safe by construction). Mergeable by
     addition across shards/days. NULL group kept; NULL values
     excluded; empty group emits nothing."""
-    from pyspark.sql import Window
-
-    for name, qnum, qden in quantiles:
-        if qden < 1 or qnum < 0 or qnum > qden:
-            raise ValueError(f"quantile {name!r}: need 0 <= {qnum}/{qden} <= 1")
+    spec = _spec(df.sparkSession, quantiles)
     if not (1 <= sig_digits <= 15):
         raise ValueError(f"sig_digits must be in [1, 15], got {sig_digits}")
-    g = (
-        df.select(F.col(group_col), micros6(F.col(value_col)).alias("v0"))
-        .where(F.col("v0").isNotNull())
-        .select(
-            group_col,
-            F.expr(_sig_floor_spark("v0", sig_digits)).alias("v"),
-        )
-        .groupBy(group_col, "v")
-        .agg(F.count("*").cast("long").alias("c"))
-        # lazy materialization (r14): g feeds both the cumulative
-        # window and the per-group n aggregate — one scan, not two.
-        .localCheckpoint(eager=False)
-    )
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.col("v").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = g.select(group_col, "v", F.sum("c").over(w).cast("long").alias("cum"))
-    n = g.groupBy(group_col).agg(F.sum("c").cast("long").alias("n"))
-    spec = local_frame(
-        df.sparkSession, quantiles, "quantile string, qnum long, qden long"
-    )
-    th = n.crossJoin(F.broadcast(spec)).select(
-        F.col(group_col).alias("__g"),
-        "quantile",
-        F.expr("(n * qnum + qden - 1) DIV qden").alias("thresh"),
-    )
-    hits = cum.join(
-        th,
-        F.col(group_col).eqNullSafe(F.col("__g"))
-        & (F.col("cum") >= F.col("thresh")),
-    )
-    return hits.groupBy(group_col, "quantile").agg(
-        (F.min("v").cast("double") / F.lit(1_000_000.0)).alias("value")
-    )
+    g = _grid_counts(df, [group_col], value_col, sig_digits)
+    return _window_select(g, group_col, spec)
 
 
 def grouped_quantile_sketch_oracle(
@@ -501,7 +460,6 @@ def grouped_quantile_sketch_oracle(
 ) -> str:
     """DuckDB SQL twin of :func:`grouped_quantile_sketch` — identical
     grid → sig-floor → integer-threshold construction."""
-    vals = ", ".join(f"('{n}', {a}, {b})" for n, a, b in quantiles)
     return f"""
     WITH v0 AS (
       SELECT {group_col}, {micros6_sql(value_col)} AS v0
@@ -511,23 +469,4 @@ def grouped_quantile_sketch_oracle(
       SELECT {group_col}, {_sig_floor_duckdb("v0", sig_digits)} AS v,
              CAST(count(*) AS BIGINT) AS c
       FROM v0 GROUP BY 1, 2
-    ),
-    cum AS (
-      SELECT {group_col}, v,
-             CAST(SUM(c) OVER (PARTITION BY {group_col} ORDER BY v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-      FROM g
-    ),
-    n AS (SELECT {group_col}, CAST(SUM(c) AS BIGINT) AS n FROM g GROUP BY 1),
-    spec(quantile, qnum, qden) AS (VALUES {vals}),
-    th AS (
-      SELECT n.{group_col}, s.quantile,
-             CAST((n.n * s.qnum + s.qden - 1) // s.qden AS BIGINT) AS thresh
-      FROM n, spec s
-    )
-    SELECT th.{group_col}, th.quantile, MIN(cum.v) / 1000000.0 AS value
-    FROM th JOIN cum
-      ON cum.{group_col} IS NOT DISTINCT FROM th.{group_col}
-     AND cum.cum >= th.thresh
-    GROUP BY th.{group_col}, th.quantile
-    """
+    ),{_grouped_oracle_tail(group_col, quantiles)}"""

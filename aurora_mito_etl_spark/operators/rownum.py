@@ -1,52 +1,43 @@
-"""Contiguous global sequence assignment without a global sort.
+"""Contiguous ids and exact running sums without a global sort.
 
-`row_number() OVER (ORDER BY key)` is the textbook way to hand every
-row a dense 0..n-1 id (epoch shuffling, shard addressing, sample
-bookkeeping all want one) — and on a cluster it is a single-partition
+`row_number() OVER (ORDER BY key)` and `SUM(w) OVER (ORDER BY key)`
+are the textbook forms, and on a cluster each is a single-partition
 sort: every row shuffles to ONE task. The scalable shape is the
-two-phase partition-offset pattern:
+two-phase partition-offset pattern, written once here as
+:func:`_partition_offset_scan` and shared by the three public scans:
 
 1. range-partition + sort WITHIN partitions by the key (one shuffle,
-   fully parallel — this is what a distributed ORDER BY does anyway);
+   fully parallel — what a distributed ORDER BY does anyway), then a
+   lazy localCheckpoint: the summary pass and the output pass must
+   see the SAME partitioning (repartitionByRange samples its
+   boundaries, and running it twice would also double the shuffle);
 2. summarize each partition (one row per partition);
-3. chain the per-partition summaries into exclusive prefix offsets
-   and add each row's within-partition position.
+3. chain the ≤P summary rows into per-partition offsets in ONE
+   bounded task (repartition(1) + mapInPandas; every contract guard
+   raises there, at the caller's action, wrapped in Spark's
+   PythonException with the original message);
+4. re-attach the offsets with a BROADCAST join on a
+   spark_partition_id() column computed in a Project directly over
+   the checkpoint (a broadcast hash join streams the big side, so row
+   order and partitioning are preserved), and add each row's
+   within-partition position in a mapInArrow stage that appends its
+   columns to the incoming Arrow batch.
 
-Output is bit-identical to the window form whenever the key order is
-total (enforce with a unique key), which keeps the operator
-DuckDB-oracle-checkable while the plan stays straggler-free.
-
-IN-PLAN OFFSETS (r14, VERDICT r13 ask #2): the offsets used to be a
-driver-side collect of the P summary rows — an EAGER job (plus an
-eager localCheckpoint) at DataFrame *build* time, paid once per call
-even before the query ran. The chain is now fully lazy:
-
-- the range-partitioned frame is localCheckpoint(eager=False) — the
-  materialization (which both the summary pass and the value pass
-  must share, or the sampled range boundaries could differ between
-  the two subtrees) happens inside the first job that needs it;
-- the per-partition summary is a lazy aggregate / mapInPandas;
-- the carry chain runs in ONE task over the ≤P summary rows (a
-  mapInPandas after repartition(1) — the same bounded work the
-  driver used to do, including every loud guard raise, now
-  worker-side so the errors surface at the ACTION, wrapped in
-  Spark's PythonException with the original message);
-- the per-partition offsets re-attach via a BROADCAST join on a
-  spark_partition_id() column computed in a Project directly over
-  the checkpoint (broadcast hash join streams the big side: row
-  order and partitioning are preserved, so the final mapInPandas
-  still sees whole sorted range partitions).
-
-No eager job, no driver collect, and the input subtree executes
-once (the old eager checkpoint already ensured that; now nothing
-else runs at build time either). Values are bit-identical: the
-carry-chain arithmetic is the same python-int code, moved.
+No eager job, no driver collect, no single-partition stage over data
+rows, and the input subtree executes once. Every stage that reads data
+rows works on Arrow batches: pass-through columns are never converted,
+so a NaN double stays NaN and NULL stays NULL (a pandas round-trip
+writes NaN back as NULL). Output is bit-identical to the window form
+whenever the key order is total — duplicates raise "duplicate" at the
+action (NULL equals NULL and NaN equals NaN, the classes Spark's sort
+groups together) — which keeps every scan DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Helper column names used to carry partition ids / offsets through
 # the broadcast re-join; dropped before the operator returns rows.
@@ -56,24 +47,113 @@ _OFF = "__ps_off"
 _RISKY = "__ps_risky"
 
 
-def _check_reserved(df: DataFrame, func: str) -> None:
+def _adjacent_equal(keys):
+    """eq[i] = row i+1 has the same composite key as row i, over
+    equal-length Arrow arrays. NULL equals NULL (and no value), NaN
+    equals NaN: the key classes of Spark's sort order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    eq = np.ones(max(len(keys[0]) - 1, 0), dtype=bool)
+    for col in keys:
+        a, b = col.slice(1), col.slice(0, len(col) - 1)
+        same = pc.fill_null(pc.equal(a, b), False).to_numpy(zero_copy_only=False)
+        null = col.is_null().to_numpy(zero_copy_only=False)
+        same = same | (null[1:] & null[:-1])
+        if pa.types.is_floating(col.type):
+            nan = pc.fill_null(pc.is_nan(col), False).to_numpy(zero_copy_only=False)
+            same = same | (nan[1:] & nan[:-1])
+        eq &= same
+    return eq
+
+
+def _partition_offset_scan(
+    df: DataFrame,
+    func: str,
+    *,
+    sort_exprs: list,
+    keys: list[str],
+    duplicate_error: str,
+    summarize,
+    chain,
+    off_fields: list,
+    start,
+    out_fields: list,
+) -> DataFrame:
+    """The partition-offset skeleton (module docstring, steps 1-4).
+
+    `summarize(ranged)` builds the per-partition summary frame (one
+    row per partition, partition id in column `p`). `chain(summ)`
+    gets every summary row as one pandas frame sorted by `p` and
+    returns the offset rows `(p, *offsets)`, shaped by `off_fields`.
+    `start(pid, offsets)` is called once per non-empty partition with
+    that partition's offsets (None when `chain` emitted no row for it)
+    and returns `step(batch)`, which maps each data RecordBatch, in
+    order, to the Arrow arrays of `out_fields`. Adjacent rows with an
+    equal `keys` composite raise `duplicate_error`.
+    """
+    import pandas as pd
+    import pyarrow as pa
+
     clash = {_PID, _OFFP, _OFF, _RISKY} & set(df.columns)
     if clash:
         raise ValueError(f"{func}: input columns {sorted(clash)} are reserved")
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ranged = (
+        df.repartitionByRange(parts, *sort_exprs)
+        .sortWithinPartitions(*sort_exprs)
+        .localCheckpoint(eager=False)
+    )
 
+    off_schema = T.StructType([T.StructField(_OFFP, T.LongType(), False)] + off_fields)
 
-def _with_pid(ranged: DataFrame) -> DataFrame:
+    def carry(batches):
+        rows = [pdf for pdf in batches if len(pdf)]
+        recs = chain(pd.concat(rows).sort_values("p")) if rows else []
+        if recs:
+            yield pd.DataFrame.from_records(recs, columns=off_schema.names)
+
+    offsets = summarize(ranged).repartition(1).mapInPandas(carry, off_schema)
     # A separate Project keeps the nondeterministic expression out of
     # the join condition (Catalyst only allows nondeterminism in
     # Project/Filter/Aggregate/Window).
-    return ranged.withColumn(_PID, F.spark_partition_id())
+    joined = ranged.withColumn(_PID, F.spark_partition_id()).join(
+        F.broadcast(offsets), F.col(_PID) == F.col(_OFFP), "left"
+    )
+    n_in = len(df.columns)
+    off_names = [f.name for f in off_fields]
+    head_cols = [_PID, _OFFP, *off_names]
+    names = df.columns + [f.name for f in out_fields]
+
+    def add_offsets(batches):
+        step = prev = None
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            if step is None:
+                head = batch.slice(0, 1).select(head_cols).to_pylist()[0]
+                off = tuple(head[c] for c in off_names)
+                step = start(head[_PID], None if head[_OFFP] is None else off)
+            data = batch.select(list(range(n_in)))
+            # range partitioning co-locates equal keys and each
+            # partition is sorted, so any duplicate is adjacent —
+            # within a batch or across the seam with the previous one
+            key = [data.column(k) for k in keys]
+            if prev is not None:
+                key = [pa.concat_arrays([p, k]) for p, k in zip(prev, key)]
+            if _adjacent_equal(key).any():
+                raise ValueError(f"{func}: {duplicate_error}")
+            prev = [k.slice(len(k) - 1) for k in key]
+            yield pa.RecordBatch.from_arrays(data.columns + step(data), names=names)
+
+    return joined.mapInArrow(add_offsets, T.StructType(df.schema.fields + out_fields))
 
 
 def assign_contiguous_ids(
     df: DataFrame,
     order_col,
     out_col: str = "seq",
-    num_partitions: int | None = None,
     nulls_last: bool = False,
 ) -> DataFrame:
     """Add `out_col` = dense 0-based rank of `order_col` — a single
@@ -89,64 +169,33 @@ def assign_contiguous_ids(
     keys become legal (the composite must still be total; a unique
     trailing tie-break column is the usual way).
 
-    Plan: repartitionByRange(order exprs) → sortWithinPartitions →
-    lazy localCheckpoint → per-partition count aggregate → single-task
-    carry over the ≤P summary rows → broadcast offsets re-join →
-    mapInPandas adds offset + local position. No single-partition
-    stage over DATA anywhere (the carry task sees P summary rows, not
-    rows); no eager job, no driver collect. Guards (NULL keys without
-    nulls_last, duplicate keys) raise loudly at the action.
+    Summary: a per-partition count aggregate (rows, rows with a NULL
+    key); carry: exclusive prefix of the counts; output: offset +
+    local position. Guards (NULL keys without nulls_last, duplicate
+    keys) raise loudly at the action.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
+    import numpy as np
+    import pyarrow as pa
 
-    _check_reserved(df, "assign_contiguous_ids")
     cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
-    parts = (
-        num_partitions
-        if num_partitions is not None
-        else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    sort_exprs = [
-        F.asc_nulls_last(c) if nulls_last else F.col(c).asc() for c in cols
-    ]
-    ranged = df.repartitionByRange(int(parts), *sort_exprs).sortWithinPartitions(
-        *sort_exprs
-    )
-    # lazy: the summary pass and the assignment pass must see the SAME
-    # partitioning (repartitionByRange samples its boundaries, and
-    # re-executing it twice would also double the shuffle work), but
-    # nothing needs to RUN until the caller's action.
-    ranged = ranged.localCheckpoint(eager=False)
     any_null = None
     for c in cols:
         cond = F.col(c).isNull()
         any_null = cond if any_null is None else (any_null | cond)
-    counts = (
-        ranged.select(F.spark_partition_id().alias("p"), *cols)
-        .groupBy("p")
-        .agg(
-            F.count("*").alias("n"),
-            F.count(F.when(any_null, 1)).alias("n_null"),
+
+    def counts(ranged):
+        return (
+            ranged.select(F.spark_partition_id().alias("p"), *cols)
+            .groupBy("p")
+            .agg(
+                F.count("*").alias("n"),
+                F.count(F.when(any_null, 1)).alias("n_null"),
+            )
         )
-    )
 
-    off_schema = T.StructType(
-        [
-            T.StructField(_OFFP, T.LongType(), False),
-            T.StructField(_OFF, T.LongType(), False),
-        ]
-    )
-
-    def carry(batches):
-        rows = [pdf for pdf in batches if len(pdf)]
-        if not rows:
-            return
-        summ = pd.concat(rows).sort_values("p")
-        # Contract guard (free in the existing count pass): without
-        # the explicit NULLS LAST ordering, NULL keys would sort NULLS
+    def chain(summ):
+        # Contract guard (free in the count pass): without the
+        # explicit NULLS LAST ordering, NULL keys would sort NULLS
         # FIRST in Spark but NULLS LAST in a DuckDB oracle's
         # row_number() — fail fast instead of silently diverging.
         n_null = int(summ["n_null"].sum())
@@ -156,71 +205,38 @@ def assign_contiguous_ids(
                 f"{n_null} NULL values; pass nulls_last=True for the "
                 "portable NULLS LAST ordering"
             )
-        acc = 0
-        out_p, out_off = [], []
+        recs, acc = [], 0
         for p, n in zip(summ["p"].tolist(), summ["n"].tolist()):
-            out_p.append(int(p))
-            out_off.append(acc)
-            acc += int(n)
-        yield pd.DataFrame(
-            {
-                _OFFP: pd.Series(out_p, dtype="int64"),
-                _OFF: pd.Series(out_off, dtype="int64"),
-            }
-        )
+            recs.append((p, acc))
+            acc += n
+        return recs
 
-    offsets = counts.repartition(1).mapInPandas(carry, off_schema)
-    joined = _with_pid(ranged).join(
-        F.broadcast(offsets), F.col(_PID) == F.col(_OFFP), "left"
+    def start(pid, off):
+        nxt = off[0] if off else 0
+
+        def step(batch):
+            nonlocal nxt
+            ids = np.arange(nxt, nxt + batch.num_rows, dtype=np.int64)
+            nxt += batch.num_rows
+            return [pa.array(ids)]
+
+        return step
+
+    return _partition_offset_scan(
+        df,
+        "assign_contiguous_ids",
+        sort_exprs=[
+            F.asc_nulls_last(c) if nulls_last else F.col(c).asc() for c in cols
+        ],
+        keys=cols,
+        duplicate_error=f"order columns {cols!r} have duplicate values; the "
+        "assignment would be partition-dependent",
+        summarize=counts,
+        chain=chain,
+        off_fields=[T.StructField(_OFF, T.LongType(), False)],
+        start=start,
+        out_fields=[T.StructField(out_col, T.LongType(), False)],
     )
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.LongType(), False)]
-    )
-    helper_cols = [_PID, _OFFP, _OFF]
-
-    def add_seq(batches):
-        import numpy as np
-
-        base = None
-        seen = 0
-        prev_last = None
-        for pdf in batches:
-            if base is None and len(pdf):
-                base = int(pdf[_OFF].iloc[0])
-            pdf = pdf.drop(columns=helper_cols)
-            # Uniqueness guard: range partitioning co-locates equal
-            # keys and each partition is sorted, so any duplicate is
-            # adjacent — within a batch or across the batch boundary.
-            # NULL==NULL counts as equal (the NULLS LAST order treats
-            # them as one key class; the tie-break column must split
-            # them).
-            if len(pdf):
-                eq = np.ones(max(len(pdf) - 1, 0), dtype=bool)
-                for c in cols:
-                    v = pdf[c]
-                    na = v.isna().values
-                    eq &= (v.values[1:] == v.values[:-1]) | (na[1:] & na[:-1])
-                dup_in_batch = bool(eq.any())
-                first = pdf.iloc[0]
-                dup_at_seam = prev_last is not None and all(
-                    (pd.isna(first[c]) and pd.isna(prev_last[c]))
-                    or first[c] == prev_last[c]
-                    for c in cols
-                )
-                if dup_in_batch or dup_at_seam:
-                    raise ValueError(
-                        f"assign_contiguous_ids: order columns {cols!r} have "
-                        "duplicate values; the assignment would be "
-                        "partition-dependent"
-                    )
-                prev_last = pdf.iloc[-1]
-            b = base or 0
-            pdf[out_col] = range(b + seen, b + seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    return joined.mapInPandas(add_seq, out_schema)
 
 
 def prefix_sum(
@@ -228,22 +244,17 @@ def prefix_sum(
     order_col: str,
     weight_col: str,
     out_col: str = "cum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add `out_col` = exact running SUM of `weight_col` (a BIGINT)
     over ascending `order_col` — the distributed prefix sum behind
-    ECDFs and exact rank selection.
+    ECDFs and exact rank selection; the running-total sibling of
+    :func:`assign_contiguous_ids` on the same partition-offset scan.
 
-    `SUM(w) OVER (ORDER BY key)` is the textbook form and, like the
-    row_number it generalizes, a single-partition window at scale:
-    every row funnels through ONE task. This is the same two-phase
-    partition-offset pattern as :func:`assign_contiguous_ids`:
-    range-partition + sort within partitions, summarize one row per
-    partition (count + exact decimal weight totals), chain the
-    exclusive prefix offsets in one bounded task, and add each row's
-    within-partition running total. Counts merge by addition, so the
-    summary is MERGEABLE across shards; everything is int64-exact, so
-    the output is bit-identical to the window form (and to a DuckDB
+    Summary: per-partition count + exact decimal weight totals (counts
+    merge by addition, so the summary is MERGEABLE across shards);
+    carry: exclusive prefix of the totals; output: offset + the
+    partition's running total. Everything is int64-exact, so the
+    output is bit-identical to the window form (and to a DuckDB
     cumulative window) whenever `order_col` is unique and non-NULL —
     both enforced loudly, since duplicates would make the running
     total partition-dependent and NULLs order differently across
@@ -253,64 +264,34 @@ def prefix_sum(
     prefix excursion beyond int64 even when the grand total fits) is
     rejected loudly rather than wrapping in the int64 cumsum.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
+    import numpy as np
+    import pyarrow as pa
 
-    _check_reserved(df, "prefix_sum")
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
-    parts = (
-        num_partitions
-        if num_partitions is not None
-        else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = df.repartitionByRange(int(parts), F.col(order_col)).sortWithinPartitions(
-        order_col
-    )
-    ranged = ranged.localCheckpoint(eager=False)
-    totals = (
-        ranged.select(
-            F.spark_partition_id().alias("p"),
-            F.col(order_col),
-            F.col(weight_col),
+    def totals(ranged):
+        w = F.col(weight_col)
+        return (
+            ranged.select(F.spark_partition_id().alias("p"), F.col(order_col), w)
+            .groupBy("p")
+            .agg(
+                F.count("*").alias("n"),
+                F.count(order_col).alias("nn"),
+                F.count(F.when(w.isNull(), 1)).alias("wnull"),
+                F.sum(w.cast("decimal(38,0)")).alias("t"),
+                # signed partial sums bound EVERY intra-partition
+                # running prefix (offset + tn <= prefix <= offset +
+                # tp), so the int64 guard covers mixed-sign weights
+                # too — the grand total alone would miss a mid-stream
+                # wrap.
+                F.sum(
+                    F.when(w > 0, w).otherwise(F.lit(0)).cast("decimal(38,0)")
+                ).alias("tp"),
+                F.sum(
+                    F.when(w < 0, w).otherwise(F.lit(0)).cast("decimal(38,0)")
+                ).alias("tn"),
+            )
         )
-        .groupBy("p")
-        .agg(
-            F.count("*").alias("n"),
-            F.count(order_col).alias("nn"),
-            F.count(F.when(F.col(weight_col).isNull(), 1)).alias("wnull"),
-            F.sum(F.col(weight_col).cast("decimal(38,0)")).alias("t"),
-            # signed partial sums bound EVERY intra-partition running
-            # prefix (offset + tn <= prefix <= offset + tp), so the
-            # int64 guard below covers mixed-sign weights too — the
-            # grand total alone would miss a mid-stream wrap (r11
-            # ADVICE item #1).
-            F.sum(
-                F.when(F.col(weight_col) > 0, F.col(weight_col))
-                .otherwise(F.lit(0))
-                .cast("decimal(38,0)")
-            ).alias("tp"),
-            F.sum(
-                F.when(F.col(weight_col) < 0, F.col(weight_col))
-                .otherwise(F.lit(0))
-                .cast("decimal(38,0)")
-            ).alias("tn"),
-        )
-    )
 
-    off_schema = T.StructType(
-        [
-            T.StructField(_OFFP, T.LongType(), False),
-            T.StructField(_OFF, T.LongType(), False),
-            T.StructField(_RISKY, T.BooleanType(), False),
-        ]
-    )
-
-    def carry(batches):
-        rows = [pdf for pdf in batches if len(pdf)]
-        if not rows:
-            return
-        summ = pd.concat(rows).sort_values("p")
+    def chain(summ):
         n_null = int((summ["n"] - summ["nn"]).sum())
         if n_null:
             raise ValueError(
@@ -323,84 +304,76 @@ def prefix_sum(
             )
         recs = [
             (int(p), int(t), int(tn or 0), int(tp or 0))
-            for p, t, tn, tp in zip(
-                summ["p"], summ["t"], summ["tn"], summ["tp"]
-            )
+            for p, t, tn, tp in zip(summ["p"], summ["t"], summ["tn"], summ["tp"])
             if t is not None
         ]
         grand = sum(t for _, t, _, _ in recs)
         if not (-(2**63) <= grand <= 2**63 - 1):
             raise ValueError(f"prefix_sum overflow: total {grand} leaves int64")
         # Partitions whose CONSERVATIVE prefix envelope (offset + all-
-        # negatives .. offset + all-positives) leaves int64: not
+        # negatives .. offset + all-positives) leaves int64 are not
         # necessarily wrong — an interleaved stream can stay bounded —
-        # so they fall back to an exact python-int cumsum below that
-        # raises only on a REAL excursion.
-        out_p, out_off, out_risky = [], [], []
-        acc = 0
+        # so they take an exact python-int cumsum that raises only on
+        # a REAL excursion.
+        out, acc = [], 0
         for p, t, tn, tp in sorted(recs):
-            lo, hi = acc + tn, acc + tp
-            out_p.append(p)
-            out_off.append(acc)
-            out_risky.append(not (-(2**63) <= lo and hi <= 2**63 - 1))
+            risky = not (-(2**63) <= acc + tn and acc + tp <= 2**63 - 1)
+            out.append((p, acc, risky))
             acc += t
-        yield pd.DataFrame(
-            {
-                _OFFP: pd.Series(out_p, dtype="int64"),
-                _OFF: pd.Series(out_off, dtype="int64"),
-                _RISKY: pd.Series(out_risky, dtype="bool"),
-            }
-        )
+        return out
 
-    offsets = totals.repartition(1).mapInPandas(carry, off_schema)
-    joined = _with_pid(ranged).join(
-        F.broadcast(offsets), F.col(_PID) == F.col(_OFFP), "left"
-    )
+    def start(pid, off):
+        running, risky = off if off else (0, False)
 
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.LongType(), False)]
-    )
-    helper_cols = [_PID, _OFFP, _OFF, _RISKY]
-
-    def add_cum(batches):
-        running = None
-        risky = False
-        prev_last = None
-        for pdf in batches:
-            if running is None and len(pdf):
-                running = int(pdf[_OFF].iloc[0])
-                risky = bool(pdf[_RISKY].iloc[0])
-            pdf = pdf.drop(columns=helper_cols)
-            if len(pdf):
-                vals = pdf[order_col]
-                dup_in_batch = bool((vals.values[1:] == vals.values[:-1]).any())
-                dup_at_seam = prev_last is not None and vals.iloc[0] == prev_last
-                if dup_in_batch or dup_at_seam:
+        def step(batch):
+            nonlocal running
+            w = batch.column(weight_col).to_numpy(zero_copy_only=False)
+            if risky:
+                csum = np.cumsum(w.astype(object)) + running
+                mn, mx = int(csum.min()), int(csum.max())
+                if mn < -(2**63) or mx > 2**63 - 1:
                     raise ValueError(
-                        f"prefix_sum: order_col {order_col!r} has duplicate "
-                        "values; the running total would be partition-dependent"
+                        f"prefix_sum overflow: running prefix reaches "
+                        f"[{mn}, {mx}], outside int64"
                     )
-                prev_last = vals.iloc[-1]
-                if risky:
-                    # exact arbitrary-precision pass: raise only on a
-                    # prefix that actually leaves int64 (the
-                    # conservative envelope tripped)
-                    csum = pdf[weight_col].astype("object").cumsum() + running
-                    mn, mx = int(csum.min()), int(csum.max())
-                    if mn < -(2**63) or mx > 2**63 - 1:
-                        raise ValueError(
-                            f"prefix_sum overflow: running prefix reaches "
-                            f"[{mn}, {mx}], outside int64"
-                        )
-                else:
-                    csum = pdf[weight_col].astype("int64").cumsum() + running
-                running = int(csum.iloc[-1])
-                pdf[out_col] = csum.astype("int64")
             else:
-                pdf[out_col] = pdf[weight_col].astype("int64")
-            yield pdf
+                csum = np.cumsum(w.astype(np.int64)) + running
+            running = int(csum[-1])
+            return [pa.array(csum.astype(np.int64))]
 
-    return joined.mapInPandas(add_cum, out_schema)
+        return step
+
+    return _partition_offset_scan(
+        df,
+        "prefix_sum",
+        sort_exprs=[F.col(order_col).asc()],
+        keys=[order_col],
+        duplicate_error=f"order_col {order_col!r} has duplicate values; the "
+        "running total would be partition-dependent",
+        summarize=totals,
+        chain=chain,
+        off_fields=[
+            T.StructField(_OFF, T.LongType(), False),
+            T.StructField(_RISKY, T.BooleanType(), False),
+        ],
+        start=start,
+        out_fields=[T.StructField(out_col, T.LongType(), False)],
+    )
+
+
+def _runs(prev_g, g):
+    """Start index of each maximal same-group run of the sorted Arrow
+    array `g`, and whether the first run continues `prev_g` (the
+    previous batch's last group, a 1-row array, or None)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if prev_g is None:
+        eq, cont = _adjacent_equal([g]), False
+    else:
+        eq = _adjacent_equal([pa.concat_arrays([prev_g, g])])
+        eq, cont = eq[1:], bool(eq[0])
+    return np.flatnonzero(np.concatenate([[True], ~eq])), cont
 
 
 def grouped_prefix_sum(
@@ -409,7 +382,6 @@ def grouped_prefix_sum(
     order_col: str,
     weight_col: str | list[str],
     out_col: str | list[str] = "cum",
-    num_partitions: int | None = None,
     pid_col: str | None = None,
 ) -> DataFrame:
     """Add `out_col` = exact running SUM of `weight_col` over ascending
@@ -418,27 +390,19 @@ def grouped_prefix_sum(
     `SUM(w) OVER (PARTITION BY g ORDER BY v)` degenerates: a window
     partitioned by group frames one group's entire value domain in ONE
     task, so a single dominant group (near-unique continuous values)
-    recreates the global-window bottleneck (r11 VERDICT wrong-item #3).
+    recreates the global-window bottleneck.
 
-    Plan — no per-group single task anywhere:
-
-    1. range-partition by (group, order) + sort within partitions
-       (lazy localCheckpoint — both passes share the partitioning):
-       groups are CONTIGUOUS across the partition sequence, and a
-       mega-group simply spans several partitions;
-    2. one bounded summary pass (mapInPandas, one row per partition):
-       each partition reports only its FIRST and LAST group with their
-       in-partition weight totals plus guard counters — interior
-       groups never cross a partition boundary, so the carry needs
-       nothing about them;
-    3. carry chain over the P summary rows in ONE bounded task: the
-       offset a partition's first group inherits is the accumulated
-       total of that same group across earlier partitions; every
-       other group in the partition starts at zero by construction;
-    4. broadcast the P offsets back (join on a spark_partition_id
-       column — broadcast hash join preserves the streamed side's
-       partitioning and order); a per-partition pandas group-cumsum
-       adds them, chaining batch seams within the task.
+    On the partition-offset scan, ranged by (group, order): groups are
+    CONTIGUOUS across the partition sequence, and a mega-group simply
+    spans several partitions. The summary (mapInArrow, one row per
+    partition) reports only each partition's FIRST and LAST group with
+    their in-partition weight totals plus guard counters — interior
+    groups never cross a partition boundary, so the carry needs
+    nothing about them. The offset a partition's first group inherits
+    is the accumulated total of that same group across earlier
+    partitions; every other group in the partition starts at zero by
+    construction. The output stage adds a per-group running total,
+    chaining batch seams within the task.
 
     Contracts (all enforced loudly, at the ACTION): `order_col`
     non-NULL and unique PER GROUP (duplicates would make the running
@@ -459,23 +423,20 @@ def grouped_prefix_sum(
     consumers (grouped quantile selection) key skew-free joins on
     (group, pid) so a mega-group stays spread over its partitions.
 
-    `weight_col`/`out_col` accept LISTS of equal length (r13): every
-    weight's running total is computed in the SAME range pass —
+    `weight_col`/`out_col` accept LISTS of equal length: every
+    weight's running total is computed in the SAME range pass, so
     callers needing several cumulatives over one (group, order) key
-    (docs_heaps_fit's token and new-type sums) previously chained
-    two full invocations, paying the range shuffle, the eager
-    localCheckpoint and the summary collect twice for identical
-    partitioning. All contracts and guards apply per weight column;
-    values are unchanged (each weight's cumsum is computed
-    independently, exactly as its single-weight call would).
+    (docs_heaps_fit's token and new-type sums) pay the range shuffle
+    once. All contracts and guards apply per weight column; each
+    weight's running total is computed independently, exactly as its
+    single-weight call would.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    _check_reserved(df, "grouped_prefix_sum")
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
     wcols = [weight_col] if isinstance(weight_col, str) else list(weight_col)
     ocols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(wcols) != len(ocols) or not wcols:
@@ -484,17 +445,8 @@ def grouped_prefix_sum(
             f"got {wcols!r} / {ocols!r}"
         )
     nw = len(wcols)
-    parts = int(
-        num_partitions
-        if num_partitions is not None
-        else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = df.repartitionByRange(
-        parts, F.col(group_col), F.col(order_col)
-    ).sortWithinPartitions(group_col, order_col)
-    ranged = ranged.localCheckpoint(eager=False)
 
-    g_field = df.schema[group_col]
+    g_type = df.schema[group_col].dataType
     sum_schema = T.StructType(
         [
             T.StructField("p", T.LongType(), False),
@@ -504,116 +456,79 @@ def grouped_prefix_sum(
             T.StructField("n_neg_w", T.LongType(), False),
             T.StructField("n_groups", T.LongType(), False),
             # NULL group vs no-rows disambiguated by n_rows == 0
-            T.StructField("first_g", g_field.dataType, True),
+            T.StructField("first_g", g_type, True),
             T.StructField("first_t", T.ArrayType(T.LongType(), False), True),
-            T.StructField("last_g", g_field.dataType, True),
+            T.StructField("last_g", g_type, True),
             T.StructField("last_t", T.ArrayType(T.LongType(), False), True),
         ]
     )
-
-    def _nse(a, b) -> bool:  # null-safe equality (None == None)
-        an, bn = a is None, b is None
-        return (an and bn) or (not an and not bn and a == b)
-
-    def _runs(pdf):
-        """Yield (group_or_None, [exact_int_total per weight]) per
-        maximal same-group run of a sorted batch. int64 fast path
-        guarded by a float magnitude bound (|w| sums < 2^62 can't
-        wrap in int64; the float overestimate is far inside the 2x
-        margin), python-int objects only on the rare huge-weight
-        batch."""
-        gv = pdf[group_col]
-        wsums = []
-        for wc in wcols:
-            wfill = pdf[wc].fillna(0)
-            if float(wfill.abs().astype("float64").sum()) < float(2**62):
-                wsums.append(wfill.astype("int64"))
-            else:
-                wsums.append(wfill.astype("object"))
-        na = gv.isna().values
-        same = (gv.values[1:] == gv.values[:-1]) | (na[1:] & na[:-1])
-        change = np.flatnonzero(~same) + 1
-        starts = [0] + change.tolist()
-        ends = change.tolist() + [len(pdf)]
-        for s, e in zip(starts, ends):
-            g = gv.iloc[s]
-            yield (None if pd.isna(g) else g), [
-                int(ws.iloc[s:e].sum()) for ws in wsums
-            ]
+    sum_arrow = to_arrow_schema(sum_schema)
 
     def summarize(batches):
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        n_rows = n_null_order = n_null_w = n_neg_w = 0
-        groups = 0
-        first_g = first_t = last_g = last_t = None
+        n_rows = n_null_order = n_null_w = n_neg_w = groups = 0
+        first_g = first_t = last_g = last_t = prev_g = None
         max_t = 0  # largest per-group in-partition total seen (any weight)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            n_rows += len(pdf)
-            n_null_order += int(pdf[order_col].isna().sum())
+            n_rows += batch.num_rows
+            n_null_order += batch.column(order_col).null_count
+            ws = []
             for wc in wcols:
-                wv = pdf[wc]
-                n_null_w += int(wv.isna().sum())
-                n_neg_w += int((wv.dropna() < 0).sum())
-            for rg, rt in _runs(pdf):
-                if groups == 0:
-                    groups = 1
-                    first_g, first_t = rg, list(rt)
-                    last_g, last_t = rg, list(rt)
-                elif _nse(rg, last_g):  # run continues across a seam
+                w = batch.column(wc)
+                n_null_w += w.null_count
+                n_neg_w += pc.sum(pc.less(w, 0)).as_py() or 0
+                w = pc.fill_null(w, 0).to_numpy(zero_copy_only=False)
+                # int64 run sums are exact while sum |w| < 2^62; python
+                # ints only on the rare huge-weight batch
+                big = float(np.abs(w.astype(np.float64)).sum()) >= 2**62
+                ws.append(w.astype(object if big else np.int64))
+            g = batch.column(group_col)
+            starts, cont = _runs(prev_g, g)
+            tots = [np.add.reduceat(w, starts) for w in ws]
+            for j, s in enumerate(starts.tolist()):
+                rt = [int(t[j]) for t in tots]
+                if j == 0 and cont:  # the run continues across the seam
                     last_t = [a + b for a, b in zip(last_t, rt)]
                     if groups == 1:
                         first_t = list(last_t)
                 else:
                     groups += 1
-                    last_g, last_t = rg, list(rt)
-                max_t = max(max_t, max(last_t))
+                    if groups == 1:
+                        first_g, first_t = g[s].as_py(), rt
+                    last_g, last_t = g[s].as_py(), rt
+                max_t = max(max_t, *last_t)
+            prev_g = g.slice(len(g) - 1)
         # Raise HERE, in the worker: a summary row whose totals left
-        # int64 cannot even serialize through Arrow (the old
-        # single-weight form leaned on Spark's safe-cast error text
-        # accidentally containing "overflow"); the explicit worker-side
+        # int64 cannot even serialize through Arrow; the explicit
         # raise keeps the loud-overflow contract under every partition
-        # arrangement. (The old driver-side `too_big` summary flag was
-        # unreachable behind this raise and is gone — r13 ADVICE #4.)
+        # arrangement.
         if max_t > 2**62:
             raise ValueError(
                 "grouped_prefix_sum overflow: a group's in-partition "
                 "total exceeds 2^62"
             )
-        yield pd.DataFrame(
-            [
-                {
-                    "p": pid,
-                    "n_rows": n_rows,
-                    "n_null_order": n_null_order,
-                    "n_null_w": n_null_w,
-                    "n_neg_w": n_neg_w,
-                    "n_groups": groups,
-                    "first_g": first_g,
-                    "first_t": first_t,
-                    "last_g": last_g,
-                    "last_t": last_t,
-                }
-            ]
-        )
+        row = {
+            "p": TaskContext.get().partitionId(),
+            "n_rows": n_rows,
+            "n_null_order": n_null_order,
+            "n_null_w": n_null_w,
+            "n_neg_w": n_neg_w,
+            "n_groups": groups,
+            "first_g": first_g,
+            "first_t": first_t,
+            "last_g": last_g,
+            "last_t": last_t,
+        }
+        yield pa.RecordBatch.from_pylist([row], schema=sum_arrow)
 
-    summaries = ranged.mapInPandas(summarize, sum_schema)
+    def _nse(a, b) -> bool:  # null-safe equality (None == None)
+        an, bn = a is None, b is None
+        return (an and bn) or (not an and not bn and a == b)
 
-    off_schema = T.StructType(
-        [
-            T.StructField(_OFFP, T.LongType(), False),
-            T.StructField(_OFF, T.ArrayType(T.LongType(), False), False),
-        ]
-    )
-
-    def carry_chain(batches):
-        rows = [pdf for pdf in batches if len(pdf)]
-        if not rows:
-            return
-        summ = pd.concat(rows).sort_values("p")
+    def chain(summ):
         if int(summ["n_null_order"].sum()):
             raise ValueError(
                 f"grouped_prefix_sum: order_col {order_col!r} has NULL "
@@ -628,7 +543,7 @@ def grouped_prefix_sum(
                 f"grouped_prefix_sum: weight_col {wcols!r} has negative "
                 "values; use prefix_sum (ungrouped) for general-sign weights"
             )
-        out_p, out_off = [], []
+        out = []
         carry_g, carry_t, have_carry = None, [0] * nw, False
         for r in summ.itertuples(index=False):
             if not r.n_rows:
@@ -638,14 +553,12 @@ def grouped_prefix_sum(
             off = [0] * nw
             if have_carry and _nse(first_g, carry_g):
                 off = list(carry_t)
-                out_p.append(int(r.p))
-                out_off.append(off)
+                out.append((int(r.p), off))
             # the next partition can only continue THIS partition's
             # last group; its accumulated total includes the inherited
             # offset exactly when first == last (a single spanning
             # group).
             if int(r.n_groups) == 1:
-                carry_g = last_g
                 carry_t = [o + int(t) for o, t in zip(off, r.last_t)]
             else:
                 # the spanning FIRST group terminates inside this
@@ -659,94 +572,62 @@ def grouped_prefix_sum(
                             "grouped_prefix_sum overflow: a group's running "
                             f"total reaches {o + int(t)}, outside int64"
                         )
-                carry_g = last_g
                 carry_t = [int(t) for t in r.last_t]
-            have_carry = True
+            carry_g, have_carry = last_g, True
             if max(carry_t) > 2**63 - 1:
                 raise ValueError(
                     f"grouped_prefix_sum overflow: a group's running total "
                     f"reaches {max(carry_t)}, outside int64"
                 )
-        # explicit dtypes: an empty frame would default to float64
-        # columns, which Arrow cannot convert to array<long>
-        yield pd.DataFrame(
-            {
-                _OFFP: pd.Series(out_p, dtype="int64"),
-                _OFF: pd.Series(out_off, dtype="object"),
-            }
-        )
+        return out
 
-    offsets = summaries.repartition(1).mapInPandas(carry_chain, off_schema)
-    joined = _with_pid(ranged).join(
-        F.broadcast(offsets), F.col(_PID) == F.col(_OFFP), "left"
-    )
+    def start(pid, off):
+        carry = list(off[0]) if off else [0] * nw
+        prev_g = None
+
+        def step(batch):
+            nonlocal carry, prev_g
+            g = batch.column(group_col)
+            starts, cont = _runs(prev_g, g)
+            # carry flows into the batch's FIRST run only: the
+            # partition offset (first batch) or the previous batch's
+            # last-group running total (seam continuation)
+            lens = np.diff(np.append(starts, len(g)))
+            csums = []
+            for i, wc in enumerate(wcols):
+                # int64 BEFORE the cumsum (a narrower weight would wrap
+                # inside it). The batch-wide cumsum may wrap past int64
+                # when several groups add up, but each run's own
+                # difference is exact mod 2^64 and fits: a group's
+                # running total is validated against int64 upstream.
+                w = batch.column(wc).to_numpy(zero_copy_only=False).astype(np.int64)
+                cs = np.cumsum(w)
+                cs -= np.repeat(cs[starts] - w[starts], lens)
+                if prev_g is None or cont:
+                    cs[: lens[0]] += carry[i]
+                csums.append(cs)
+            carry = [int(cs[-1]) for cs in csums]
+            prev_g = g.slice(len(g) - 1)
+            cols = [pa.array(cs) for cs in csums]
+            if pid_col is not None:
+                cols.append(pa.array(np.full(len(g), pid, dtype=np.int64)))
+            return cols
+
+        return step
 
     extra = [T.StructField(oc, T.LongType(), False) for oc in ocols]
     if pid_col is not None:
         extra.append(T.StructField(pid_col, T.LongType(), False))
-    out_schema = T.StructType(list(df.schema.fields) + extra)
-    helper_cols = [_PID, _OFFP, _OFF]
-
-    def add_cum(batches):
-        carry = None  # applies to the partition's 1st group
-        pid = None
-        first_batch = True
-        prev_g = prev_v = None
-        have_prev = False
-        for pdf in batches:
-            if carry is None and len(pdf):
-                off_val = pdf[_OFF].iloc[0]
-                carry = (
-                    [int(x) for x in off_val]
-                    if off_val is not None and not isinstance(off_val, float)
-                    else [0] * nw
-                )
-                pid = int(pdf[_PID].iloc[0])
-            pdf = pdf.drop(columns=helper_cols)
-            if not len(pdf):
-                for wc, oc in zip(wcols, ocols):
-                    pdf[oc] = pdf[wc].astype("int64")
-                if pid_col is not None:
-                    pdf[pid_col] = pdf[ocols[0]]
-                yield pdf
-                continue
-            gv, vv = pdf[group_col], pdf[order_col]
-            na = gv.isna().values
-            same_g = (gv.values[1:] == gv.values[:-1]) | (na[1:] & na[:-1])
-            seam_g = have_prev and _nse(
-                None if pd.isna(gv.iloc[0]) else gv.iloc[0],
-                None if pd.isna(prev_g) else prev_g,
-            )
-            dup_in = bool((same_g & (vv.values[1:] == vv.values[:-1])).any())
-            if dup_in or (seam_g and vv.iloc[0] == prev_v):
-                raise ValueError(
-                    f"grouped_prefix_sum: ({group_col!r}, {order_col!r}) "
-                    "has duplicate pairs; the running total would be "
-                    "partition-dependent"
-                )
-            # cast BEFORE the cumsum: a narrower weight dtype would
-            # wrap inside pandas' dtype-preserving cumulative sum
-            grouped = pdf.assign(
-                **{f"__w64_{i}": pdf[wc].astype("int64") for i, wc in enumerate(wcols)}
-            ).groupby(group_col, dropna=False, sort=False)
-            csums = [grouped[f"__w64_{i}"].cumsum() for i in range(nw)]
-            # carry flows into the batch's FIRST run only: the
-            # partition offset (first batch) or the previous batch's
-            # last-group running total (seam continuation).
-            if first_batch or seam_g:
-                if any(carry):
-                    change = np.flatnonzero(~same_g)
-                    first_run_end = int(change[0]) + 1 if len(change) else len(pdf)
-                    for i in range(nw):
-                        if carry[i]:
-                            csums[i].iloc[:first_run_end] += carry[i]
-            for oc, cs in zip(ocols, csums):
-                pdf[oc] = cs
-            if pid_col is not None:
-                pdf[pid_col] = pid
-            carry = [int(cs.iloc[-1]) for cs in csums]
-            prev_g, prev_v, have_prev = gv.iloc[-1], vv.iloc[-1], True
-            first_batch = False
-            yield pdf
-
-    return joined.mapInPandas(add_cum, out_schema)
+    return _partition_offset_scan(
+        df,
+        "grouped_prefix_sum",
+        sort_exprs=[F.col(group_col).asc(), F.col(order_col).asc()],
+        keys=[group_col, order_col],
+        duplicate_error=f"({group_col!r}, {order_col!r}) has duplicate pairs; "
+        "the running total would be partition-dependent",
+        summarize=lambda ranged: ranged.mapInArrow(summarize, sum_schema),
+        chain=chain,
+        off_fields=[T.StructField(_OFF, T.ArrayType(T.LongType(), False), False)],
+        start=start,
+        out_fields=extra,
+    )

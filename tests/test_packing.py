@@ -109,10 +109,10 @@ def test_assign_contiguous_ids_plan_has_no_global_sort(spark):
     assert "rangepartitioning" in plan
     assert "SinglePartition" not in plan
     assert "Window" not in plan
-    # and the full operator runs as MapInPandas over that layout
+    # and the full operator runs as MapInArrow over that layout
     out = assign_contiguous_ids(df, "k", "seq")
     final = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in final and "Window" not in final
+    assert "MapInArrow" in final and "Window" not in final
 
 
 def test_assign_contiguous_ids_rejects_null_keys(spark):

@@ -3,6 +3,7 @@ two-phase prefix sum behind them (rownum.prefix_sum)."""
 
 from __future__ import annotations
 
+import contextlib
 import random
 
 import duckdb
@@ -12,6 +13,19 @@ from pyspark.sql import functions as F
 
 from aurora_mito_etl_spark.operators import quantiles as qt
 from aurora_mito_etl_spark.operators.rownum import grouped_prefix_sum, prefix_sum
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    """Run the block with `spark.sql.shuffle.partitions` = n — the
+    range-partition count of every partition-offset scan — restoring
+    the previous value after."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_prefix_sum_matches_window_form(spark):
@@ -59,13 +73,14 @@ def test_prefix_sum_running_overflow_guard(spark):
     big = 2**62
     rows = [(1, big), (2, big), (3, -big), (4, -big)]
     df = spark.createDataFrame(rows, "v long, c long")
-    with pytest.raises(Exception, match="running prefix"):
-        prefix_sum(df, "v", "c", num_partitions=1).collect()
+    with _shuffle_partitions(spark, 1), pytest.raises(Exception, match="running prefix"):
+        prefix_sum(df, "v", "c").collect()
     # same magnitudes interleaved so every prefix stays bounded: fine
     ok = spark.createDataFrame(
         [(1, big), (2, -big), (3, big), (4, -big)], "v long, c long"
     )
-    got = {r["v"]: r["cum"] for r in prefix_sum(ok, "v", "c", num_partitions=1).collect()}
+    with _shuffle_partitions(spark, 1):
+        got = {r["v"]: r["cum"] for r in prefix_sum(ok, "v", "c").collect()}
     assert got == {1: big, 2: 0, 3: big, 4: 0}
 
 
@@ -222,10 +237,11 @@ def test_grouped_prefix_sum_matches_window(spark):
         + [("b", v, rng.randint(1, 4)) for v in vals[1080:]]
     )
     df = spark.createDataFrame(rows, "g string, v long, c long").repartition(6)
-    got = {
-        (r["g"], r["v"]): r["cum"]
-        for r in grouped_prefix_sum(df, "g", "v", "c", num_partitions=8).collect()
-    }
+    with _shuffle_partitions(spark, 8):
+        got = {
+            (r["g"], r["v"]): r["cum"]
+            for r in grouped_prefix_sum(df, "g", "v", "c").collect()
+        }
     w = (
         Window.partitionBy("g")
         .orderBy(F.col("v").asc_nulls_last())
@@ -237,10 +253,11 @@ def test_grouped_prefix_sum_matches_window(spark):
     }
     assert got == want
     # partition invariance: 1 partition == 8 partitions
-    got1 = {
-        (r["g"], r["v"]): r["cum"]
-        for r in grouped_prefix_sum(df, "g", "v", "c", num_partitions=1).collect()
-    }
+    with _shuffle_partitions(spark, 1):
+        got1 = {
+            (r["g"], r["v"]): r["cum"]
+            for r in grouped_prefix_sum(df, "g", "v", "c").collect()
+        }
     assert got1 == want
 
 
@@ -259,13 +276,13 @@ def test_grouped_prefix_sum_multi_weight_mixed_carry(spark):
         for v in range(n)
     ] + [("tail", n + 1, 5, 7)]
     df = spark.createDataFrame(rows, "g string, v long, a long, b long")
-    got = {
-        (r["g"], r["v"]): (r["ca"], r["cb"])
-        for r in grouped_prefix_sum(
-            df.repartition(5), "g", "v", ["a", "b"], ["ca", "cb"],
-            num_partitions=8,
-        ).collect()
-    }
+    with _shuffle_partitions(spark, 8):
+        got = {
+            (r["g"], r["v"]): (r["ca"], r["cb"])
+            for r in grouped_prefix_sum(
+                df.repartition(5), "g", "v", ["a", "b"], ["ca", "cb"]
+            ).collect()
+        }
     w = (
         Window.partitionBy("g")
         .orderBy(F.col("v").asc_nulls_last())
@@ -320,15 +337,18 @@ def test_grouped_prefix_sum_spanning_group_overflow_guard(spark):
     rows = [("g", i, big) for i in range(1, 5)] + [("h", 5, 7)]
     df = spark.createDataFrame(rows, "g string, v long, c long")
     for nparts in (1, 2, 3):
-        with pytest.raises(Exception, match="overflow"):
-            grouped_prefix_sum(df, "g", "v", "c", num_partitions=nparts).collect()
+        with _shuffle_partitions(spark, nparts), pytest.raises(
+            Exception, match="overflow"
+        ):
+            grouped_prefix_sum(df, "g", "v", "c").collect()
     # same group totals kept inside int64: fine, and exact
     ok_rows = [("g", i, big) for i in range(1, 4)] + [("h", 5, 7)]
     ok = spark.createDataFrame(ok_rows, "g string, v long, c long")
-    got = {
-        (r["g"], r["v"]): r["cum"]
-        for r in grouped_prefix_sum(ok, "g", "v", "c", num_partitions=2).collect()
-    }
+    with _shuffle_partitions(spark, 2):
+        got = {
+            (r["g"], r["v"]): r["cum"]
+            for r in grouped_prefix_sum(ok, "g", "v", "c").collect()
+        }
     assert got == {
         ("g", 1): big, ("g", 2): 2 * big, ("g", 3): 3 * big, ("h", 5): 7,
     }
@@ -350,15 +370,11 @@ def test_grouped_quantiles_dist_parity(spark):
     a = sorted(
         map(tuple, qt.grouped_exact_quantiles(df, "k", "x").collect()), key=str
     )
-    b = sorted(
-        map(
-            tuple,
-            qt.grouped_exact_quantiles_dist(
-                df, "k", "x", num_partitions=8
-            ).collect(),
-        ),
-        key=str,
-    )
+    with _shuffle_partitions(spark, 8):
+        b = sorted(
+            map(tuple, qt.grouped_exact_quantiles_dist(df, "k", "x").collect()),
+            key=str,
+        )
     assert a == b
     con = duckdb.connect()
     con.execute("CREATE TABLE t (k VARCHAR, x DOUBLE)")
@@ -381,14 +397,16 @@ def test_grouped_quantiles_dist_partition_invariance(spark):
     rng = random.Random(31)
     rows = [(rng.choice(["a", "b"]), float(rng.randint(0, 99))) for _ in range(150)]
     df = spark.createDataFrame(rows, "k string, x double")
-    c1 = sorted(
-        map(tuple, qt.grouped_exact_quantiles_dist(df, "k", "x", num_partitions=1).collect()),
-        key=str,
-    )
-    c9 = sorted(
-        map(tuple, qt.grouped_exact_quantiles_dist(df, "k", "x", num_partitions=9).collect()),
-        key=str,
-    )
+    with _shuffle_partitions(spark, 1):
+        c1 = sorted(
+            map(tuple, qt.grouped_exact_quantiles_dist(df, "k", "x").collect()),
+            key=str,
+        )
+    with _shuffle_partitions(spark, 9):
+        c9 = sorted(
+            map(tuple, qt.grouped_exact_quantiles_dist(df, "k", "x").collect()),
+            key=str,
+        )
     assert c1 == c9
 
 

@@ -720,13 +720,16 @@ def make_embeddings(rng: random.Random, n: int):
         base[1] = 0.0  # zero vector in the corpus
     if n > 13:
         base[13] = -base[2]  # exact negation
-    # Huge magnitude, same direction. 300 is extreme for an embedding
-    # but inside the kmeans long-grid input contract (clustering.py
-    # _int_dot: dim 64 -> max|x| ~ 380); magnitude 1e6 correctly makes
-    # the grid fold fail LOUDLY with ANSI long overflow (and exposed
-    # the fixed6 floor->long saturation, fixed in functions/numeric).
+    # Huge magnitude, same direction, scaled so the largest |component|
+    # is exactly 300: extreme for an embedding but inside the kmeans
+    # long-grid input contract (clustering.py _int_dot: dim 64 ->
+    # max|x| ~ 380). A flat x300 factor is not: a randn component
+    # near 3.4 reaches ~1015. Magnitude 1e6 correctly makes the grid
+    # fold fail LOUDLY with ANSI long overflow (and exposed the fixed6
+    # floor->long saturation, fixed in functions/numeric).
     if n > 14:
-        base[14] = base[2] * np.float32(300.0)
+        scale = 300.0 / float(np.abs(base[2]).max())
+        base[14] = (base[2].astype(np.float64) * scale).astype(np.float32)
     # make one QUERY row (vec_id 100) a member of the duplicate cluster
     if n > 100:
         base[100] = base[2]

@@ -77,6 +77,7 @@ def audit_one(plan: str) -> dict:
                 "ArrowEvalPython",
                 "FlatMapGroupsInPandas",
                 "MapInPandas",
+                "MapInArrow",
                 "FlatMapGroupsInPandasWithState",
             )
         ),
