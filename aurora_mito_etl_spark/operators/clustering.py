@@ -101,51 +101,41 @@ def _int_dots_arrow(c_ints: list[list[int]], dim: int) -> Column:
       path quantizes NaN to 0 and raises ANSI overflow on Inf.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+
+    from aurora_mito_etl_spark.operators.similarity import _decode_vectors
 
     C = np.array(c_ints, dtype=np.int64)  # (k, dim)
     max_c = int(np.abs(C).max()) if C.size else 0
 
-    def batch(s):
-        rows = s.tolist()
-        out: list[list[int] | None] = [None] * len(rows)
-        cand = []
-        for i, v in enumerate(rows):
-            if v is not None and len(v) >= dim:
-                # None elements become NaN here (object list → float64)
-                cand.append((i, np.array(v[:dim], dtype=np.float64)))
-        if cand:
-            A = np.stack([a for _, a in cand])
-            vi_f = np.floor(A * float(_SCALE) + 0.5)
-            # a NULL element surfaces as NaN through Arrow — those rows
-            # keep the NULL-poisoned dots of the zip_with pad (the
-            # dot_arrow NaN→NULL convention)
-            finite = np.isfinite(vi_f).all(axis=1)
-            safe = np.where(np.isfinite(vi_f), vi_f, 0.0)
-            if finite.any() and float(np.abs(safe[finite]).max()) >= float(
-                2**63
-            ):
-                raise ValueError(
-                    "assign_cells: quantized component leaves int64 "
-                    "(|value| too large for the fixed6 grid)"
-                )
-            vi = safe.astype(np.int64)
-            max_v = int(np.abs(vi[finite]).max()) if finite.any() else 0
-            if dim * max_v * max_c >= 2**63:
-                raise ValueError(
-                    "assign_cells long overflow: integer dot envelope "
-                    f"dim·{max_v}·{max_c} leaves int64 (input magnitude "
-                    "outside the fixed6-grid contract)"
-                )
-            dots = vi @ C.T  # exact int64 — envelope checked above
-            for (row_i, _), d, is_fin in zip(cand, dots, finite):
-                if is_fin:
-                    out[row_i] = [int(x) for x in d]
-        return pd.Series(out)
+    def batch(arr):
+        X, ok, null_el = _decode_vectors(arr, dim, prefix=True)
+        vi_f = np.floor(X * float(_SCALE) + 0.5)
+        # rows outside the contract (NULL, short, a NULL or non-finite
+        # element) get the NULL dots of the zip_with pad
+        fine = ok & ~null_el & np.isfinite(vi_f).all(axis=1)
+        safe = np.where(fine[:, None], vi_f, 0.0)
+        if float(np.abs(safe).max(initial=0.0)) >= float(2**63):
+            raise ValueError(
+                "assign_cells: quantized component leaves int64 "
+                "(|value| too large for the fixed6 grid)"
+            )
+        vi = safe.astype(np.int64)
+        max_v = int(np.abs(vi).max(initial=0))
+        if dim * max_v * max_c >= 2**63:
+            raise ValueError(
+                "assign_cells long overflow: integer dot envelope "
+                f"dim·{max_v}·{max_c} leaves int64 (input magnitude "
+                "outside the fixed6-grid contract)"
+            )
+        dots = vi @ C.T  # exact int64 — envelope checked above
+        offsets = pa.array(np.arange(len(dots) + 1) * C.shape[0], pa.int32())
+        return pa.ListArray.from_arrays(
+            offsets, pa.array(dots.ravel()), mask=pa.array(~fine)
+        )
 
-    return pandas_udf(batch, T.ArrayType(T.LongType()))
+    return F.arrow_udf(batch, T.ArrayType(T.LongType()))
 
 
 def assign_cells(

@@ -557,6 +557,11 @@ def _shift_double(m: Mol, c: int, t: int) -> Mol | None:
         return None
     if [o for j, o in m.bonds[c] if j == t] != [1]:
         return None
+    # the acceptor mirror of the donor guard: a single-bonded N that
+    # already carries more than two bond orders would become a
+    # five-bond N with the double
+    if m.bond_order_sum(t) > 2 + 1e-9:
+        return None
     if m.implicit_h(t) < 1 or any(o >= 2 for _, o in m.bonds[t]):
         return None
     out = copy.deepcopy(m)

@@ -147,33 +147,6 @@ def pq_encode(
     )
 
 
-def _subspace_codes(mat, books, half_norms, subdim):
-    """One int32 code array per sub-codebook: argmax(dot − ‖c‖²/2)
-    with ties → larger cell, dots as the ordered per-dimension fold
-    (`_ordered_gram`, the exact aggregate(zip_with) sequence) and
-    half-norms as the caller's Python-float left-to-right sums.
-
-    SHARED by pq_encode_arrow and ivfpq_encode_arrow (and, with a
-    single full-width "book", the IVF cell assignment) — the
-    bit-parity contract every oracle replay depends on lives here or
-    nowhere; a fix applied to one copy and not another would silently
-    break the twin (code-review r7 finding)."""
-    import numpy as np
-
-    from aurora_mito_etl_spark.operators.similarity import _ordered_gram
-
-    out = []
-    for j, book in enumerate(books):
-        sv = mat[:, j * subdim : (j + 1) * subdim]
-        score = _ordered_gram(sv, book) - half_norms[j][None, :]
-        out.append(
-            ((score.shape[1] - 1) - np.argmax(score[:, ::-1], axis=1)).astype(
-                np.int32
-            )
-        )
-    return out
-
-
 def _qvec_sql(query_vec_col: str) -> str:
     """Spark-SQL fragment: the query vector cast element-wise to
     double — the exact tree F.transform(col, x -> cast double)
@@ -191,6 +164,25 @@ def _dot_fold_sql(sub_sql: str, cent) -> str:
     return (
         f"aggregate(zip_with({sub_sql}, array({arr}), (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def nearest_cells(vec_col: str, centroids, n: int) -> Column:
+    """The `n` cell ids nearest to `vec_col` — top-n by the struct
+    (dot(v,c) − ‖c‖²/2, cell) sorted descending, so a tie goes to the
+    larger cell as in the Arrow argmax and the oracles' ORDER BY …
+    DESC, cell DESC. The IVF probe of `similarity.ivf_topk` and
+    :func:`ivfpq_adc_topk`. ONE ``F.expr`` parse (r14): the Column
+    build of n_cells 64-literal folds cost ~1,100 py4j round trips per
+    query BUILD; the parsed SQL is the identical Catalyst tree."""
+    structs = ", ".join(
+        f"named_struct('s', {_dot_fold_sql(_qvec_sql(vec_col), c)}"
+        f" - {float(sum(x * x for x in c) / 2.0)!r}D, 'cell', {i})"
+        for i, c in enumerate(centroids)
+    )
+    return F.expr(
+        f"transform(slice(sort_array(array({structs}), false), 1, {n}), "
+        "t -> t.cell)"
     )
 
 
@@ -264,51 +256,65 @@ def pq_encode_arrow(
     the SAME float expression (dot − ‖c‖²/2, never the algebraically
     equal ‖sv‖² − 2·dot + ‖c‖² squared-distance form, whose different
     rounding could flip a near-tie — the ADVICE r04 finding), dots use
-    the ordered per-dimension fold (:func:`_ordered_gram`, the exact
+    the ordered per-dimension fold (`similarity._ordered_gram`, the exact
     aggregate(zip_with) sequence), and half-norms are the identical
     Python floats the expression path embeds. Ties → larger cell via
-    the reversed-index argmax. Code equality pinned by pytest."""
+    the reversed-index argmax. Code equality pinned by pytest.
+
+    A NULL vector, a short vector or a NULL element NaN-poisons the
+    subvectors it touches (:func:`similarity._decode_vectors`), which
+    then take the largest code — the expression path's all-NULL-score
+    tie. The id passes through at its own type."""
+    books = pq_codebooks(dim, m, n_centroids, seed)
+    return _encode_arrow(df, dim, vec_col, id_col, books)
+
+
+def _encode_arrow(df, dim, vec_col, id_col, books, cents=None):
+    """The mapInArrow pass behind both encoders, over ONE prefix decode
+    of the vector column: (id, pq_0..pq_{m-1}, pq_csv), or with IVF
+    centroids `cents` (id, cell, pq_0..pq_{m-1}). Cell and codes are
+    :func:`similarity._subspace_codes` (the cell with one full-width
+    book)."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
-    books_raw = pq_codebooks(dim, m, n_centroids, seed)
-    books = [np.array(b, dtype=np.float64) for b in books_raw]
-    # Python-float left-to-right half-norms — the exact literals the
-    # expression path folds (numpy .sum pairwise-sums, which may differ
-    # in the last ulp).
-    half_norms = [
-        np.array([sum(x * x for x in cent) / 2.0 for cent in b], dtype=np.float64)
-        for b in books_raw
-    ]
-    subdim = dim // m
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            *[T.StructField(f"pq_{j}", T.IntegerType(), False) for j in range(m)],
-            T.StructField("pq_csv", T.StringType(), False),
-        ]
+    from aurora_mito_etl_spark.operators.similarity import (
+        _decode_vectors,
+        _half_norms,
+        _subspace_codes,
     )
 
+    mats = [np.array(b, dtype=np.float64) for b in books]
+    halves = [_half_norms(b) for b in books]
+    names = [f"pq_{j}" for j in range(len(books))]
+    if cents is not None:
+        names = ["cell", *names]
+        cmat, chalf = np.array(cents, dtype=np.float64), _half_norms(cents)
+    fields = [T.StructField(c, T.IntegerType(), False) for c in names]
+    if cents is None:
+        fields.append(T.StructField("pq_csv", T.StringType(), False))
+    out_schema = T.StructType([df.schema[id_col], *fields])
+
     def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cols = {id_col: pdf[id_col].to_numpy()}
-            # ties → larger cell index (match F.greatest's struct
-            # comparison in the expression path) — shared kernel
-            code_arrays = _subspace_codes(mat, books, half_norms, subdim)
-            codes = []
-            for j, c in enumerate(code_arrays):
-                cols[f"pq_{j}"] = c
-                codes.append(c.astype(str))
-            cols["pq_csv"] = np.array(
-                [",".join(row) for row in zip(*codes)]
+        for batch in batches:
+            mat, _, _ = _decode_vectors(batch.column(1), dim, prefix=True)
+            codes = _subspace_codes(mat, mats, halves, dim // len(books))
+            if cents is not None:
+                codes = _subspace_codes(mat, [cmat], [chalf], dim) + codes
+            cols = [pa.array(c) for c in codes]
+            if cents is None:
+                cols.append(
+                    pc.binary_join_element_wise(
+                        *[c.cast(pa.string()) for c in cols], ","
+                    )
+                )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), *cols], names=out_schema.names
             )
-            yield pd.DataFrame(cols)
 
-    return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(encode, out_schema)
 
 
 def ivfpq_encode_arrow(
@@ -333,48 +339,11 @@ def ivfpq_encode_arrow(
     the ordered per-dimension fold (`_ordered_gram`) and half-norms as
     Python-float left-to-right sums — the exact convention of
     `similarity.ivf_topk`'s expression path and `pq_encode_arrow`.
+    A NULL, short or NULL-element vector takes the largest cell, as in
+    that expression path, and the codes :func:`pq_encode_arrow` gives.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    books_raw = pq_codebooks(dim, m, n_centroids, seed)
-    books = [np.array(b, dtype=np.float64) for b in books_raw]
-    half_norms = [
-        np.array([sum(x * x for x in cent) / 2.0 for cent in b], dtype=np.float64)
-        for b in books_raw
-    ]
-    cents = np.array(centroids, dtype=np.float64)
-    cell_half = np.array(
-        [sum(x * x for x in c) / 2.0 for c in centroids], dtype=np.float64
-    )
-    subdim = dim // m
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cell", T.IntegerType(), False),
-            *[T.StructField(f"pq_{j}", T.IntegerType(), False) for j in range(m)],
-        ]
-    )
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cols = {id_col: pdf[id_col].to_numpy()}
-            # IVF cell = the same argmax kernel with one full-width
-            # "book" (the coarse centroids)
-            cols["cell"] = _subspace_codes(
-                mat, [cents], [cell_half], mat.shape[1]
-            )[0]
-            for j, c in enumerate(
-                _subspace_codes(mat, books, half_norms, subdim)
-            ):
-                cols[f"pq_{j}"] = c
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
+    books = pq_codebooks(dim, m, n_centroids, seed)
+    return _encode_arrow(df, dim, vec_col, id_col, books, centroids)
 
 
 def ivfpq_adc_topk(
@@ -424,25 +393,9 @@ def ivfpq_adc_topk(
         id_col=id_col, seed=seed,
     )
 
-    # Probed cells: top-n_probe by (dot(q,c) − ‖c‖²/2, cell) struct
-    # sort descending — identical tie convention (larger cell wins) to
-    # the corpus-side argmax and the oracle's ORDER BY ... DESC,
-    # cell DESC. ONE F.expr parse (r14): the Column build of n_cells
-    # 64-literal folds cost ~1,100 py4j round trips per query BUILD;
-    # the parsed SQL is the identical Catalyst tree.
-    structs = ", ".join(
-        f"named_struct('s', {_dot_fold_sql(_qvec_sql(query_vec_col), c)}"
-        f" - {float(sum(x * x for x in c) / 2.0)!r}D, 'cell', {i})"
-        for i, c in enumerate(centroids)
-    )
-    probe = F.expr(
-        f"transform(slice(sort_array(array({structs}), false), 1, "
-        f"{n_probe}), t -> t.cell)"
-    )
-
     qt = queries.select(
         F.col(query_id_col),
-        F.explode(probe).alias("cell"),
+        F.explode(nearest_cells(query_vec_col, centroids, n_probe)).alias("cell"),
         *_adc_distance_table_cols(books, subdim, query_vec_col),
     )
 
@@ -560,9 +513,6 @@ def ivfpq_rerank_topk(
     scored = pairs.join(F.broadcast(q), query_id_col).select(
         F.col(query_id_col),
         F.col(id_col),
-        _sim._fixed6(
-            _sim.dot_arrow(F.col("__v"), F.col("__q"))
-            / (_sim._safe_norm(F.col("__vn")) * _sim._safe_norm(F.col("__qn")))
-        ).alias("score"),
+        _sim.pair_cosine().alias("score"),
     )
     return _sim.topk(scored, query_id_col, id_col, k)

@@ -13,7 +13,7 @@ two-phase partition-offset pattern, written once here as
    boundaries, and running it twice would also double the shuffle);
 2. summarize each partition (one row per partition);
 3. chain the ≤P summary rows into per-partition offsets in ONE
-   bounded task (repartition(1) + mapInPandas; every contract guard
+   bounded task (repartition(1) + mapInArrow; every contract guard
    raises there, at the caller's action, wrapped in Spark's
    PythonException with the original message);
 4. re-attach the offsets with a BROADCAST join on a
@@ -25,12 +25,13 @@ two-phase partition-offset pattern, written once here as
 
 No eager job, no driver collect, no single-partition stage over data
 rows, and the input subtree executes once. Every stage that reads data
-rows works on Arrow batches: pass-through columns are never converted,
-so a NaN double stays NaN and NULL stays NULL (a pandas round-trip
-writes NaN back as NULL). Output is bit-identical to the window form
-whenever the key order is total — duplicates raise "duplicate" at the
-action (NULL equals NULL and NaN equals NaN, the classes Spark's sort
-groups together) — which keeps every scan DuckDB-oracle-checkable.
+rows works on Arrow batches, and so does the carry: pass-through
+columns are never converted, so a NaN double stays NaN and NULL stays
+NULL (a pandas round-trip writes NaN back as NULL). Output is
+bit-identical to the window form whenever the key order is total —
+duplicates raise "duplicate" at the action (NULL equals NULL and NaN
+equals NaN, the classes Spark's sort groups together) — which keeps
+every scan DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -85,16 +86,17 @@ def _partition_offset_scan(
 
     `summarize(ranged)` builds the per-partition summary frame (one
     row per partition, partition id in column `p`). `chain(summ)`
-    gets every summary row as one pandas frame sorted by `p` and
-    returns the offset rows `(p, *offsets)`, shaped by `off_fields`.
+    gets the summary rows as dicts sorted by `p` (``Table.to_pylist``:
+    a NULL is None and a NaN stays NaN) and returns the offset rows
+    `(p, *offsets)`, shaped by `off_fields`.
     `start(pid, offsets)` is called once per non-empty partition with
     that partition's offsets (None when `chain` emitted no row for it)
     and returns `step(batch)`, which maps each data RecordBatch, in
     order, to the Arrow arrays of `out_fields`. Adjacent rows with an
     equal `keys` composite raise `duplicate_error`.
     """
-    import pandas as pd
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     clash = {_PID, _OFFP, _OFF, _RISKY} & set(df.columns)
     if clash:
@@ -107,14 +109,18 @@ def _partition_offset_scan(
     )
 
     off_schema = T.StructType([T.StructField(_OFFP, T.LongType(), False)] + off_fields)
+    off_arrow = to_arrow_schema(off_schema)
 
     def carry(batches):
-        rows = [pdf for pdf in batches if len(pdf)]
-        recs = chain(pd.concat(rows).sort_values("p")) if rows else []
+        rows = [b for b in batches if b.num_rows]
+        summ = pa.Table.from_batches(rows).sort_by("p").to_pylist() if rows else []
+        recs = chain(summ) if summ else []
         if recs:
-            yield pd.DataFrame.from_records(recs, columns=off_schema.names)
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(off_arrow.names, r)) for r in recs], schema=off_arrow
+            )
 
-    offsets = summarize(ranged).repartition(1).mapInPandas(carry, off_schema)
+    offsets = summarize(ranged).repartition(1).mapInArrow(carry, off_schema)
     # A separate Project keeps the nondeterministic expression out of
     # the join condition (Catalyst only allows nondeterminism in
     # Project/Filter/Aggregate/Window).
@@ -198,7 +204,7 @@ def assign_contiguous_ids(
         # explicit NULLS LAST ordering, NULL keys would sort NULLS
         # FIRST in Spark but NULLS LAST in a DuckDB oracle's
         # row_number() — fail fast instead of silently diverging.
-        n_null = int(summ["n_null"].sum())
+        n_null = sum(r["n_null"] for r in summ)
         if n_null and not nulls_last:
             raise ValueError(
                 f"assign_contiguous_ids: order columns {cols!r} have "
@@ -206,9 +212,9 @@ def assign_contiguous_ids(
                 "portable NULLS LAST ordering"
             )
         recs, acc = [], 0
-        for p, n in zip(summ["p"].tolist(), summ["n"].tolist()):
-            recs.append((p, acc))
-            acc += n
+        for r in summ:
+            recs.append((r["p"], acc))
+            acc += r["n"]
         return recs
 
     def start(pid, off):
@@ -292,20 +298,20 @@ def prefix_sum(
         )
 
     def chain(summ):
-        n_null = int((summ["n"] - summ["nn"]).sum())
+        n_null = sum(r["n"] - r["nn"] for r in summ)
         if n_null:
             raise ValueError(
                 f"prefix_sum: order_col {order_col!r} has {n_null} NULL "
                 "values; the running total would be engine-dependent"
             )
-        if int(summ["wnull"].sum()):
+        if sum(r["wnull"] for r in summ):
             raise ValueError(
                 f"prefix_sum: weight_col {weight_col!r} has NULL values"
             )
         recs = [
-            (int(p), int(t), int(tn or 0), int(tp or 0))
-            for p, t, tn, tp in zip(summ["p"], summ["t"], summ["tn"], summ["tp"])
-            if t is not None
+            (r["p"], int(r["t"]), int(r["tn"] or 0), int(r["tp"] or 0))
+            for r in summ
+            if r["t"] is not None
         ]
         grand = sum(t for _, t, _, _ in recs)
         if not (-(2**63) <= grand <= 2**63 - 1):
@@ -432,7 +438,6 @@ def grouped_prefix_sum(
     single-weight call would.
     """
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -524,56 +529,53 @@ def grouped_prefix_sum(
         }
         yield pa.RecordBatch.from_pylist([row], schema=sum_arrow)
 
-    def _nse(a, b) -> bool:  # null-safe equality (None == None)
-        an, bn = a is None, b is None
-        return (an and bn) or (not an and not bn and a == b)
+    def _same_group(a, b) -> bool:  # NULL == NULL, NaN == NaN: Spark's sort
+        return (a is None) == (b is None) and (a is None or a == b or a != a and b != b)
 
     def chain(summ):
-        if int(summ["n_null_order"].sum()):
+        if sum(r["n_null_order"] for r in summ):
             raise ValueError(
                 f"grouped_prefix_sum: order_col {order_col!r} has NULL "
                 "values; the running total would be engine-dependent"
             )
-        if int(summ["n_null_w"].sum()):
+        if sum(r["n_null_w"] for r in summ):
             raise ValueError(
                 f"grouped_prefix_sum: weight_col {wcols!r} has NULL values"
             )
-        if int(summ["n_neg_w"].sum()):
+        if sum(r["n_neg_w"] for r in summ):
             raise ValueError(
                 f"grouped_prefix_sum: weight_col {wcols!r} has negative "
                 "values; use prefix_sum (ungrouped) for general-sign weights"
             )
         out = []
         carry_g, carry_t, have_carry = None, [0] * nw, False
-        for r in summ.itertuples(index=False):
-            if not r.n_rows:
+        for r in summ:
+            if not r["n_rows"]:
                 continue
-            first_g = None if pd.isna(r.first_g) else r.first_g
-            last_g = None if pd.isna(r.last_g) else r.last_g
             off = [0] * nw
-            if have_carry and _nse(first_g, carry_g):
+            if have_carry and _same_group(r["first_g"], carry_g):
                 off = list(carry_t)
-                out.append((int(r.p), off))
+                out.append((r["p"], off))
             # the next partition can only continue THIS partition's
             # last group; its accumulated total includes the inherited
             # offset exactly when first == last (a single spanning
             # group).
-            if int(r.n_groups) == 1:
-                carry_t = [o + int(t) for o, t in zip(off, r.last_t)]
+            if r["n_groups"] == 1:
+                carry_t = [o + t for o, t in zip(off, r["last_t"])]
             else:
                 # the spanning FIRST group terminates inside this
                 # partition: its final running total (off + first_t)
                 # never reaches carry_t, but the worker adds the same
                 # offset with wrapping int64 arithmetic — validate it
                 # here too.
-                for o, t in zip(off, r.first_t):
-                    if o and o + int(t) > 2**63 - 1:
+                for o, t in zip(off, r["first_t"]):
+                    if o and o + t > 2**63 - 1:
                         raise ValueError(
                             "grouped_prefix_sum overflow: a group's running "
-                            f"total reaches {o + int(t)}, outside int64"
+                            f"total reaches {o + t}, outside int64"
                         )
-                carry_t = [int(t) for t in r.last_t]
-            carry_g, have_carry = last_g, True
+                carry_t = list(r["last_t"])
+            carry_g, have_carry = r["last_g"], True
             if max(carry_t) > 2**63 - 1:
                 raise ValueError(
                     f"grouped_prefix_sum overflow: a group's running total "

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import fixed6_sql
+from .similarity import _decode_vectors, _ordered_gram, _ordered_rowfold
 
 
 def jl_signs(in_dim: int = 64, out_dim: int = 16, seed: str = "jl1") -> list[list[int]]:
@@ -163,19 +164,18 @@ def jl_project_arrow(
     sqdist_arrow precedent).
 
     BIT-PARITY BY CONSTRUCTION, including non-finite inputs: the
-    kernel accumulates ``acc_r += x_c * (±1.0)`` in input order —
-    the exact left-to-right IEEE sequence of the fold's
-    ``(0.0 + t0) + t1 …`` chain — then one ``* scale`` multiply, and
-    the fixed6 grid is applied ENGINE-SIDE (Catalyst) on the raw
-    doubles, so NaN/Inf elements propagate to NaN/Inf outputs exactly
-    as the expression twin's fold does. mapInArrow (not a pandas UDF)
-    keeps element-level validity intact: a NULL *element* NULLs the
-    row's outputs (the zip_with-pad semantics) while a NaN element
-    stays a NaN VALUE — a pandas Series conversion would conflate the
-    two. NULL vectors and vectors shorter than `in_dim` yield NULL in
-    every output column; extra dims are ignored (the slice
-    semantics). Parity pinned by
-    test_jl_project_arrow_matches_expression."""
+    kernel is :func:`similarity._ordered_gram` against the ±1.0 sign
+    matrix — ``acc_r += x_c * (±1.0)`` in input order, the exact
+    left-to-right IEEE sequence of the fold's ``(0.0 + t0) + t1 …``
+    chain — then one ``* scale`` multiply, and the fixed6 grid is
+    applied ENGINE-SIDE (Catalyst) on the raw doubles, so NaN/Inf
+    elements propagate to NaN/Inf outputs exactly as the expression
+    twin's fold does. The vector decoder reports NULL elements apart
+    from NaN: a NULL *element* NULLs the row's outputs (the zip_with-
+    pad semantics) while a NaN element stays a NaN VALUE. NULL vectors
+    and vectors shorter than `in_dim` yield NULL in every output
+    column; extra dims are ignored (the slice semantics). Parity
+    pinned by test_jl_project_arrow_matches_expression."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -183,9 +183,7 @@ def jl_project_arrow(
     from ..functions.numeric import fixed6_spark_sql
 
     scale = _jl_scale(out_dim)
-    signs = jl_signs(in_dim, out_dim, seed)
-    # (in_dim, out_dim) sign matrix: column r is output dim r
-    smat = np.array(signs, dtype=np.float64).T
+    signs = np.array(jl_signs(in_dim, out_dim, seed), dtype=np.float64)
     raw = [f"__jl_raw_{r}" for r in range(out_dim)]
     raw_schema = T.StructType(
         list(df.schema.fields)
@@ -195,36 +193,13 @@ def jl_project_arrow(
 
     def project(batches):
         for batch in batches:
-            rows = batch.column(vec_idx).to_pylist()  # None kept, NaN kept
-            n = len(rows)
-            ok_idx, mat_rows = [], []
-            for i, v in enumerate(rows):
-                if (
-                    v is not None
-                    and len(v) >= in_dim
-                    and all(x is not None for x in v[:in_dim])
-                ):
-                    ok_idx.append(i)
-                    mat_rows.append(v[:in_dim])
-            out = np.full((n, out_dim), np.nan, dtype=np.float64)
-            if ok_idx:
-                X = np.array(mat_rows, dtype=np.float64)
-                acc = np.zeros((len(ok_idx), out_dim), dtype=np.float64)
-                for c in range(in_dim):
-                    # one multiply + one add per (row, r), dims in
-                    # input order — the fold's exact IEEE sequence
-                    acc += X[:, c : c + 1] * smat[c]
-                acc *= scale
-                out[np.array(ok_idx)] = acc
-            invalid = np.ones(n, dtype=bool)
-            if ok_idx:
-                invalid[np.array(ok_idx)] = False
-            new_cols = [
-                pa.array(out[:, r], type=pa.float64(), mask=invalid)
-                for r in range(out_dim)
-            ]
+            X, ok, null_el = _decode_vectors(
+                batch.column(vec_idx), in_dim, prefix=True
+            )
+            out = np.ascontiguousarray((_ordered_gram(X, signs) * scale).T)
+            invalid = ~ok | null_el
             yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + new_cols,
+                batch.columns + [pa.array(o, mask=invalid) for o in out],
                 names=list(batch.schema.names) + raw,
             )
 
@@ -269,42 +244,31 @@ def sqdist_arrow(a: Column, b: Column, dim: int) -> Column:
     lambda expressions — `similarity.dot_arrow` is the precedent and
     the contract template).
 
-    BIT-PARITY BY CONSTRUCTION: accumulates dimension-at-a-time in
-    input order (``acc += (a_j - b_j)²``), elementwise IEEE doubles,
+    BIT-PARITY BY CONSTRUCTION: :func:`similarity._ordered_rowfold`
+    of ``(a_j - b_j)²``, elementwise IEEE doubles,
     no BLAS/pairwise summation — the exact left-to-right sequence of
     the expression fold's ``(0.0 + t0) + t1 …`` chain (0.0 + t0 == t0
     bit-for-bit except the -0.0 seam, which squared terms never
     produce). Same OOB semantics as the zip_with NULL-pad: a vector
     with FEWER than `dim` elements scores NULL, extra dims are
-    ignored (slice), NULL inputs and NULL elements score NULL (NaN →
-    NULL through Arrow — dot_arrow's documented convention; the
-    expression twin instead propagates NaN as a VALUE — a genuine
-    divergence confined to out-of-contract non-finite inputs, pinned
-    by test_sqdist_nonfinite_divergence_pinned, r13 ADVICE #1)."""
+    ignored (slice), NULL inputs and NULL elements score NULL, and a
+    NaN result is returned as NULL (dot_arrow's documented
+    convention; the expression twin instead propagates NaN as a
+    VALUE — a genuine divergence confined to out-of-contract
+    non-finite inputs, pinned by
+    test_sqdist_nonfinite_divergence_pinned, r13 ADVICE #1)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    def batch(sa, sb):
-        va, vb = sa.tolist(), sb.tolist()
-        out = np.full(len(va), np.nan, dtype=np.float64)
-        idx = [
-            i
-            for i, (x, y) in enumerate(zip(va, vb))
-            if x is not None and y is not None and len(x) >= dim and len(y) >= dim
-        ]
-        if idx:
-            A = np.array([va[i][:dim] for i in idx], dtype=np.float64)
-            B = np.array([vb[i][:dim] for i in idx], dtype=np.float64)
-            acc = np.zeros(len(idx), dtype=np.float64)
-            for j in range(dim):
-                d = A[:, j] - B[:, j]
-                acc += d * d
-            out[np.array(idx)] = acc
-        return pd.Series(out)  # NaN → NULL through Arrow
+    def batch(a, b):
+        A, oka, _ = _decode_vectors(a, dim, prefix=True)
+        B, okb, _ = _decode_vectors(b, dim, prefix=True)
+        out = _ordered_rowfold(A, B, lambda x, y: np.square(x - y))
+        out[~(oka & okb)] = np.nan
+        return pa.array(out, mask=np.isnan(out))
 
-    return pandas_udf(batch, T.DoubleType())(a, b)
+    return F.arrow_udf(batch, T.DoubleType())(a, b)
 
 
 def sqdist_sql(a: str, b: str, dim: int) -> str:

@@ -6,13 +6,19 @@ finalize_realease.py:199-218, SURVEY §2.3 J7): the panel becomes an
 arbitrary query set, Tanimoto becomes cosine, and the scale path is
 LSH bucketing instead of a cross join.
 
-Per-pair dot products are computed in DOUBLE via Catalyst
-higher-order functions (zip_with + aggregate) — deterministic
-left-to-right summation, which makes hyperplane sign buckets and
-cosine scores bit-identical to any engine that folds sequentially
-(the basis of the DuckDB oracles). The one exception is
-:func:`exact_near_dup_pairs_blocked`, which deliberately drops to a
-blocked BLAS matmul in mapInPandas for the exact all-pairs case.
+Dot products are computed in DOUBLE as ONE ordered fold: each
+partial sum adds the next dimension's term, left to right. The
+expression forms write it as Catalyst higher-order functions
+(zip_with + aggregate); the Arrow batch kernels share one vector
+path — :func:`_decode_vectors` turns an Arrow list column into a
+float64 matrix, :func:`_ordered_gram` folds it against a constant
+matrix (or a group's own rows), :func:`_ordered_rowfold` folds row
+against row, and :func:`_subspace_codes` takes the tie-to-largest
+argmax. That fold makes sign buckets, cell assignments and cosine
+scores bit-identical to any engine that folds sequentially (the
+basis of the DuckDB oracles). The exceptions are the ``blas=True``
+production twins and :func:`exact_near_dup_pairs_blocked`, which
+deliberately use a BLAS matmul.
 """
 
 from __future__ import annotations
@@ -78,10 +84,7 @@ def brute_force_topk(
     scored = v.crossJoin(F.broadcast(q)).select(
         F.col(query_id_col),
         F.col(id_col),
-        _fixed6(
-            dot_arrow(F.col("__v"), F.col("__q"))
-            / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
-        ).alias("score"),
+        pair_cosine().alias("score"),
     )
     return topk(scored, query_id_col, id_col, k)
 
@@ -119,10 +122,7 @@ def knn_classify(
             F.col(query_id_col),
             F.col(id_col),
             F.col(label_col),
-            _fixed6(
-                dot_arrow(F.col("__v"), F.col("__q"))
-                / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
-            ).alias("score"),
+            pair_cosine().alias("score"),
         )
     )
     top = topk(scored, query_id_col, id_col, k)
@@ -148,11 +148,19 @@ def knn_classify(
 
 def _safe_norm(c):
     """Zero-norm guard for cosine denominators: norm 0 → 1.0, so a
-    zero vector scores a finite dot/1 instead of a NaN — a NaN score
-    would be rewritten to NULL by topk's Arrow round-trip and
-    rank LAST while the DuckDB oracles rank NaN FIRST. Every top-k
-    oracle mirrors this with CASE WHEN nrm = 0 THEN 1.0."""
+    zero vector scores a finite dot/1 instead of dividing by zero.
+    Every top-k oracle mirrors this with CASE WHEN nrm = 0 THEN 1.0."""
     return F.when(c == 0, F.lit(1.0)).otherwise(c)
+
+
+def pair_cosine() -> Column:
+    """The fixed6 cosine of a scored pair: corpus ``__v``/``__vn`` and
+    query ``__q``/``__qn`` as :func:`with_norm` projects them, the dot
+    through :func:`dot_arrow` and both norms zero-guarded."""
+    return _fixed6(
+        dot_arrow(F.col("__v"), F.col("__q"))
+        / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
+    )
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -247,48 +255,33 @@ def signed_projection_bucket_arrow(vec: Column, planes: list[list[float]]) -> Co
     vectorized pass per ~10k-row batch instead of n_planes×dim
     Catalyst expression nodes per row.
 
-    BIT-PARITY BY CONSTRUCTION: the dots are accumulated
-    dimension-at-a-time (`acc += v[j] * p[j]` in input order) —
-    elementwise IEEE-double ops, NO BLAS matmul — so every partial
-    sum is the exact sequence Catalyst's aggregate(zip_with) and
-    DuckDB's list_dot_product produce, and every sign bit (hence
-    bucket, hence oracle row) is bit-identical. A pairwise-summing
-    dgemm could flip a sign only when |dot| ~ 1e-15, but "almost
-    never" is not a correctness contract; this costs nothing at
-    these shapes (dim elementwise (B×planes) FMAs).
+    BIT-PARITY BY CONSTRUCTION: the dots are :func:`_ordered_gram`'s
+    dimension-at-a-time fold — elementwise IEEE-double ops, NO BLAS
+    matmul — so every partial sum is the exact sequence Catalyst's
+    aggregate(zip_with) and DuckDB's list_dot_product produce, and
+    every sign bit (hence bucket, hence oracle row) is bit-identical.
+    A pairwise-summing dgemm could flip a sign only when |dot| ~
+    1e-15, but "almost never" is not a correctness contract.
 
     Rows that are NULL or whose length != dim get bucket 0 — the
     same result the expression form yields (zip_with null-pads,
-    nulling every dot, so no bit is ever set).
+    nulling every dot, so no bit is ever set). A NULL or NaN element
+    NaN-poisons every dot, so no bit is set either.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
-    n_planes, dim = P.shape
-    weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
+    weights = np.int64(1) << np.arange(P.shape[0], dtype=np.int64)
 
-    def batch(s):
-        vals = s.tolist()
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in vals),
-            dtype=bool,
-            count=len(vals),
-        )
-        zero = [0.0] * dim
-        M = np.array(
-            [v if o else zero for v, o in zip(vals, ok)], dtype=np.float64
-        )
-        acc = np.zeros((len(vals), n_planes), dtype=np.float64)
-        for j in range(dim):
-            acc += M[:, j : j + 1] * P[:, j]
-        bucket = ((acc >= 0.0).astype(np.int64) * weights[None, :]).sum(axis=1)
+    def batch(arr):
+        M, ok, _ = _decode_vectors(arr, P.shape[1])
+        bucket = ((_ordered_gram(M, P) >= 0.0) * weights).sum(axis=1)
         bucket[~ok] = 0
-        return pd.Series(bucket)
+        return pa.array(bucket)
 
-    return pandas_udf(batch, T.LongType())(vec)
+    return F.arrow_udf(batch, T.LongType())(vec)
 
 
 def dot_arrow(a: Column, b: Column) -> Column:
@@ -296,10 +289,10 @@ def dot_arrow(a: Column, b: Column) -> Column:
     hot path (millions of candidate pairs × dim elements; Catalyst
     higher-order functions evaluate interpreted, per element, per row).
 
-    BIT-PARITY BY CONSTRUCTION with :func:`dot`: accumulates
-    dimension-at-a-time in input order (`acc += a[j]*b[j]`),
-    elementwise IEEE doubles, no BLAS — every partial sum is the
-    exact left-to-right sequence. CAUTION (measured r7): DuckDB
+    BIT-PARITY BY CONSTRUCTION with :func:`dot`: the
+    :func:`_ordered_rowfold` of ``a[j]*b[j]`` — elementwise IEEE
+    doubles, no BLAS — so every partial sum is the exact
+    left-to-right sequence. CAUTION (measured r7): DuckDB
     1.0's list_dot_product is NOT guaranteed to match this fold —
     its kernel diverged by one ulp on a real sf0.1 input — which is
     why every dot-derived value that reaches an oracle hash MUST go
@@ -311,36 +304,29 @@ def dot_arrow(a: Column, b: Column) -> Column:
     consistent length computes exactly.
 
     DELIBERATE divergence from the expression form for non-finite
-    inputs: a NaN dot becomes NULL through Arrow, so a NaN-poisoned
-    vector sorts LAST in top-k ranking — the expression form's NaN
+    inputs: a NaN dot (from a NaN or NULL element) is returned as
+    NULL, so a NaN-poisoned vector sorts LAST in top-k ranking — the
+    expression form's NaN
     sorts FIRST under ORDER BY DESC (Spark treats NaN as largest),
     which ranked garbage vectors as best neighbors. Pinned by
     test_nan_vector_ranks_last; irrelevant to the oracles (finite
     test data).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    def batch(sa, sb):
-        va, vb = sa.tolist(), sb.tolist()
-        n = len(va)
-        out = np.full(n, np.nan, dtype=np.float64)
-        by_len: dict[int, list[int]] = {}
-        for i, (x, y) in enumerate(zip(va, vb)):
-            if x is not None and y is not None and len(x) == len(y):
-                by_len.setdefault(len(x), []).append(i)
-        for length, idx in by_len.items():
-            A = np.array([va[i] for i in idx], dtype=np.float64)
-            B = np.array([vb[i] for i in idx], dtype=np.float64)
-            acc = np.zeros(len(idx), dtype=np.float64)
-            for j in range(length):
-                acc += A[:, j] * B[:, j]
-            out[np.array(idx)] = acc
-        return pd.Series(out)  # NaN → NULL through Arrow
+    def batch(a, b):
+        la, lb = _lengths(a), _lengths(b)
+        out = np.full(len(a), np.nan)
+        for width in np.unique(la[(la == lb) & (la >= 0)]):
+            A, oka, _ = _decode_vectors(a, width)
+            B, okb, _ = _decode_vectors(b, width)
+            sel = oka & okb
+            out[sel] = _ordered_rowfold(A[sel], B[sel], np.multiply)
+        return pa.array(out, mask=np.isnan(out))
 
-    return pandas_udf(batch, T.DoubleType())(a, b)
+    return F.arrow_udf(batch, T.DoubleType())(a, b)
 
 
 def lsh_bucketed_topk(
@@ -369,10 +355,7 @@ def lsh_bucketed_topk(
     scored = vb.join(F.broadcast(qb), "bucket").select(
         F.col(query_id_col),
         F.col(id_col),
-        _fixed6(
-            dot_arrow(F.col("__v"), F.col("__q"))
-            / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
-        ).alias("score"),
+        pair_cosine().alias("score"),
     )
     return topk(scored, query_id_col, id_col, k)
 
@@ -390,7 +373,7 @@ def exact_near_dup_pairs_blocked(
     Vectors hash into B = ceil(n / rows_per_block) blocks; each vector
     is replicated to the B block-pair groups it participates in, and
     each (block_i ≤ block_j) group computes its similarity tile in
-    BLAS inside one applyInPandas task. Every unordered id pair lands
+    BLAS inside one applyInArrow task. Every unordered id pair lands
     in exactly one group, so output pairs (id_a < id_b) are emitted
     once. Task memory is bounded by two blocks plus a chunked tile
     (tile rows are processed ≤1024 at a time), independent of n.
@@ -431,21 +414,28 @@ def exact_near_dup_pairs_blocked(
         ]
     )
 
-    def tile(key, pdf):
-        import pandas as pd
+    def tile(key, table):
+        import pyarrow as pa
 
-        pa_blk, pb_blk = key
+        pa_blk, pb_blk = (k.as_py() for k in key)
+        vec = table.column(vec_col).combine_chunks()
+        lens = _lengths(vec)
+        if lens.min() < 0 or lens.min() != lens.max():
+            raise ValueError(
+                "exact_near_dup_pairs_blocked: vectors must be non-NULL "
+                "and share one length"
+            )
+        mat, _, _ = _decode_vectors(vec, int(lens[0]))
+        norms = np.linalg.norm(mat, axis=1)
+        norms[norms == 0] = 1.0
+        mat /= norms[:, None]
+        ids = table.column(id_col).to_numpy().astype(np.int64)
+        blk = table.column("__blk").to_numpy()
+        out_a, out_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        out_s = [np.empty(0)]
 
-        def _normed(sub):
-            ids = sub[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(sub[vec_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            return ids, mat / norms[:, None]
-
-        out_a, out_b, out_s = [], [], []
-
-        def _emit(ids_a, mat_a, ids_b, mat_b, self_tile):
+        def _emit(ra, rb, self_tile):
+            ids_a, mat_a, ids_b, mat_b = ids[ra], mat[ra], ids[rb], mat[rb]
             for lo in range(0, len(ids_a), 1024):
                 hi = lo + 1024
                 sims = mat_a[lo:hi] @ mat_b.T
@@ -461,29 +451,17 @@ def exact_near_dup_pairs_blocked(
                 out_s.append(_fixed6_np(sims[ai, bj]))
 
         if pa_blk == pb_blk:
-            ids, mat = _normed(pdf)
-            _emit(ids, mat, ids, mat, self_tile=True)
+            every = np.arange(len(ids))
+            _emit(every, every, self_tile=True)
         else:
-            left = pdf[pdf["__blk"] == pa_blk]
-            right = pdf[pdf["__blk"] == pb_blk]
-            if len(left) and len(right):
-                ids_a, mat_a = _normed(left)
-                ids_b, mat_b = _normed(right)
-                _emit(ids_a, mat_a, ids_b, mat_b, self_tile=False)
-
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
-                {"id_a": np.int64, "id_b": np.int64, "cos_sim": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_sim": np.concatenate(out_s),
-            }
+            left, right = np.flatnonzero(blk == pa_blk), np.flatnonzero(blk == pb_blk)
+            _emit(left, right, self_tile=False)
+        return pa.table(
+            [np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_s)],
+            names=out_schema.names,
         )
 
-    return replicated.groupBy("__pa", "__pb").applyInPandas(tile, out_schema)
+    return replicated.groupBy("__pa", "__pb").applyInArrow(tile, out_schema)
 
 
 def topk(
@@ -502,7 +480,7 @@ def topk(
     direction, id ASC NULLS LAST):
 
     1. :func:`_prune_topk` keeps each input partition's k best rows
-       per group inside one mapInPandas pass (no shuffle), so
+       per group inside one mapInArrow pass (no shuffle), so
     2. the exact ``row_number`` window only ranks the ≤ k·P
        survivors.
 
@@ -519,7 +497,8 @@ def topk(
     default for ASC, the oracles' convention): a NaN-poisoned vector
     (NULL score via dot_arrow) still appears at the tail when fewer
     than k real candidates exist, it just never outranks one (pinned
-    by test_nan_vector_ranks_last)."""
+    by test_nan_vector_ranks_last). A NaN score ranks where Spark's
+    order puts it: above every number (NULL stays last)."""
     pruned = _prune_topk(scored, group_col, id_col, k, score_col, ascending)
     score = F.asc_nulls_last(score_col) if ascending else F.desc_nulls_last(score_col)
     w = Window.partitionBy(group_col).orderBy(score, F.asc_nulls_last(id_col))
@@ -537,42 +516,54 @@ def _prune_topk(
     ascending: bool,
 ) -> DataFrame:
     """Phase 1 of :func:`topk`: each partition's k best rows per group
-    (bounded state: k × n_groups rows per task, values pass through
-    Arrow bit-unchanged).
+    (bounded state: k × n_groups rows per task), taken with
+    ``Table.take`` so every column passes through bit-unchanged (NaN
+    stays NaN, NULL stays NULL).
 
-    Two Arrow caveats the callers must respect: a Catalyst NaN score
-    is rewritten to NULL on the pandas round-trip (so upstream
-    scoring must never emit NaN — zero norms are guarded to 1.0 via
-    `_safe_norm` in every caller), and NULL group keys survive only
-    because groupby runs with dropna=False."""
-    import pandas as pd
+    The prune order is the window's: group, then score NULLS LAST with
+    NaN above every number (Spark's order; Arrow's own sort would put
+    NaN last in both directions, so NaN is a key of its own), then id
+    ASC NULLS LAST. Groups are dictionary codes with NULL as a code of
+    its own; a group the codes split (NaN or signed-zero keys) only
+    keeps more survivors, which the exact window then ranks."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    sort_asc = [ascending, True]
+    order = "ascending" if ascending else "descending"
+
+    def keep_k(t: pa.Table) -> pa.Table:
+        g = pc.dictionary_encode(
+            t.column(group_col).combine_chunks(), null_encoding="encode"
+        ).indices
+        s = t.column(score_col)
+        null = s.is_null()
+        # a score type without NaN reuses the NULL flag: constant
+        # among the non-NULL rows the "null" key already put first
+        nan = pc.fill_null(pc.is_nan(s), False) if pa.types.is_floating(s.type) else null
+        keys = pa.table(
+            {"g": g, "null": null, "nan": nan,
+             "v": pc.if_else(nan, pa.scalar(None, s.type), s), "id": t.column(id_col)}
+        )
+        sort = [("g", "ascending"), ("null", "ascending"), ("nan", order)]
+        sort += [("v", order), ("id", "ascending")]
+        idx = pc.sort_indices(keys, sort, null_placement="at_end")
+        gs = g.take(idx).to_numpy()
+        pos = np.arange(len(gs))
+        first = np.where(np.r_[True, gs[1:] != gs[:-1]], pos, 0)
+        rank = pos - np.maximum.accumulate(first)  # 0-based within group
+        return t.take(idx.to_numpy()[rank < k])
 
     def prune(batches):
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for gid, g in pdf.groupby(group_col, sort=False, dropna=False):
-                # NULL group keys surface as NaN floats here, and
-                # hash(nan) is identity-based on Python 3.10+ — NaN
-                # keys from different Arrow batches would open separate
-                # dict entries and break the k×n_groups state bound.
-                # Normalize the NULL group to one sentinel key.
-                key = None if pd.isna(gid) else gid
-                cur = best.get(key)
-                cat = g if cur is None else pd.concat((cur, g))
-                best[key] = cat.sort_values(
-                    [score_col, id_col],
-                    ascending=sort_asc,
-                    kind="mergesort",
-                    na_position="last",
-                ).head(k)
-        if best:
-            yield pd.concat(best.values())
+        best = None
+        for batch in batches:
+            if batch.num_rows:
+                t = pa.Table.from_batches([batch])
+                best = keep_k(t if best is None else pa.concat_tables([best, t]))
+        if best is not None:
+            yield from best.to_batches()
 
-    return scored.mapInPandas(prune, scored.schema)
+    return scored.mapInArrow(prune, scored.schema)
 
 
 def ivf_topk(
@@ -615,66 +606,87 @@ def ivf_topk(
         model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(train)
         centroids = [list(map(float, c)) for c in model.clusterCenters()]
 
-    def nearest_cells(vec_name: str, n: int) -> Column:
-        """The n cell-ids by smallest squared distance, via the
-        dot(v,c) − ‖c‖²/2 identity (one dot per centroid) — as ONE
-        ``F.expr`` parse instead of n_cells Column-API fold builds
-        (~1,100 py4j round trips per BUILD; identical Catalyst tree —
-        the r13 JL-projection lesson, guide §7.3)."""
-        from aurora_mito_etl_spark.operators.quantize import (
-            _dot_fold_sql,
-            _qvec_sql,
-        )
 
-        structs = ", ".join(
-            f"named_struct('s', {_dot_fold_sql(_qvec_sql(vec_name), c)}"
-            f" - {float(sum(x * x for x in c) / 2.0)!r}D, 'cell', {i})"
-            for i, c in enumerate(centroids)
-        )
-        return F.expr(
-            f"transform(slice(sort_array(array({structs}), false), 1, "
-            f"{n}), t -> t.cell)"
-        )
-
-    def safe_norm(c: Column) -> Column:
-        return F.when(c == 0, F.lit(1.0)).otherwise(c)
+    from aurora_mito_etl_spark.operators.quantize import nearest_cells
 
     vb = with_norm(vectors, vec_col, "__v", "__vn").withColumn(
-        "cell", nearest_cells(vec_col, 1)[0]
+        "cell", nearest_cells(vec_col, centroids, 1)[0]
     )
     qb = with_norm(queries, query_vec_col, "__q", "__qn").withColumn(
-        "cell", F.explode(nearest_cells(query_vec_col, n_probe))
+        "cell", F.explode(nearest_cells(query_vec_col, centroids, n_probe))
     )
     scored = vb.join(F.broadcast(qb), "cell").select(
         F.col(query_id_col),
         F.col(id_col),
-        _fixed6(
-            dot_arrow(F.col("__v"), F.col("__q"))
-            / (safe_norm(F.col("__vn")) * safe_norm(F.col("__qn")))
-        ).alias("score"),
+        pair_cosine().alias("score"),
     )
     return topk(scored, query_id_col, id_col, k)
+
+
+def _lengths(arr):
+    """Per-row length of an Arrow list array, -1 for a NULL row."""
+    import numpy as np
+
+    return np.where(
+        arr.is_valid().to_numpy(zero_copy_only=False),
+        np.diff(arr.offsets.to_numpy()),
+        -1,
+    )
+
+
+def _decode_vectors(arr, dim: int, prefix: bool = False):
+    """The one decoder of the Arrow vector path: an Arrow
+    ``list<float|double>`` array → ``(mat, ok, null_el)``.
+
+    ``mat`` is ``(len(arr), dim)`` float64 holding each row's first
+    ``min(length, dim)`` elements; every other cell — a NULL row, the
+    tail of a short row, a NULL element — is NaN, so any fold over an
+    invalid row is NaN-poisoned by construction. ``ok`` is the length
+    rule: non-NULL with exactly ``dim`` elements, or with ``prefix``
+    at least ``dim`` (extra dims ignored — the ``slice`` semantics).
+    ``null_el`` flags the rows with a NULL element among those first
+    ``dim`` — reported apart from NaN elements, which stay NaN values.
+    One gather over the offsets and the flat child; no per-row Python."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lens = _lengths(arr)
+    flat = arr.values
+    vals = np.append(flat.cast(pa.float64()).to_numpy(zero_copy_only=False), np.nan)
+    nulls = np.append(flat.is_null().to_numpy(zero_copy_only=False), False)
+    j = np.arange(dim)
+    src = np.where(
+        j < lens[:, None], arr.offsets.to_numpy()[:-1, None] + j, len(vals) - 1
+    )
+    ok = lens >= dim if prefix else lens == dim
+    return vals[src], ok, nulls[src].any(axis=1)
 
 
 def _ordered_gram(A, B):
     """(rows(A) × rows(B)) gram matrix whose every element is the exact
     left-to-right dimension-order IEEE fold (the oracle bit-parity
-    contract of aggregate(zip_with) / list_dot_product).
+    contract of aggregate(zip_with) / list_dot_product) — the one fold
+    of the Arrow kernels against a constant matrix (planes, centroids,
+    codebooks, JL signs) or a group's own rows.
 
     Cache-blocked: the naive `G += A[:,j:j+1] * B[:,j]` re-streams the
     whole gram through memory once per dimension (dim× the bandwidth);
-    accumulating into a 256×256 block that stays in L2 across the
-    dimension loop cuts that to ~one pass. Per-ELEMENT summation order
-    is unchanged — only the schedule across independent elements moves,
-    which IEEE addition doesn't observe — so results are bit-identical
-    to the naive loop (pinned by test_ordered_gram_bit_parity).
+    accumulating into a block of ~64k doubles (256×256, taller when B
+    is thin) that stays in L2 across the dimension loop cuts that to
+    ~one pass. Per-ELEMENT summation order is unchanged — only the
+    schedule across independent elements moves, which IEEE addition
+    doesn't observe — so results are bit-identical to the naive loop
+    (pinned by test_ordered_gram_bit_parity).
     """
     import numpy as np
 
     n, dim = A.shape
     m = B.shape[0]
     G = np.empty((n, m), dtype=np.float64)
-    RB = CB = 256
+    CB = 256
+    RB = max(CB, (1 << 16) // max(min(m, CB), 1))
     for i0 in range(0, n, RB):
         i1 = min(i0 + RB, n)
         Ai = A[i0:i1]
@@ -688,6 +700,53 @@ def _ordered_gram(A, B):
     return G
 
 
+def _ordered_rowfold(A, B, term):
+    """acc[i] = term(A[i,0], B[i,0]) + term(A[i,1], B[i,1]) + …, the
+    same left-to-right fold row against row (``np.multiply`` gives the
+    dot, a squared difference the squared distance)."""
+    import numpy as np
+
+    acc = np.zeros(len(A), dtype=np.float64)
+    for j in range(A.shape[1]):
+        acc += term(A[:, j], B[:, j])
+    return acc
+
+
+def _half_norms(rows):
+    """‖c‖²/2 per row as a Python-float left-to-right sum — the exact
+    literal the expression paths embed (numpy's pairwise .sum may
+    differ in the last ulp)."""
+    import numpy as np
+
+    return np.array([sum(x * x for x in c) / 2.0 for c in rows], dtype=np.float64)
+
+
+def _subspace_codes(mat, books, half_norms, subdim):
+    """One int32 code array per sub-codebook: argmax(dot − ‖c‖²/2)
+    with ties → larger cell, dots as :func:`_ordered_gram`, half-norms
+    from :func:`_half_norms`. A NaN score (a NaN-poisoned subvector)
+    counts as the maximum, so an all-NaN row picks the largest cell —
+    the expression paths' rule for an all-NULL score.
+
+    The one argmax of the Arrow kernels: the PQ and IVF-PQ encoders
+    and, with a single full-width "book", the IVF cell assignment —
+    the bit-parity contract every oracle replay depends on lives here
+    or nowhere."""
+    import numpy as np
+
+    out = []
+    for j, book in enumerate(books):
+        sv = mat[:, j * subdim : (j + 1) * subdim]
+        score = _ordered_gram(sv, book) - half_norms[j][None, :]
+        # the FIRST max of the reversed columns is the LAST original
+        out.append(
+            ((score.shape[1] - 1) - np.argmax(score[:, ::-1], axis=1)).astype(
+                np.int32
+            )
+        )
+    return out
+
+
 def _same_bucket_pairs(
     both: DataFrame, id_type, margin: float, blas: bool = False
 ) -> DataFrame:
@@ -696,7 +755,7 @@ def _same_bucket_pairs(
     each bucket group every (side=0, side=1) pair with id_a < id_b
     and raw cosine >= `margin` is emitted as (id_a, id_b, __raw).
 
-    Runs INSIDE each bucket group (applyInPandas), not as a join that
+    Runs INSIDE each bucket group (applyInArrow), not as a join that
     materializes one Spark row — carrying two dim-wide arrays — per
     candidate pair: Arrow traffic is O(n · probes) vectors while pair
     enumeration and the gram products stay in numpy.
@@ -720,7 +779,7 @@ def _same_bucket_pairs(
     keeps a safety gap.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -737,36 +796,35 @@ def _same_bucket_pairs(
     # within executor memory — the same knob that bounds candidates.
     chunk = 4096
 
-    def verify(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        asel = pdf[pdf["side"] == 0]
-        bsel = pdf[pdf["side"] == 1]
-        if asel.empty or bsel.empty:
-            return pd.DataFrame(
-                {"id_a": asel["id"][:0], "id_b": bsel["id"][:0],
-                 "__raw": np.array([], dtype=np.float64)}
-            )
-        B = np.array(bsel["__v"].tolist(), dtype=np.float64)
-        ida = asel["id"].to_numpy()
-        idb = bsel["id"].to_numpy()
-        na = asel["__vn"].to_numpy(dtype=np.float64)
-        nb = bsel["__vn"].to_numpy(dtype=np.float64)
-        parts = []
-        for lo in range(0, len(ida), chunk):
-            hi = min(lo + chunk, len(ida))
-            A = np.array(asel["__v"].iloc[lo:hi].tolist(), dtype=np.float64)
+    def verify(table: pa.Table) -> pa.Table:
+        # the caller keeps only size == dim rows, so every row of the
+        # group has the group's widest length
+        vec = table.column("__v").combine_chunks()
+        M, _, _ = _decode_vectors(vec, int(_lengths(vec).max()))
+        ids = table.column("id")
+        idn = ids.to_numpy()
+        nrm = table.column("__vn").to_numpy()
+        side = table.column("side").to_numpy()
+        ra, rb = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
+        B = M[rb]
+        take_a, take_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        raw = [np.empty(0)]
+        for lo in range(0, len(ra), chunk):
+            rows = ra[lo : lo + chunk]
+            A = M[rows]
             G = (A @ B.T) if blas else _ordered_gram(A, B)
-            cos = G / (na[lo:hi, None] * nb[None, :])
-            ri, ci = np.nonzero(
-                (ida[lo:hi, None] < idb[None, :]) & (cos >= margin)
-            )
-            parts.append(
-                pd.DataFrame(
-                    {"id_a": ida[lo:hi][ri], "id_b": idb[ci], "__raw": cos[ri, ci]}
-                )
-            )
-        return pd.concat(parts, ignore_index=True)
+            cos = G / (nrm[rows, None] * nrm[None, rb])
+            ri, ci = np.nonzero((idn[rows, None] < idn[None, rb]) & (cos >= margin))
+            take_a.append(rows[ri])
+            take_b.append(rb[ci])
+            raw.append(cos[ri, ci])
+        return pa.table(
+            [ids.take(np.concatenate(take_a)), ids.take(np.concatenate(take_b)),
+             np.concatenate(raw)],
+            names=out_schema.names,
+        )
 
-    return both.groupBy("bucket").applyInPandas(verify, out_schema)
+    return both.groupBy("bucket").applyInArrow(verify, out_schema)
 
 
 def embedding_near_dup_pairs(
@@ -817,7 +875,7 @@ def embedding_near_dup_pairs(
         .filter(F.size("__v") == dim)
     )
     # Candidate generation + verify happen INSIDE each bucket group
-    # (applyInPandas), not as a join that materializes one Spark row —
+    # (applyInArrow), not as a join that materializes one Spark row —
     # carrying two dim-wide arrays — per candidate pair. Arrow traffic
     # is O(n · probes) vectors, while pair enumeration and the gram
     # products stay in numpy. At a loose threshold (near-all-pairs
@@ -879,47 +937,28 @@ def nearest_cell_arrow(vec: Column, centroids: list[list[float]]) -> Column:
     oracles' `ORDER BY score DESC, cell DESC` implement.
 
     Bit-parity by construction (same contract as
-    :func:`signed_projection_bucket_arrow`): dots accumulate
-    dimension-at-a-time in input order — elementwise IEEE doubles, no
-    BLAS — and the half-norm constants are the identical Python
-    floats both engines embed, so every score and therefore every
-    assignment matches the oracle exactly. NULL / wrong-dim rows get
-    cell -1 (callers drop or route them explicitly; a silent bucket-0
-    would quietly pollute a real cell).
+    :func:`signed_projection_bucket_arrow`): the score and its argmax
+    are :func:`_subspace_codes` with one full-width book — the
+    ordered fold, no BLAS — and the half-norm constants are the
+    identical Python floats both engines embed, so every score and
+    therefore every assignment matches the oracle exactly. NULL /
+    wrong-dim rows get cell -1 (callers drop or route them
+    explicitly; a silent bucket-0 would quietly pollute a real cell).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
-    n_cells, dim = C.shape
-    hn = np.array(
-        [sum(x * x for x in c) / 2.0 for c in centroids], dtype=np.float64
-    )
+    hn = _half_norms(centroids)
 
-    def batch(s):
-        vals = s.tolist()
-        ok = np.fromiter(
-            (v is not None and len(v) == dim for v in vals),
-            dtype=bool,
-            count=len(vals),
-        )
-        zero = [0.0] * dim
-        M = np.array(
-            [v if o else zero for v, o in zip(vals, ok)], dtype=np.float64
-        )
-        acc = np.zeros((len(vals), n_cells), dtype=np.float64)
-        for j in range(dim):
-            acc += M[:, j : j + 1] * C[:, j]
-        acc -= hn[None, :]
-        # ties → largest cell id: argmax over reversed columns picks
-        # the FIRST max there, i.e. the LAST (largest cell) original.
-        cell = n_cells - 1 - np.argmax(acc[:, ::-1], axis=1)
+    def batch(arr):
+        M, ok, _ = _decode_vectors(arr, C.shape[1])
+        cell = _subspace_codes(M, [C], [hn], C.shape[1])[0]
         cell[~ok] = -1
-        return pd.Series(cell)
+        return pa.array(cell)
 
-    return pandas_udf(batch, T.IntegerType())(vec)
+    return F.arrow_udf(batch, T.IntegerType())(vec)
 
 
 def semantic_dedup(
@@ -946,7 +985,7 @@ def semantic_dedup(
 
     Scale shape — SINGLE-SHUFFLE: assignment is one Arrow pass (no
     shuffle); each vector then shuffles ONCE on its cell id, and one
-    `applyInPandas` pass per cell emits the roster row directly with
+    `applyInArrow` pass per cell emits the roster row directly with
     the max prior-id cosine attached. The keep/drop decision itself
     stays in Catalyst (``fixed6(max_prior) >= threshold`` — max
     commutes with the monotonic fixed6, so the verdict is bit-identical
@@ -965,7 +1004,7 @@ def semantic_dedup(
     production path; see :func:`_same_bucket_pairs`).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     if centroids is None:
@@ -992,11 +1031,10 @@ def semantic_dedup(
     )
     chunk = 4096
 
-    def roster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf["id"].to_numpy()
-        cells = pdf["bucket"].to_numpy()
-        B = np.array(pdf["__v"].tolist(), dtype=np.float64)
-        nb = pdf["__vn"].to_numpy(dtype=np.float64)
+    def roster(table: pa.Table) -> pa.Table:
+        ids = table.column("id").to_numpy()
+        B, _, _ = _decode_vectors(table.column("__v"), dim)
+        nb = table.column("__vn").to_numpy()
         best = np.full(len(ids), -np.inf, dtype=np.float64)
         with np.errstate(divide="ignore", invalid="ignore"):
             for lo in range(0, len(ids), chunk):
@@ -1009,15 +1047,13 @@ def semantic_dedup(
                 ok = (ids[None, :] < ids[lo:hi, None]) & (cos >= margin)
                 cos[~ok] = -np.inf
                 best[lo:hi] = cos.max(axis=1, initial=-np.inf)
-        return pd.DataFrame(
-            {
-                "id": ids,
-                "cell": cells,
-                "__best": np.where(np.isfinite(best), best, np.nan),
-            }
+        return pa.table(
+            [table.column("id"), table.column("bucket"),
+             pa.array(best, mask=~np.isfinite(best))],
+            names=out_schema.names,
         )
 
-    out = vb.groupBy("bucket").applyInPandas(roster, out_schema)
+    out = vb.groupBy("bucket").applyInArrow(roster, out_schema)
     return out.select(
         F.col("id").alias(id_col),
         "cell",
@@ -1345,10 +1381,7 @@ def hard_negative_topk(
             F.col(query_label_col),
             F.col(id_col),
             F.col(label_col).alias("neg_label"),
-            _fixed6(
-                dot_arrow(F.col("__v"), F.col("__q"))
-                / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
-            ).alias("score"),
+            pair_cosine().alias("score"),
         )
     )
     return topk(scored, query_id_col, id_col, k).select(
@@ -1395,10 +1428,7 @@ def hard_positive_topk(
             F.col(query_label_col),
             F.col(id_col),
             F.col(label_col).alias("pos_label"),
-            _fixed6(
-                dot_arrow(F.col("__v"), F.col("__q"))
-                / (_safe_norm(F.col("__vn")) * _safe_norm(F.col("__qn")))
-            ).alias("score"),
+            pair_cosine().alias("score"),
         )
     )
     return topk(scored, query_id_col, id_col, k, ascending=True).select(

@@ -8807,10 +8807,7 @@ def emb_benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sim.with_norm(probes, "probe_vec", "__q", "__qn")
     scored = v.crossJoin(F.broadcast(q)).select(
         "vec_id",
-        fixed6(
-            sim.dot_arrow(F.col("__v"), F.col("__q"))
-            / (sim._safe_norm(F.col("__vn")) * sim._safe_norm(F.col("__qn")))
-        ).alias("score"),
+        sim.pair_cosine().alias("score"),
     )
     mx = F.max("score")
     return scored.groupBy("vec_id").agg(

@@ -230,6 +230,24 @@ def test_amidine_tautomer_unification_regression():
     assert has_substructure(a, a) and has_substructure(b, b)
 
 
+def test_tautomer_shift_refuses_saturated_acceptor_regression():
+    """Pinned hypothesis falsifier: in CC(C)(N(C=N)(C)C)C the amidine
+    carbon's single-bonded N already has three neighbours, so moving
+    the double bond onto it would write a five-bond N. The shift is
+    refused (the acceptor twin of the donor guard): the molecule is
+    its own only tautomer variant and canonicalization is stable."""
+    from aurora_mito_etl_spark.operators.minichem import tautomer_variants
+
+    smi = "CC(C)(N(C=N)(C)C)C"
+    mol = parse_smiles(smi)
+    assert len(tautomer_variants(mol)) == 1
+    c = canonical_smiles(smi)
+    assert c is not None and canonical_smiles(c) == c
+    atoms = list(range(len(mol.atoms)))
+    for v in tautomer_variants(mol):
+        assert canonical_smiles(_write(v, atoms, canonical_ranks(v))) == c
+
+
 def test_aromatize_unifies_kekule_and_aromatic_forms():
     pairs = [
         ("c1ccccc1", "C1=CC=CC=C1"),

@@ -151,11 +151,11 @@ def test_dsir_models_broadcast(spark):
 
 def test_exact_near_dup_is_distributed(spark):
     # the block-pair rewrite must keep the whole computation on
-    # executors: tiles run as grouped-map pandas (one Exchange on the
+    # executors: tiles run as grouped-map Arrow (one Exchange on the
     # block-pair key), with no broadcast of vector data and no
     # cartesian anywhere
     plan = plan_of(QUERIES["emb_near_dup_exact"](spark, SF))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastExchange" not in plan
 
@@ -193,10 +193,10 @@ def test_dynamic_partition_pruning(spark, tmp_path):
 
 def test_topk_tails_are_two_phase(spark):
     """Every ranking tail (similarity.topk) must
-    be two-phase: a partition-local MapInPandas top-k BELOW the exact
+    be two-phase: a partition-local MapInArrow top-k BELOW the exact
     rank Window, so no single-partition sort of the full scored table
     survives (the VERDICT r5 scale-killer). In the formatted plan the
-    Window's child chain must contain MapInPandas — i.e. the window
+    Window's child chain must contain MapInArrow — i.e. the window
     ranks only the ≤ k·P survivors."""
     for qname in (
         "emb_pq_adc_topk",
@@ -221,13 +221,13 @@ def test_topk_tails_are_two_phase(spark):
         "docs_host_distinct_kmv",
     ):
         plan = plan_of(QUERIES[qname](spark, SF))
-        assert "MapInPandas" in plan, qname
+        assert "MapInArrow" in plan, qname
         # formatted explain lists operators leaves-last in the tree
         # header; use the numbered operator list order: the
-        # MapInPandas id must be HIGHER (deeper) than the Window's
+        # MapInArrow id must be HIGHER (deeper) than the Window's
         win = plan.index("Window")
-        mip = plan.index("MapInPandas")
-        assert mip > win, f"{qname}: MapInPandas not below Window\n{plan}"
+        mip = plan.index("MapInArrow")
+        assert mip > win, f"{qname}: MapInArrow not below Window\n{plan}"
 
 
 def test_hits_chain_has_no_unpartitioned_window(spark):

@@ -125,3 +125,25 @@ def test_range_partitioning_written_only_in_skeleton():
             if isinstance(node, ast.Attribute) and node.attr == "repartitionByRange":
                 hits.append(f"{fn.name}:{node.lineno}")
     assert not hits, f"repartitionByRange outside the skeleton: {hits}"
+
+
+def test_grouped_carry_keeps_null_and_nan_groups_apart(spark):
+    """The carry sees summary rows as Arrow values, so a NULL group and
+    a NaN group are different groups: with the NULL group in the
+    partition before the NaN group, the NaN group must not inherit the
+    NULL group's total (pandas held both as NaN and gave cum 5..8)."""
+    rows = [(None, float(v), 1) for v in range(1, 5)]
+    rows += [(float("nan"), float(v), 1) for v in range(1, 5)]
+    df = spark.createDataFrame(rows, "g double, v double, c long")
+    with _conf(spark, "spark.sql.shuffle.partitions", 2):
+        got = grouped_prefix_sum(df, "g", "v", "c").collect()
+    cums = {("NULL" if r["g"] is None else _canon(r["g"]), r["v"]): r["cum"] for r in got}
+    assert cums == {
+        (g, float(v)): v for g in ("NULL", "NaN") for v in range(1, 5)
+    }
+
+
+def test_carry_imports_no_pandas():
+    """Every rownum stage, the carry included, works on Arrow."""
+    src = Path(rownum.__file__).read_text()
+    assert "import pandas" not in src and "mapInPandas(" not in src

@@ -35,8 +35,9 @@ import contextlib
 import io
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 # Queries whose builder executes side effects (materialize + read-back
@@ -76,6 +77,7 @@ def audit_one(plan: str) -> dict:
             for n in (
                 "ArrowEvalPython",
                 "FlatMapGroupsInPandas",
+                "FlatMapGroupsInArrow",
                 "MapInPandas",
                 "MapInArrow",
                 "FlatMapGroupsInPandasWithState",
