@@ -7,11 +7,14 @@ and against a fixed biguanide panel with Tversky(α=0.7,β=0.3)/Dice +
 tautomer-aware substructure flags (:275-451). Output columns per
 reference etl/schema/DATA_DICTIONARY.md:30-49.
 
-Spark shape: the panel is tiny (≤10² structures) → it is captured in
-the UDF closure (broadcast by task serialization), and each Arrow
-batch is scored vectorized in one pass — the crossJoin the reference
-conceptually performs never materializes (SURVEY §2.3 J7 'preferred
-scale path').
+Spark shape: both panels are tiny (≤10² structures) → they are
+captured in the closure of ONE iterator-form Arrow UDF,
+:func:`score_panels`, which prepares the backend and both reference
+fingerprint sets once per task and scores each row against both
+panels in one pass — the crossJoin the reference conceptually
+performs never materializes (SURVEY §2.3 J7 'preferred scale
+path'). Every best-of (panel max, Tversky and Dice bests) goes
+through the one tie-to-first-ref helper :func:`_best`.
 
 Chemistry itself is pluggable: the RDKit backend is imported lazily
 (not installed in CI images); the deterministic `fake_backend` keeps
@@ -23,13 +26,14 @@ tested offline.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from aurora_mito_etl_spark.operators.aggregates import threshold_label
 
@@ -238,100 +242,49 @@ def tversky_sim(
 # ---------------------------------------------------------------------------
 
 
+def _row_kernel(
+    col: Column,
+    backend_factory: BackendFactory,
+    make_row: Callable[[ChemBackend], Callable[[str | None], object]],
+    return_type: T.DataType,
+) -> Column:
+    """An iterator-form Arrow UDF over `col`: the backend, and
+    whatever `make_row` prepares from it, is built once per task;
+    each value of each batch then maps through the row function."""
+    arrow_type = to_arrow_type(return_type)
+
+    def kernel(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        row = make_row(backend_factory())
+        for arr in batches:
+            yield pa.array([row(v) for v in arr.to_pylist()], arrow_type)
+
+    return F.arrow_udf(kernel, return_type)(col)
+
+
 def canonicalize_smiles(
     df: DataFrame,
     smiles_col: str = "SMILES",
     out_col: str = "SMILES_canonical",
     backend_factory: BackendFactory = default_backend,
 ) -> DataFrame:
-    """D2 — canonical SMILES column via an Arrow pandas UDF; the
-    backend object is built once per Python worker."""
+    """D2 — canonical SMILES column; NULL for NULL, '' and
+    unparseable input."""
 
-    @F.pandas_udf(T.StringType())
-    def canon_udf(s: pd.Series) -> pd.Series:
-        be = backend_factory()
-        return s.map(lambda v: be.canonicalize(v) if v else None)
+    def make_row(be: ChemBackend):
+        return lambda v: be.canonicalize(v) if v else None
 
-    return df.withColumn(out_col, canon_udf(F.col(smiles_col)))
+    return df.withColumn(
+        out_col, _row_kernel(F.col(smiles_col), backend_factory, make_row, T.StringType())
+    )
 
 
-_SIM_PANEL_SCHEMA = T.StructType(
+# The 11 scored fields, in release order (DATA_DICTIONARY.md:36-48);
+# confidence_similarity is derived from them in Catalyst.
+_PANEL_SCHEMA = T.StructType(
     [
         T.StructField("MaxSim_all", T.DoubleType(), True),
         T.StructField("TopKMean_all", T.DoubleType(), True),
         T.StructField("BestRef_name", T.StringType(), True),
-    ]
-)
-
-
-def similarity_panel(
-    df: DataFrame,
-    panel: dict[str, str],
-    smiles_col: str = "SMILES",
-    k: int = 3,
-    backend_factory: BackendFactory = default_backend,
-) -> DataFrame:
-    """D3/J7/A6/A7/A8 — score every row vs the reference panel.
-
-    Adds MaxSim_all, TopKMean_all (mean of the top min(k, n) scores,
-    finalize_realease.py:171-175), BestRef_name, and
-    confidence_similarity. 3-dp rounding and the ≥.70/.50/.30
-    thresholds follow the reference (:178-185,199-227). NULLs for
-    unparseable/empty SMILES rows, like the reference's NaN. Score
-    ties resolve to the first panel entry in iteration order (the
-    reference's np.argmax, :210); the panel here is iterated in
-    sorted-name order.
-    """
-    panel_items = sorted(panel.items())
-
-    @F.pandas_udf(_SIM_PANEL_SCHEMA)
-    def score_udf(s: pd.Series) -> pd.DataFrame:
-        be = backend_factory()
-        panel_fp = be.fingerprint_panel or be.fingerprint
-        # The reference canonicalizes its ref dict before any scoring
-        # (finalize_realease.py:260: MCI_REFS = dict((k, canonic(v)))),
-        # so tautomer-sensitive refs fingerprint in canonical form.
-        ref_canon = [(n, be.canonicalize(smi)) for n, smi in panel_items]
-        ref_fps = [(n, panel_fp(c)) for n, c in ref_canon if c is not None]
-        ref_fps = [(n, f) for n, f in ref_fps if f is not None]
-        out = []
-        for v in s:
-            fp = panel_fp(v) if v else None
-            if fp is None or not ref_fps:
-                out.append((None, None, None))
-                continue
-            scores = [(tanimoto(fp, rf), name) for name, rf in ref_fps]
-            best_score = max(sc for sc, _ in scores)
-            best_name = next(n for sc, n in scores if sc == best_score)
-            top = sorted((sc for sc, _ in scores), reverse=True)[:k]
-            topk = sum(top) / len(top)
-            out.append((round(best_score, 3), round(topk, 3), best_name))
-        return pd.DataFrame(out, columns=["MaxSim_all", "TopKMean_all", "BestRef_name"])
-
-    scored = df.withColumn("__panel", score_udf(F.col(smiles_col)))
-    # F10 — confidence prefers TopKMean when present, else MaxSim
-    basis = F.coalesce(F.col("__panel.TopKMean_all"), F.col("__panel.MaxSim_all"))
-    return (
-        scored.select(
-            "*",
-            F.col("__panel.MaxSim_all").alias("MaxSim_all"),
-            F.col("__panel.TopKMean_all").alias("TopKMean_all"),
-            F.col("__panel.BestRef_name").alias("BestRef_name"),
-        )
-        .withColumn(
-            "confidence_similarity",
-            F.when(basis.isNull(), None).otherwise(
-                threshold_label(
-                    basis, [(0.70, "high"), (0.50, "medium"), (0.30, "low")], "very-low"
-                )
-            ),
-        )
-        .drop("__panel")
-    )
-
-
-_BIGUANIDE_SCHEMA = T.StructType(
-    [
         T.StructField("has_biguanide_core", T.BooleanType(), False),
         T.StructField("has_biguanide_motif", T.BooleanType(), False),
         T.StructField("sim_biguanide_tversky", T.DoubleType(), True),
@@ -350,66 +303,102 @@ CORE_KEY = "biguanide"
 MOTIF_KEY = "biguanide_motif"
 
 
-def biguanide_panel(
+def _best(scores: list[tuple[str, float]]) -> tuple[float, str]:
+    """(best score, its ref) over (ref, score) pairs in ref order.
+    Ties go to the first ref, like the reference's np.argmax (:210)
+    and max(vals, key=vals.get) (:413) over its dicts."""
+    name, best = scores[0]
+    for n, sc in scores[1:]:
+        if sc > best:
+            name, best = n, sc
+    return best, name
+
+
+def score_panels(
     df: DataFrame,
-    refs: dict[str, str],
+    panel: dict[str, str],
+    biguanide_refs: dict[str, str],
     smiles_col: str = "SMILES",
+    k: int = 3,
     alpha: float = 0.7,
     beta: float = 0.3,
     backend_factory: BackendFactory = default_backend,
 ) -> DataFrame:
-    """D4/J8 — the 8-column biguanide-likeness block
-    (DATA_DICTIONARY.md:40-48): substructure flags vs core/motif,
-    Tversky/Dice vs the 'biguanide' ref, and best-of-panel scores
-    with their ref names."""
-    ref_items = sorted(refs.items())
-    core_smiles = refs.get(CORE_KEY)
-    motif_smiles = refs.get(MOTIF_KEY)
+    """D3/D4/J7/J8/A6-A8 — score every row against both panels in
+    one Arrow pass.
 
-    @F.pandas_udf(_BIGUANIDE_SCHEMA)
-    def score_udf(s: pd.Series) -> pd.DataFrame:
-        be = backend_factory()
-        # Canonicalize refs before fingerprinting, exactly as the
-        # reference does up front (finalize_realease.py:260: MCI_REFS
-        # = dict((k, canonic(v)))) — for tautomer-sensitive biguanides
-        # the canonical-tautomer form changes the fingerprint, hence
-        # every Tversky/Dice value downstream.
-        ref_canon = [(n, be.canonicalize(smi)) for n, smi in ref_items]
-        ref_fps = [
-            (n, be.fingerprint(c)) for n, c in ref_canon if c is not None
-        ]
-        ref_fps = [(n, f) for n, f in ref_fps if f is not None]
-        core_c = be.canonicalize(core_smiles) if core_smiles else None
-        motif_c = be.canonicalize(motif_smiles) if motif_smiles else None
-        big_fp = be.fingerprint(core_c) if core_c else None
-        out = []
-        for v in s:
-            fp = be.fingerprint(v) if v else None
+    Known-inhibitor panel (bit fingerprint, Tanimoto): MaxSim_all,
+    TopKMean_all (mean of the top min(k, n) scores,
+    finalize_realease.py:171-175), BestRef_name and
+    confidence_similarity (≥.70/.50/.30, :178-185,199-227).
+    Biguanide block (count fingerprint, DATA_DICTIONARY.md:40-48):
+    substructure flags vs the core/motif refs, Tversky(α, β)/Dice vs
+    the 'biguanide' ref, and best-of-panel scores with their ref
+    names (:275-451). Scores are rounded to 3 dp; ties resolve to the
+    first ref in sorted-name order. A NULL, empty or unparseable
+    SMILES gets NULL for every value and False for both flags, like
+    the reference's NaN.
+
+    Both ref sets are canonicalized before fingerprinting, as the
+    reference does up front (:260, MCI_REFS = dict((k, canonic(v)))):
+    for tautomer-sensitive refs the canonical form changes every
+    score downstream. That happens once per task, not per batch.
+    """
+    panel_items = sorted(panel.items())
+    big_items = sorted(biguanide_refs.items())
+
+    def make_row(be: ChemBackend):
+        panel_fp = be.fingerprint_panel or be.fingerprint
+
+        def ref_fps(items, fp):
+            canon = {n: be.canonicalize(s) for n, s in items}
+            fps = [(n, fp(c)) for n, c in canon.items() if c is not None]
+            return canon, [(n, f) for n, f in fps if f is not None]
+
+        _, panel_refs = ref_fps(panel_items, panel_fp)
+        big_canon, big_refs = ref_fps(big_items, be.fingerprint)
+        core_c, motif_c = big_canon.get(CORE_KEY), big_canon.get(MOTIF_KEY)
+        core_fp = dict(big_refs).get(CORE_KEY)
+
+        def row(v):
+            pfp = panel_fp(v) if v else None
+            fp = pfp if be.fingerprint_panel is None else (be.fingerprint(v) if v else None)
+            sim = (None, None, None)
+            if pfp is not None and panel_refs:
+                scores = [(n, tanimoto(pfp, rf)) for n, rf in panel_refs]
+                best, name = _best(scores)
+                top = sorted((sc for _, sc in scores), reverse=True)[:k]
+                sim = (round(best, 3), round(sum(top) / len(top), 3), name)
             if fp is None:
-                out.append((False, False, None, None, None, None, None, None))
-                continue
-            has_core = be.has_substructure(core_c, v) if core_c else False
-            has_motif = be.has_substructure(motif_c, v) if motif_c else False
-            sim_t = round(tversky_sim(fp, big_fp, alpha, beta), 3) if big_fp else None
-            sim_d = round(dice_sim(fp, big_fp), 3) if big_fp else None
-            bt = bd = None
-            bt_name = bd_name = None
-            if ref_fps:
-                # ties → first ref in iteration order, like the
-                # reference's max(vals, key=vals.get) over its dict
-                t_scores = [(tversky_sim(fp, rf, alpha, beta), n) for n, rf in ref_fps]
-                d_scores = [(dice_sim(fp, rf), n) for n, rf in ref_fps]
-                bt = max(sc for sc, _ in t_scores)
-                bt_name = next(n for sc, n in t_scores if sc == bt)
-                bd = max(sc for sc, _ in d_scores)
-                bd_name = next(n for sc, n in d_scores if sc == bd)
+                return (*sim, False, False, None, None, None, None, None, None)
+            bt = bd = bt_name = bd_name = None
+            if big_refs:
+                bt, bt_name = _best([(n, tversky_sim(fp, rf, alpha, beta)) for n, rf in big_refs])
+                bd, bd_name = _best([(n, dice_sim(fp, rf)) for n, rf in big_refs])
                 bt, bd = round(bt, 3), round(bd, 3)
-            out.append(
-                (has_core, has_motif, sim_t, sim_d, bt, bt_name, bd, bd_name)
+            return (
+                *sim,
+                be.has_substructure(core_c, v) if core_c else False,
+                be.has_substructure(motif_c, v) if motif_c else False,
+                round(tversky_sim(fp, core_fp, alpha, beta), 3) if core_fp else None,
+                round(dice_sim(fp, core_fp), 3) if core_fp else None,
+                bt, bt_name, bd, bd_name,
             )
-        return pd.DataFrame(out, columns=[f.name for f in _BIGUANIDE_SCHEMA.fields])
 
-    scored = df.withColumn("__big", score_udf(F.col(smiles_col)))
-    return scored.select(
-        "*", *[F.col(f"__big.{f.name}").alias(f.name) for f in _BIGUANIDE_SCHEMA.fields]
-    ).drop("__big")
+        return row
+
+    scored = df.withColumn(
+        "__chem", _row_kernel(F.col(smiles_col), backend_factory, make_row, _PANEL_SCHEMA)
+    )
+    fields = [F.col(f"__chem.{f.name}").alias(f.name) for f in _PANEL_SCHEMA.fields]
+    # F10 — confidence prefers TopKMean when present, else MaxSim
+    basis = F.coalesce(F.col("TopKMean_all"), F.col("MaxSim_all"))
+    confidence = F.when(basis.isNull(), None).otherwise(
+        threshold_label(basis, [(0.70, "high"), (0.50, "medium"), (0.30, "low")], "very-low")
+    )
+    return (
+        scored.select("*", *fields[:3])
+        .withColumn("confidence_similarity", confidence)
+        .select("*", *fields[3:])
+        .drop("__chem")
+    )

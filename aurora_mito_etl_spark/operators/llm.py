@@ -10,10 +10,11 @@ scripts/run_gpt_filter.py:37-188 — batch=10, ≤6000 chars of text per
 item, reply lines `PMID<digits>\\tYES|probablyYES|NO\\tnames|NA`,
 banned simple ions, ≤3 names of ≤80 chars each, 'NO' forces NA.
 
-Execution model: ``mapInPandas`` over an iterator of Arrow batches —
-each Python worker holds ONE client (connection reuse), batches rows,
-rate-limits between calls, and never retries through Spark's task
-retry (which would duplicate paid API calls — SURVEY §2.9 I4).
+Execution model: ``mapInArrow`` over the (pmid, text) columns — each
+task holds ONE client (connection reuse), batches the rows of each
+Arrow batch, rate-limits between calls, and never retries through
+Spark's task retry (which would duplicate paid API calls — SURVEY
+§2.9 I4).
 Resume is an anti-join against the sink (J4), not worker state.
 """
 
@@ -24,7 +25,6 @@ import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -262,15 +262,17 @@ def classify_documents(
     dropping the item, so downstream joins never lose PMIDs and the
     run is idempotent under resume.
     """
+    import pyarrow as pa
+
     cfg = config or ClassifyConfig()
 
-    def run(partitions: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         classify = classifier_factory()
         first_call = True
-        for pdf in partitions:
+        for rb in batches:
             pairs = [
                 (str(p), (t or "")[: cfg.max_chars])
-                for p, t in zip(pdf[pmid_col], pdf[text_col])
+                for p, t in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
             ]
             for batch in _iter_batches(pairs, cfg.batch_size):
                 if not first_call and cfg.rate_limit_s > 0:
@@ -283,9 +285,12 @@ def classify_documents(
                         parse_result_line(lines[i], pmid) if i < len(lines) else None
                     )
                     out.append(parsed or (pmid, "NO", "NA"))
-                yield pd.DataFrame(out, columns=["pmid", "confidence", "compound"])
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, pa.string()) for col in zip(*out)],
+                    names=RESULT_SCHEMA.names,
+                )
 
-    return df.mapInPandas(run, RESULT_SCHEMA)
+    return df.select(pmid_col, text_col).mapInArrow(run, RESULT_SCHEMA)
 
 
 def classify_documents_resumable(

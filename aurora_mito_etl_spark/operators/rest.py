@@ -9,9 +9,9 @@ form decomposes that into:
 1. a *cache join* — resolved keys come from a persisted lookup table
    (broadcast; reruns are pure joins, zero network), and
 2. a *fetch operator* — only cache misses go to the network, via
-   ``mapPartitions`` with a per-worker session, rate limiter, and
-   in-operator retry (Spark task retries would re-pay the calls —
-   SURVEY §2.9 I4).
+   ``mapInArrow`` with one fetcher per partition, a rate limiter,
+   and in-operator retry (Spark task retries would re-pay the calls
+   — SURVEY §2.9 I4). A NULL key is never a miss.
 
 The fetcher is injectable: live HTTP in production, deterministic
 stub in CI. New results are returned as a DataFrame the caller
@@ -116,34 +116,41 @@ def fetch_missing(
     key_col: str = "key",
     config: FetchConfig | None = None,
 ) -> DataFrame:
-    """Resolve each distinct key via the fetcher → (key, value|NULL).
+    """Resolve each distinct non-NULL key via the fetcher →
+    (key, value|NULL).
 
     One fetcher per partition (session reuse); the rate limit is
     per-worker — with P partitions the aggregate rate is P/s, which
     is the lever to stay under an API's global limit (coalesce to 1
     for strict 1/s parity with the reference).
     """
-    cfg = config or FetchConfig()
-    distinct = keys.select(F.col(key_col).cast("string").alias("key")).distinct()
+    import pyarrow as pa
 
-    def run(rows: Iterator) -> Iterator:
+    cfg = config or FetchConfig()
+    distinct = keys.select(F.col(key_col).cast("string").alias("key")).dropna().distinct()
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         fetch = fetcher_factory()
         first = True
-        for row in rows:
-            if not first and cfg.rate_limit_s > 0:
-                cfg.sleep(cfg.rate_limit_s)
-            first = False
-            value = None
-            for attempt in range(cfg.max_attempts):
-                try:
-                    value = fetch(row.key)
-                    break
-                except Exception:  # noqa: BLE001
-                    if attempt == cfg.max_attempts - 1:
-                        value = None
-            yield (row.key, value)
+        for batch in batches:
+            values = []
+            for key in batch.column(0).to_pylist():
+                if not first and cfg.rate_limit_s > 0:
+                    cfg.sleep(cfg.rate_limit_s)
+                first = False
+                value = None
+                for _ in range(cfg.max_attempts):
+                    try:
+                        value = fetch(key)
+                        break
+                    except Exception:  # noqa: BLE001 — retried in-operator
+                        continue
+                values.append(value)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(values, pa.string())], names=FETCH_SCHEMA.names
+            )
 
-    return distinct.rdd.mapPartitions(run).toDF(FETCH_SCHEMA)
+    return distinct.mapInArrow(run, FETCH_SCHEMA)
 
 
 def resolve_with_cache(
@@ -165,14 +172,16 @@ def resolve_with_cache(
         df, cache, key=key_col, lookup_key="key", value="value",
         out_col="__cached", default=None,
     )
+    # A NULL key is never a miss: fetch_missing drops it, so it
+    # resolves to '' and never enters the new cache rows.
     misses = hit.filter(F.col("__cached").isNull()).select(
         F.col(key_col).alias("key")
     )
     # Materialize the fetch ONCE before deriving both outputs: the
-    # resolved join and new_cache_rows would otherwise each trigger
-    # their own Spark job over the unpersisted RDD plan — every miss
-    # fetched twice over the network (double-paid API calls that can
-    # also disagree), violating the I4 "never re-pay" invariant.
+    # resolved join and new_cache_rows would otherwise each re-run
+    # the fetch stage — every miss fetched twice over the network
+    # (double-paid API calls that can also disagree), violating the
+    # I4 "never re-pay" invariant.
     fetched = fetch_missing(misses, fetcher_factory, "key", config).localCheckpoint(
         eager=True
     )

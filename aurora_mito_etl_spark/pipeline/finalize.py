@@ -4,8 +4,8 @@ scripts/finalize_realease.py:470-728).
 Stages, each a DataFrame function:
 candidate cleaning (P9→D6→P16→P17→P8) → per-compound stats (A1/O3)
 → union knowns (U1) → confidence bins (A5) → SMILES resolution
-(J5/J6/S7) → chemistry panels (D3/D4) → 18-column ordered release
-(DATA_DICTIONARY.md:31-49).
+(J5/J6/S7) → rank → chemistry panels (D3/D4, one Arrow kernel) →
+18-column ordered release (DATA_DICTIONARY.md:31-49).
 
 Everything up to SMILES resolution is pure Catalyst; the reference's
 eager pandas frame becomes one lazy plan with a single wide shuffle
@@ -187,20 +187,6 @@ def resolve_smiles(
     return resolved
 
 
-def enrich_chemistry(
-    df: DataFrame,
-    refs: ReferenceData,
-    backend_factory: chem.BackendFactory = chem.default_backend,
-) -> DataFrame:
-    """D3 + D4 panels over the resolved SMILES column."""
-    out = chem.similarity_panel(
-        df, refs.panel_smiles, smiles_col="SMILES", k=3, backend_factory=backend_factory
-    )
-    return chem.biguanide_panel(
-        out, refs.biguanide_refs, smiles_col="SMILES", backend_factory=backend_factory
-    )
-
-
 RELEASE_COLUMNS = [
     "compound",
     "pubmed_references",
@@ -244,10 +230,14 @@ def build_release(
     # but the union gets the CURATED list (:527-540) — order matters.
     curated = curate_known_inhibitors(refs.known_inhibitors)
     stats = add_confidence_bins(union_known(compound_stats(clean), curated, spark))
-    enriched = enrich_chemistry(
-        resolve_smiles(stats, refs, spark, fetcher_factory), refs, backend_factory
-    )
-    all_rows = enriched.select(*RELEASE_COLUMNS).orderBy(
+    # Rank first, then annotate: the range exchange's sample job and
+    # its map stage both run the plan below it, so chemistry placed
+    # below the sort would score every row twice. The kernel's
+    # projection keeps row order.
+    ranked = resolve_smiles(stats, refs, spark, fetcher_factory).orderBy(
         F.desc("pubmed_references"), F.asc("compound")
     )
+    all_rows = chem.score_panels(
+        ranked, refs.panel_smiles, refs.biguanide_refs, backend_factory=backend_factory
+    ).select(*RELEASE_COLUMNS)
     return clean, all_rows

@@ -3184,7 +3184,7 @@ def docs_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_classify_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5 — the LLM batch-classify operator over `documents` with the
     deterministic stub client. The stub's spec is simple enough to
-    express in SQL, so even this mapInPandas operator is
+    express in SQL, so even this mapInArrow operator is
     oracle-checked end to end (real model clients obviously are not).
     """
     from aurora_mito_etl_spark.operators import llm

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -149,6 +152,31 @@ def test_resolve_with_cache_fetches_each_miss_once(spark, tmp_path):
     assert sorted(calls) == ["Miss1", "Miss2"]  # once per key, total
 
 
+def test_resolve_with_cache_null_key_is_never_a_miss(spark, tmp_path):
+    # A NULL key resolves to '' without reaching the fetcher and never
+    # enters the new cache rows (FETCH_SCHEMA.key is non-nullable).
+    log = tmp_path / "fetch_calls.log"
+
+    def factory():
+        def fetch(key):
+            with open(log, "a") as f:
+                f.write(key + "\n")
+            return "V_" + key
+
+        return fetch
+
+    df = spark.createDataFrame([("Metformin",), (None,), ("x",)], "compound string")
+    cache = spark.createDataFrame([("Metformin", "FROM_CACHE")], "key string, value string")
+    resolved, new_rows = rest.resolve_with_cache(
+        df, cache, factory, key_col="compound", out_col="smiles",
+        config=rest.FetchConfig(rate_limit_s=0),
+    )
+    got = sorted((r["compound"] or "", r["smiles"]) for r in resolved.collect())
+    assert got == [("", ""), ("Metformin", "FROM_CACHE"), ("x", "V_x")]
+    assert [(r["key"], r["value"]) for r in new_rows.collect()] == [("x", "V_x")]
+    assert log.read_text().splitlines() == ["x"]
+
+
 def test_fetch_missing_values_and_case_fallback(spark):
     # (sleep calls happen inside executor workers — not observable
     # from the driver — so this pins resolution semantics only)
@@ -180,13 +208,30 @@ def test_canonicalize_smiles(spark):
     assert out[2]["SMILES_canonical"] is None
 
 
-def test_similarity_panel_identity_is_top(spark):
+BIGUANIDE_REFS = {
+    "biguanide": "NC(=N)NC(=N)N",
+    "biguanide_motif": "NC(=N)N",
+    "metformin": PANEL["metformin"],
+}
+
+PANEL_COLUMNS = [
+    "MaxSim_all", "TopKMean_all", "BestRef_name", "confidence_similarity",
+    "has_biguanide_core", "has_biguanide_motif",
+    "sim_biguanide_tversky", "sim_biguanide_dice",
+    "best_biguanide_like_tversky", "best_ref_name_tversky",
+    "best_biguanide_like_dice", "best_ref_name_dice",
+]
+
+
+def test_score_panels_identity_is_top(spark):
     df = spark.createDataFrame(
         [(PANEL["metformin"],), ("XXXX-NO-MATCH-YYYY",), (None,)], "SMILES string"
     )
-    out = chem.similarity_panel(
-        df, PANEL, k=3, backend_factory=chem.fake_backend
-    ).collect()
+    scored = chem.score_panels(
+        df, PANEL, BIGUANIDE_REFS, k=3, backend_factory=chem.fake_backend
+    )
+    assert scored.columns == ["SMILES", *PANEL_COLUMNS]
+    out = scored.collect()
     exact = out[0]
     assert exact["MaxSim_all"] == 1.0
     assert exact["BestRef_name"] == "metformin"
@@ -194,14 +239,14 @@ def test_similarity_panel_identity_is_top(spark):
     assert out[2]["MaxSim_all"] is None and out[2]["confidence_similarity"] is None
 
 
-def test_similarity_topk_uses_available_refs(spark):
+def test_score_panels_topk_uses_available_refs(spark):
     # with only 2 panel refs and k=3 the reference averages the top
     # min(k, n) scores (finalize_realease.py:171-175) — so TopKMean
     # is the 2-ref mean, and confidence is based on it
     df = spark.createDataFrame([(PANEL["metformin"],)], "SMILES string")
     small = {k: PANEL[k] for k in ["metformin", "rotenone"]}
-    out = chem.similarity_panel(
-        df, small, k=3, backend_factory=chem.fake_backend
+    out = chem.score_panels(
+        df, small, BIGUANIDE_REFS, k=3, backend_factory=chem.fake_backend
     ).collect()[0]
     be = chem.fake_backend()
     expected = round(
@@ -218,24 +263,44 @@ def test_similarity_topk_uses_available_refs(spark):
     assert out["MaxSim_all"] == 1.0
 
 
-def test_biguanide_panel_columns(spark):
-    refs = {
-        "biguanide": "NC(=N)NC(=N)N",
-        "biguanide_motif": "NC(=N)N",
-        "metformin": PANEL["metformin"],
-    }
+def test_score_panels_biguanide_columns(spark):
     df = spark.createDataFrame(
-        [("CCNC(=N)NC(=N)N",), ("ZZZZ",), (None,)], "SMILES string"
+        [("CCNC(=N)NC(=N)N",), ("ZZZZ",), (None,), ("",), ("not a smiles",)],
+        "SMILES string",
     )
-    out = chem.biguanide_panel(df, refs, backend_factory=chem.fake_backend).collect()
+    out = chem.score_panels(
+        df, PANEL, BIGUANIDE_REFS, backend_factory=chem.fake_backend
+    ).collect()
     row = out[0]
     assert row["has_biguanide_core"] is True  # substring present
     assert row["has_biguanide_motif"] is True
     assert 0.0 <= row["sim_biguanide_tversky"] <= 1.0
-    assert row["best_ref_name_tversky"] in refs
-    # unparseable and NULL rows get the all-null/False shape
-    assert out[2]["has_biguanide_core"] is False
-    assert out[2]["sim_biguanide_dice"] is None
+    assert row["best_ref_name_tversky"] in BIGUANIDE_REFS
+    # NULL, empty and unparseable rows: every value NULL, both flags False
+    for null_row in out[2:]:
+        assert null_row["has_biguanide_core"] is False
+        assert null_row["has_biguanide_motif"] is False
+        assert all(
+            null_row[c] is None
+            for c in PANEL_COLUMNS
+            if c not in ("has_biguanide_core", "has_biguanide_motif")
+        )
+
+
+def test_score_panels_ties_pick_first_ref_by_name(spark):
+    # every ref is the same structure, so each best-of is a tie over
+    # all of them: the panel max and both biguanide bests must name
+    # the first ref in sorted-name order, whatever the dict order
+    same = "CN(C)C(=N)NC(=N)N"
+    panel = {"zeta": same, "alpha": same, "mid": same}
+    refs = {"zz": same, "biguanide": same, "aa": same}
+    df = spark.createDataFrame([(same,), ("CCN(C)C(=N)N",)], "SMILES string")
+    for be in (chem.fake_backend, chem.minichem_backend):
+        for row in chem.score_panels(df, panel, refs, backend_factory=be).collect():
+            assert row["BestRef_name"] == "alpha"
+            assert row["best_ref_name_tversky"] == "aa"
+            assert row["best_ref_name_dice"] == "aa"
+            assert row["MaxSim_all"] == row["TopKMean_all"]
 
 
 def test_chem_parity_harness_fake_path(spark):
@@ -267,3 +332,42 @@ def test_metric_properties():
     assert chem.tversky_sim(a, b, 0.7, 0.3) != pytest.approx(
         chem.tversky_sim(b, a, 0.7, 0.3)
     )
+
+
+# ---------------------------------------------------------------------------
+# Python boundary: Arrow only, no RDD
+# ---------------------------------------------------------------------------
+
+_PKG = Path(chem.__file__).resolve().parents[1]
+
+
+def test_package_holds_no_rdd():
+    """No `.rdd` / `.mapPartitions` attribute access anywhere in the
+    package (docstrings that warn against them are not code)."""
+    hits = [
+        f"{f.relative_to(_PKG.parent)}:{node.lineno}"
+        for f in sorted(_PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in ("rdd", "mapPartitions")
+    ]
+    assert hits == []
+
+
+def test_chem_rest_llm_cross_on_arrow():
+    """chem, rest and llm import no pandas and use no pandas crossing:
+    their Python stages are Arrow UDFs and mapInArrow."""
+    pandas_api = {"pandas_udf", "mapInPandas", "applyInPandas"}
+    hits = []
+    for mod in (chem, rest, llm):
+        path = Path(mod.__file__)
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = []
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            if any(n.split(".")[0] == "pandas" or n in pandas_api for n in names):
+                hits.append(f"{path.name}:{node.lineno}")
+    assert hits == []

@@ -242,3 +242,32 @@ def test_hits_chain_has_no_unpartitioned_window(spark):
     plan = plan_of(QUERIES["events_hits"](spark, SF))
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+def test_release_ranks_before_chemistry(spark):
+    """build_release sorts before it scores: the chemistry kernel
+    (ArrowEvalPython) sits above the orderBy's range Exchange, so the
+    exchange's sample job and its map stage never run the Python
+    kernel and each row is scored once."""
+    from aurora_mito_etl_spark.operators import chem
+    from aurora_mito_etl_spark.pipeline import finalize
+
+    gpt = spark.createDataFrame(
+        [("1", "YES", "Metformin"), ("2", "probablyYES", "Rotenone; Metformin")],
+        "pmid string, confidence string, compound string",
+    )
+    refs = finalize.ReferenceData(
+        known_inhibitors=["Piericidin"],
+        blacklist_raw=[],
+        typo_pairs=[],
+        smiles_db={"Metformin": "CN(C)C(=N)NC(=N)N"},
+        panel_smiles={"metformin": "CN(C)C(=N)NC(=N)N"},
+        biguanide_refs={"biguanide": "NC(=N)NC(=N)N"},
+    )
+    _new, all_rows = finalize.build_release(
+        gpt, refs, spark, backend_factory=chem.fake_backend
+    )
+    plan = all_rows._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("Exchange rangepartitioning") == 1
+    assert plan.index("ArrowEvalPython") < plan.index("Exchange rangepartitioning")

@@ -1,8 +1,8 @@
 """Chemistry parity gate for the D2-D4 operators (VERDICT r2/r3 ask).
 
 Replays a SMILES fixture through the Spark operators
-(`chem.canonicalize_smiles`, `chem.similarity_panel`,
-`chem.biguanide_panel` with the RDKit backend) and through an
+(`chem.canonicalize_smiles` and the `chem.score_panels` kernel with the
+RDKit backend) and through an
 INDEPENDENT direct computation that follows the reference algorithm —
 `/root/reference/scripts/finalize_realease.py`:
 
@@ -291,9 +291,8 @@ COLUMNS = [
 def spark_rows(spark, backend_factory) -> list[dict]:
     df = spark.createDataFrame([(s,) for s in CANDIDATES], "SMILES string")
     df = chem.canonicalize_smiles(df, backend_factory=backend_factory)
-    df = chem.similarity_panel(df, PANEL, k=TOPK, backend_factory=backend_factory)
-    df = chem.biguanide_panel(
-        df, PANEL, alpha=ALPHA, beta=BETA, backend_factory=backend_factory
+    df = chem.score_panels(
+        df, PANEL, PANEL, k=TOPK, alpha=ALPHA, beta=BETA, backend_factory=backend_factory
     )
     return [r.asDict() for r in df.collect()]
 
