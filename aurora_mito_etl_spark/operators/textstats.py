@@ -70,6 +70,18 @@ def tokens_expr(col: Column) -> Column:
     )
 
 
+def tokens_sql(expr: str) -> str:
+    """DuckDB SQL twin of :func:`tokens_expr` — the ONLY SQL spelling
+    of the tokenizer. The whitespace class is spelled out (Java's
+    ``\\s`` is ``[ \\t\\n\\x0b\\f\\r]``; RE2's omits ``\\x0b``) and the
+    trim is ASCII-space only like ``F.trim``. Empty text yields
+    ``['']``, as the Column form does."""
+    return (
+        rf"string_split(lower(trim(regexp_replace({expr}, "
+        rf"'[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')"
+    )
+
+
 def token_count_ws(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(F.split(F.trim(col), r"\s+"))
@@ -124,10 +136,7 @@ def repetition_signals(df, text_col: str, id_col: str):
     words = df.select(
         F.col(id_col),
         F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                lambda w: w != "",
-            )
+            F.filter(tokens_expr(F.col(text_col)), lambda w: w != "")
         ).alias("w"),
     )
     per_word = words.groupBy(id_col, "w").agg(F.count("*").alias("c"))

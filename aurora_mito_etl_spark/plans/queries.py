@@ -17,7 +17,7 @@ use deterministic SQL-expressible backends.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1328,7 +1328,7 @@ def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH words AS (
       SELECT doc_id, w FROM (
         SELECT doc_id,
-               unnest(string_split_regex(lower(trim(text, ' ')), '[ \t\n\x0b\f\r]+')) AS w
+               unnest({ts.tokens_sql("text")}) AS w
         FROM documents)
       WHERE w <> ''
     ),
@@ -1400,11 +1400,11 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_top_words",
-    """
+    f"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
-               unnest(string_split_regex(lower(trim(text, ' ')), '[ \t\n\x0b\f\r]+')) AS w
+               unnest({ts.tokens_sql("text")}) AS w
         FROM documents)
       WHERE w <> ''
     ),
@@ -1425,10 +1425,7 @@ def docs_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "source",
         F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                lambda w: w != "",
-            )
+            F.filter(ts.tokens_expr(F.col("text")), lambda w: w != "")
         ).alias("word"),
     )
     counts = words.groupBy("source", "word").agg(F.count("*").alias("n_occurrences"))
@@ -1444,10 +1441,10 @@ def docs_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_winnow_fingerprints",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     grams AS (
@@ -1491,7 +1488,7 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_heavy_hitters",
     rf"""
     WITH toks AS (
-      SELECT unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+      SELECT unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
       FROM documents
     ),
     tz AS (SELECT tok FROM toks WHERE tok <> ''),
@@ -1520,7 +1517,7 @@ def docs_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rf"""
     WITH base AS (
       SELECT source,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     g1 AS (
@@ -1586,7 +1583,7 @@ def docs_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rf"""
     WITH base AS (
       SELECT source,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     g3 AS (
@@ -1627,10 +1624,10 @@ def docs_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "docs_cms_estimates",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+             unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
       FROM documents
     ),
     tz AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
@@ -1732,31 +1729,44 @@ def docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup(d, "text", "doc_id").select("doc_id")
 
 
-_SHINGLE_SQL = """
+_SHINGLE_SQL = f"""
       SELECT doc_id, array_to_string(t[i:i+2], ' ') AS sh
       FROM (SELECT doc_id,
-                   string_split(lower(trim(regexp_replace(text, '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')), ' ') AS t
+                   {ts.tokens_sql("text")} AS t
             FROM documents),
            UNNEST(generate_series(1, greatest(len(t) - 2, 0))) AS u(i)
 """
 
+_SHINGLE_CTE = f"sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL}))"
 
-@_register(
-    "docs_ngram_jaccard_pairs",
-    f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
+# Distinct shingles and their 60-bit md5-prefix hashes: the first two
+# CTEs of the MinHash and SimHash oracles.
+_SHINGLE_HASH_CTES = f"""{_SHINGLE_CTE},
+    h AS (SELECT doc_id, CAST(('0x' || substring(md5(sh),1,15)) AS BIGINT) AS h FROM sh)"""
+
+# The exact shingle-overlap verify: distinct shingles, per-doc counts
+# and pairwise intersections (ids ordered), then the fixed6 Jaccard.
+_SHINGLE_OVERLAP_CTES = f"""{_SHINGLE_CTE},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
     inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
       FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b, jaccard FROM (
-      SELECT id_a, id_b,
+    )"""
+
+_SHINGLE_JACCARD_SQL = f"""SELECT id_a, id_b,
              {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
       FROM inter
       JOIN sizes sa ON inter.id_a = sa.doc_id
-      JOIN sizes sb ON inter.id_b = sb.doc_id
+      JOIN sizes sb ON inter.id_b = sb.doc_id"""
+
+
+@_register(
+    "docs_ngram_jaccard_pairs",
+    f"""
+    WITH {_SHINGLE_OVERLAP_CTES}
+    SELECT id_a, id_b, jaccard FROM (
+      {_SHINGLE_JACCARD_SQL}
     ) WHERE jaccard >= 0.15
     """,
 )
@@ -1770,20 +1780,10 @@ def docs_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "docs_dup_triangles",
     f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    WITH {_SHINGLE_OVERLAP_CTES},
     e AS (
       SELECT id_a AS a, id_b AS b FROM (
-        SELECT id_a, id_b,
-               {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
-        FROM inter
-        JOIN sizes sa ON inter.id_a = sa.doc_id
-        JOIN sizes sb ON inter.id_b = sb.doc_id
+        {_SHINGLE_JACCARD_SQL}
       ) WHERE jaccard >= 0.15
     ),
     deg AS (
@@ -1836,11 +1836,7 @@ def _kcore_oracle(k: int = 2, rounds: int = 4) -> str:
     ctes = [
         f"""e0 AS MATERIALIZED (
       SELECT id_a AS a, id_b AS b FROM (
-        SELECT id_a, id_b,
-               {fixed6_sql('CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)')} AS jaccard
-        FROM inter
-        JOIN sizes sa ON inter.id_a = sa.doc_id
-        JOIN sizes sb ON inter.id_b = sb.doc_id
+        {_SHINGLE_JACCARD_SQL}
       ) WHERE jaccard >= 0.15
     )"""
     ]
@@ -1870,13 +1866,7 @@ def _kcore_oracle(k: int = 2, rounds: int = 4) -> str:
     )
     body = ",\n    ".join(ctes)
     return f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    WITH {_SHINGLE_OVERLAP_CTES},
     {body}
     SELECT df.v AS vertex, CAST(df.deg AS BIGINT) AS core_degree, flag.converged
     FROM df, flag
@@ -1929,17 +1919,15 @@ def docs_bottom_k_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", F.concat_ws(",", F.col("sketch")).alias("sketch"))
 
 
-def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3) -> str:
-    """Full SQL twin of the portable-hash MinHash-LSH operator:
-    identical 60-bit md5 shingle hashes, identical permutation
-    constants, identical md5 band keys — candidates AND verification
-    reproduced in DuckDB."""
-    from aurora_mito_etl_spark.operators.dedup import _MERSENNE_P, _perm_params
-
+def _minhash_bands_ctes(num_hashes: int, bands: int) -> str:
+    """The portable MinHash chain every MinHash oracle starts with:
+    60-bit md5 shingle hashes (`h`), reduced mod the Mersenne prime
+    (`hm`), per-permutation MIN signatures (`sigs`) and md5 band keys
+    (`bands`) — the same constants as :mod:`dedup`'s portable path."""
     rows_per_band = num_hashes // bands
     mins = ",\n         ".join(
-        f"MIN(({a} * hm + {b}) % {_MERSENNE_P}) AS m{i}"
-        for i, (a, b) in enumerate(_perm_params(num_hashes))
+        f"MIN(({a} * hm + {b}) % {dd._MERSENNE_P}) AS m{i}"
+        for i, (a, b) in enumerate(dd._perm_params(num_hashes))
     )
     band_selects = "\n      UNION ALL\n".join(
         "      SELECT doc_id, {i} AS band, md5(concat_ws(',', '{i}', {cols})) AS bh FROM sigs".format(
@@ -1948,14 +1936,19 @@ def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
         )
         for i in range(bands)
     )
-    return f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    h AS (SELECT doc_id, CAST(('0x' || substring(md5(sh),1,15)) AS BIGINT) AS h FROM sh),
-    hm AS (SELECT doc_id, h, h % {_MERSENNE_P} AS hm FROM h),
+    return f"""{_SHINGLE_HASH_CTES},
+    hm AS (SELECT doc_id, h, h % {dd._MERSENNE_P} AS hm FROM h),
     sigs AS (SELECT doc_id, {mins} FROM hm GROUP BY doc_id),
     bands AS (
 {band_selects}
-    ),
+    )"""
+
+
+def _minhash_pairs_ctes(num_hashes: int, bands: int) -> str:
+    """:func:`_minhash_bands_ctes` plus the self-join verify inputs:
+    banded candidates `cand` (id_a < id_b), shingle counts `sizes` and
+    exact shingle-hash intersections `inter`."""
+    return f"""{_minhash_bands_ctes(num_hashes, bands)},
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -1965,7 +1958,16 @@ def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
       FROM hm a JOIN hm b ON a.h = b.h AND a.doc_id < b.doc_id
       GROUP BY 1, 2
-    )
+    )"""
+
+
+def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3) -> str:
+    """Full SQL twin of the portable-hash MinHash-LSH operator:
+    identical 60-bit md5 shingle hashes, identical permutation
+    constants, identical md5 band keys — candidates AND verification
+    reproduced in DuckDB."""
+    return f"""
+    WITH {_minhash_pairs_ctes(num_hashes, bands)}
     SELECT id_a, id_b, jaccard FROM (
       SELECT c.id_a, c.id_b,
              {fixed6_sql('CAST(i.i AS DOUBLE) / CAST(sa.sz + sb.sz - i.i AS DOUBLE)')} AS jaccard
@@ -1980,13 +1982,7 @@ def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.3
 @_register(
     "docs_near_dedup_survivors",
     f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    WITH {_SHINGLE_OVERLAP_CTES},
     losers AS (
       SELECT DISTINCT id_b FROM inter
       JOIN sizes sa ON inter.id_a = sa.doc_id
@@ -2057,24 +2053,6 @@ def _minhash_audit_oracle(
     candidate (false positives included, LEFT JOIN so zero-overlap
     band-hash collisions still score jaccard 0) and aggregating the
     signature-estimate accuracy per match count."""
-    from aurora_mito_etl_spark.operators.dedup import _MERSENNE_P, _perm_params
-    from aurora_mito_etl_spark.functions.numeric import (
-        fixed6_sql,
-        micros_sum_sql,
-    )
-
-    rows_per_band = num_hashes // bands
-    mins = ",\n         ".join(
-        f"MIN(({a} * hm + {b}) % {_MERSENNE_P}) AS m{i}"
-        for i, (a, b) in enumerate(_perm_params(num_hashes))
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        "      SELECT doc_id, {i} AS band, md5(concat_ws(',', '{i}', {cols})) AS bh FROM sigs".format(
-            i=i,
-            cols=", ".join(f"m{i * rows_per_band + r}" for r in range(rows_per_band)),
-        )
-        for i in range(bands)
-    )
     match_terms = " + ".join(
         f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
     )
@@ -2083,23 +2061,7 @@ def _minhash_audit_oracle(
         " / CAST(sza.sz + szb.sz - COALESCE(i.i, 0) AS DOUBLE)"
     )
     return f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    h AS (SELECT doc_id, CAST(('0x' || substring(md5(sh),1,15)) AS BIGINT) AS h FROM sh),
-    hm AS (SELECT doc_id, h, h % {_MERSENNE_P} AS hm FROM h),
-    sigs AS (SELECT doc_id, {mins} FROM hm GROUP BY doc_id),
-    bands AS (
-{band_selects}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM hm GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS i
-      FROM hm a JOIN hm b ON a.h = b.h AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    WITH {_minhash_pairs_ctes(num_hashes, bands)},
     pairs AS (
       SELECT ({match_terms}) AS matches,
              {fixed6_sql(jac)} AS jaccard
@@ -2175,8 +2137,7 @@ def _simhash_oracle(n_bits: int = 60, band_bits: int = 15, max_hamming: int = 16
         for i in range(4)
     )
     return f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    h AS (SELECT doc_id, CAST(('0x' || substring(md5(sh),1,15)) AS BIGINT) AS h FROM sh),
+    WITH {_SHINGLE_HASH_CTES},
     votes AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id),
     folded AS (SELECT doc_id, {fold} AS sh60 FROM votes),
     bands AS (
@@ -2215,6 +2176,49 @@ _COS_SQL = """
 """
 
 
+def _nrm_guard_sql(nrm: str) -> str:
+    """Zero-norm guard: Spark scores dot/1.0 for a zero vector."""
+    return f"CASE WHEN {nrm} = 0 THEN 1.0 ELSE {nrm} END"
+
+
+# NULL-filtered embeddings scan `v` (vec_id, e): the vector-kernel
+# scan of `_emb_nn`, pinned in every oracle that needs no norm.
+_VEC_SCAN_CTE = (
+    "v AS (SELECT vec_id, embedding::DOUBLE[] AS e"
+    " FROM embeddings WHERE embedding IS NOT NULL)"
+)
+
+
+def _norm_scan_cte(name: str = "v", cols: Sequence[str] = ()) -> str:
+    """NULL-filtered embeddings scan `name`: vec_id, `cols`, the vector
+    `e` and its raw norm `nrm` (the oracle side of `_emb_nn`)."""
+    extra = "".join(f"{c}, " for c in cols)
+    return f"""{name} AS (
+      SELECT vec_id, {extra}embedding::DOUBLE[] AS e,
+             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+      FROM embeddings WHERE embedding IS NOT NULL
+    )"""
+
+
+def _nrm_guard_cte(name: str, src: str, cols: Sequence[str] = ()) -> str:
+    """`src`'s rows with the zero-norm guard applied to `nrm`."""
+    extra = "".join(f"{c}, " for c in cols)
+    return f"""{name} AS (
+      SELECT vec_id, {extra}e, {_nrm_guard_sql("nrm")} AS nrm FROM {src}
+    )"""
+
+
+def _cos_score_sql(a: str = "a", b: str = "b") -> str:
+    """fixed6 cosine of two rows of a `_cos_scan_ctes`-shaped scan."""
+    return fixed6_sql(f"list_dot_product({a}.e, {b}.e) / ({a}.nrm * {b}.nrm)")
+
+
+def _cos_scan_ctes(v: str = "v", g: str = "g", cols: Sequence[str] = ()) -> str:
+    """The exact-cosine scan every brute-force oracle starts with: the
+    norm scan `v` and its zero-norm-guarded view `g`."""
+    return f"{_norm_scan_cte(v, cols)},\n    {_nrm_guard_cte(g, v, cols)}"
+
+
 def _emb_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings scan for VECTOR-KERNEL queries: a row with a NULL
     embedding (failed encoder output — realistic regeneration drift)
@@ -2234,17 +2238,10 @@ def _emb_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "emb_cosine_topk",
     f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (  -- zero-norm guard: Spark scores dot/1.0 for zero vectors
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM v
-    ),
+    WITH {_cos_scan_ctes()},
     scored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM g a, g b
       WHERE b.vec_id % 100 = 0
     ),
@@ -2269,18 +2266,10 @@ def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "emb_knn_classify",
     f"""
-    WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (  -- zero-norm guard: Spark scores dot/1.0 for zero vectors
-      SELECT vec_id, label, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm
-      FROM v
-    ),
+    WITH {_cos_scan_ctes(cols=["label"])},
     scored AS (
       SELECT b.vec_id AS query_id, a.vec_id, a.label,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM g a, g b
       WHERE b.vec_id % 50 = 0 AND a.vec_id <> b.vec_id
     ),
@@ -2354,6 +2343,15 @@ def emb_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.exact_near_dup_pairs_blocked(e, threshold=0.5)
 
 
+def _lsh_bucket_sql(dim: int, n_planes: int) -> str:
+    """Sign-bit bucket of `e` against the pinned hyperplanes."""
+    return " + ".join(
+        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(x) for x in p)}]) >= 0 "
+        f"THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(sim._hyperplanes(dim, n_planes))
+    )
+
+
 def _lsh_near_dup_oracle(
     n_planes: int = 4, dim: int = 64, threshold: float = 0.5, multi_probe: int = 2
 ) -> str:
@@ -2361,31 +2359,17 @@ def _lsh_near_dup_oracle(
     because both engines fold dot products left-to-right over
     identical doubles, so every sign bit (hence bucket) is
     bit-identical — the same parity the cosine oracles rely on."""
-    from aurora_mito_etl_spark.operators.similarity import _hyperplanes
-
-    from aurora_mito_etl_spark.operators.similarity import probe_masks
-
-    planes = _hyperplanes(dim, n_planes)
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(x) for x in p)}]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    probe_list = ", ".join(str(p) for p in probe_masks(n_planes, multi_probe))
+    probe_list = ", ".join(str(p) for p in sim.probe_masks(n_planes, multi_probe))
     return f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    b AS (SELECT vec_id, e, nrm, {bucket_terms} AS bucket FROM v),
+    WITH {_norm_scan_cte()},
+    b AS (SELECT vec_id, e, nrm, {_lsh_bucket_sql(dim, n_planes)} AS bucket FROM v),
     probed AS (
       SELECT vec_id, e, nrm, xor(bucket::BIGINT, p) AS bucket
       FROM b, UNNEST([{probe_list}]) AS u(p)
     ),
     pairs AS (
       SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-             {fixed6_sql('list_dot_product(a.e, bb.e) / (a.nrm * bb.nrm)')} AS cos_sim
+             {_cos_score_sql("a", "bb")} AS cos_sim
       FROM probed a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
       WHERE a.nrm > 0 AND bb.nrm > 0  -- zero-norm: NaN never passes in Spark
     )
@@ -2409,23 +2393,11 @@ def emb_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_topk_oracle(n_planes: int = 8, dim: int = 64, k: int = 5) -> str:
-    from aurora_mito_etl_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_planes)
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(x) for x in p)}]) >= 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
     return f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
+    WITH {_norm_scan_cte()},
     b AS (SELECT vec_id, e,
-                 CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm,
-                 {bucket_terms} AS bucket FROM v),
+                 {_nrm_guard_sql("nrm")} AS nrm,
+                 {_lsh_bucket_sql(dim, n_planes)} AS bucket FROM v),
     q AS (SELECT vec_id AS query_id, e AS qe, nrm AS qn, bucket
           FROM b WHERE vec_id % 100 = 0),
     scored AS (
@@ -2455,6 +2427,44 @@ def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.lsh_bucketed_topk(e, q, dim=64, k=5, n_planes=8)
 
 
+def _cent_row(keys: str, c: Sequence[float]) -> str:
+    """One pinned-centroid VALUES row body: the key columns, the
+    centroid as a DOUBLE[] literal and its half squared norm ‖c‖²/2
+    (the nearest-centroid rule is argmax(dot − hn)). Python reprs, so
+    both engines parse identical doubles."""
+    return (
+        f"{keys}, [{', '.join(repr(x) for x in c)}]::DOUBLE[], "
+        f"{sum(x * x for x in c) / 2.0!r}"
+    )
+
+
+def _ivf_values(dim: int, n_cells: int) -> str:
+    """VALUES rows (cell, c, hn) of the pinned IVF centroids."""
+    return ",\n      ".join(
+        f"({_cent_row(str(i), c)})"
+        for i, c in enumerate(sim.ivf_centroids(dim, n_cells))
+    )
+
+
+def _ivf_assign_ctes(dim: int, n_cells: int) -> str:
+    """Pinned IVF centroids `cents`, the norm scan `v` and every
+    vector's cells ranked by argmax(dot − hn), ties to the larger cell
+    (`assigned`; rn = 1 is its own cell)."""
+    return f"""cents(cell, c, hn) AS (
+      VALUES
+      {_ivf_values(dim, n_cells)}
+    ),
+    {_norm_scan_cte()},
+    assigned AS (
+      SELECT vec_id, e, nrm, cell,
+             row_number() OVER (
+               PARTITION BY vec_id
+               ORDER BY list_dot_product(e, c) - hn DESC, cell DESC
+             ) AS rn
+      FROM v, cents
+    )"""
+
+
 def _ivf_topk_oracle(
     n_cells: int = 16, n_probe: int = 4, dim: int = 64, k: int = 5
 ) -> str:
@@ -2463,40 +2473,17 @@ def _ivf_topk_oracle(
     portable for the same fold-order reason as the LSH oracles. The
     half-norm constants are computed once in Python and embedded as
     identical literals in both engines."""
-    cents = sim.ivf_centroids(dim, n_cells)
-    values = ",\n      ".join(
-        f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[], "
-        f"{sum(x * x for x in c) / 2.0!r})"
-        for i, c in enumerate(cents)
-    )
     return f"""
-    WITH cents(cell, c, hn) AS (
-      VALUES
-      {values}
-    ),
-    v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    assigned AS (
-      SELECT vec_id, e, nrm, cell,
-             row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY list_dot_product(e, c) - hn DESC, cell DESC
-             ) AS rn
-      FROM v, cents
-    ),
+    WITH {_ivf_assign_ctes(dim, n_cells)},
     vcell AS (SELECT vec_id, e, nrm, cell FROM assigned WHERE rn = 1),
     q AS (
       SELECT vec_id AS query_id, e AS qe,
-             CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS qn, cell
+             {_nrm_guard_sql("nrm")} AS qn, cell
       FROM assigned WHERE rn <= {n_probe} AND vec_id % 100 = 0
     ),
     scored AS (
       SELECT q.query_id, vcell.vec_id,
-             {fixed6_sql('''list_dot_product(vcell.e, q.qe)
-                   / (CASE WHEN vcell.nrm = 0 THEN 1.0 ELSE vcell.nrm END * q.qn)''')} AS score
+             {fixed6_sql(f'list_dot_product(vcell.e, q.qe) / ({_nrm_guard_sql("vcell.nrm")} * q.qn)')} AS score
       FROM vcell JOIN q ON vcell.cell = q.cell
     ),
     ranked AS (
@@ -3404,10 +3391,10 @@ def docs_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benchmark decontamination (operators/decontaminate.py)
 # ---------------------------------------------------------------------------
 
-_DECONTAM_ORACLE = r"""
+_DECONTAM_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     grams AS (
@@ -3445,10 +3432,10 @@ def docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merged benchmark/blacklist n-gram set is billions of keys. The Bloom
 # has no false negatives and survivors are string-verified exactly, so
 # the oracle is plain exact SQL (no hash replication needed at all).
-_DECONTAM_BLOOM_ORACLE = r"""
+_DECONTAM_BLOOM_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     grams AS (
@@ -3651,7 +3638,7 @@ _TFIDF_ORACLE = rf"""
     WITH n AS (SELECT count(*) AS n_docs FROM documents),
     toks AS (
       SELECT doc_id AS id,
-             unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+             unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
       FROM documents
     ),
     tf AS (
@@ -3713,7 +3700,7 @@ def docs_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAINMENT_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     grams AS (
@@ -3767,7 +3754,7 @@ def docs_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     grams AS (
@@ -3830,7 +3817,7 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SOURCE_KL_ORACLE = rf"""
     WITH toks AS (
       SELECT source,
-             unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+             unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
       FROM documents
     ),
     t AS (SELECT source, tok FROM toks WHERE tok <> ''),
@@ -4210,18 +4197,17 @@ def emb_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pca_pc1_oracle(
-    dim: int = _PCA_DIM, iters: int = _PCA_ITERS, seed: int = 11
-) -> str:
-    """Unrolled power-iteration chain. Every CTE a later round
-    references is AS MATERIALIZED (DuckDB CTE-inlining rule); all
-    arithmetic is checked-BIGINT grid math mirroring pca.py's guards:
-    matvec sums, one (int→double, /1e6, +0.5, floor) regrid, one
-    (sqrt, divide, ·1e6+0.5, floor) normalize per round, zero-norm
-    rounds keep the previous vector."""
-    init_rows = ", ".join(
-        f"({i}, {vi})" for i, vi in enumerate(pca_op.pinned_init(dim, seed))
+def _pca_pivot(dim: int, col: str, out: str) -> str:
+    """One wide row from the per-dimension (i, `col`) rows: `out`0.."""
+    return ", ".join(
+        f"MAX(CASE WHEN i = {k} THEN {col} END) AS {out}{k}" for k in range(dim)
     )
+
+
+def _pca_fit_ctes(dim: int) -> str:
+    """Stats row, the symmetric grid covariance matrix `cmat` (from its
+    upper triangle `half`) and the grid means `m` — the inputs of every
+    power-iteration fit."""
     means = "\n      UNION ALL ".join(
         f"SELECT {i} AS i, {micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS mi FROM s"
         for i in range(dim)
@@ -4231,8 +4217,7 @@ def _pca_pc1_oracle(
         for i in range(dim)
         for j in range(i, dim)
     )
-    sql = f"""
-    WITH {_pca_base_sql(dim)},
+    return f"""{_pca_base_sql(dim)},
     half AS MATERIALIZED (
       {covs}
     ),
@@ -4243,66 +4228,100 @@ def _pca_pc1_oracle(
     ),
     m AS MATERIALIZED (
       {means}
-    ),
-    vec0 AS MATERIALIZED (
-      SELECT i, CAST(vi AS BIGINT) AS vi FROM (VALUES {init_rows}) AS t(i, vi)
     )"""
-    # squared norm = explicit LEFT-TO-RIGHT double chain over the
-    # pivoted q's, not SUM(q*q): the int sum overflows at covariance
-    # magnitudes the matvec handles (fuzz seed 71), and the fixed term
-    # order pins the float fold — the driver twin runs the same chain.
-    uw_cols = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN q END) AS q{k}" for k in range(dim)
+
+
+def _pca_init_cte(vec: str, dim: int, seed: int) -> str:
+    """`vec`0: the pinned grid-int start vector of a power iteration."""
+    rows = ", ".join(
+        f"({i}, {vi})" for i, vi in enumerate(pca_op.pinned_init(dim, seed))
     )
+    return f"""{vec}0 AS MATERIALIZED (
+      SELECT i, CAST(vi AS BIGINT) AS vi FROM (VALUES {rows}) AS t(i, vi)
+    )"""
+
+
+def _pca_iter_ctes(dim: int, iters: int, mat: str, vec: str, pre: str) -> str:
+    """`iters` unrolled power-iteration rounds on matrix `mat` from
+    `vec`0 to `vec`{iters}; round t's CTEs are `pre`u/q/n{t}. Every
+    CTE a later round references is AS MATERIALIZED (DuckDB
+    CTE-inlining rule); all arithmetic is checked-BIGINT grid math
+    mirroring pca.py's guards: matvec sums, one (int→double, /1e6,
+    +0.5, floor) regrid, one (sqrt, divide, ·1e6+0.5, floor)
+    normalize per round, zero-norm rounds keep the previous vector.
+    The squared norm is an explicit LEFT-TO-RIGHT double chain over
+    the pivoted q's, not SUM(q*q): the int sum overflows at covariance
+    magnitudes the matvec handles (fuzz seed 71), and the fixed term
+    order pins the float fold — the driver twin runs the same chain."""
     nsq_chain = " + ".join(
         f"CAST(q{k} AS DOUBLE) * CAST(q{k} AS DOUBLE)" for k in range(dim)
     )
-    for t in range(iters):
-        sql += f""",
-    u{t} AS MATERIALIZED (
+    return ",".join(
+        f"""
+    {pre}u{t} AS MATERIALIZED (
       SELECT cm.i AS i, CAST(SUM(cm.c * vv.vi) AS BIGINT) AS u_raw
-      FROM cmat cm JOIN vec{t} vv ON cm.j = vv.i
+      FROM {mat} cm JOIN {vec}{t} vv ON cm.j = vv.i
       GROUP BY cm.i
     ),
-    q{t} AS MATERIALIZED (
+    {pre}q{t} AS MATERIALIZED (
       SELECT i, CAST(floor(CAST(u_raw AS DOUBLE) / 1000000.0 + 0.5) AS BIGINT) AS q
-      FROM u{t}
+      FROM {pre}u{t}
     ),
-    n{t} AS MATERIALIZED (
+    {pre}n{t} AS MATERIALIZED (
       SELECT ({nsq_chain}) AS nsq
-      FROM (SELECT {uw_cols} FROM q{t})
+      FROM (SELECT {_pca_pivot(dim, "q", "q")} FROM {pre}q{t})
     ),
-    vec{t + 1} AS MATERIALIZED (
+    {vec}{t + 1} AS MATERIALIZED (
       SELECT qq.i,
              CASE WHEN nn.nsq = 0 THEN vv.vi
                   ELSE {micros6_sql("CAST(qq.q AS DOUBLE) / sqrt(nn.nsq)")}
              END AS vi
-      FROM q{t} qq CROSS JOIN n{t} nn JOIN vec{t} vv ON vv.i = qq.i
+      FROM {pre}q{t} qq CROSS JOIN {pre}n{t} nn JOIN {vec}{t} vv ON vv.i = qq.i
     )"""
-    vw = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN vi END) AS v{k}" for k in range(dim)
+        for t in range(iters)
     )
-    mw = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN mi END) AS m{k}" for k in range(dim)
-    )
+
+
+def _pca_cq_cte(dim: int) -> str:
+    """`cq`: the grid-quantized components of every scanned row."""
     xqs = ",\n             ".join(
         f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
         for k in range(dim)
     )
-    chain = " + ".join(f"vw.v{k} * (c.xq{k} - mw.m{k})" for k in range(dim))
-    sql += f""",
-    vw AS MATERIALIZED (SELECT {vw} FROM vec{iters}),
-    mw AS MATERIALIZED (SELECT {mw} FROM m),
-    cq AS MATERIALIZED (
+    return f"""cq AS MATERIALIZED (
       SELECT vec_id,
              {xqs}
       FROM v
-    )
+    )"""
+
+
+def _pca_project_ctes(dim: int) -> str:
+    """Pivoted grid means `mw` and the quantized rows `cq`."""
+    return f"""mw AS MATERIALIZED (SELECT {_pca_pivot(dim, "mi", "m")} FROM m),
+    {_pca_cq_cte(dim)}"""
+
+
+def _pca_project_sql(dim: int, w: str) -> str:
+    """Mean-centered grid-int projection of `cq c` onto the pivoted
+    component row `w`, regridded to the 1e-6 grid."""
+    chain = " + ".join(f"{w}.v{k} * (c.xq{k} - mw.m{k})" for k in range(dim))
+    return f"floor(CAST(({chain}) AS DOUBLE) / 1000000.0 + 0.5) / 1000000.0"
+
+
+def _pca_pc1_oracle(
+    dim: int = _PCA_DIM, iters: int = _PCA_ITERS, seed: int = 11
+) -> str:
+    """Unrolled power-iteration chain (:func:`_pca_iter_ctes`) from a
+    pinned init, then the projection of every row onto the fit."""
+    return f"""
+    WITH {_pca_fit_ctes(dim)},
+    {_pca_init_cte("vec", dim, seed)},{_pca_iter_ctes(dim, iters, "cmat", "vec", "")},
+    vw AS MATERIALIZED (SELECT {_pca_pivot(dim, "vi", "v")} FROM vec{iters}),
+    {_pca_project_ctes(dim)}
     SELECT c.vec_id,
-           floor(CAST(({chain}) AS DOUBLE) / 1000000.0 + 0.5) / 1000000.0 AS pc1
+           {_pca_project_sql(dim, "vw")} AS pc1
     FROM cq c CROSS JOIN vw CROSS JOIN mw
     """
-    return sql
 
 
 @_register("emb_pca_pc1", _pca_pc1_oracle())
@@ -4395,100 +4414,22 @@ def _pca_pc2_oracle(
     fully unrolled. Deflation mirrors pca.deflate exactly: Rayleigh
     num/den as ordered double chains over the pivoted (v, C·v), one
     grid rounding per deflated entry."""
-    means = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, {micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS mi FROM s"
-        for i in range(dim)
-    )
-    covs = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, {j} AS j, {micros6_sql(_pca_cov_sql(i, j))} AS c FROM s"
-        for i in range(dim)
-        for j in range(i, dim)
-    )
-
-    def init_cte(name: str, seed: int) -> str:
-        rows = ", ".join(
-            f"({i}, {vi})" for i, vi in enumerate(pca_op.pinned_init(dim, seed))
-        )
-        return f"""
-    {name}0 AS MATERIALIZED (
-      SELECT i, CAST(vi AS BIGINT) AS vi FROM (VALUES {rows}) AS t(i, vi)
-    )"""
-
-    uw_cols = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN q END) AS q{k}" for k in range(dim)
-    )
-    nsq_chain = " + ".join(
-        f"CAST(q{k} AS DOUBLE) * CAST(q{k} AS DOUBLE)" for k in range(dim)
-    )
-
-    def iter_ctes(mat: str, vp: str) -> str:
-        out = ""
-        for t in range(iters):
-            out += f""",
-    {vp}u{t} AS MATERIALIZED (
-      SELECT cm.i AS i, CAST(SUM(cm.c * vv.vi) AS BIGINT) AS u_raw
-      FROM {mat} cm JOIN {vp}{t} vv ON cm.j = vv.i
-      GROUP BY cm.i
-    ),
-    {vp}q{t} AS MATERIALIZED (
-      SELECT i, CAST(floor(CAST(u_raw AS DOUBLE) / 1000000.0 + 0.5) AS BIGINT) AS q
-      FROM {vp}u{t}
-    ),
-    {vp}n{t} AS MATERIALIZED (
-      SELECT ({nsq_chain}) AS nsq
-      FROM (SELECT {uw_cols} FROM {vp}q{t})
-    ),
-    {vp}{t + 1} AS MATERIALIZED (
-      SELECT qq.i,
-             CASE WHEN nn.nsq = 0 THEN vv.vi
-                  ELSE {micros6_sql("CAST(qq.q AS DOUBLE) / sqrt(nn.nsq)")}
-             END AS vi
-      FROM {vp}q{t} qq CROSS JOIN {vp}n{t} nn JOIN {vp}{t} vv ON vv.i = qq.i
-    )"""
-        return out
-
-    v_piv = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN vi END) AS v{k}" for k in range(dim)
-    )
-    w_piv = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN w_raw END) AS w{k}" for k in range(dim)
-    )
     num_chain = " + ".join(
         f"CAST(v{k} AS DOUBLE) * CAST(w{k} AS DOUBLE)" for k in range(dim)
     )
     den_chain = " + ".join(
         f"CAST(v{k} AS DOUBLE) * CAST(v{k} AS DOUBLE)" for k in range(dim)
     )
-    xqs = ",\n             ".join(
-        f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
-        for k in range(dim)
-    )
-    mw = ", ".join(
-        f"MAX(CASE WHEN i = {k} THEN mi END) AS m{k}" for k in range(dim)
-    )
-    chain1 = " + ".join(f"a.v{k} * (c.xq{k} - mw.m{k})" for k in range(dim))
-    chain2 = " + ".join(f"b.v{k} * (c.xq{k} - mw.m{k})" for k in range(dim))
-
     return f"""
-    WITH {_pca_base_sql(dim)},
-    half AS MATERIALIZED (
-      {covs}
-    ),
-    cmat AS MATERIALIZED (
-      SELECT i, j, c FROM half
-      UNION ALL
-      SELECT j AS i, i AS j, c FROM half WHERE i <> j
-    ),
-    m AS MATERIALIZED (
-      {means}
-    ),{init_cte("veca", seed1)}{iter_ctes("cmat", "veca")},
+    WITH {_pca_fit_ctes(dim)},
+    {_pca_init_cte("veca", dim, seed1)},{_pca_iter_ctes(dim, iters, "cmat", "veca", "veca")},
     w1 AS MATERIALIZED (
       SELECT cm.i AS i, CAST(SUM(cm.c * vv.vi) AS BIGINT) AS w_raw
       FROM cmat cm JOIN veca{iters} vv ON cm.j = vv.i
       GROUP BY cm.i
     ),
-    vw1 AS MATERIALIZED (SELECT {v_piv} FROM veca{iters}),
-    ww1 AS MATERIALIZED (SELECT {w_piv} FROM w1),
+    vw1 AS MATERIALIZED (SELECT {_pca_pivot(dim, "vi", "v")} FROM veca{iters}),
+    ww1 AS MATERIALIZED (SELECT {_pca_pivot(dim, "w_raw", "w")} FROM w1),
     nd AS MATERIALIZED (
       SELECT ({num_chain}) AS num, ({den_chain}) AS den
       FROM vw1 CROSS JOIN ww1
@@ -4502,17 +4443,13 @@ def _pca_pc2_oracle(
       JOIN veca{iters} vi ON vi.i = cm.i
       JOIN veca{iters} vj ON vj.i = cm.j
       CROSS JOIN nd
-    ),{init_cte("vecb", seed2)}{iter_ctes("cmat2", "vecb")},
-    vbw AS MATERIALIZED (SELECT {v_piv} FROM vecb{iters}),
-    mw AS MATERIALIZED (SELECT {mw} FROM m),
-    cq AS MATERIALIZED (
-      SELECT vec_id,
-             {xqs}
-      FROM v
-    )
+    ),
+    {_pca_init_cte("vecb", dim, seed2)},{_pca_iter_ctes(dim, iters, "cmat2", "vecb", "vecb")},
+    vbw AS MATERIALIZED (SELECT {_pca_pivot(dim, "vi", "v")} FROM vecb{iters}),
+    {_pca_project_ctes(dim)}
     SELECT c.vec_id,
-           floor(CAST(({chain1}) AS DOUBLE) / 1000000.0 + 0.5) / 1000000.0 AS pc1,
-           floor(CAST(({chain2}) AS DOUBLE) / 1000000.0 + 0.5) / 1000000.0 AS pc2
+           {_pca_project_sql(dim, "a")} AS pc1,
+           {_pca_project_sql(dim, "b")} AS pc2
     FROM cq c CROSS JOIN vw1 a CROSS JOIN vbw b CROSS JOIN mw
     """
 
@@ -4555,10 +4492,6 @@ def _whitened_norm_oracle(dim: int = _PCA_DIM) -> str:
             f"{micros6_sql(f's{i} / CAST(n_rows AS DOUBLE)')} AS m{i}"
         )
         mw_cols.append(f"CASE WHEN ({var}) > 0 THEN sqrt({var}) END AS sd{i}")
-    xqs = ",\n             ".join(
-        f"{micros6_sql(f'e[{k + 1}]::DOUBLE')} AS xq{k}"
-        for k in range(dim)
-    )
     zs = [
         f"(CAST(c.xq{k} - mw.m{k} AS DOUBLE) / 1000000.0 / mw.sd{k})"
         for k in range(dim)
@@ -4569,11 +4502,7 @@ def _whitened_norm_oracle(dim: int = _PCA_DIM) -> str:
     mw AS MATERIALIZED (
       SELECT {', '.join(mw_cols)} FROM s
     ),
-    cq AS MATERIALIZED (
-      SELECT vec_id,
-             {xqs}
-      FROM v
-    )
+    {_pca_cq_cte(dim)}
     SELECT c.vec_id,
            {fixed6_sql(f'sqrt({chain})')} AS wnorm
     FROM cq c CROSS JOIN mw
@@ -4613,7 +4542,7 @@ _BM25_ORACLE = rf"""
     WITH tf_all AS (
       SELECT id, tok, count(*) AS tf FROM (
         SELECT doc_id AS id,
-               unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+               unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
         FROM documents
       ) WHERE tok <> '' GROUP BY id, tok
     ),
@@ -4664,7 +4593,7 @@ _QL_ORACLE = rf"""
     WITH tf_all AS (
       SELECT id, tok, count(*) AS tf FROM (
         SELECT doc_id AS id,
-               unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+               unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
         FROM documents
       ) WHERE tok <> '' GROUP BY id, tok
     ),
@@ -4890,7 +4819,7 @@ _ZIPF_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
-               unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS w
+               unnest({ts.tokens_sql("coalesce(text, '')")}) AS w
         FROM documents)
       WHERE w <> ''
     ),
@@ -4988,7 +4917,7 @@ _SOURCE_KEYWORDS_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
-               unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS w
+               unnest({ts.tokens_sql("coalesce(text, '')")}) AS w
         FROM documents WHERE source IS NOT NULL)
       WHERE w <> ''
     ),
@@ -5077,7 +5006,7 @@ _HEAPS_ORACLE = rf"""
     WITH words AS (
       SELECT source, doc_id, w FROM (
         SELECT source, doc_id,
-               unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS w
+               unnest({ts.tokens_sql("coalesce(text, '')")}) AS w
         FROM documents WHERE source IS NOT NULL)
       WHERE w <> ''
     ),
@@ -5237,7 +5166,7 @@ def _mmr_oracle(k: int = 5, lam: float = 0.7) -> str:
       SELECT DISTINCT b.doc_id, array_to_string(b.t[i:i+2], ' ') AS g
       FROM (
         SELECT doc_id,
-               string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+               {ts.tokens_sql("coalesce(text, '')")} AS t
         FROM documents WHERE doc_id IN (SELECT doc_id FROM cand)
       ) b, UNNEST(generate_series(1, greatest(len(b.t) - 2, 0))) AS u(i)
     ),
@@ -5713,10 +5642,10 @@ def orders_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IS portable — the exact distinct counts and the boolean accuracy
 # gates (deterministic: HLL register maxima are order-insensitive and
 # the 8% gate sits ~5σ beyond lg_k=12's expected error).
-_VOCAB_SKETCH_ORACLE = r"""
+_VOCAB_SKETCH_ORACLE = rf"""
     WITH toks AS (
       SELECT source,
-             unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS tok
+             unnest({ts.tokens_sql("coalesce(text, '')")}) AS tok
       FROM documents
     ),
     t AS (SELECT source, tok FROM toks WHERE tok <> '')
@@ -5825,30 +5754,8 @@ def _semantic_dedup_oracle(
     to the larger cell), within-cell pairs use the same rounded-cosine
     threshold as the LSH near-dup oracle. Portable for the usual
     fold-order reason."""
-    cents = sim.ivf_centroids(dim, n_cells)
-    values = ",\n      ".join(
-        f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[], "
-        f"{sum(x * x for x in c) / 2.0!r})"
-        for i, c in enumerate(cents)
-    )
     return f"""
-    WITH cents(cell, c, hn) AS (
-      VALUES
-      {values}
-    ),
-    v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    assigned AS (
-      SELECT vec_id, e, nrm, cell,
-             row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY list_dot_product(e, c) - hn DESC, cell DESC
-             ) AS rn
-      FROM v, cents
-    ),
+    WITH {_ivf_assign_ctes(dim, n_cells)},
     vc AS (SELECT vec_id, e, nrm, cell FROM assigned WHERE rn = 1),
     dropped AS (
       SELECT DISTINCT b.vec_id
@@ -5857,7 +5764,7 @@ def _semantic_dedup_oracle(
       -- never drops them; DuckDB's NaN orders LARGEST so an unguarded
       -- fixed6(x/0) >= t would drop them — pin the Spark semantics
       WHERE a.nrm > 0 AND b.nrm > 0
-        AND {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} >= {threshold}
+        AND {_cos_score_sql()} >= {threshold}
     )
     SELECT vc.vec_id, vc.cell, (d.vec_id IS NULL) AS kept
     FROM vc LEFT JOIN dropped d ON vc.vec_id = d.vec_id
@@ -5960,7 +5867,7 @@ def docs_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id, source,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     g AS (
@@ -6025,7 +5932,7 @@ def _training_corpus_oracle() -> str:
     ),
     d2 AS (SELECT d1.* FROM d1 JOIN surv USING (doc_id)),
     btoks AS (
-      SELECT string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+      SELECT {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents WHERE doc_id < 5
     ),
     bgr AS (
@@ -6034,7 +5941,7 @@ def _training_corpus_oracle() -> str:
     ),
     dtoks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM d2
     ),
     dgr AS (
@@ -6101,10 +6008,10 @@ def flagship_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate spans — exact substring dedup (dedup.duplicate_spans)
 # ---------------------------------------------------------------------------
 
-_DUP_SPANS_ORACLE = r"""
+_DUP_SPANS_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     w AS (
@@ -6147,10 +6054,10 @@ def docs_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact substring-duplication spans (dedup.exact_substring_spans)
 # ---------------------------------------------------------------------------
 
-_EXACT_SUBSTR_ORACLE = r"""
+_EXACT_SUBSTR_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     w AS (
@@ -6199,10 +6106,10 @@ def docs_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tokenizer-induction surface: adjacent-pair counts (one BPE merge step)
 # ---------------------------------------------------------------------------
 
-_BPE_PAIRS_ORACLE = r"""
+_BPE_PAIRS_ORACLE = rf"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("coalesce(text, '')")} AS t
       FROM documents
     ),
     pairs AS (
@@ -6272,10 +6179,10 @@ def docs_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_chain(num_merges: int) -> str:
     """The shared unrolled merge chain: wf -> w0 -> (s,c,b,w){1..N}."""
-    sql = r"""
+    sql = rf"""
     WITH wf AS (
       SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-        SELECT unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS word
+        SELECT unnest({ts.tokens_sql("coalesce(text, '')")}) AS word
         FROM documents
       ) WHERE regexp_matches(word, '^[a-z]+$') GROUP BY word
     ),
@@ -6365,7 +6272,7 @@ def _tokenizer_fertility_oracle(num_merges: int = 6) -> str:
     ),
     sw AS (
       SELECT source, word, CAST(count(*) AS BIGINT) AS freq FROM (
-        SELECT source, unnest(string_split(lower(trim(regexp_replace(coalesce(text, ''), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS word
+        SELECT source, unnest({ts.tokens_sql("coalesce(text, '')")}) AS word
         FROM documents
       ) WHERE regexp_matches(word, '^[a-z]+$') GROUP BY source, word
     ),
@@ -6711,13 +6618,7 @@ def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_near_dedup_best",
     f"""
     WITH RECURSIVE
-    sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {_SHINGLE_OVERLAP_CTES},
     prs AS (
       SELECT id_a, id_b FROM inter
       JOIN sizes sa ON inter.id_a = sa.doc_id
@@ -6768,13 +6669,7 @@ def docs_near_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_label_spread",
     f"""
     WITH RECURSIVE
-    sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {_SHINGLE_OVERLAP_CTES},
     prs AS (
       SELECT id_a, id_b FROM inter
       JOIN sizes sa ON inter.id_a = sa.doc_id
@@ -6833,8 +6728,7 @@ def docs_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text,
-                 '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')), ' ') AS toks
+             {ts.tokens_sql("text")} AS toks
       FROM documents),
     uni AS (
       SELECT w, COUNT(*) AS c
@@ -7889,28 +7783,8 @@ def _minhash_join_oracle(
     """SQL twin of the portable-hash incremental MinHash-LSH join:
     identical hashes/permutations/band keys, but candidates strictly
     across the odd (new) / even (corpus) doc_id split."""
-    from aurora_mito_etl_spark.operators.dedup import _MERSENNE_P, _perm_params
-
-    rows_per_band = num_hashes // bands
-    mins = ",\n         ".join(
-        f"MIN(({a} * hm + {b}) % {_MERSENNE_P}) AS m{i}"
-        for i, (a, b) in enumerate(_perm_params(num_hashes))
-    )
-    band_selects = "\n      UNION ALL\n".join(
-        "      SELECT doc_id, {i} AS band, md5(concat_ws(',', '{i}', {cols})) AS bh FROM sigs".format(
-            i=i,
-            cols=", ".join(f"m{i * rows_per_band + r}" for r in range(rows_per_band)),
-        )
-        for i in range(bands)
-    )
     return f"""
-    WITH sh AS (SELECT DISTINCT * FROM ({_SHINGLE_SQL})),
-    h AS (SELECT doc_id, CAST(('0x' || substring(md5(sh),1,15)) AS BIGINT) AS h FROM sh),
-    hm AS (SELECT doc_id, h, h % {_MERSENNE_P} AS hm FROM h),
-    sigs AS (SELECT doc_id, {mins} FROM hm GROUP BY doc_id),
-    bands AS (
-{band_selects}
-    ),
+    WITH {_minhash_bands_ctes(num_hashes, bands)},
     cand AS (
       SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id
       FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
@@ -7953,47 +7827,108 @@ def docs_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_oracle(dim: int = 64, m: int = 4, n_centroids: int = 16) -> str:
-    """Closed-form SQL twin of PQ encoding over pinned codebooks: one
-    VALUES table (subspace, cell, centroid, half-norm), per-subspace
-    argmax(dot − hn) with the IVF tie convention (score DESC, cell
-    DESC), codes pivoted back to columns. Identical left-to-right
-    float folds on identical literals → bit-identical codes."""
-    from aurora_mito_etl_spark.operators.quantize import pq_codebooks
-
-    books = pq_codebooks(dim, m, n_centroids)
-    subdim = dim // m
-    values = ",\n      ".join(
-        f"({j}, {cell}, [{', '.join(repr(x) for x in cent)}]::DOUBLE[], "
-        f"{sum(x * x for x in cent) / 2.0!r})"
-        for j, book in enumerate(books)
+def _pq_cents_cte(name: str, dim: int, m: int, n_centroids: int) -> str:
+    """Pinned PQ codebooks as one VALUES table `name(sub, cell, c, hn,
+    n2)`: half-norm for the encode argmax, squared norm for the ADC
+    distance tables."""
+    rows = ",\n      ".join(
+        f"({_cent_row(f'{j}, {cell}', cent)}, {sum(x * x for x in cent)!r})"
+        for j, book in enumerate(qz.pq_codebooks(dim, m, n_centroids))
         for cell, cent in enumerate(book)
     )
+    return f"""{name}(sub, cell, c, hn, n2) AS (
+      VALUES
+      {rows}
+    )"""
+
+
+def _pq_codes_ctes(
+    cents: str, assigned: str, subdim: int, m: int, code: str = "{}"
+) -> str:
+    """PQ encode over `v`: per-subspace argmax(dot − hn) against
+    `cents` with the IVF tie convention (cell DESC) in `assigned`,
+    codes pivoted back to columns pq_0.. in `codes` (each wrapped in
+    the `code` template)."""
     code_cols = ",\n           ".join(
-        f"CAST(MAX(CASE WHEN sub = {j} THEN cell END) AS INT) AS pq_{j}"
+        f"{code.format(f'MAX(CASE WHEN sub = {j} THEN cell END)')} AS pq_{j}"
         for j in range(m)
     )
-    csv = " || ',' || ".join(f"CAST(pq_{j} AS VARCHAR)" for j in range(m))
-    return f"""
-    WITH cents(sub, cell, c, hn) AS (
-      VALUES
-      {values}
-    ),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE embedding IS NOT NULL),
-    assigned AS (
+    return f"""{assigned} AS (
       SELECT vec_id, sub, cell,
              row_number() OVER (
                PARTITION BY vec_id, sub
                ORDER BY list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) - hn DESC,
                         cell DESC
              ) AS rn
-      FROM v, cents
+      FROM v, {cents}
     ),
     codes AS (
       SELECT vec_id,
            {code_cols}
-      FROM assigned WHERE rn = 1 GROUP BY vec_id
+      FROM {assigned} WHERE rn = 1 GROUP BY vec_id
+    )"""
+
+
+def _pq_adc_ctes(cents: str, subdim: int, m: int) -> str:
+    """Per-query distance tables `qd` (n2 − 2·dot per subspace cell,
+    queries from `q`) and the codes unpivoted to (vec_id, sub, cell)
+    rows in `uncode` — the ADC lookup inputs."""
+    uncode = "\n      UNION ALL\n      ".join(
+        f"SELECT vec_id, {j} AS sub, pq_{j} AS cell FROM codes" for j in range(m)
     )
+    return f"""qd AS (
+      SELECT query_id, sub, cell,
+             n2 - 2 * list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) AS d
+      FROM q, {cents}
+    ),
+    uncode AS (
+      {uncode}
+    )"""
+
+
+def _pq_adc_sum_sql(m: int) -> str:
+    """The ADC distance: per-subspace lookups summed left-associated
+    exactly as the Spark expression, fixed6 BEFORE ranking —
+    DuckDB's list_dot_product accumulation order is engine-specific
+    (one-ulp divergence measured at sf0.1, query 1700's sub-1 entry),
+    so raw double sums would hash-mismatch."""
+    return fixed6_sql(
+        " + ".join(f"MAX(CASE WHEN u.sub = {j} THEN d END)" for j in range(m))
+    )
+
+
+def _pq_rank_tail(k: int) -> str:
+    """Rank `adc` rows per query (distance ASC, vec_id) and keep k."""
+    return f"""r AS (
+      SELECT query_id, vec_id, adc_dist,
+             row_number() OVER (
+               PARTITION BY query_id ORDER BY adc_dist ASC, vec_id
+             ) AS rnk
+      FROM adc
+    )
+    SELECT query_id, vec_id, adc_dist, CAST(rnk AS INTEGER) AS rank
+    FROM r WHERE rnk <= {k}"""
+
+
+def _pq_oracle(dim: int = 64, m: int = 4, n_centroids: int = 16) -> str:
+    """Closed-form SQL twin of PQ encoding over pinned codebooks: one
+    VALUES table (subspace, cell, centroid, half-norm), per-subspace
+    argmax(dot − hn) with the IVF tie convention (score DESC, cell
+    DESC), codes pivoted back to columns. Identical left-to-right
+    float folds on identical literals → bit-identical codes."""
+    rows = ",\n      ".join(
+        f"({_cent_row(f'{j}, {cell}', cent)})"
+        for j, book in enumerate(qz.pq_codebooks(dim, m, n_centroids))
+        for cell, cent in enumerate(book)
+    )
+    csv = " || ',' || ".join(f"CAST(pq_{j} AS VARCHAR)" for j in range(m))
+    return f"""
+    WITH cents(sub, cell, c, hn) AS (
+      VALUES
+      {rows}
+    ),
+    {_VEC_SCAN_CTE},
+    {_pq_codes_ctes("cents", "assigned", dim // m, m, "CAST({} AS INT)")}
     SELECT vec_id, pq_0, pq_1, pq_2, pq_3, {csv} AS pq_csv FROM codes
     """
 
@@ -8005,72 +7940,19 @@ def _pq_adc_oracle(
     _pq_oracle), per-query distance tables n2 − 2·dot, MAX-CASE pivot
     and the explicit left-associated 4-term sum matching the Spark
     expression order."""
-    from aurora_mito_etl_spark.operators.quantize import pq_codebooks
-
-    books = pq_codebooks(dim, m, n_centroids)
     subdim = dim // m
-    values = ",\n      ".join(
-        f"({j}, {cell}, [{', '.join(repr(x) for x in cent)}]::DOUBLE[], "
-        f"{sum(x * x for x in cent) / 2.0!r}, {sum(x * x for x in cent)!r})"
-        for j, book in enumerate(books)
-        for cell, cent in enumerate(book)
-    )
-    code_cols = ",\n           ".join(
-        f"MAX(CASE WHEN sub = {j} THEN cell END) AS pq_{j}" for j in range(m)
-    )
-    uncode = "\n      UNION ALL\n      ".join(
-        f"SELECT vec_id, {j} AS sub, pq_{j} AS cell FROM codes" for j in range(m)
-    )
-    # fixed6 BEFORE ranking: DuckDB's list_dot_product accumulation
-    # order is engine-specific (one-ulp divergence measured at sf0.1),
-    # so raw double ADC sums would hash-mismatch — round both engines
-    # to the 1e-6 grid, as every cosine path does.
-    adc_sum = fixed6_sql(
-        " + ".join(f"MAX(CASE WHEN u.sub = {j} THEN d END)" for j in range(m))
-    )
     return f"""
-    WITH cents(sub, cell, c, hn, n2) AS (
-      VALUES
-      {values}
-    ),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE embedding IS NOT NULL),
-    assigned AS (
-      SELECT vec_id, sub, cell,
-             row_number() OVER (
-               PARTITION BY vec_id, sub
-               ORDER BY list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) - hn DESC,
-                        cell DESC
-             ) AS rn
-      FROM v, cents
-    ),
-    codes AS (
-      SELECT vec_id,
-           {code_cols}
-      FROM assigned WHERE rn = 1 GROUP BY vec_id
-    ),
+    WITH {_pq_cents_cte("cents", dim, m, n_centroids)},
+    {_VEC_SCAN_CTE},
+    {_pq_codes_ctes("cents", "assigned", subdim, m)},
     q AS (SELECT vec_id AS query_id, e FROM v WHERE vec_id < 3),
-    qd AS (
-      SELECT query_id, sub, cell,
-             n2 - 2 * list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) AS d
-      FROM q, cents
-    ),
-    uncode AS (
-      {uncode}
-    ),
+    {_pq_adc_ctes("cents", subdim, m)},
     adc AS (
-      SELECT qd.query_id, u.vec_id, ({adc_sum}) AS adc_dist
+      SELECT qd.query_id, u.vec_id, ({_pq_adc_sum_sql(m)}) AS adc_dist
       FROM uncode u JOIN qd ON u.sub = qd.sub AND u.cell = qd.cell
       GROUP BY qd.query_id, u.vec_id
     ),
-    r AS (
-      SELECT query_id, vec_id, adc_dist,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adc_dist ASC, vec_id
-             ) AS rnk
-      FROM adc
-    )
-    SELECT query_id, vec_id, adc_dist, CAST(rnk AS INTEGER) AS rank
-    FROM r WHERE rnk <= {k}
+    {_pq_rank_tail(k)}
     """
 
 
@@ -8100,44 +7982,14 @@ def _ivfpq_oracle(
     `_pq_adc_oracle` convention), queries probe their n_probe nearest
     cells, and ADC distances are summed left-associated exactly as
     the Spark expression."""
-    from aurora_mito_etl_spark.operators.quantize import pq_codebooks
-
-    ivf_cents = sim.ivf_centroids(dim, n_cells)
-    ivf_values = ",\n      ".join(
-        f"({i}, [{', '.join(repr(x) for x in c)}]::DOUBLE[], "
-        f"{sum(x * x for x in c) / 2.0!r})"
-        for i, c in enumerate(ivf_cents)
-    )
-    books = pq_codebooks(dim, m, n_centroids)
     subdim = dim // m
-    pq_values = ",\n      ".join(
-        f"({j}, {cell}, [{', '.join(repr(x) for x in cent)}]::DOUBLE[], "
-        f"{sum(x * x for x in cent) / 2.0!r}, {sum(x * x for x in cent)!r})"
-        for j, book in enumerate(books)
-        for cell, cent in enumerate(book)
-    )
-    code_cols = ",\n           ".join(
-        f"MAX(CASE WHEN sub = {j} THEN cell END) AS pq_{j}" for j in range(m)
-    )
-    uncode = "\n      UNION ALL\n      ".join(
-        f"SELECT vec_id, {j} AS sub, pq_{j} AS cell FROM codes" for j in range(m)
-    )
-    # fixed6 before ranking — same list_dot_product rationale as
-    # _pq_adc_oracle (this query is where the sf0.1 ulp divergence
-    # was actually caught: query 1700's sub-1 entry)
-    adc_sum = fixed6_sql(
-        " + ".join(f"MAX(CASE WHEN u.sub = {j} THEN d END)" for j in range(m))
-    )
     return f"""
     WITH ivfcents(ivfcell, ic, ihn) AS (
       VALUES
-      {ivf_values}
+      {_ivf_values(dim, n_cells)}
     ),
-    pqcents(sub, cell, c, hn, n2) AS (
-      VALUES
-      {pq_values}
-    ),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE embedding IS NOT NULL),
+    {_pq_cents_cte("pqcents", dim, m, n_centroids)},
+    {_VEC_SCAN_CTE},
     vassigned AS (
       SELECT vec_id, e, ivfcell,
              row_number() OVER (
@@ -8147,20 +7999,7 @@ def _ivfpq_oracle(
       FROM v, ivfcents
     ),
     vcell AS (SELECT vec_id, ivfcell FROM vassigned WHERE rn = 1),
-    passigned AS (
-      SELECT vec_id, sub, cell,
-             row_number() OVER (
-               PARTITION BY vec_id, sub
-               ORDER BY list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) - hn DESC,
-                        cell DESC
-             ) AS rn
-      FROM v, pqcents
-    ),
-    codes AS (
-      SELECT vec_id,
-           {code_cols}
-      FROM passigned WHERE rn = 1 GROUP BY vec_id
-    ),
+    {_pq_codes_ctes("pqcents", "passigned", subdim, m)},
     q AS (SELECT vec_id AS query_id, e FROM v WHERE vec_id % 100 = 0),
     qprobe AS (
       SELECT query_id, ivfcell FROM (
@@ -8172,34 +8011,19 @@ def _ivfpq_oracle(
         FROM q, ivfcents
       ) WHERE rn <= {n_probe}
     ),
-    qd AS (
-      SELECT query_id, sub, cell,
-             n2 - 2 * list_dot_product(e[sub * {subdim} + 1 : sub * {subdim} + {subdim}], c) AS d
-      FROM q, pqcents
-    ),
-    uncode AS (
-      {uncode}
-    ),
+    {_pq_adc_ctes("pqcents", subdim, m)},
     cands AS (
       SELECT p.query_id, vcell.vec_id
       FROM qprobe p JOIN vcell ON vcell.ivfcell = p.ivfcell
     ),
     adc AS (
-      SELECT cd.query_id, cd.vec_id, ({adc_sum}) AS adc_dist
+      SELECT cd.query_id, cd.vec_id, ({_pq_adc_sum_sql(m)}) AS adc_dist
       FROM cands cd
       JOIN uncode u ON u.vec_id = cd.vec_id
       JOIN qd ON qd.query_id = cd.query_id AND qd.sub = u.sub AND qd.cell = u.cell
       GROUP BY cd.query_id, cd.vec_id
     ),
-    r AS (
-      SELECT query_id, vec_id, adc_dist,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adc_dist ASC, vec_id
-             ) AS rnk
-      FROM adc
-    )
-    SELECT query_id, vec_id, adc_dist, CAST(rnk AS INTEGER) AS rank
-    FROM r WHERE rnk <= {k}
+    {_pq_rank_tail(k)}
     """
 
 
@@ -8224,21 +8048,14 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "emb_hard_negatives",
     f"""
-    WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (  -- zero-norm guard: Spark scores dot/1.0 for zero vectors
-      SELECT vec_id, label, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM v
-    ),
+    WITH {_cos_scan_ctes(cols=["label"])},
     q AS (
       SELECT vec_id AS query_id, label AS query_label, e, nrm
       FROM g WHERE vec_id % 100 = 0
     ),
     scored AS (
       SELECT b.query_id, b.query_label, a.vec_id, a.label AS neg_label,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM g a, q b
       WHERE a.vec_id <> b.query_id
         AND a.label IS DISTINCT FROM b.query_label
@@ -8275,21 +8092,14 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "emb_hard_positives",
     f"""
-    WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (  -- zero-norm guard: Spark scores dot/1.0 for zero vectors
-      SELECT vec_id, label, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM v
-    ),
+    WITH {_cos_scan_ctes(cols=["label"])},
     q AS (
       SELECT vec_id AS query_id, label AS query_label, e, nrm
       FROM g WHERE vec_id % 100 = 0
     ),
     scored AS (
       SELECT b.query_id, b.query_label, a.vec_id, a.label AS pos_label,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM g a, q b
       WHERE a.vec_id <> b.query_id
         AND a.label = b.query_label
@@ -8330,18 +8140,11 @@ def _ivfpq_rerank_oracle(k: int = 5, r_cand: int = 20) -> str:
     cand = _ivfpq_oracle(k=r_cand)
     return f"""
     WITH cand AS ({cand}),
-    rv AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    rg AS (  -- zero-norm guard: Spark scores dot/1.0 for zero vectors
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM rv
-    ),
+    {_cos_scan_ctes("rv", "rg")},
     rq AS (SELECT vec_id AS query_id, e, nrm FROM rg WHERE vec_id % 100 = 0),
     scored AS (
       SELECT c.query_id, c.vec_id,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM cand c
       JOIN rg a ON a.vec_id = c.vec_id
       JOIN rq b ON b.query_id = c.query_id
@@ -8376,6 +8179,22 @@ def emb_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_tail(approx: str, a: str, k: int) -> str:
+    """Per-query recall@k of the `approx` top-k CTE (aliased `a`)
+    against the exact `brute` top-k, every brute query reported."""
+    return f"""hits AS (
+      SELECT {a}.query_id, COUNT(*) AS n_hits
+      FROM {approx} {a} JOIN brute b
+        ON {a}.query_id = b.query_id AND {a}.vec_id = b.vec_id
+      GROUP BY {a}.query_id
+    )
+    SELECT q.query_id,
+           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
+    FROM (SELECT DISTINCT query_id FROM brute) q
+    LEFT JOIN hits h USING (query_id)"""
+
+
 def _ivfpq_recall_oracle(k: int = 5) -> str:
     """Compose the IVF-PQ and brute-force oracle chains and measure
     per-query overlap — the emb_lsh_recall pattern for the quantized
@@ -8385,17 +8204,7 @@ def _ivfpq_recall_oracle(k: int = 5) -> str:
     return f"""
     WITH ivfpq AS ({ivfpq}),
     brute AS ({brute}),
-    hits AS (
-      SELECT a.query_id, COUNT(*) AS n_hits
-      FROM ivfpq a JOIN brute b
-        ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-      GROUP BY a.query_id
-    )
-    SELECT q.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
-    FROM (SELECT DISTINCT query_id FROM brute) q
-    LEFT JOIN hits h USING (query_id)
+    {_recall_tail("ivfpq", "a", k)}
     """
 
 
@@ -8460,7 +8269,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_SCORE_ORACLE = rf"""
     WITH base AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("text")} AS t
       FROM documents
     ),
     words AS (
@@ -8523,7 +8332,7 @@ _SOURCE_ENTROPY_ORACLE = rf"""
     WITH words AS (
       SELECT source, w FROM (
         SELECT source,
-               unnest(string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ')) AS w
+               unnest({ts.tokens_sql("text")}) AS w
         FROM documents)
       WHERE w <> ''
     ),
@@ -8630,17 +8439,7 @@ def _lsh_recall_oracle(k: int = 5) -> str:
     return f"""
     WITH lsh AS ({lsh}),
     brute AS ({brute}),
-    hits AS (
-      SELECT l.query_id, COUNT(*) AS n_hits
-      FROM lsh l JOIN brute b
-        ON l.query_id = b.query_id AND l.vec_id = b.vec_id
-      GROUP BY l.query_id
-    )
-    SELECT q.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
-    FROM (SELECT DISTINCT query_id FROM brute) q
-    LEFT JOIN hits h USING (query_id)
+    {_recall_tail("lsh", "l", k)}
     """
 
 
@@ -8693,12 +8492,10 @@ def _dim_trunc_recall_oracle(d_trunc: int = 32, k: int = 5) -> str:
              sqrt(list_dot_product(e, e)) AS nrm
       FROM tv
     ),
-    tg AS (
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM tn
-    ),
+    {_nrm_guard_cte("tg", "tn")},
     tscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM tg a, tg b
       WHERE b.vec_id % 100 = 0
     ),
@@ -8709,17 +8506,7 @@ def _dim_trunc_recall_oracle(d_trunc: int = 32, k: int = 5) -> str:
         FROM tscored
       ) WHERE rank <= {k}
     ),
-    hits AS (
-      SELECT t.query_id, COUNT(*) AS n_hits
-      FROM trunc t JOIN brute b
-        ON t.query_id = b.query_id AND t.vec_id = b.vec_id
-      GROUP BY t.query_id
-    )
-    SELECT q.query_id,
-           CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           {fixed6_sql(f'CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / {k}.0')} AS recall_at_k
-    FROM (SELECT DISTINCT query_id FROM brute) q
-    LEFT JOIN hits h USING (query_id)
+    {_recall_tail("trunc", "t", k)}
     """
 
 
@@ -8761,17 +8548,10 @@ def emb_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BENCH_DECONTAM_ORACLE = rf"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM v
-    ),
+    WITH {_cos_scan_ctes()},
     scored AS (
       SELECT c.vec_id,
-             {fixed6_sql('list_dot_product(c.e, p.e) / (c.nrm * p.nrm)')} AS score
+             {_cos_score_sql("c", "p")} AS score
       FROM g c JOIN g p ON p.vec_id % 37 = 0 AND c.vec_id % 37 <> 0
     )
     SELECT vec_id,
@@ -8826,10 +8606,7 @@ def emb_benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jl_project_oracle(out_dim: int = 16) -> str:
     cols = ",\n           ".join(rp.jl_project_oracle_cols("e", 64, out_dim))
     return f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e
-      FROM embeddings WHERE embedding IS NOT NULL
-    )
+    WITH {_VEC_SCAN_CTE}
     SELECT vec_id,
            {cols}
     FROM v
@@ -8863,10 +8640,7 @@ def _jl_distortion_oracle(out_dim: int = 16) -> str:
     )
     den = rp.sqdist_sql("q.e", "c.e", 64)
     return f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
+    WITH {_VEC_SCAN_CTE},
     p AS (
       SELECT vec_id, e,
              {cols}
@@ -8997,17 +8771,10 @@ def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
         for m, w in ws.items()
     ) + " END"
     return f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    g AS (
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM v
-    ),
+    WITH {_cos_scan_ctes()},
     fscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM g a, g b WHERE b.vec_id % 100 = 0
     ),
     fullr AS (
@@ -9022,12 +8789,10 @@ def _rbo_oracle(d_trunc: int = 32, depth: int = 10) -> str:
       FROM embeddings WHERE embedding IS NOT NULL
     ),
     tn AS (SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm FROM tv),
-    tg AS (
-      SELECT vec_id, e, CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END AS nrm FROM tn
-    ),
+    {_nrm_guard_cte("tg", "tn")},
     tscored AS (
       SELECT b.vec_id AS query_id, a.vec_id,
-             {fixed6_sql('list_dot_product(a.e, b.e) / (a.nrm * b.nrm)')} AS score
+             {_cos_score_sql()} AS score
       FROM tg a, tg b WHERE b.vec_id % 100 = 0
     ),
     truncr AS (
@@ -9109,8 +8874,6 @@ def _label_centroid_ctes(dim: int = 64) -> str:
     coordinate (cvals), and the LEFT-TO-RIGHT fixed-length double
     norm chain (cn) — the pca.py bounded-length exception pattern,
     written term-for-term like the Spark side's HOF folds."""
-    from aurora_mito_etl_spark.functions.numeric import micros_sum_sql
-
     sums = ",\n             ".join(
         micros_sum_sql(f"embedding[{d + 1}]::DOUBLE", f"s{d}") for d in range(dim)
     )
@@ -9144,8 +8907,6 @@ def _label_centroid_ctes(dim: int = 64) -> str:
 def _label_centroid_oracle(dim: int = 64) -> str:
     """SQL twin of :func:`similarity.label_centroid_cosines` — the
     shared centroid CTEs plus the pairwise dot chain."""
-    from aurora_mito_etl_spark.functions.numeric import fixed6_sql
-
     dot_chain = " + ".join(f"a.c{d} * b.c{d}" for d in range(dim))
     return f"""{_label_centroid_ctes(dim)}
     SELECT a.label AS label_a, b.label AS label_b, a.n AS n_a, b.n AS n_b,
@@ -9162,8 +8923,6 @@ def _label_outlier_oracle(dim: int = 64, k: int = 5) -> str:
     centroid CTEs, a per-row cosine-to-own-centroid (row norm and dot
     as LEFT-TO-RIGHT chains over the row elements, matching the HOF
     fold), then the ascending NULLS LAST rank with the id tie-break."""
-    from aurora_mito_etl_spark.functions.numeric import fixed6_sql
-
     rn_chain = " + ".join(
         f"v.embedding[{d + 1}]::DOUBLE * v.embedding[{d + 1}]::DOUBLE"
         for d in range(dim)
@@ -9215,8 +8974,6 @@ def _centroid_confusion_oracle(dim: int = 64) -> str:
     centroid CTEs, per-row scores against EVERY centroid (row chains),
     the (score DESC NULLS LAST, label_pred ASC) argmax per row, then
     the confusion-cell counts."""
-    from aurora_mito_etl_spark.functions.numeric import fixed6_sql
-
     rn_chain = " + ".join(
         f"embedding[{d + 1}]::DOUBLE * embedding[{d + 1}]::DOUBLE"
         for d in range(dim)
@@ -9279,12 +9036,12 @@ def emb_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LM_SCORE_XTRAIN_ORACLE = rf"""
     WITH train_base AS (
-      SELECT string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+      SELECT {ts.tokens_sql("text")} AS t
       FROM documents WHERE doc_id % 2 = 0
     ),
     score_base AS (
       SELECT doc_id,
-             string_split(lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ')), ' ') AS t
+             {ts.tokens_sql("text")} AS t
       FROM documents WHERE doc_id % 2 = 1
     ),
     words AS (

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -530,10 +531,16 @@ def test_heaps_fit_hand_points(spark):
     assert 0.0 < s1["heaps_beta"] < 1.0
 
 
+_SQL_TOKENIZER_RE = re.compile(r"string_split(_regex)?\s*\(\s*lower\s*\(", re.I)
+
+
 def _tokenizer_chains(pkg: Path) -> list[str]:
-    """Every hand-written `F.split(F.lower(F.trim(F.regexp_replace(x,
-    r"\\s+", " "))), " ")` in the package source, except the one inside
-    textstats.tokens_expr."""
+    """Every hand-written tokenizer in the package source: the Column
+    chains `F.split(F.lower(F.trim(F.regexp_replace(x, r"\\s+", " "))),
+    " ")` and `F.split(F.lower(F.trim(x)), r"\\s+")` outside
+    textstats.tokens_expr, and any string constant or f-string part
+    spelling `string_split(lower(` or `string_split_regex(lower(`
+    outside textstats.tokens_sql."""
 
     def attr(node, name: str) -> bool:
         return (
@@ -543,35 +550,50 @@ def _tokenizer_chains(pkg: Path) -> list[str]:
             and bool(node.args)
         )
 
+    def ws_run(node) -> bool:
+        return isinstance(node, ast.Constant) and node.value == r"\s+"
+
     hits = []
     for f in sorted(pkg.rglob("*.py")):
         tree = ast.parse(f.read_text())
         allowed: set[int] = set()
         if f == pkg / "operators" / "textstats.py":
             for node in ast.walk(tree):
-                if isinstance(node, ast.FunctionDef) and node.name == "tokens_expr":
-                    allowed = {id(n) for n in ast.walk(node)}
+                if isinstance(node, ast.FunctionDef) and node.name in (
+                    "tokens_expr",
+                    "tokens_sql",
+                ):
+                    allowed |= {id(n) for n in ast.walk(node)}
         for node in ast.walk(tree):
-            if not attr(node, "split") or id(node) in allowed:
+            if id(node) in allowed:
+                continue
+            where = f"{f.relative_to(pkg.parent)}:{getattr(node, 'lineno', '?')}"
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and _SQL_TOKENIZER_RE.search(node.value)
+            ):
+                hits.append(where)
+                continue
+            if not attr(node, "split"):
                 continue
             low = node.args[0]
             if not (attr(low, "lower") and attr(low.args[0], "trim")):
                 continue
+            if len(node.args) > 1 and ws_run(node.args[1]):
+                hits.append(where)
+                continue
             rr = low.args[0].args[0]
-            if (
-                attr(rr, "regexp_replace")
-                and len(rr.args) > 1
-                and isinstance(rr.args[1], ast.Constant)
-                and rr.args[1].value == r"\s+"
-            ):
-                hits.append(f"{f.relative_to(pkg.parent)}:{node.lineno}")
+            if attr(rr, "regexp_replace") and len(rr.args) > 1 and ws_run(rr.args[1]):
+                hits.append(where)
     return hits
 
 
 def test_tokenizer_chain_written_only_in_tokens_expr():
-    """textstats.tokens_expr is THE Catalyst tokenization every SQL
-    oracle's string_split mirrors; a hand-written copy can drift from
-    it and silently de-synchronize token streams across paths."""
+    """textstats.tokens_expr is THE Catalyst tokenization and
+    textstats.tokens_sql its only SQL spelling; a hand-written copy can
+    drift from them and silently de-synchronize token streams across
+    paths."""
     pkg = Path(__file__).resolve().parent.parent / "aurora_mito_etl_spark"
     hits = _tokenizer_chains(pkg)
-    assert not hits, "tokenizer chain outside tokens_expr:\n" + "\n".join(hits)
+    assert not hits, "tokenizer chain outside tokens_expr/tokens_sql:\n" + "\n".join(hits)
